@@ -71,6 +71,20 @@ private[graft] object PlanCut {
   }
   private val ckptSeq = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Checkpoint dirs currently on disk (test observability: a released
+    * round must not leave its directory behind).
+    */
+  private[graft] def liveDirs: Int =
+    Option(ckptRoot.toFile.listFiles()).map(_.count(_.isDirectory)).getOrElse(0)
+
+  /** Read a checkpoint back with the schema of the frame just written
+    * to it: the schema is known, so no inference job runs (see
+    * `Tables.parquet`); the file relation makes it nullable, exactly as
+    * an inferring read would.
+    */
+  private def readBack(spark: SparkSession, written: DataFrame, dir: String): DataFrame =
+    spark.read.schema(written.schema).parquet(dir)
+
   /** FULL lineage cut via a disk checkpoint — for iterative builds
     * whose per-round SHUFFLES are large (r13). `checkpointed` above
     * keeps the original lineage reachable (eviction-safe recompute),
@@ -114,7 +128,7 @@ private[graft] object PlanCut {
     spark.createDataFrame(p.rdd.coalesce(parts), df.schema)
       .write.mode("overwrite").parquet(dir)
     p.unpersist(blocking = true)
-    val rb = spark.read.parquet(dir)
+    val rb = readBack(spark, df, dir)
     diskDirs.put(rb, dir)
     rb
   }
@@ -136,7 +150,7 @@ private[graft] object PlanCut {
     val parts = math.max(1L, maxRows / rowsPerPartition).toInt
     val dir = ckptRoot.resolve(s"r${ckptSeq.incrementAndGet()}").toString
     df.coalesce(parts).write.mode("overwrite").parquet(dir)
-    val rb = spark.read.parquet(dir)
+    val rb = readBack(spark, df, dir)
     diskDirs.put(rb, dir)
     rb
   }
@@ -155,7 +169,7 @@ private[graft] object PlanCut {
                        gcNudge: Boolean = true): DataFrame = {
     val dir = ckptRoot.resolve(s"r${ckptSeq.incrementAndGet()}").toString
     df.write.mode("overwrite").parquet(dir)
-    val rb = spark.read.parquet(dir).persist()
+    val rb = readBack(spark, df, dir).persist()
     rb.count()
     diskDirs.put(rb, dir)
     if (gcNudge)

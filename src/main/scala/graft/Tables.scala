@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.{DynamicVariable, Try}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -15,7 +22,86 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** THE parquet reader: every engine read of a parquet path goes
+    * through here (SourcePolicySpec keeps it that way). A bare
+    * `spark.read.parquet` infers the schema with a one-task Spark job
+    * that reads a footer, on every call, although nothing changed since
+    * the previous call; at the serving shapes those jobs were ~2 of a
+    * strategy call's ~9. Here a path's schema is inferred once per FILE
+    * VERSION, and later reads pass it to `spark.read.schema`, which
+    * launches no job. Every call still builds a fresh relation (fresh
+    * expression ids, fresh file listing), so self-joins, aliasing and
+    * newly appended files behave exactly as with a bare read; only the
+    * StructType is reused.
+    *
+    * The cache holds plain JVM data, so like the sidecar arrays in
+    * SessionFrameCache's doc it outlives a session. An entry is keyed
+    * by the qualified paths and the SQL confs that change parquet
+    * inference, and holds one version stamp per path:
+    *   - a file: (size, mtime), the stamp `Layouts.layoutRoot` uses;
+    *   - a directory: the mtime of its `_SUCCESS` marker, which every
+    *     Spark write commit rewrites (appends included). A directory
+    *     WITHOUT the marker (a write in flight, a foreign writer) is
+    *     never cached: it is read as a bare read.
+    * A new stamp replaces the entry, so rewrites do not accrete entries.
+    */
+  def parquet(spark: SparkSession, path: String, more: String*): DataFrame = {
+    val paths = path +: more
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val qualified = paths.map { p =>
+      val hp = new Path(p)
+      hp.getFileSystem(hconf).makeQualified(hp)
+    }
+    val stamps = qualified.map(versionStamp(hconf, _))
+    if (schemaCacheOff.value || stamps.exists(_.isEmpty)) spark.read.parquet(paths: _*)
+    else {
+      val key = (qualified.map(_.toString),
+        InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+      val stamp = stamps.flatten
+      Option(schemas.get(key)).filter(_._1 == stamp) match {
+        case Some((_, schema)) => spark.read.schema(schema).parquet(paths: _*)
+        case None =>
+          val df = spark.read.parquet(paths: _*) // first touch: infer once
+          // keys are distinct path SETS (FileStats file subsets can be
+          // many); a full reset costs one inference per live path set
+          if (schemas.size >= MaxSchemas) schemas.clear()
+          schemas.put(key, (stamp, df.schema))
+          df
+      }
+    }
+  }
+
+  /** SQL confs whose value changes what parquet schema inference
+    * returns for the same file (`events` flips nanosAsLong).
+    */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private val MaxSchemas = 4096
+  private val schemas =
+    new ConcurrentHashMap[(Seq[String], Seq[String]), (Seq[Seq[Long]], StructType)]()
+
+  private def versionStamp(hconf: Configuration, p: Path): Option[Seq[Long]] = Try {
+    val fs = p.getFileSystem(hconf)
+    val st = fs.getFileStatus(p)
+    if (st.isFile) Seq(st.getLen, st.getModificationTime)
+    else Seq(fs.getFileStatus(new Path(p, "_SUCCESS")).getModificationTime)
+  }.toOption // missing path, glob or missing marker: uncached bare read
+
+  private val schemaCacheOff = new DynamicVariable(false)
+
+  /** Test hook: run `body` with every read inferring its schema, as a
+    * bare `spark.read.parquet` does (ParquetReaderSpec's baseline).
+    */
+  private[graft] def withoutSchemaCache[T](body: => T): T =
+    schemaCacheOff.withValue(true)(body)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -1092,7 +1092,7 @@ object GraphSearch {
     // the previous trigger's plan several times — over a long-running
     // maintenance stream the un-rebased plan would grow without bound
     val next = PlanCut.checkpointed(spark, repairEdges(spark, dir, g, links, gk))
-    vis.unpersist(blocking = true)
+    PlanCut.releaseDisk(vis) // the walk's checkpoint dir, not only its blocks
     next
   }
 
@@ -1306,7 +1306,7 @@ object GraphSearch {
       .select(col("query_id"), col("cand_id").as("block_id"), col("rn").as("rank"))
       .persist()
     out.count()
-    vis.unpersist(blocking = true) // one-shot walk: release before returning
+    PlanCut.releaseDisk(vis) // one-shot walk: drop its checkpoint dir too
     out
   }
 }

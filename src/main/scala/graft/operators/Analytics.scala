@@ -316,35 +316,8 @@ object Analytics {
     // never scans the table; session-cached besides
     val totalRows = eventCountCache.getOrElseUpdate(spark, dir)(
       Tables.events(spark, dir).count())
-    val nonNull = events.filter(col("value").isNotNull)
-    val ranked0 =
-      if (totalRows < distRankMinRows)
-        nonNull.withColumn("rn", row_number().over(
-          Window.partitionBy("event_type").orderBy("value")))
-      else {
-        // distributed exact rank: range-partition by (type, value),
-        // rank locally within each (partition, type) slice, then add
-        // the per-slice prefix offsets (a tiny P×types frame)
-        val parts = math.max(spark.sparkContext.defaultParallelism,
-          (totalRows / 4000000L).toInt)
-        val sliced = nonNull
-          .repartitionByRange(parts, col("event_type"), col("value"))
-          .withColumn("__pid", spark_partition_id())
-        val local = sliced.withColumn("lrn", row_number().over(
-          Window.partitionBy("__pid", "event_type").orderBy("value")))
-        val offsets = local.groupBy("__pid", "event_type")
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("off", coalesce(sum("cnt").over(
-            Window.partitionBy("event_type").orderBy("__pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("__pid"), col("event_type").as("__ot"), col("off"))
-        local.join(broadcast(offsets),
-            local("__pid") === offsets("__pid") &&
-              local("event_type") <=> offsets("__ot"))
-          .withColumn("rn", (col("off") + col("lrn")).cast("int"))
-          .select(local("event_type"), col("value"), col("rn"))
-      }
-    val ranked = ranked0
+    val ranked = typeRanks(spark, events.filter(col("value").isNotNull),
+        totalRows, distRankMinRows)
       .join(broadcast(counts.withColumnRenamed("event_type", "__et")),
         col("event_type") <=> col("__et"))
       .drop("__et")
@@ -359,6 +332,40 @@ object Analytics {
     val aggs = qs.map { case (name, p) => q(p).as(name) }
     ranked.groupBy("event_type").agg(aggs.head, aggs.tail: _*)
   }
+
+  /** (event_type, value, rn): the exact 1-based rank of each non-null
+    * value within its type — the single-task window below
+    * `distRankMinRows` total rows, the range-partitioned form above.
+    */
+  private[graft] def typeRanks(spark: SparkSession, nonNull: DataFrame, totalRows: Long,
+                               distRankMinRows: Long): DataFrame =
+    if (totalRows < distRankMinRows)
+      nonNull.withColumn("rn", row_number().over(
+        Window.partitionBy("event_type").orderBy("value")))
+    else {
+      // distributed exact rank: range-partition by (type, value),
+      // rank locally within each (partition, type) slice, then add
+      // the per-slice prefix offsets (a tiny P×types frame)
+      val parts = math.max(spark.sparkContext.defaultParallelism,
+        (totalRows / 4000000L).toInt)
+      val local = nonNull
+        .repartitionByRange(parts, col("event_type"), col("value"))
+        .withColumn("__pid", spark_partition_id())
+        .withColumn("lrn", row_number().over(
+          Window.partitionBy("__pid", "event_type").orderBy("value")))
+      val offsets = local.groupBy("__pid", "event_type")
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("off", coalesce(sum("cnt").over(
+          Window.partitionBy("event_type").orderBy("__pid")
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .select(col("__pid").as("__opid"), col("event_type").as("__ot"), col("off"))
+      // the offsets side carries its own names, so the join condition
+      // needs no self-join disambiguation; rn stays long — an int rank
+      // wraps negative past 2^31 rows in one type
+      local.join(broadcast(offsets),
+          col("__pid") === col("__opid") && col("event_type") <=> col("__ot"))
+        .select(col("event_type"), col("value"), (col("off") + col("lrn")).as("rn"))
+    }
 
   /** Test hooks: the default plan and the distributed-rank branch
     * forced on (threshold 0) — RankDispatchSpec pins them equal.

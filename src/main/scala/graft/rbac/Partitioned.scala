@@ -82,8 +82,15 @@ object Partitioned {
     * wide aggregates, all to label rows of which only k survive the
     * TakeOrdered. comb_key is now attached AFTER the top-k, by a slim
     * per-doc aggregate over the routed docs' permission rows, with the
-    * bounded k-row side broadcast. Plan: 6 Exchanges → 1 (the comb
-    * aggregate's, slim rows), embedding arrays never shuffled.
+    * bounded k-row side broadcast. Plan (plans/r17 before/after dumps):
+    * the shuffle Exchange count is unchanged — 4 outside the cached
+    * role tables (6 counting the 2 inside them) both before and after.
+    * What changed is what they carry: the two corpus-wide comb_key
+    * collect_set aggregates are gone; the 4 now shuffle the routed-doc
+    * distinct (twice — the same subtree feeds the prune and the key
+    * attach), the routed docs' comb aggregate, and the k-row final
+    * sort. In those sf0.1 dumps no Exchange carries an embedding array
+    * before or after: the old equi-join broadcast its comb side there.
     */
   def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     val userRoleSet = Rbac.userRoles(spark, dir)
@@ -337,7 +344,7 @@ object Partitioned {
     // blocks of other combs the user cannot read; the per-user doc set
     // is bounded by the prefilter family's documented assumption
     val acc = Rbac.accessibleDocs(spark, dir, userId)
-    spark.read.parquet(layoutPath)
+    Tables.parquet(spark, layoutPath)
       .filter(col("partition_id").isin(pids: _*)) // directory pruning
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", l2_dist(col("embedding"), col("qvec")))

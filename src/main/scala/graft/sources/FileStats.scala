@@ -31,7 +31,7 @@ object FileStats {
     * out).
     */
   def collect(spark: SparkSession, tablePath: String, column: String): DataFrame =
-    spark.read.parquet(tablePath)
+    graft.Tables.parquet(spark, tablePath)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         min(col(column)).as("min_v"), max(col(column)).as("max_v"))
@@ -59,7 +59,7 @@ object FileStats {
     */
   def skippingScan(spark: SparkSession, tablePath: String, column: String,
                    lo: Double, hi: Double): (DataFrame, Int, Int) = {
-    val stats = spark.read.parquet(sidecarPath(tablePath, column))
+    val stats = graft.Tables.parquet(spark, sidecarPath(tablePath, column))
     // #files rows — metadata, same class as the partition manifests
     val files = stats.select("file", "min_v", "max_v").collect()
     val matching = files.filter(r =>
@@ -67,9 +67,10 @@ object FileStats {
         r.getDouble(2) >= lo && r.getDouble(1) <= hi)
     val pruned =
       if (matching.isEmpty) {
-        spark.read.parquet(tablePath).filter(lit(false))
+        graft.Tables.parquet(spark, tablePath).filter(lit(false))
       } else {
-        spark.read.parquet(matching.map(_.getString(0)).toIndexedSeq: _*)
+        val paths = matching.map(_.getString(0))
+        graft.Tables.parquet(spark, paths.head, paths.tail.toIndexedSeq: _*)
           .filter(col(column) >= lo && col(column) <= hi)
       }
     (pruned, matching.length, files.length)

@@ -69,7 +69,7 @@ object Layouts {
       .join(Rbac.permissions(spark, dir), "document_id")
       .select(col("role_id").as("partition_role"), col("block_id"),
         col("document_id"), col("embedding"))
-    val existing = spark.read.parquet(layoutPath)
+    val existing = graft.Tables.parquet(spark, layoutPath)
       .select("partition_role", "block_id")
     val toAppend = routed
       .join(existing, Seq("partition_role", "block_id"), "left_anti") // idempotent
@@ -136,7 +136,7 @@ object Layouts {
     val affected: Seq[Long] = readManifest(fs, mf) match {
       case Some(roles) => roles.toSeq.sorted
       case None =>
-        val layout = spark.read.parquet(layoutPath)
+        val layout = graft.Tables.parquet(spark, layoutPath)
         if (!layout.columns.contains("batch_id")) Seq.empty
         else layout
           .filter(col("batch_id") === batchId)
@@ -146,7 +146,7 @@ object Layouts {
     }
     affected.foreach { role =>
       swapPartition(spark, layoutPath, role,
-        spark.read.parquet(layoutPath)
+        graft.Tables.parquet(spark, layoutPath)
           .filter(col("partition_role") === role)
           .filter(col("batch_id") =!= batchId)
           .drop("partition_role"))
@@ -184,18 +184,18 @@ object Layouts {
       // revoked since routing must not hide a partition that still
       // physically holds the doc's rows. (At scale a doc→partition
       // sidecar index would prune this scan; correctness first.)
-      spark.read.parquet(layoutPath)
+      graft.Tables.parquet(spark, layoutPath)
         .join(broadcast(docs.select("document_id")), Seq("document_id"), "left_semi")
         .select(col("partition_role").cast("long").as("partition_role"),
           col("block_id"), col("document_id"), col("embedding"), col("batch_id"))
         .write.parquet(undo.toString)
     }
-    val roles = spark.read.parquet(undo.toString)
+    val roles = graft.Tables.parquet(spark, undo.toString)
       .select("partition_role").distinct()
       .collect().map(_.getLong(0)).sorted // tiny: partitions holding victims
     roles.foreach { role =>
       swapPartition(spark, layoutPath, role,
-        spark.read.parquet(layoutPath)
+        graft.Tables.parquet(spark, layoutPath)
           .filter(col("partition_role") === role)
           .join(broadcast(docs.select("document_id")), Seq("document_id"), "left_anti")
           .drop("partition_role"))
@@ -221,11 +221,11 @@ object Layouts {
     val undo = undoPath(layoutPath, batchId)
     val fs = undo.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(undo)) return
-    val saved = spark.read.parquet(undo.toString).persist()
+    val saved = graft.Tables.parquet(spark, undo.toString).persist()
     val roles = saved.select("partition_role").distinct()
       .collect().map(_.getLong(0)).sorted
     roles.foreach { role =>
-      val current = spark.read.parquet(layoutPath)
+      val current = graft.Tables.parquet(spark, layoutPath)
         .filter(col("partition_role") === role)
         .drop("partition_role")
       val missing = saved.filter(col("partition_role") === role)
@@ -252,7 +252,7 @@ object Layouts {
   def rewritePartition(spark: SparkSession, layoutPath: String, role: Long,
                        targetBytes: Long = 128L * 1024 * 1024): (Int, Int) =
     swapPartition(spark, layoutPath, role,
-      spark.read.parquet(layoutPath)
+      graft.Tables.parquet(spark, layoutPath)
         .filter(col("partition_role") === role) // partition pruning: one dir read
         .drop("partition_role"),
       targetBytes)
@@ -400,7 +400,7 @@ object Layouts {
     val q = graft.Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
       .select("embedding").head().getSeq[Float](0).toArray
     val lists = graft.ann.IvfIndex.probeLists(idx, q, nprobe)
-    spark.read.parquet(layoutPath)
+    graft.Tables.parquet(spark, layoutPath)
       .filter(col("cell").isin(lists: _*)) // directory pruning
       .filter(col("vec_id") =!= qid)
       .crossJoin(broadcast(
@@ -500,7 +500,7 @@ object Layouts {
     val roleIds = Rbac.userRoles(spark, dir)
       .filter(col("user_id") === userId)
       .collect().map(_.getLong(1)) // tiny: the user's 1-2 roles
-    spark.read.parquet(layoutPath)
+    graft.Tables.parquet(spark, layoutPath)
       .filter(col("partition_role").isin(roleIds: _*)) // partition pruning
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", l2_dist(col("embedding"), col("qvec")))

@@ -29,6 +29,29 @@ class Round17Spec extends AnyFunSuite {
     }
   }
 
+  test("distributed exact rank on a small frame equals the single-task rank, as a long") {
+    // a frame built to stress the distributed branch: ties that straddle
+    // range boundaries, one type far larger than the others, a null type
+    val sp = spark
+    val f = sp.range(600)
+      .select(
+        when(col("id") % 10 === 9, lit(null).cast("string"))
+          .when(col("id") % 10 < 6, lit("big"))
+          .otherwise(concat(lit("t"), (col("id") % 3).cast("string"))).as("event_type"),
+        (col("id") % 13).cast("double").as("value"))
+    val n = f.count()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_type", "value", "rn").collect()
+        .map(r => (Option(r.getString(0)), r.getDouble(1), r.getAs[Number](2).longValue)).sorted.toSeq
+    val single = Analytics.typeRanks(sp, f, n, distRankMinRows = n + 1)
+    val dist = Analytics.typeRanks(sp, f, n, distRankMinRows = 2L)
+    assert(dist.schema("rn").dataType == org.apache.spark.sql.types.LongType,
+      "the distributed rank must not narrow to int")
+    val (s, d) = (rows(single), rows(dist))
+    assert(d.length == n, s"offset join changed the row count: ${d.length} of $n")
+    assert(s == d, "distributed rank diverges from the single-task rank")
+  }
+
   test("cost-model layout distributed benefit rank equals the single-window form (A17)") {
     import graft.rbac.{Partitioned, Rbac}
     def rows(df: org.apache.spark.sql.DataFrame) =
