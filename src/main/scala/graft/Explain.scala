@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-shape inspector: prints the formatted physical plan of selected
   * queries so scan pruning / broadcast placement / TakeOrdered use can
@@ -12,17 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("rbac_prefilter_topk", "ann_batch_topk", "q1_pricing_summary")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // bounded-heap aggregates (topk_ids/topk_kth) must stay on the
-      // ObjectHashAggregate hash path: the default sort-based fallback
-      // (128 keys) SORTS the full candidate-pair stream - at 10x scale
-      // that spilled >79 GB on a count whose hash state is kilobytes
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Calibration appendix (`runMain graft.RecallCheck <dir>`): serving
   * recall vs exact ground truth at an arbitrary dataset dir, for the
@@ -14,13 +13,8 @@ object RecallCheck {
   def main(args: Array[String]): Unit = {
     Sidecars.isolate("graft_recallcheck_sidecars")
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // optional 2nd arg:
     //   "nnd"   — skip the exact-graph walk (its serving graph is the

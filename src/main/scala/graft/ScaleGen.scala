@@ -255,18 +255,8 @@ object ScaleGen {
     // mode: "iso" (default — isotropic, the adversarial control) or
     // "manifold" (8-dim intrinsic — the regime graph ANN serves)
     val mode = if (args.length > 3) args(3) else "iso"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded-heap aggregates (topk_ids/topk_kth) must stay on the
-      // ObjectHashAggregate hash path: the default sort-based fallback
-      // (128 keys) SORTS the full candidate-pair stream - at 10x scale
-      // that spilled >79 GB on a count whose hash state is kilobytes
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val passthrough =

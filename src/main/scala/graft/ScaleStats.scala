@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale-exponent measurement main (round 10): prints ONE JSON line of
   * the engine's internal work volumes at a dataset dir, so running it
@@ -43,18 +42,8 @@ object ScaleStats {
     Sidecars.isolate("graft_scalestats_sidecars")
     val dir = args(0)
     val atScale = args.length > 1 && args(1) == "atscale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded-heap aggregates (topk_ids/topk_kth) must stay on the
-      // ObjectHashAggregate hash path: the default sort-based fallback
-      // (128 keys) SORTS the full candidate-pair stream - at 10x scale
-      // that spilled >79 GB on a count whose hash state is kilobytes
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     def stage[T](name: String)(f: => T): T = {
       System.err.println(s"[scalestats] $name ...")

@@ -18,18 +18,9 @@ object ScanCost {
   def main(args: Array[String]): Unit = {
     Sidecars.isolate("graft_scancost_sidecars") // see Bench — don't clobber the oracle path
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
     val reps = 5
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded-heap aggregates (topk_ids/topk_kth) must stay on the
-      // ObjectHashAggregate hash path: the default sort-based fallback
-      // (128 keys) SORTS the full candidate-pair stream - at 10x scale
-      // that spilled >79 GB on a count whose hash state is kilobytes
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val n = spark.sparkContext.defaultParallelism

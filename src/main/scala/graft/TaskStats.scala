@@ -4,7 +4,6 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Straggler instrumentation (`sbt "runMain graft.TaskStats [names...]"`).
   *
@@ -21,18 +20,8 @@ object TaskStats {
   def main(args: Array[String]): Unit = {
     Sidecars.isolate("graft_skew_sidecars") // see Bench — don't clobber the oracle path
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded-heap aggregates (topk_ids/topk_kth) must stay on the
-      // ObjectHashAggregate hash path: the default sort-based fallback
-      // (128 keys) SORTS the full candidate-pair stream - at 10x scale
-      // that spilled >79 GB on a count whose hash state is kilobytes
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val byStage = TrieMap.empty[Int, ArrayBuffer[Long]]

@@ -320,6 +320,14 @@ object GraphSearch {
     vis.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
   }
 
+  /** The merge-time permission filter of the graph serving keys: the
+    * visited candidates (`cand_id`) the user may read, under
+    * `Rbac.restrict`'s walk-bounded policy (no forced broadcast).
+    */
+  private def mergeFilter(vis: DataFrame, spark: SparkSession, dir: String,
+                          userId: Long): DataFrame =
+    graft.rbac.Rbac.restrict(vis, spark, dir, userId, key = "cand_id", walkBounded = true)
+
   /** B31 `ann_graph_topk`: per-query top-k of the walk — the batch form
     * of hnswlib knn_query over the whole corpus. */
   def graphTopK(spark: SparkSession, dir: String, nq: Int = Nq, k: Int = 10): DataFrame =
@@ -336,17 +344,7 @@ object GraphSearch {
     */
   def rbacGraphTopK(spark: SparkSession, dir: String, userId: Long = 1,
                     k: Int = 10): DataFrame = {
-    val acc = graft.rbac.Rbac.accessibleDocs(spark, dir, userId)
-      .select(col("document_id").as("cand_id"))
-    // NO forced broadcast on the accessible-doc set: the probe side
-    // (query 0's visited slice) is bounded at seeds + rounds·ef·2gk
-    // rows BY CONSTRUCTION, so AQE broadcasts whichever side is small
-    // — and at 100 TB a high-selectivity user's doc set would blow the
-    // 8 GB broadcast cap that a forced hint pins it to. (The prefilter
-    // family keeps its documented hint; the graph keys don't need it.)
-    visited(spark, dir)
-      .filter(col("query_id") === 0)
-      .join(acc, Seq("cand_id"), "left_semi")
+    mergeFilter(visited(spark, dir).filter(col("query_id") === 0), spark, dir, userId)
       .orderBy(col("dist"), col("cand_id"))
       .limit(k)
       .select(col("cand_id").as("block_id"), col("cand_id").as("document_id"))
@@ -595,12 +593,11 @@ object GraphSearch {
   private def exactAccessTopK(spark: SparkSession, dir: String, userId: Long,
                               nq: Int, k: Int): Set[(Long, Long)] = {
     val e = Tables.embeddings(spark, dir)
-    val acc = graft.rbac.Rbac.accessibleDocs(spark, dir, userId)
-      .select(col("document_id").as("cand_id"))
     val queries = broadcast(e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-    e.select(col("vec_id").as("cand_id"), col("embedding"))
-      .join(acc, Seq("cand_id"), "left_semi")
+    // the probe side is the corpus: the broadcast grant policy
+    graft.rbac.Rbac.restrict(e.select(col("vec_id").as("cand_id"), col("embedding")),
+      spark, dir, userId, key = "cand_id")
       .crossJoin(queries)
       .filter(col("cand_id") =!= col("query_id"))
       .groupBy("query_id")
@@ -623,9 +620,7 @@ object GraphSearch {
       .filter(col("vec_id") < Nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
     val vis = buildVisited(spark, dir, queries, ef, Rounds, edges, medoids)
-    val acc = graft.rbac.Rbac.accessibleDocs(spark, dir, userId)
-      .select(col("document_id").as("cand_id"))
-    val got = topOf(vis.join(acc, Seq("cand_id"), "left_semi"), 10)
+    val got = topOf(mergeFilter(vis, spark, dir, userId), 10)
       .select("query_id", "cand_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     PlanCut.releaseDisk(vis) // probe walk: result collected, reclaim the dir
@@ -636,7 +631,6 @@ object GraphSearch {
                          k: Int = 10, ef: Int = -1, rounds: Int = Rounds,
                          gk: Int = GraphK, cells: Int = Cells,
                          alpha: Double = 2.0): DataFrame = {
-    import graft.rbac.Rbac
     // ef = -1 (the shipped default): serve at the MEASURED per-
     // partition policy. An explicit ef is an attribution probe
     // (RecallCheck's sweep) and walks the default-quality graph.
@@ -652,11 +646,7 @@ object GraphSearch {
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
       buildVisited(spark, dir, queries, efR, rounds, edges, medoids)
     }
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-      .select(col("document_id").as("cand_id"))
-    // unhinted like rbacGraphTopK: the visited side is walk-bounded,
-    // the acc side is scale-variant — let AQE pick the build side
-    vis.join(acc, Seq("cand_id"), "left_semi")
+    mergeFilter(vis, spark, dir, userId)
       .orderBy(col("dist"), col("cand_id"))
       .limit(k)
       .select(col("cand_id").as("block_id"), col("cand_id").as("document_id"))
@@ -708,7 +698,6 @@ object GraphSearch {
   def partitionGraphPolicyTopK(spark: SparkSession, dir: String,
                                userId: Long = 1, nq: Int = Nq, k: Int = 10,
                                alpha: Double = 2.0): DataFrame = {
-    import graft.rbac.Rbac
     val (iters, ef, _) = partitionServePolicy(spark, dir, userId, alpha)
     // nq rides in the tag (ADVICE r14): the visited frame is built for
     // THIS call's query batch — a later call with a different nq must
@@ -722,9 +711,7 @@ object GraphSearch {
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
       buildVisited(spark, dir, queries, ef, Rounds, edges, medoids)
     }
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-      .select(col("document_id").as("cand_id"))
-    topOf(vis.join(acc, Seq("cand_id"), "left_semi"), k)
+    topOf(mergeFilter(vis, spark, dir, userId), k)
       .select(col("query_id"), col("cand_id").as("block_id"))
       .orderBy("query_id", "block_id")
   }
@@ -1139,7 +1126,6 @@ object GraphSearch {
                           k: Int = 10, ef: Int = -1, rounds: Int = Rounds,
                           gk: Int = GraphK, cells: Int = Cells,
                           alpha: Double = 2.0): DataFrame = {
-    import graft.rbac.Rbac
     // the per-user walks are INDEPENDENT jobs (distinct routed graphs,
     // distinct visited caches) — overlap them (guide §2.6, r17): the
     // sequential map serialized 3 × rounds of frontier-round latency
@@ -1164,11 +1150,9 @@ object GraphSearch {
           .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
         buildVisited(spark, dir, queries, efR, rounds, edges, medoids)
       }
-      val acc = Rbac.accessibleDocs(spark, dir, u)
-        .select(col("document_id").as("cand_id"))
-      // unhinted merge-time semi-join (same policy as the other graph
-      // serving keys), then the shared per-query ranking rule
-      topOf(vis.join(acc, Seq("cand_id"), "left_semi"), k)
+      // merge-time permission filter, then the shared per-query
+      // ranking rule
+      topOf(mergeFilter(vis, spark, dir, u), k)
         .select(lit(u).as("user_id"), col("query_id"),
           col("cand_id").as("block_id"))
     } }

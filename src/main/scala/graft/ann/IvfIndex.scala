@@ -324,13 +324,11 @@ object IvfIndex {
                            k: Int = 16, nprobe: Int = 2, topk: Int = 10): DataFrame = {
     val idx = getOrBuild(spark, dir, k)
     val q = queryVec(spark, dir, 0)
-    val acc = graft.rbac.Rbac.accessibleDocs(spark, dir, userId)
-    val assigned = assignments(spark, dir, k)
+    def accessible(df: DataFrame): DataFrame =
+      graft.rbac.Rbac.restrict(df, spark, dir, userId, key = "vec_id")
 
     // one aggregation: accessible candidates per list (≤ k rows)
-    val accPerList = assigned
-      .join(broadcast(acc.withColumnRenamed("document_id", "acc_doc")),
-        col("vec_id") === col("acc_doc"), "left_semi")
+    val accPerList = accessible(assignments(spark, dir, k))
       .groupBy("list_id").agg(count(lit(1)).as("n_acc"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
@@ -343,12 +341,9 @@ object IvfIndex {
     val lists = ordered.take(probes)
 
     // search job: probe predicate = filter on the cell-attached corpus
-    // (partition pruning at scale), permission = explicit broadcast
+    // (partition pruning at scale), permission = the broadcast grant
     // semi-join — the corpus side has no Exchange (ProbePlanSpec)
-    withCells(spark, dir, k)
-      .filter(col("cell").isin(lists: _*))
-      .join(broadcast(acc.withColumnRenamed("document_id", "acc_doc")),
-        col("vec_id") === col("acc_doc"), "left_semi")
+    accessible(withCells(spark, dir, k).filter(col("cell").isin(lists: _*)))
       .crossJoin(broadcast(
         Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
           .select(col("embedding").as("qvec"))))
@@ -442,8 +437,7 @@ object IvfIndex {
     */
   def qdTreeSearch(spark: SparkSession, dir: String, userId: Long, k: Int = 8,
                    nprobe: Int = 0, topk: Int = 10): DataFrame = {
-    val ur = graft.rbac.Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId).select("role_id")
+    val ur = graft.rbac.Rbac.rolesOf(spark, dir, userId)
     // leaf signatures intersecting the user's roles (tiny: ≤ #combs)
     val routedSigs = graft.rbac.Rbac.permissions(spark, dir)
       .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")

@@ -168,7 +168,7 @@ object PqIndex {
     * exact re-rank of the short list. Scan bytes drop by
     * (nprobe/cells)·(1/32) of the raw corpus — the two pruning axes the
     * reference gets from IVFFlat indexes and we compose declaratively.
-    * With `userId`, the accessible-doc semi-join makes it the
+    * With `userId`, the grant semi-join makes it the
     * compressed RBAC serving path (prefilter semantics on the probe
     * set).
     */
@@ -185,11 +185,8 @@ object PqIndex {
     val probed = codesWithCells(spark, dir, cells)
       .filter(col("list_id").isin(lists: _*))
       .filter(col("vec_id") =!= qid)
-    val filtered = userId.fold(probed) { u =>
-      probed.join(broadcast(graft.rbac.Rbac.accessibleDocs(spark, dir, u)
-        .withColumnRenamed("document_id", "acc_doc")),
-        col("vec_id") === col("acc_doc"), "left_semi")
-    }
+    val filtered = userId.fold(probed)(u =>
+      graft.rbac.Rbac.restrict(probed, spark, dir, u, key = "vec_id"))
     val shortList = filtered
       .withColumn("adc", adc(col("code")))
       .orderBy(col("adc"), col("vec_id"))

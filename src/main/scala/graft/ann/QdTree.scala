@@ -73,7 +73,7 @@ object QdTree {
       .select("query_id", "user_id")
       .join(Rbac.userRoles(spark, dir), "user_id")
       .groupBy("query_id")
-      .agg(sort_array(collect_set(col("role_id"))).as("qroles"))
+      .agg(Rbac.roleSet.as("qroles"))
 
   /** Build (or fetch) the greedy tree. `minLeaf` = the reference's
     * min_partition_size (both children must keep ≥ minLeaf blocks and
@@ -241,8 +241,7 @@ object QdTree {
   def routedTopK(spark: SparkSession, dir: String, userId: Long,
                  topk: Int = 10): DataFrame = {
     val tree = getOrBuild(spark, dir)
-    val ur = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId).select("role_id")
+    val ur = Rbac.rolesOf(spark, dir, userId)
     // per-leaf role index ∩ user roles → relevant leaves → the
     // (comb, cell) partitions to scan (index metadata, broadcast)
     val relevantLeaves = tree.assign
@@ -253,12 +252,11 @@ object QdTree {
       .join(broadcast(relevantLeaves), Seq("leaf_id"), "left_semi")
       .select("comb_key", "cell")
     val idx = IvfIndex.getOrBuild(spark, dir, 8)
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-    Rbac.blocks(spark, dir)
+    val routed = Rbac.blocks(spark, dir)
       .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
       .withColumn("cell", graft.functions.vector.nearest_centroid(col("embedding"), idx.centroids))
       .join(broadcast(routedParts), Seq("comb_key", "cell"), "left_semi") // leaf routing
-      .join(broadcast(acc), Seq("document_id"), "left_semi") // permission filter
+    Rbac.restrict(routed, spark, dir, userId) // permission filter
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", graft.functions.vector.l2_dist(col("embedding"), col("qvec")))
       .orderBy(col("dist"), col("block_id"))

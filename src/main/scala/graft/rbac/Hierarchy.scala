@@ -3,8 +3,6 @@ package graft.rbac
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.vector._
-
 /** Hierarchical (ERBAC-style) RBAC — role TREES with inherited
   * permissions, the enterprise shape the reference's workload
   * generators build (services/rbac_generator/
@@ -26,8 +24,10 @@ import graft.functions.vector._
   * the fixed-iteration loop is EXACT, not an approximation. The
   * closure is a role-metadata sidecar (|roles|·height rows at worst —
   * dimension-sized, like the centroid frames), broadcast into the
-  * permission expansion; the corpus-side plan below it is identical
-  * to the flat prefilter's (broadcast semi-join + TakeOrdered). At
+  * permission expansion. A hierarchy is only a different permission
+  * MODEL (`Rbac.RoleModel`): its effective (user_id, role_id) frame
+  * plugs into the one permission path of `Rbac`, so the grant rows,
+  * accessible set, top-k and selectivity report are the flat ones. At
   * 100 TB the roles table grows with the ORG, not the corpus — the
   * closure stays a broadcast frame.
   */
@@ -74,29 +74,37 @@ object Hierarchy {
       closure.persist()
     }
 
+  // Effective-role frames are org-sized DIMENSION tables like
+  // Rbac.userRoles — persisted once per (dataset, closure), so the
+  // per-query grant rows read a flat cached frame.
+  private val effectiveCache = new graft.SessionFrameCache[(String, String)]
+
+  /** Every user's held roles expanded through a role closure
+    * (role_id, desc_id) — the one body of the tree and DAG
+    * effective-role frames.
+    */
+  private def expand(spark: SparkSession, dir: String, name: String,
+                     closure: => DataFrame): DataFrame =
+    effectiveCache.getOrElseUpdate(spark, (dir, name)) {
+      Rbac.userRoles(spark, dir)
+        .join(broadcast(closure), "role_id")
+        .select(col("user_id"), col("desc_id").as("role_id"))
+        .distinct()
+        .persist()
+    }
+
   /** Effective (user_id, role_id): every user's held roles expanded to
     * their subtrees — the hierarchical replacement for Rbac.userRoles,
     * pluggable anywhere the flat frame is (still org-sized).
     */
   def effectiveUserRoles(spark: SparkSession, dir: String): DataFrame =
-    Rbac.userRoles(spark, dir)
-      .join(broadcast(roleClosure(spark)), "role_id")
-      .select(col("user_id"), col("desc_id").as("role_id"))
-      .distinct()
+    expand(spark, dir, "tree", roleClosure(spark))
 
   /** A19 step 1: docs accessible to `userId` under the hierarchy —
-    * the flat derivation routed through the expanded role set
-    * (held roles → all subtree roles → grants, DISTINCT at doc level).
+    * the flat derivation routed through the expanded role set.
     */
-  def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame = {
-    val effective = effectiveUserRoles(spark, dir)
-      .filter(col("user_id") === userId)
-      .select("role_id").distinct()
-    Rbac.permissions(spark, dir)
-      .join(broadcast(effective), "role_id")
-      .select("document_id")
-      .distinct()
-  }
+  def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
+    Rbac.accessibleDocs(spark, dir, userId, effectiveUserRoles)
 
   /** A19 step 4: the A17 cost-model layout over the HIERARCHY's
     * permission distribution — same greedy (workload weights, log-load
@@ -121,54 +129,18 @@ object Hierarchy {
     * cost model can chew on (flat: every user holds 1-2 roles at ~19%
     * selectivity each; hierarchical: selectivity depends on WHERE the
     * held roles sit in the tree — a root-holder reaches everything, a
-    * leaf-holder only its own slice). Same comb-aggregation shape as
-    * the flat A9 operator: users sharing a role set share selectivity,
-    * so the per-user expansion is O(combos × grants), never
-    * users × docs.
+    * leaf-holder only its own slice). The flat A9 operator over the
+    * effective roles: a comb of effective roles reaches exactly the
+    * docs its held roles' subtrees grant.
     */
-  def selectivityStats(spark: SparkSession, dir: String): DataFrame = {
-    val b = Rbac.blocks(spark, dir).select("document_id")
-    val total = b.agg(count(lit(1)).as("total_blocks"))
-    val roleBlocks = Rbac.permissions(spark, dir).join(b, "document_id")
-    val userCombos = Rbac.userRoles(spark, dir)
-      .groupBy("user_id")
-      .agg(concat_ws(",", sort_array(collect_set(col("role_id")))).as("comb_key"),
-        collect_set(col("role_id")).as("rs"))
-    // (comb → held role → DESCENDANT role) exploded: the hierarchy's
-    // only change to the flat plan is this closure hop before the
-    // grant join — still dimension-sized, still broadcast
-    val combRoles = userCombos.select("comb_key", "rs").distinct()
-      .select(col("comb_key"), explode(col("rs")).as("role_id"))
-      .join(broadcast(roleClosure(spark)), "role_id")
-      .select(col("comb_key"), col("desc_id").as("role_id"))
-      .distinct()
-    val comboCounts = broadcast(combRoles)
-      .join(roleBlocks, "role_id")
-      .groupBy("comb_key")
-      .agg(countDistinct("document_id").as("accessible_blocks"))
-    userCombos.select("user_id", "comb_key")
-      .join(broadcast(comboCounts), "comb_key")
-      .crossJoin(broadcast(total))
-      .select(col("user_id"), col("accessible_blocks"),
-        round(col("accessible_blocks") / col("total_blocks").cast("double"), 4)
-          .as("selectivity"))
-      .orderBy("user_id")
-  }
+  def selectivityStats(spark: SparkSession, dir: String): DataFrame =
+    Rbac.selectivityStats(spark, dir, effectiveUserRoles)
 
   /** A19 step 2: exact pre-filtered L2 top-k through the expanded role
-    * set — the corpus-side plan is the flat prefilter's (broadcast
-    * semi-join on the accessible set, codegen'd distance,
-    * TakeOrderedAndProject); only the tiny permission derivation
-    * changed.
+    * set — the flat prefilter's plan; only the permission model changed.
     */
   def hierarchyTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    Rbac.blocks(spark, dir)
-      .join(broadcast(accessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    Rbac.prefilterTopK(spark, dir, userId, k, effectiveUserRoles)
 
   // ------------------------------------------------------------------
   // DAG hierarchy: SHARED subtrees (multi-parent roles) — the
@@ -229,33 +201,17 @@ object Hierarchy {
     * multi-parent closure plugged in.
     */
   def dagEffectiveUserRoles(spark: SparkSession, dir: String): DataFrame =
-    Rbac.userRoles(spark, dir)
-      .join(broadcast(dagClosure(spark)), "role_id")
-      .select(col("user_id"), col("desc_id").as("role_id"))
-      .distinct()
+    expand(spark, dir, "dag", dagClosure(spark))
 
   /** Docs accessible to `userId` under the DAG hierarchy. */
-  def dagAccessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame = {
-    val effective = dagEffectiveUserRoles(spark, dir)
-      .filter(col("user_id") === userId)
-      .select("role_id").distinct()
-    Rbac.permissions(spark, dir)
-      .join(broadcast(effective), "role_id")
-      .select("document_id")
-      .distinct()
-  }
+  def dagAccessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
+    Rbac.accessibleDocs(spark, dir, userId, dagEffectiveUserRoles)
 
   /** Exact pre-filtered top-k under the DAG hierarchy — same corpus
-    * plan as `hierarchyTopK`, third permission derivation.
+    * plan as `hierarchyTopK`, third permission model.
     */
   def dagTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    Rbac.blocks(spark, dir)
-      .join(broadcast(dagAccessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    Rbac.prefilterTopK(spark, dir, userId, k, dagEffectiveUserRoles)
 
   /** A17's greedy layout fed the DAG's permission distribution — the
     * THIRD structurally different input (flat / tree / shared-subtree

@@ -30,10 +30,9 @@ object Maintenance {
     * tombstone set inside the scan stage.
     */
   def deleteAwareTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-    Rbac.blocks(spark, dir)
+    val live = Rbac.blocks(spark, dir)
       .join(broadcast(tombstones(spark, dir)), Seq("document_id"), "left_anti")
-      .join(broadcast(acc), Seq("document_id"), "left_semi")
+    Rbac.restrict(live, spark, dir, userId)
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
       .orderBy(col("dist"), col("block_id"))

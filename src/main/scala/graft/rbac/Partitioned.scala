@@ -34,8 +34,7 @@ object Partitioned {
     * through the partitioned plan.
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val ur = Rbac.userRoles(spark, dir).filter(col("user_id") === userId)
-      .select(col("role_id").as("partition_role"))
+    val ur = Rbac.rolesOf(spark, dir, userId).select(col("role_id").as("partition_role"))
     roleLayout(spark, dir)
       .join(broadcast(ur), Seq("partition_role"), "left_semi") // partition prune
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
@@ -51,15 +50,15 @@ object Partitioned {
       .select("block_id", "document_id")
   }
 
-  /** DOC-side granting-role sets, array + key forms — THE single
-    * definition of a document's combination (the array feeds predicate
-    * evaluation in the qd-tree build, the key is the partition id).
+  /** DOC-side granting-role sets, array + key forms (`Rbac.combKey`)
+    * — the array feeds predicate evaluation in the qd-tree build, the
+    * key is the partition id.
     */
   def combRoleSets(spark: SparkSession, dir: String): DataFrame =
     Rbac.permissions(spark, dir)
       .groupBy("document_id")
-      .agg(sort_array(collect_set(col("role_id"))).as("roles"))
-      .withColumn("comb_key", concat_ws(",", col("roles")))
+      .agg(Rbac.roleSet.as("roles"))
+      .withColumn("comb_key", Rbac.combKey(col("roles")))
 
   /** Combination key of a document: its full sorted granting-role set
     * (initialize_combination_role_partition_tables.py) — each doc lives
@@ -71,48 +70,27 @@ object Partitioned {
   /** A6: combination-partition search: route to the partitions whose
     * role-set intersects the user's roles, scan only those, top-k.
     *
-    * r17 restructure (guide §3/§8; result row-identical, oracle-pinned):
-    * a partition's comb_key IS its docs' granting role set, so "comb
+    * A partition's comb_key IS its docs' granting role set, so "comb
     * intersects the user's roles" ⟺ "the doc is granted by ≥1 user
-    * role" — the routing collapses to ONE broadcast semi-join of the
-    * block scan against the user's permission rows. The old plan
-    * aggregated comb_key over the WHOLE permission table and equi-
-    * joined it onto the block scan — an Exchange carrying the
-    * embedding arrays (the §8 payload-shuffle smell) plus two corpus-
-    * wide aggregates, all to label rows of which only k survive the
-    * TakeOrdered. comb_key is now attached AFTER the top-k, by a slim
-    * per-doc aggregate over the routed docs' permission rows, with the
-    * bounded k-row side broadcast. Plan (plans/r17 before/after dumps):
-    * the shuffle Exchange count is unchanged — 4 outside the cached
-    * role tables (6 counting the 2 inside them) both before and after.
-    * What changed is what they carry: the two corpus-wide comb_key
-    * collect_set aggregates are gone; the 4 now shuffle the routed-doc
-    * distinct (twice — the same subtree feeds the prune and the key
-    * attach), the routed docs' comb aggregate, and the k-row final
-    * sort. In those sf0.1 dumps no Exchange carries an embedding array
-    * before or after: the old equi-join broadcast its comb side there.
+    * role": the routing is the one permission filter (`Rbac.restrict`).
+    * comb_key is attached AFTER the top-k, from the permission rows of
+    * the k result docs only. Plan (`graft.Explain` at sf0.1, dumps
+    * under plans/): 2 shuffle Exchanges outside the cached role tables
+    * (4 counting the 2 inside them), the k-row comb aggregate and the
+    * final sort; the previous plan had 4 (6), two of them the
+    * routed-doc DISTINCT. No Exchange carries an embedding array.
     */
   def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val userRoleSet = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId).select("role_id")
-    // docs in a user-relevant comb == docs granted by ≥1 user role
-    val routedDocs = Rbac.permissions(spark, dir)
-      .join(broadcast(userRoleSet), "role_id")
-      .select("document_id").distinct()
-    val top = Rbac.blocks(spark, dir)
-      .join(broadcast(routedDocs), Seq("document_id"), "left_semi") // prune
+    val top = Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId)
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
       .orderBy(col("dist"), col("block_id"))
       .limit(k)
       .select("block_id", "document_id", "dist")
-    // comb_key of the routed docs only (slim (doc, role) rows — the
-    // corpus-wide combKeys aggregate is gone from this path)
-    val routedKeys = Rbac.permissions(spark, dir)
-      .join(broadcast(routedDocs), Seq("document_id"), "left_semi")
-      .groupBy("document_id")
-      .agg(concat_ws(",", sort_array(collect_set(col("role_id")))).as("comb_key"))
-    routedKeys.join(broadcast(top), "document_id")
+    Rbac.permissions(spark, dir)
+      .join(broadcast(top), "document_id")
+      .groupBy("block_id", "document_id", "dist")
+      .agg(Rbac.combKey(Rbac.roleSet).as("comb_key"))
       .orderBy(col("dist"), col("block_id"))
       .select("block_id", "document_id", "comb_key")
   }
@@ -141,8 +119,7 @@ object Partitioned {
     * .costModelLayout); every downstream comb derivation follows.
     */
   private[rbac] def userCombsFrom(ur: DataFrame): DataFrame =
-    ur.groupBy("user_id")
-      .agg(concat_ws(",", sort_array(collect_set(col("role_id")))).as("comb_key"))
+    ur.groupBy("user_id").agg(Rbac.combKey(Rbac.roleSet).as("comb_key"))
 
   /** USER-side (comb_key, role_id) pairs of every user role-comb. */
   def combRoles(spark: SparkSession, dir: String): DataFrame =
@@ -323,7 +300,8 @@ object Partitioned {
   def routedPartitionIds(spark: SparkSession, dir: String, userId: Long,
                          alpha: Double = 2.0): Seq[Integer] =
     costModelLayout(spark, dir, alpha)
-      .join(userCombs(spark, dir).filter(col("user_id") === userId), "comb_key")
+      .join(Rbac.rolesOf(spark, dir, userId).agg(Rbac.combKey(Rbac.roleSet).as("comb_key")),
+        "comb_key")
       .select("partition_id").distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
 
@@ -340,15 +318,14 @@ object Partitioned {
     // prunedRoleSearch's role ids.
     val pids = routedPartitionIds(spark, dir, userId, alpha)
     val layoutPath = graft.sources.Layouts.costModelLayoutPath(spark, dir, alpha)
-    // permission filter at merge time — the shared partition holds
-    // blocks of other combs the user cannot read; the per-user doc set
-    // is bounded by the prefilter family's documented assumption
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-    Tables.parquet(spark, layoutPath)
+    val routed = Tables.parquet(spark, layoutPath)
       .filter(col("partition_id").isin(pids: _*)) // directory pruning
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .join(broadcast(acc), Seq("document_id"), "left_semi")
+    // permission filter at merge time — the shared partition holds
+    // blocks of other combs the user cannot read; the per-user grant
+    // rows are bounded by the prefilter family's documented assumption
+    Rbac.restrict(routed, spark, dir, userId)
       .orderBy(col("dist"), col("block_id"))
       .limit(k)
       .select(col("block_id"), col("document_id"),

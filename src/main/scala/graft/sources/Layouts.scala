@@ -497,9 +497,8 @@ object Layouts {
     */
   def prunedRoleSearch(spark: SparkSession, dir: String, layoutPath: String,
                        userId: Long, k: Int): DataFrame = {
-    val roleIds = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId)
-      .collect().map(_.getLong(1)) // tiny: the user's 1-2 roles
+    val roleIds = Rbac.rolesOf(spark, dir, userId)
+      .collect().map(_.getLong(0)) // tiny: the user's 1-2 roles
     graft.Tables.parquet(spark, layoutPath)
       .filter(col("partition_role").isin(roleIds: _*)) // partition pruning
       .crossJoin(broadcast(Rbac.queryVector(spark, dir)))

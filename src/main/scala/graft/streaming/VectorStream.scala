@@ -48,21 +48,20 @@ object VectorStream {
     * then the same top-k query must reflect the new blocks). A standing
     * (user, query-vector) subscription is maintained as typed group
     * state: arriving blocks are permission-filtered by a stream-static
-    * join, scored inside the streaming scan, and folded into a bounded
-    * top-k state; each micro-batch emits the current ids. State is k
-    * entries — constant, no watermark needed. At scale this shape runs
-    * one state entry per standing subscription, keyed by query id.
+    * semi-join, scored inside the streaming scan, and folded into a
+    * bounded top-k state; each micro-batch emits the current ids. State
+    * is k entries — constant, no watermark needed. At scale this shape
+    * runs one state entry per standing subscription, keyed by query id.
     */
   def topkStream(spark: SparkSession, dir: String, userId: Long = 1,
                  k: Int = 10): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val acc = graft.rbac.Rbac.accessibleDocs(spark, dir, userId)
     val qvec = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0)
-    spark.readStream.schema(rawSchema).parquet(stageDir(dir))
-      .join(acc, col("vec_id") === col("document_id")) // stream-static filter
+    val arriving = spark.readStream.schema(rawSchema).parquet(stageDir(dir))
+    graft.rbac.Rbac.restrict(arriving, spark, dir, userId, key = "vec_id") // stream-static filter
       .select(col("vec_id"),
         l2_dist(col("embedding"), typedLit(qvec)).as("dist"))
       .as[(Long, Double)]

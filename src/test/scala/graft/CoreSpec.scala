@@ -15,23 +15,12 @@ object SparkTest {
   // while a Verify at another SF is in flight (Sidecars.scala)
   Sidecars.isolate("graft_test_sidecars")
 
-  private def build(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    // bounded-heap aggregates (topk_ids/topk_kth) must stay on the
-    // ObjectHashAggregate hash path: the default sort-based fallback
-    // (128 keys) SORTS the full candidate-pair stream - at 10x scale
-    // that spilled >79 GB on a count whose hash state is kilobytes
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   @volatile private var current: SparkSession = null
   // self-healing: SessionCycleSpec stops the shared session to prove
   // the engine's caches survive app cycling — the next access here
   // transparently builds a fresh session for whatever suite runs next
   def spark: SparkSession = synchronized {
-    if (current == null || current.sparkContext.isStopped) current = build()
+    if (current == null || current.sparkContext.isStopped) current = Session.local(4)
     current
   }
   val sf = "/root/testdata/sf0.001"

@@ -216,6 +216,36 @@ class SourcePolicySpec extends AnyFunSuite {
       .map(root.relativize(_).toString).toSeq.sorted
     assert(offenders.isEmpty, s"bare parquet reads outside graft.Tables: $offenders")
   }
+
+  test("one permission path: role filter, grant set, comb key and session config live once") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+      .toSeq.sortBy(_._1)
+    def filesWith(re: scala.util.matching.Regex): Seq[String] =
+      sources.collect { case (f, src) if re.findFirstIn(src).isDefined => f }
+    def count(re: scala.util.matching.Regex, files: Seq[(String, String)] = sources): Int =
+      files.map { case (_, src) => re.findAllMatchIn(src).size }.sum
+    val outsideRbac = (f: String) => !f.startsWith("graft/rbac/")
+    // the accessible SET is for SparkEntry's report keys only; filters
+    // go through Rbac.restrict
+    assert(filesWith("""accessibleDocs\(""".r).filter(outsideRbac) == Seq("graft/SparkEntry.scala"))
+    // one grant join
+    assert(count("""\.join\(broadcast\(rolesOf\(""".r) == 1)
+    // a user's roles come from Rbac.rolesOf — the one user-role filter
+    assert(filesWith("""(?s)userRoles\([^()]*\)\s*\.filter\(col\("user_id"\) ===""".r).isEmpty)
+    assert(filesWith("""filter\(col\("user_id"\) ===""".r) == Seq("graft/rbac/Rbac.scala"))
+    assert(count("""filter\(col\("user_id"\) ===""".r) == 1)
+    // one comb_key definition
+    val rbacFiles = sources.filter(s => !outsideRbac(s._1))
+    assert(count("""sort_array\(collect_set\(""".r, rbacFiles) == 1)
+    assert(count("""concat_ws\(",""".r) == 1)
+    // one session bootstrap
+    assert(filesWith("""\.getOrCreate\(\)""".r) == Seq("graft/Session.scala"))
+    assert(count("""sortBased\.fallbackThreshold""".r) == 1)
+  }
 }
 
 /** Walk scratch (graphTopKFor, G17's per-trigger unit): the final
