@@ -151,11 +151,14 @@ object Bench {
     * with `parsed: null` (VERDICT r15 #1).
     */
   private def scaleSidecarJson(spark: SparkSession, sfDir: String,
-                               curClean: Map[String, Double]): (String, String) = {
+                               curClean: Map[String, Double],
+                               errors: scala.collection.mutable.Map[String, String]): (String, String) = {
     if (curClean.isEmpty) return ("", "")
     val curName = new java.io.File(sfDir).getName
     val frags = ScaledDirs.flatMap { case (scaled, base, factor, key, rel) =>
       val side = new java.io.File(s"bench_full_$scaled.json")
+      def noted(e: Throwable): Unit =
+        errors.getOrElseUpdate(s"scale:$scaled", firstLine(e))
       if (curName != base || !side.exists()) None
       else try {
         val df = spark.read.json(side.getAbsolutePath)
@@ -183,7 +186,7 @@ object Bench {
                   case b: java.lang.Boolean => s""","sf2_$c":$b"""
                   case _ => ""
                 }
-              } catch { case _: Throwable => "" }
+              } catch { case e: Throwable => noted(e); "" }
             val verdictJson = Seq("concurrent_load_pre", "concurrent_load_mean",
               "concurrent_load_peak", "concurrent_ambient_mean",
               "concurrent_self_cores_mean", "concurrent_suspect")
@@ -228,13 +231,13 @@ object Bench {
                   case b: java.lang.Boolean => s""","suspect":$b"""
                   case _ => ""
                 }
-              } catch { case _: Throwable => "" }
+              } catch { case e: Throwable => noted(e); "" }
             val changedCompact = if (changed) ""","data_changed":true""" else ""
             val compact = s""","$key":{"wall":${fmt(meta.getDouble(0), 1)},"n":$n,"med":${fmt(med, 2)},"p90":${fmt(p90, 2)},"n_sup":${sup.size}$suspectCompact$changedCompact}"""
             Some((full, compact))
           }
         }
-      } catch { case _: Throwable => None }
+      } catch { case e: Throwable => noted(e); None }
     }
     (frags.map(_._1).mkString, frags.map(_._2).mkString)
   }
@@ -437,7 +440,7 @@ object Bench {
         // a failed query must SURFACE as a failure, not bench as a fast
         // success — record the error and report it in the JSON
         val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200))
+          case e: Throwable => Some(firstLine(e))
         }
         val t1 = System.nanoTime()
         poolSpans.put(name, ((t0 - w0) / 1e9, (t1 - w0) / 1e9))
@@ -526,7 +529,7 @@ object Bench {
       // same rule as the concurrent pass: a failure must surface as
       // a failure, never as a fast-looking number
       val err = try { SparkEntry.queries(name)(spark, sfDir).count(); None }
-      catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n').take(200)) }
+      catch { case e: Throwable => Some(firstLine(e)) }
       (name, (System.nanoTime() - t0) / 1e9, pre, err)
     }
     // per-key quiet wait under a GLOBAL budget: a heavy key's burst
@@ -628,6 +631,9 @@ object Bench {
     // for keys the current run didn't time, so the sf0.1 run's scale
     // blocks still see one complete per-key map.
     val mergeSidecar = sys.env.get("SPARK_GRAFT_MERGE_SIDECAR").contains("1")
+    // artifact readers below fall back to "absent" on a failure; the
+    // failure's first line rides in the full line's errors map
+    val readErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def priorSerial(): Map[String, Double] =
       if (!mergeSidecar) Map.empty
       else try {
@@ -647,7 +653,7 @@ object Bench {
             }.toMap
           }
         }
-      } catch { case _: Throwable => Map.empty }
+      } catch { case e: Throwable => readErrors("prior_serial") = firstLine(e); Map.empty }
     val serialJson = serialTimes.map { timed =>
       val (clean, suspect) = partitionByLoad(timed, loadMax)
       // carried rows fill in keys this run DIDN'T attempt (ADVICE r13:
@@ -718,10 +724,6 @@ object Bench {
           "\"" + n + "\":[" + fmt(s, 2) + "," + fmt(e, 2) + "]" }
         .mkString("{", ",", "}")
     }
-    val errs = (results.collect { case (k, _, Some(e)) => k -> e } ++
-      warmError.map("warm" -> _))
-      .map { case (k, e) => "\"" + k + "\":\"" + jsonEscape(e) + "\"" }
-      .mkString("{", ",", "}")
     // the dataset digest rides in the artifact so cross-round tooling
     // can refuse to compare times across a testdata regeneration
     val fp = dataFingerprint(sfDir)
@@ -740,7 +742,7 @@ object Bench {
           val est = graft.dedup.Dedup.embeddingCandidateEstimate(
             spark, sfDir, cells = cells)
           s""","c5_candidate_estimate":$est,"c5_cells":$cells"""
-        } catch { case _: Throwable => "" }
+        } catch { case e: Throwable => readErrors("c5_estimate") = firstLine(e); "" }
       else ""
     // the contract exclusion is visible in the artifact, never silent
     // (the no-silent-caps rule)
@@ -755,8 +757,14 @@ object Bench {
     val (scaleJson, scaleCompactJson) = serialTimes.map { timed =>
       val curClean = partitionByLoad(timed, loadMax)._1
         .map { case (n, t, _) => n -> t }.toMap
-      scaleSidecarJson(spark, sfDir, curClean)
+      scaleSidecarJson(spark, sfDir, curClean, readErrors)
     }.getOrElse(("", ""))
+    // a failed query, the warm phase and every artifact reader that
+    // fell back to "absent" (prior_serial, c5_estimate, scale:<dir>)
+    val errs = (results.collect { case (k, _, Some(e)) => k -> e } ++
+      warmError.map("warm" -> _) ++ readErrors)
+      .map { case (k, e) => "\"" + k + "\":\"" + jsonEscape(e) + "\"" }
+      .mkString("{", ",", "}")
     // "total_full", not "total": exactly ONE stdout line may carry
     // metric=total or a consumer keying on it would double-count runs
     // ambient fields ride in the artifact so a wall delta is
@@ -782,7 +790,9 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(sideName),
         (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] sidecar write failed: ${firstLine(e)}")
+    }
     // Durable per-run archive (VERDICT r11 #1): the sidecar above is
     // OVERWRITTEN every run and BENCH_r*.json keeps only the stdout
     // tail (top-15 serial rows) — which left the r10→r11 1.5× wall
@@ -799,7 +809,9 @@ object Bench {
       java.nio.file.Files.write(hist, stamped.getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] history append failed: ${firstLine(e)}")
+    }
     println(fullLine)
     def r3(d: Double): String = // Locale.ROOT: a comma decimal separator would break the JSON
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
@@ -839,6 +851,12 @@ object Bench {
       s"BENCH ERRORS: ${results.count(_._3.isDefined)} queries failed")
     spark.stop()
   }
+
+  /** A failure's first line (class and message), capped at 200 chars:
+    * the form every error carries in the artifact.
+    */
+  private[graft] def firstLine(e: Throwable): String =
+    e.toString.takeWhile(_ != '\n').take(200)
 
   /** The untimed warm phase: a small query through the full stack, plus
     * the index builds — the reference times search against pre-built
@@ -981,9 +999,6 @@ object Bench {
       if (warms("ann_graph_upsert_topk"))
         graft.ann.GraphSearch.repairedGraph(spark, sfDir)
       None
-    } catch { case e: Throwable =>
-      val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
-      Some(s"${e.getClass.getName}: $msg")
-    }
+    } catch { case e: Throwable => Some(firstLine(e)) }
   }
 }

@@ -37,8 +37,7 @@ object RecallCheck {
         // the NND serving walk's own ef sweep — the curve that matters
         // where the exact graph can't be built (its serving graph IS
         // the buildable-at-100× index)
-        val gt = ann.Ann.batchTopK(spark, dir, 8, 10).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        val gt = ann.GraphSearch.groundTruth(spark, dir, 8, 10)
         val grid = if (args.length > 2) args(2).split(",").map(_.toInt).toSeq
                    else Seq(64, 128, 256, 512)
         // optional 4th arg: descent iterations (build-quality knob);
@@ -49,13 +48,11 @@ object RecallCheck {
         val iters = if (args.length > 3) args(3).toInt else 2
         val rounds = if (args.length > 4) args(4).toInt
                      else ann.GraphSearch.Rounds
+        // each point is a transient probe walk over the plain NND graph
         val curve = grid.map { ef =>
-          val got = ann.GraphSearch.topOf(
-            ann.GraphSearch.visitedNnd(spark, dir, ef = ef, iters = iters,
-              rounds = rounds), 10)
-            .select("query_id", "cand_id").collect()
-            .map(r => (r.getLong(0), r.getLong(1))).toSet
-          ef -> got.intersect(gt).size.toDouble / gt.size
+          ef -> ann.GraphSearch.probe(spark, dir, 8, 10, ef, rounds,
+            ann.GraphSearch.nndServingGraph(spark, dir, iters = iters),
+            ann.GraphSearch.cellMedoids(spark, dir), gt)
         }
         println(s"CURVE_NND rounds=$rounds iters=$iters " +
           curve.map { case (ef, r) => s"ef$ef=$r" }.mkString(" "))
@@ -102,7 +99,7 @@ object RecallCheck {
             val (i, e, r) = ann.GraphSearch.partitionServePolicy(spark, dir, u)
             s"(iters=$i,ef=$e,batch_recall=$r)"
           }
-          s"u$u=${got.intersect(exact).size.toDouble / exact.size}$pick"
+          s"u$u=${ann.GraphSearch.recall(got, exact)}$pick"
         }
       }
       println(s"PARTITION_RECALL ef=${efArg.map(_.toString).getOrElse("policy")} "
@@ -142,17 +139,13 @@ object RecallCheck {
       spark.stop(); return
     }
     val nndOnly = args.length > 1 && args(1) == "nnd"
-    val exact = ann.Ann.batchTopK(spark, dir, 8, 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val nnd = ann.GraphSearch.graphTopKNnd(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = ann.GraphSearch.groundTruth(spark, dir, 8, 10)
+    val nnd = ann.GraphSearch.pairs(ann.GraphSearch.graphTopKNnd(spark, dir))
     val exactPart = if (nndOnly) "" else {
-      val exactGraph = ann.GraphSearch.graphTopK(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      s" exactgraph=${exactGraph.intersect(exact).size.toDouble / exact.size}"
+      val exactGraph = ann.GraphSearch.pairs(ann.GraphSearch.graphTopK(spark, dir))
+      s" exactgraph=${ann.GraphSearch.recall(exactGraph, exact)}"
     }
-    println(s"RECALL nnd=${nnd.intersect(exact).size.toDouble / exact.size}" +
-      exactPart)
+    println(s"RECALL nnd=${ann.GraphSearch.recall(nnd, exact)}" + exactPart)
     spark.stop()
   }
 }

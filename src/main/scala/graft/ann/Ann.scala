@@ -24,6 +24,16 @@ object Ann {
   private def corpus(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select("vec_id", "embedding")
 
+  /** The benchmark query batch: corpus rows vec_id < nq as (query_id,
+    * qvec), shared by the exact ground truth and every graph walk over
+    * it. nq is a bounded constant (point selection), so the per-round
+    * distance attach may broadcast the query vectors; at large nq drop
+    * the hint and it becomes a query_id equi-join.
+    */
+  private[graft] def queryBatch(spark: SparkSession, dir: String, nq: Int): DataFrame =
+    broadcast(Tables.embeddings(spark, dir).filter(col("vec_id") < nq)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
+
   private def queryVec(spark: SparkSession, dir: String, qid: Long): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(col("vec_id") === qid)
@@ -65,14 +75,18 @@ object Ann {
   /** Batch exact top-k: `nq` query vectors × corpus, one partial-agg
     * pass (compute_ground_truth.py computes this per user with FAISS;
     * here it is a single distributed plan: corpus scanned once, queries
-    * broadcast, shuffle = nq × k ids).
+    * broadcast, shuffle = nq × k ids). With `userId` the corpus is
+    * first restricted to the user's accessible docs: the end-to-end
+    * ground truth of a permission-filtered walk (compute_ground_truth's
+    * per-user quantity).
     */
-  def batchTopK(spark: SparkSession, dir: String, nq: Int, k: Int): DataFrame = {
-    val queries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    corpus(spark, dir)
-      .crossJoin(broadcast(queries))
+  def batchTopK(spark: SparkSession, dir: String, nq: Int, k: Int,
+                userId: Option[Long] = None): DataFrame = {
+    // the probe side is the corpus: the broadcast grant policy
+    val docs = userId.fold(corpus(spark, dir))(u =>
+      graft.rbac.Rbac.restrict(corpus(spark, dir), spark, dir, u, key = "vec_id"))
+    docs
+      .crossJoin(queryBatch(spark, dir, nq))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id")
       .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("vec_id"), k).as("ids"))

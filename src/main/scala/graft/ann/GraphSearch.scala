@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{PlanCut, Tables}
 import graft.functions.vector._
-import graft.operators.TopKAgg.topk_ids
 
 /** B31/B32: batch graph-walk ANN serving — the Spark re-expression of
   * the reference's graph-index serving loop: hnswlib's `knn_query` with
@@ -206,13 +205,7 @@ object GraphSearch {
   def visited(spark: SparkSession, dir: String, nq: Int = Nq, ef: Int = Ef,
               rounds: Int = Rounds, gk: Int = GraphK, cells: Int = Cells): DataFrame =
     visitedCache.getOrElseUpdate(spark, (dir, s"serve$nq", ef, rounds, gk, cells)) {
-      val e = Tables.embeddings(spark, dir)
-      // nq is a bounded constant (point selection), so the per-round
-      // distance attach may broadcast the query vectors; at large nq
-      // drop the hint and it becomes a query_id equi-join
-      val queries = broadcast(e.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-      buildVisited(spark, dir, queries, ef, rounds,
+      buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
         servingGraph(spark, dir, gk, cells), cellMedoids(spark, dir, cells))
     }
 
@@ -403,26 +396,6 @@ object GraphSearch {
       .orderBy("src", "nbr")
   }
 
-  /** A21 `rbac_partition_graph_topk`: the reference's LITERAL serving
-    * architecture in graph form — cost-model dynamic partitions with a
-    * graph index PER PARTITION, searched via the routed partition only,
-    * permissions applied at merge (controller/dynamic_partition/
-    * search.py:31: user roles → RolePartitions → per-partition HNSW
-    * top-k → merge_results_with_filter; the per-partition index build
-    * is initialize/partition index creation). The user's comb routes to
-    * its partition ids (bounded driver metadata, as A7); the routed
-    * partitions' member docs get their OWN exact-kNN serving graph +
-    * medoid seeds (session-cached per user tag — at scale these are the
-    * per-partition graph indexes built by the layout job); query 0
-    * walks that graph; the permission semi-join runs at merge time
-    * (the shared partition holds other combs' blocks).
-    */
-  /** A21's per-partition index state (graph + medoid seeds over the
-    * user's routed member docs) WITHOUT the walk — what the layout job
-    * builds at scale, and what Bench's warm-up pre-builds (the walk
-    * itself stays timed: it is the search, as for B31-B37). The cache
-    * tag carries userId AND alpha — both determine the member set.
-    */
   /** The user's routed member docs (A7's routing) — the id set whose
     * serving graph A21 builds. One definition shared by the index
     * build, the serve policy's ceiling check, and the specs.
@@ -445,6 +418,12 @@ object GraphSearch {
     memberCountCache.getOrElseUpdate(spark, (dir, userId, alpha))(
       partitionMembers(spark, dir, userId, alpha).count())
 
+  /** A21's per-partition index state (graph + medoid seeds over the
+    * user's routed member docs) WITHOUT the walk — what the layout job
+    * builds at scale, and what Bench's warm-up pre-builds (the walk
+    * itself stays timed: it is the search, as for B31-B37). The cache
+    * tag carries userId AND alpha — both determine the member set.
+    */
   def partitionGraphIndex(spark: SparkSession, dir: String, userId: Long = 1,
                           gk: Int = GraphK, cells: Int = Cells,
                           alpha: Double = 2.0, iters: Int = 2): (DataFrame, DataFrame) = {
@@ -456,32 +435,6 @@ object GraphSearch {
     (servingGraphOn(spark, dir, gtag, members, gk, cells, iters),
       cellMedoidsOn(spark, dir, tag, members, cells))
   }
-
-  /** A21's measured per-partition serving policy (r14, VERDICT r13
-    * #1): (iters, ef) for THIS user's routed partition, the
-    * `nndServePolicy` discipline applied to the partitioned path —
-    * the one serving surface still at fixed r8-era defaults after r13
-    * (its shipped ef=64 measured 0.30 recall for the shared-partition
-    * user at 10×, CALIBRATION r13; "the beam, not the routing").
-    *
-    * Below the exact-build ceiling the policy is PINNED to the
-    * shipped default (iters=2, ef=Ef) without probing — the regime
-    * every oracle SF lands in, so the replay CTEs stay valid and
-    * Verify never pays probe walks. Above it: double ef from the
-    * default up to the per-query cost cap (min(1024, m), efFor's
-    * rule); if the capped beam still misses the target, escalate
-    * build ITERS (a one-time linear build pass beats a per-query beam
-    * past the cap), keeping a level only when it buys ≥0.05 recall
-    * (the saturation rule). Recall is measured END-TO-END: the
-    * Nq-batch walk over the user's partition graph, permission filter
-    * at merge, vs the exact accessible ground truth — the quantity
-    * RecallCheck's partition mode reports. Returned recall -1.0 =
-    * pinned, unprobed (below the ceiling).
-    */
-  private val partPolicyCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Double, Double), (Int, Int, Double)]
-  private val partProbedPoints = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Vector[(Int, Int, Double)]]
 
   /** Canonical identity of the user's routed partition set — the key
     * the serve policy is layout metadata OF (r15, VERDICT r14 #2): a
@@ -521,6 +474,30 @@ object GraphSearch {
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
     }
 
+  /** The point-memo identity of a routed partition set's graph. */
+  private def partitionGraphKey(pkey: String, alpha: Double): String =
+    s"dynpart $pkey a$alpha"
+
+  private val partPolicyCache = scala.collection.concurrent.TrieMap
+    .empty[(String, String, Double, Double), (Int, Int, Double)]
+
+  /** A21's measured per-partition serving policy (r14, VERDICT r13
+    * #1): (iters, ef) for THIS user's routed partition, the
+    * `nndServePolicy` discipline applied to the partitioned path —
+    * the one serving surface still at fixed r8-era defaults after r13
+    * (its shipped ef=64 measured 0.30 recall for the shared-partition
+    * user at 10×, CALIBRATION r13; "the beam, not the routing").
+    *
+    * Below the exact-build ceiling the policy is PINNED to the
+    * shipped default (iters=2, ef=Ef) without probing — the regime
+    * every oracle SF lands in, so the replay CTEs stay valid and
+    * Verify never pays probe walks. Above it: `tune` with the
+    * per-query cost cap min(1024, m). Recall is measured END-TO-END:
+    * the Nq-batch walk over the partition graph, permission filter at
+    * merge, vs the exact accessible ground truth — the quantity
+    * RecallCheck's partition mode reports. Returned recall -1.0 =
+    * pinned, unprobed (below the ceiling).
+    */
   def partitionServePolicy(spark: SparkSession, dir: String, userId: Long,
                            alpha: Double = 2.0,
                            target: Double = RecallTarget): (Int, Int, Double) = {
@@ -531,37 +508,16 @@ object GraphSearch {
       else {
         // probe through the partition's deterministic representative —
         // the probe cost is charged to the PARTITION once; any other
-        // user routing here serves off this row with zero new probes
+        // user routing here serves off its measured points with zero
+        // new probes
         val pu = policyProbeUsers(spark, dir, alpha).getOrElse(pkey, userId)
-        val gt = exactAccessTopK(spark, dir, pu, Nq, 10)
-        val cap = math.min(1024L, m).toInt
-        def probe(iters: Int, ef: Int): Double = {
-          val r = partitionProbeRecall(spark, dir, pu, alpha, iters, ef, gt)
-          partProbedPoints.updateWith((dir, pkey))(
-            o => Some(o.getOrElse(Vector.empty) :+ ((iters, ef, r))))
-          r
-        }
-        def efSweep(iters: Int): (Int, Double) = {
-          var ef = math.min(Ef, cap)
-          var recall = probe(iters, ef)
-          while (recall < target && ef < cap) {
-            ef = math.min(ef * 2, cap)
-            recall = probe(iters, ef)
-          }
-          (ef, recall)
-        }
-        var iters = 2
-        var (ef, recall) = efSweep(iters)
-        var done = recall >= target
-        while (!done && iters < MaxDescentIters) {
-          val (e2, r2) = efSweep(iters + 1)
-          if (r2 - recall < 0.05 && r2 < target) done = true
-          else {
-            iters += 1; ef = e2; recall = r2
-            done = recall >= target
-          }
-        }
-        (iters, ef, recall)
+        lazy val gt = groundTruth(spark, dir, Nq, 10, Some(pu))
+        tune(math.min(1024L, m).toInt, target, (iters, ef) =>
+          measure(dir, partitionGraphKey(pkey, alpha), iters, ef) {
+            val (edges, medoids) =
+              partitionGraphIndex(spark, dir, pu, GraphK, Cells, alpha, iters)
+            probe(spark, dir, Nq, 10, ef, Rounds, edges, medoids, gt, Some(pu))
+          })
       }
     })
   }
@@ -573,83 +529,61 @@ object GraphSearch {
     */
   def partitionProbed(spark: SparkSession, dir: String, userId: Long,
                       alpha: Double = 2.0): Seq[(Int, Int, Double)] =
-    partProbedPoints.getOrElse((dir, routedPartitionKey(spark, dir, userId, alpha)),
-      Vector.empty)
+    measuredPoints(dir, partitionGraphKey(routedPartitionKey(spark, dir, userId, alpha), alpha))
 
   /** Total probe walks taken across every partition policy at `dir` —
-    * the quantity the partition-keyed cache bounds (a second user on a
+    * the quantity the partition-keyed memo bounds (a second user on a
     * shared partition must add ZERO to it; the calibration demo's
     * counter).
     */
   def partitionProbeCount(dir: String): Int =
-    partProbedPoints.collect { case ((d, _), v) if d == dir => v.size }.sum
+    measured.keys.count { case (d, g, _, _) => d == dir && g.startsWith("dynpart ") }
 
-  /** Exact per-query top-k over the user's ACCESSIBLE docs for the
-    * benchmark query batch — the end-to-end ground truth the partition
-    * policy measures against (the reference's compute_ground_truth
-    * quantity, restricted to one user × Nq queries). Self-excluded to
-    * match the walk's benchmark convention.
+  /** A21 `rbac_partition_graph_topk`: the reference's LITERAL serving
+    * architecture in graph form — cost-model dynamic partitions with a
+    * graph index PER PARTITION, searched via the routed partition only,
+    * permissions applied at merge (controller/dynamic_partition/
+    * search.py:31: user roles → RolePartitions → per-partition HNSW
+    * top-k → merge_results_with_filter; the per-partition index build
+    * is initialize/partition index creation). The user's comb routes to
+    * its partition ids (bounded driver metadata, as A7); the routed
+    * partitions' member docs get their OWN exact-kNN serving graph +
+    * medoid seeds (session-cached per user tag — at scale these are the
+    * per-partition graph indexes built by the layout job); query 0
+    * walks that graph; the permission semi-join runs at merge time
+    * (the shared partition holds other combs' blocks).
     */
-  private def exactAccessTopK(spark: SparkSession, dir: String, userId: Long,
-                              nq: Int, k: Int): Set[(Long, Long)] = {
-    val e = Tables.embeddings(spark, dir)
-    val queries = broadcast(e.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-    // the probe side is the corpus: the broadcast grant policy
-    graft.rbac.Rbac.restrict(e.select(col("vec_id").as("cand_id"), col("embedding")),
-      spark, dir, userId, key = "cand_id")
-      .crossJoin(queries)
-      .filter(col("cand_id") =!= col("query_id"))
-      .groupBy("query_id")
-      .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("cand_id"), k).as("ids"))
-      .select(col("query_id"), explode(col("ids")).as("cand_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-  }
-
-  /** One transient policy probe: the Nq-batch walk over the user's
-    * partition graph at (iters, ef), permission-filtered at merge,
-    * scored against `gt`. The walk state is released after measuring
-    * (the sweep-walk discipline).
-    */
-  private def partitionProbeRecall(spark: SparkSession, dir: String,
-                                   userId: Long, alpha: Double, iters: Int,
-                                   ef: Int, gt: Set[(Long, Long)]): Double = {
-    val (edges, medoids) =
-      partitionGraphIndex(spark, dir, userId, GraphK, Cells, alpha, iters)
-    val queries = broadcast(Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < Nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-    val vis = buildVisited(spark, dir, queries, ef, Rounds, edges, medoids)
-    val got = topOf(mergeFilter(vis, spark, dir, userId), 10)
-      .select("query_id", "cand_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    PlanCut.releaseDisk(vis) // probe walk: result collected, reclaim the dir
-    got.intersect(gt).size.toDouble / gt.size
-  }
-
   def partitionGraphTopK(spark: SparkSession, dir: String, userId: Long = 1,
                          k: Int = 10, ef: Int = -1, rounds: Int = Rounds,
                          gk: Int = GraphK, cells: Int = Cells,
-                         alpha: Double = 2.0): DataFrame = {
-    // ef = -1 (the shipped default): serve at the MEASURED per-
-    // partition policy. An explicit ef is an attribution probe
-    // (RecallCheck's sweep) and walks the default-quality graph.
-    val (iters, efR) =
-      if (ef > 0) (2, ef)
-      else { val (i, e, _) = partitionServePolicy(spark, dir, userId, alpha); (i, e) }
-    val tag = s"dynpart${userId}_a${alpha}_i$iters"
-    val vis = visitedCache.getOrElseUpdate(spark, (dir, tag, efR, rounds, gk, cells)) {
-      val (edges, medoids) =
-        partitionGraphIndex(spark, dir, userId, gk, cells, alpha, iters)
-      val queries = broadcast(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") === 0)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-      buildVisited(spark, dir, queries, efR, rounds, edges, medoids)
-    }
-    mergeFilter(vis, spark, dir, userId)
+                         alpha: Double = 2.0): DataFrame =
+    partitionWalk(spark, dir, userId, 1, ef, rounds, gk, cells, alpha)
       .orderBy(col("dist"), col("cand_id"))
       .limit(k)
       .select(col("cand_id").as("block_id"), col("cand_id").as("document_id"))
+
+  /** One A21-family walk, shared by the single-user key, the policy key
+    * and the user sweep: the first `nq` queries walk the user's routed
+    * partition graph, permission-filtered at merge. ef = -1 (the
+    * shipped default) serves at the MEASURED per-partition policy; an
+    * explicit ef is an attribution probe (RecallCheck's sweep) and
+    * walks the default-quality graph. The walk is session-cached under
+    * one tag carrying user, batch width, alpha and build level (the
+    * beam rides in the cache key itself).
+    */
+  private def partitionWalk(spark: SparkSession, dir: String, userId: Long, nq: Int,
+                            ef: Int, rounds: Int, gk: Int, cells: Int,
+                            alpha: Double): DataFrame = {
+    val (iters, efR) =
+      if (ef > 0) (2, ef)
+      else { val (i, e, _) = partitionServePolicy(spark, dir, userId, alpha); (i, e) }
+    val tag = s"dynpart${userId}_q${nq}_a${alpha}_i$iters"
+    val vis = visitedCache.getOrElseUpdate(spark, (dir, tag, efR, rounds, gk, cells)) {
+      val (edges, medoids) =
+        partitionGraphIndex(spark, dir, userId, gk, cells, alpha, iters)
+      buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), efR, rounds, edges, medoids)
+    }
+    mergeFilter(vis, spark, dir, userId)
   }
 
   private val partModelSidecarWritten =
@@ -697,24 +631,10 @@ object GraphSearch {
     */
   def partitionGraphPolicyTopK(spark: SparkSession, dir: String,
                                userId: Long = 1, nq: Int = Nq, k: Int = 10,
-                               alpha: Double = 2.0): DataFrame = {
-    val (iters, ef, _) = partitionServePolicy(spark, dir, userId, alpha)
-    // nq rides in the tag (ADVICE r14): the visited frame is built for
-    // THIS call's query batch — a later call with a different nq must
-    // not get the first batch's cached walk back
-    val tag = s"dynpartpolicy${userId}_a${alpha}_i${iters}_q$nq"
-    val vis = visitedCache.getOrElseUpdate(spark, (dir, tag, ef, Rounds, GraphK, Cells)) {
-      val (edges, medoids) =
-        partitionGraphIndex(spark, dir, userId, GraphK, Cells, alpha, iters)
-      val queries = broadcast(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") < nq)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-      buildVisited(spark, dir, queries, ef, Rounds, edges, medoids)
-    }
-    topOf(mergeFilter(vis, spark, dir, userId), k)
+                               alpha: Double = 2.0): DataFrame =
+    topOf(partitionWalk(spark, dir, userId, nq, -1, Rounds, GraphK, Cells, alpha), k)
       .select(col("query_id"), col("cand_id").as("block_id"))
       .orderBy("query_id", "block_id")
-  }
 
   /** B39 (r9): serving over the NN-DESCENT graph — B17's documented
     * escape hatch made REAL for serving. At 100 TB the exact
@@ -789,10 +709,7 @@ object GraphSearch {
                  iters: Int = 2): DataFrame =
     visitedCache.getOrElseUpdate(
       spark, (dir, s"nndserve$nq-i$iters", ef, rounds, gk, cells)) {
-      val queries = broadcast(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") < nq)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-      buildVisited(spark, dir, queries, ef, rounds,
+      buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
         nndServingGraph(spark, dir, gk, cells, iters),
         cellMedoids(spark, dir, cells))
     }
@@ -804,36 +721,29 @@ object GraphSearch {
       .select(col("query_id"), col("cand_id").as("block_id"))
       .orderBy("query_id", "block_id")
 
+  /** The NN-Descent policy's probe: a transient walk over the NAVIGABLE
+    * graph (the index B43 serves) at build level `iters`, memoized as a
+    * measured point.
+    */
+  private def nndProbe(spark: SparkSession, dir: String, nq: Int,
+                       k: Int): (Int, Int) => Double = {
+    lazy val gt = groundTruth(spark, dir, nq, k)
+    (iters, ef) => measure(dir, s"nndnav q$nq k$k", iters, ef)(
+      probe(spark, dir, nq, k, ef, Rounds,
+        nndNavServingGraph(spark, dir, GraphK, Cells, iters), cellMedoids(spark, dir, Cells), gt))
+  }
+
   /** Measured ef→recall curve over the NN-DESCENT graph at a given
     * build quality (`iters`) — efRecallCurve's twin for the index that
-    * is buildable at 100×. Same sweep discipline: only the default
-    * serving walk stays session-cached; every other probe point builds
-    * a transient walk and releases it after measuring.
+    * is buildable at 100×. Every point is a transient walk, released
+    * after measuring.
     */
-  private val nndCurveCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int, List[Int]), Seq[(Int, Double)]]
-
   def nndEfRecallCurve(spark: SparkSession, dir: String, iters: Int,
                        nq: Int = Nq, k: Int = 10,
-                       grid: Seq[Int] = Seq(Ef)): Seq[(Int, Double)] =
-    nndCurveCache.getOrElseUpdate((dir, iters, nq, k, grid.sorted.toList), {
-      val gt = Ann.batchTopK(spark, dir, nq, k).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      grid.sorted.map { ef =>
-        // probes walk the NAVIGABLE graph — the index B43 serves
-        val e = Tables.embeddings(spark, dir)
-        val queries = broadcast(e.filter(col("vec_id") < nq)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-        val vis = buildVisited(spark, dir, queries, ef, Rounds,
-          nndNavServingGraph(spark, dir, GraphK, Cells, iters),
-          cellMedoids(spark, dir, Cells))
-        val got = topOf(vis, k)
-          .select("query_id", "cand_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        PlanCut.releaseDisk(vis) // probe walk: result collected, reclaim the dir
-        ef -> got.intersect(gt).size.toDouble / gt.size
-      }
-    })
+                       grid: Seq[Int] = Seq(Ef)): Seq[(Int, Double)] = {
+    val p = nndProbe(spark, dir, nq, k)
+    grid.sorted.map(ef => ef -> p(iters, ef))
+  }
 
   /** B43 (r13, VERDICT r12 #1): the MEASURED serving policy for the
     * NND index — (iters, ef) jointly, closing the 100× recall
@@ -843,69 +753,23 @@ object GraphSearch {
     * binding knob (efFor's doubling suffices), at 100× the 2-iter
     * descent graph is too sparse in true neighbors for ANY beam (walk
     * saturates at 0.56 even at ef=2048, CALIBRATION r12) and build
-    * CONVERGENCE binds.
-    *
-    * Policy, from measured points only: for iters = 2, 3, … try to
-    * meet the recall target by doubling ef from the serving default up
-    * to a per-query-cost cap (min(1024, N) — the efFor cap); if the
-    * capped beam still misses, escalate ITERS, not ef. The preference
-    * order is the at-scale cost argument: an extra descent round is a
-    * ONE-TIME linear build pass (O(k·N) candidate rows), while beam
-    * width is a PER-QUERY serving cost — past the cap, build quality
-    * is the cheaper lever. Every returned pair is a probed point; the
-    * recall actually measured at the pick rides along for the caller
-    * (and the calibration record).
+    * CONVERGENCE binds. The pick is `tune` over the navigable-graph
+    * probe with the per-query cost cap min(1024, N).
     */
-  val MaxDescentIters = 5
+  def nndServePolicy(spark: SparkSession, dir: String,
+                     target: Double = RecallTarget): (Int, Int, Double) =
+    servePolicyCache.getOrElseUpdate((dir, target),
+      tune(math.min(1024L, Tables.embeddings(spark, dir).count()).toInt, target,
+        nndProbe(spark, dir, Nq, 10)))
 
   private val servePolicyCache = scala.collection.concurrent.TrieMap
     .empty[(String, Double), (Int, Int, Double)]
-
-  def nndServePolicy(spark: SparkSession, dir: String,
-                     target: Double = RecallTarget): (Int, Int, Double) =
-    servePolicyCache.getOrElseUpdate((dir, target), {
-      val cap = math.min(1024L, Tables.embeddings(spark, dir).count()).toInt
-      def efSweep(iters: Int): (Int, Double) = {
-        var ef = math.min(Ef, cap)
-        var (probedEf, recall) = (ef,
-          nndEfRecallCurve(spark, dir, iters, grid = Seq(ef)).head._2)
-        while (recall < target && ef < cap) {
-          ef = math.min(ef * 2, cap)
-          val r = nndEfRecallCurve(spark, dir, iters, grid = Seq(ef)).head._2
-          probedEf = ef; recall = r
-        }
-        (probedEf, recall)
-      }
-      var iters = 2
-      var (ef, recall) = efSweep(iters)
-      var done = recall >= target
-      while (!done && iters < MaxDescentIters) {
-        val (e2, r2) = efSweep(iters + 1)
-        if (r2 - recall < 0.05 && r2 < target) {
-          // SATURATION rule (r13, measured): on the isotropic 100× dir
-          // iters 2→5 moved capped-beam recall only 0.56→0.66 — the
-          // concentration-of-measure ceiling, not convergence. Paying
-          // a build level must buy ≥0.05 recall or the policy keeps
-          // the CHEAPER build and reports the honest saturation point
-          // (Dong et al.'s delta-convergence stop, applied to the
-          // serving target).
-          done = true
-        } else {
-          iters += 1; ef = e2; recall = r2
-          done = recall >= target
-        }
-      }
-      (iters, ef, recall)
-    })
 
   /** Every (iters, ef, recall) point this process probed at `dir` —
     * the calibration table's rows. Measured points only, never fits.
     */
   def nndProbedPoints(dir: String): Seq[(Int, Int, Double)] =
-    nndCurveCache.toSeq.collect {
-      case ((d, iters, nq, k, _), pts) if d == dir && nq == Nq && k == 10 =>
-        pts.map { case (ef, r) => (iters, ef, r) }
-    }.flatten.sortBy(t => (t._1, t._2))
+    measuredPoints(dir, s"nndnav q$Nq k10")
 
   private val nndModelSidecarWritten = new graft.SessionCache[String, Boolean]
 
@@ -943,10 +807,7 @@ object GraphSearch {
     val (iters, ef, _) = nndServePolicy(spark, dir)
     val vis = visitedCache.getOrElseUpdate(
       spark, (dir, s"nndnavserve$nq-i$iters", ef, Rounds, GraphK, Cells)) {
-      val queries = broadcast(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") < nq)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-      buildVisited(spark, dir, queries, ef, Rounds,
+      buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, Rounds,
         nndNavServingGraph(spark, dir, iters = iters),
         cellMedoids(spark, dir, Cells))
     }
@@ -955,22 +816,11 @@ object GraphSearch {
       .orderBy("query_id", "block_id")
   }
 
-  /** B33's reciprocal half (r9): hnswlib's mutuallyConnectNewElement
-    * (hnswalg.h) — after a new node links to its walk's top-gk, the
-    * REVERSE edge is added to each of those base neighbors, and every
-    * TOUCHED node's list is re-pruned to the M_max cap (2·gk) by
-    * (distance, nbr). Output: the re-pruned adjacency of the touched
-    * base nodes — bounded at |batch|·gk touched rows ∪ their existing
-    * edges; the re-prune window never leaves the touched set, so an
-    * arriving batch costs one bounded union + one bounded rank, no
-    * full-graph rebuild. Deterministic given the base graph → fully
-    * oracle-replayable (the insert-walk CTEs extended by the re-prune).
-    */
   /** The re-pruned adjacency of the nodes TOUCHED by `links` (reverse
     * edges unioned into their current lists, ranked by (distance, nbr),
     * capped at 2·gk). Every id must resolve in the corpus table (the
     * distance attach is a vec_id equi-join). Base edges and reverse
-    * edges and reverse edges are deduplicated before ranking: on a
+    * edges are deduplicated before ranking: on a
     * RE-insert a touched node's current list may already carry the
     * reverse edge from the batch node's previous insertion, and a
     * duplicate (src, nbr) row would occupy two window ranks — the
@@ -1022,6 +872,17 @@ object GraphSearch {
       .unionAll(links.select(col("src"), col("nbr")))
   }
 
+  /** B33's reciprocal half (r9): hnswlib's mutuallyConnectNewElement
+    * (hnswalg.h) — after a new node links to its walk's top-gk, the
+    * REVERSE edge is added to each of those base neighbors, and every
+    * TOUCHED node's list is re-pruned to the M_max cap (2·gk) by
+    * (distance, nbr). Output: the re-pruned adjacency of the touched
+    * base nodes — bounded at |batch|·gk touched rows ∪ their existing
+    * edges; the re-prune window never leaves the touched set, so an
+    * arriving batch costs one bounded union + one bounded rank, no
+    * full-graph rebuild. Deterministic given the base graph → fully
+    * oracle-replayable (the insert-walk CTEs extended by the re-prune).
+    */
   def insertReciprocalLinks(spark: SparkSession, dir: String, ef: Int = Ef,
                             rounds: Int = Rounds, gk: Int = GraphK,
                             cells: Int = Cells): DataFrame = {
@@ -1088,12 +949,9 @@ object GraphSearch {
                       gk: Int = GraphK, cells: Int = Cells): DataFrame = {
     val vis = visitedCache.getOrElseUpdate(
       spark, (dir, s"upsert$nq", ef, rounds, gk, cells)) {
-      val queries = broadcast(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") < nq)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
       // seeds = FULL-corpus medoids (the maintained index covers the
       // new nodes' cells too); tombstones stay in the traversal
-      buildVisited(spark, dir, queries, ef, rounds,
+      buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
         repairedGraph(spark, dir, ef, rounds, gk, cells),
         cellMedoids(spark, dir, cells))
     }
@@ -1138,21 +996,7 @@ object GraphSearch {
       // ef = -1: each user's walk serves at ITS partition's measured
       // policy (partition sizes differ per routing, so one fixed beam
       // cannot fit all three sweep users — the r13 measurement)
-      val (iters, efR) =
-        if (ef > 0) (2, ef)
-        else { val (i, e, _) = partitionServePolicy(spark, dir, u, alpha); (i, e) }
-      val tag = s"dynpartsweep${u}_n${nq}_a${alpha}_i$iters"
-      val vis = visitedCache.getOrElseUpdate(spark, (dir, tag, efR, rounds, gk, cells)) {
-        val (edges, medoids) =
-          partitionGraphIndex(spark, dir, u, gk, cells, alpha, iters)
-        val queries = broadcast(Tables.embeddings(spark, dir)
-          .filter(col("vec_id") < nq)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-        buildVisited(spark, dir, queries, efR, rounds, edges, medoids)
-      }
-      // merge-time permission filter, then the shared per-query
-      // ranking rule
-      topOf(mergeFilter(vis, spark, dir, u), k)
+      topOf(partitionWalk(spark, dir, u, nq, ef, rounds, gk, cells, alpha), k)
         .select(lit(u).as("user_id"), col("query_id"),
           col("cand_id").as("block_id"))
     } }
@@ -1161,84 +1005,150 @@ object GraphSearch {
       .orderBy("user_id", "query_id", "block_id")
   }
 
+  /** The one memo of measured points: (dir, graph, iters, ef) → recall
+    * of the walk over that graph at that build level and beam. Points
+    * are constants of the dataset, kept as plain driver data, NOT as
+    * persisted walk frames: every probe walk is transient and released
+    * after measuring (the round-8 advice: a wide sweep must not
+    * accumulate persisted walk states for the session lifetime). Every
+    * curve, policy pick and probe count reads it.
+    */
+  private val measured = scala.collection.concurrent.TrieMap
+    .empty[(String, String, Int, Int), Double]
+
+  private[graft] def measure(dir: String, graph: String, iters: Int, ef: Int)(
+      recall: => Double): Double =
+    measured.getOrElseUpdate((dir, graph, iters, ef), recall)
+
+  private def measuredPoints(dir: String, graph: String): Seq[(Int, Int, Double)] =
+    measured.toSeq.collect { case ((`dir`, `graph`, i, e), r) => (i, e, r) }
+      .sortBy(p => (p._1, p._2))
+
+  /** Fraction of the exact answer set a result recovers. */
+  private[graft] def recall[A](got: Set[A], exact: Set[A]): Double =
+    got.intersect(exact).size.toDouble / exact.size
+
+  /** (query_id, id) rows of a two-column frame, as a driver set. */
+  private[graft] def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Exact per-query top-k of the benchmark batch (over `userId`'s
+    * accessible docs when given): the ground truth every probe scores
+    * against.
+    */
+  private[graft] def groundTruth(spark: SparkSession, dir: String, nq: Int, k: Int,
+                                 userId: Option[Long] = None): Set[(Long, Long)] =
+    pairs(Ann.batchTopK(spark, dir, nq, k, userId))
+
+  /** THE probe: one transient walk of the first `nq` queries over
+    * (edges, medoids) at (ef, rounds), optionally permission-filtered
+    * at merge for `userId`, ranked top-k, collected and scored against
+    * `gt`. The walk's directory is released once the result is in hand.
+    */
+  private[graft] def probe(spark: SparkSession, dir: String, nq: Int, k: Int,
+                           ef: Int, rounds: Int, edges: DataFrame, medoids: DataFrame,
+                           gt: Set[(Long, Long)], userId: Option[Long] = None): Double = {
+    val vis = buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
+      edges, medoids)
+    val got = pairs(topOf(userId.fold(vis)(mergeFilter(vis, spark, dir, _)), k)
+      .select("query_id", "cand_id"))
+    PlanCut.releaseDisk(vis)
+    recall(got, gt)
+  }
+
+  /** Build levels the tuning loop may escalate to (descent iterations). */
+  val MaxDescentIters = 5
+
+  /** THE tuning loop — hnswlib's: walk at a beam, measure recall
+    * against exact top-k, take the smallest setting that meets
+    * `target`. From build level iters = 2, ef doubles from
+    * min(from, cap) up to the per-query cost cap; if even the capped
+    * beam misses, the next build level is tried (up to `maxIters`).
+    * The preference order is the at-scale cost argument: an extra
+    * descent round is a ONE-TIME linear build pass (O(k·N) candidate
+    * rows), while beam width is a PER-QUERY serving cost — past the
+    * cap, build quality is the cheaper lever. Returns (iters, ef,
+    * recall): every returned pair is a probed point and the recall is
+    * the one measured at it.
+    */
+  private[graft] def tune(cap: Int, target: Double, probe: (Int, Int) => Double,
+                          from: Int = Ef,
+                          maxIters: Int = MaxDescentIters): (Int, Int, Double) = {
+    @annotation.tailrec
+    def sweep(iters: Int, ef: Int): (Int, Double) = {
+      val r = probe(iters, ef)
+      if (r >= target || ef >= cap) (ef, r) else sweep(iters, math.min(ef * 2, cap))
+    }
+    @annotation.tailrec
+    def climb(iters: Int, ef: Int, recall: Double): (Int, Int, Double) =
+      if (recall >= target || iters >= maxIters) (iters, ef, recall)
+      else {
+        val (e2, r2) = sweep(iters + 1, math.min(from, cap))
+        // SATURATION rule (r13, measured): on the isotropic 100× dir
+        // iters 2→5 moved capped-beam recall only 0.56→0.66 — the
+        // concentration-of-measure ceiling, not convergence. Paying
+        // a build level must buy ≥0.05 recall or the policy keeps
+        // the CHEAPER build and reports the honest saturation point
+        // (Dong et al.'s delta-convergence stop, applied to the
+        // serving target).
+        if (r2 - recall < 0.05 && r2 < target) (iters, ef, recall)
+        else climb(iters + 1, e2, r2)
+      }
+    val (ef, recall) = sweep(2, math.min(from, cap))
+    climb(2, ef, recall)
+  }
+
+  /** The exact graph's probe (it has no build level): at ef == Ef the
+    * standing serving walk is read (and kept), any other beam walks
+    * transiently.
+    */
+  private def exactProbe(spark: SparkSession, dir: String, nq: Int,
+                         k: Int): (Int, Int) => Double = {
+    lazy val gt = groundTruth(spark, dir, nq, k)
+    (_, ef) => measure(dir, s"exact q$nq k$k", 0, ef) {
+      if (ef == Ef)
+        recall(pairs(topOf(visited(spark, dir, nq), k).select("query_id", "cand_id")), gt)
+      else probe(spark, dir, nq, k, ef, Rounds, servingGraph(spark, dir),
+        cellMedoids(spark, dir), gt)
+    }
+  }
+
   /** Measured ef→recall curve and target inversion — B22's
     * measured-points-beat-the-fit convention applied to the graph
     * index (hnswlib tunes efSearch the same way: sweep, measure
     * recall, pick). Returns (ef, recall) per grid point; `efFor` picks
-    * the SMALLEST measured ef meeting the target (grid max if none
-    * does). Deterministic: the walk and the exact ground truth are
-    * both constants of the dataset; everything is driver arithmetic
-    * over nq·k id sets.
+    * the SMALLEST measured ef meeting the target. Deterministic: the
+    * walk and the exact ground truth are both constants of the
+    * dataset; everything is driver arithmetic over nq·k id sets.
     */
-  /** Measured curves are memoized as plain driver data (they are
-    * constants of the dataset), NOT as persisted walk frames: a sweep
-    * builds each non-default-ef walk TRANSIENTLY and releases it after
-    * measuring — only the default-ef serving walk stays session-cached
-    * (the round-8 advice: a wide sweep must not accumulate persisted
-    * walk states for the session lifetime).
-    */
-  private val curveCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, List[Int]), Seq[(Int, Double)]]
-
   def efRecallCurve(spark: SparkSession, dir: String, nq: Int = Nq, k: Int = 10,
-                    grid: Seq[Int] = Seq(8, 16, 32, Ef)): Seq[(Int, Double)] =
-    curveCache.getOrElseUpdate((dir, nq, k, grid.sorted.toList), {
-      val gt = Ann.batchTopK(spark, dir, nq, k).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      grid.sorted.map { ef =>
-        val vis =
-          if (ef == Ef) visited(spark, dir, nq) // the standing serving walk
-          else {
-            val e = Tables.embeddings(spark, dir)
-            val queries = broadcast(e.filter(col("vec_id") < nq)
-              .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
-            buildVisited(spark, dir, queries, ef, Rounds,
-              servingGraph(spark, dir), cellMedoids(spark, dir))
-          }
-        val got = topOf(vis, k)
-          .select("query_id", "cand_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        if (ef != Ef) PlanCut.releaseDisk(vis) // sweep walk: reclaim the dir
-        ef -> got.intersect(gt).size.toDouble / gt.size
-      }
-    })
+                    grid: Seq[Int] = Seq(8, 16, 32, Ef)): Seq[(Int, Double)] = {
+    val p = exactProbe(spark, dir, nq, k)
+    grid.sorted.map(ef => ef -> p(2, ef))
+  }
 
   def efFor(spark: SparkSession, dir: String, target: Double, nq: Int = Nq,
-            k: Int = 10, grid: Seq[Int] = Seq(8, 16, 32, Ef)): Int = {
-    val curve = efRecallCurve(spark, dir, nq, k, grid)
-    curve.collectFirst { case (ef, r) if r >= target => ef }
-      .getOrElse {
-        // the grid edge is not an answer (r12): a FIXED beam decays as
-        // the corpus grows (measured: ef=64 recall 0.9375 at sf0.1 →
-        // 0.55 at the 10× dir, where 0.9 needs ef=256), so returning
-        // grid.max silently under-serves the target at scale. Do what
-        // hnswlib's tuning loop does: keep doubling ef — each probe a
-        // one-point curve call, cached and released like any sweep
-        // walk — until the target is met or the beam reaches the
-        // corpus-bounded cap (past which the walk is the scan it was
-        // supposed to avoid).
-        val cap = math.min(1024L,
-          Tables.embeddings(spark, dir).count()).toInt
-        if (grid.max >= cap) {
-          // corpus smaller than the grid edge (r13, ADVICE r12): the
-          // doubling loop below would never execute and the returned
-          // cap would carry no measured recall. A corpus-bounded beam
-          // saturates the walk, so cap IS the right answer — but
-          // probe it so every returned ef is a measured point.
-          efRecallCurve(spark, dir, nq, k, Seq(cap))
-          cap
-        } else {
-          var ef = grid.max
-          var picked = 0
-          while (picked == 0 && ef < cap) {
-            ef = math.min(ef * 2, cap)
-            if (efRecallCurve(spark, dir, nq, k, Seq(ef)).head._2 >= target)
-              picked = ef
-          }
-          if (picked > 0) picked else cap
-        }
-      }
-  }
+            k: Int = 10, grid: Seq[Int] = Seq(8, 16, 32, Ef)): Int =
+    pickEf(grid, target, math.min(1024L, Tables.embeddings(spark, dir).count()).toInt,
+      exactProbe(spark, dir, nq, k))
+
+  /** efFor's rule over any probe: the smallest grid beam meeting
+    * `target`, else `tune` at the one build level from the grid edge.
+    * The grid edge is not an answer (r12): a FIXED beam decays as the
+    * corpus grows (measured: ef=64 recall 0.9375 at sf0.1 → 0.55 at
+    * the 10× dir, where 0.9 needs ef=256), so returning grid.max would
+    * silently under-serve the target at scale. The loop doubles until
+    * the target is met or the beam reaches the corpus-bounded cap (past
+    * which the walk is the scan it was supposed to avoid); a corpus
+    * smaller than the grid edge probes the cap once, so every returned
+    * ef is a measured point (r13, ADVICE r12). The grid edge is
+    * re-requested as the loop's start and served from the memo.
+    */
+  private[graft] def pickEf(grid: Seq[Int], target: Double, cap: => Int,
+                            probe: (Int, Int) => Double): Int =
+    grid.sorted.map(ef => ef -> probe(2, ef))
+      .collectFirst { case (ef, r) if r >= target => ef }
+      .getOrElse(tune(cap, target, probe, from = grid.max, maxIters = 2)._2)
 
   /** B38 (r9): model-DRIVEN serving — `efFor` wired into a serving key
     * the way B12/B21 consume `nprobeFor`: walk at the SMALLEST measured

@@ -521,5 +521,14 @@ class GraphSearchSpec extends AnyFunSuite {
       "recall sweep must not accumulate persisted walk states")
     // and the memoized curve re-serves without any Spark work
     assert(GraphSearch.efRecallCurve(sp, sf, grid = Seq(4, 12, GraphSearch.Ef)) == curve)
+    // the NN-Descent curve probes the same way: with its navigable
+    // graph (an index build, session-cached) in place, a fresh grid
+    // leaves the block count unchanged too
+    GraphSearch.nndNavServingGraph(sp, sf).count()
+    val n1 = sp.sparkContext.getPersistentRDDs.size
+    val nnd = GraphSearch.nndEfRecallCurve(sp, sf, iters = 2, grid = Seq(6, 20))
+    assert(nnd.map(_._1) == Seq(6, 20) && nnd.forall(p => p._2 >= 0.0 && p._2 <= 1.0))
+    assert(sp.sparkContext.getPersistentRDDs.size == n1,
+      "NN-Descent recall sweep must not accumulate persisted walk states")
   }
 }
