@@ -32,7 +32,7 @@ object ScanCost {
     val raw = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
       .crossJoin(mult).repartition(n).persist()
     val rows = raw.count()
-    val q = graft.ann.PqIndex.queryVec(spark, sfDir, 0)
+    val q = graft.ann.Ann.queryArray(spark, sfDir, 0)
     val sqCodes = graft.ann.SqIndex.codes(spark, sfDir)
       .crossJoin(mult).repartition(n).persist()
     sqCodes.count()

@@ -4,6 +4,45 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** JVM-scoped keyed build-once store for driver-side values (centroid
+  * arrays, grids, codebooks, recall curves) that stay valid across
+  * sessions.
+  *
+  * Builds run under a PER-KEY lock: racing first-touch callers of the
+  * same key share one (multi-job) build, while different keys —
+  * different index parameter sets, different datasets — still build
+  * concurrently (a single cache-wide lock would serialize Bench's
+  * concurrent pass). `TrieMap.getOrElseUpdate` alone is not enough: it
+  * evaluates its op in every racing caller and keeps one result, so
+  * each racer would run the whole build. Nested builds that consult
+  * OTHER stores (radii → centroids, layout → userRoles) take locks in
+  * one direction only, so no cycle exists.
+  */
+final class BuildOnce[K, V] {
+  private val m = TrieMap.empty[K, V]
+  private val locks = TrieMap.empty[K, Object]
+
+  def getOrElseUpdate(key: K)(build: => V): V =
+    m.get(key) match {
+      case Some(v) => v
+      case None =>
+        // the lock map keeps ONE object per key however many racers
+        // create one, so the winner builds and the rest block then read
+        locks.getOrElseUpdate(key, new Object).synchronized(m.getOrElseUpdate(key, build))
+    }
+
+  /** Replace the entry unconditionally, returning the previous value. */
+  def put(key: K, value: V): Option[V] = m.put(key, value)
+
+  def keys: Iterable[K] = m.keys
+
+  /** Drop every entry, and its lock, whose key fails `keep`. */
+  def retainKeys(keep: K => Boolean): Unit = {
+    m.keys.filterNot(keep).foreach(m.remove)
+    locks.keys.filterNot(keep).foreach(locks.remove)
+  }
+}
+
 /** Session-scoped keyed cache for context-bound values.
   *
   * A persisted DataFrame (or anything holding one — index trees, temp
@@ -14,15 +53,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (dead) application are evicted on first touch by a new session so a
   * long-lived JVM cycling sessions doesn't accrete one value per
   * session (the convention Bpe.scala established for its
-  * checkpoint-backed Model).
-  *
-  * Builds run under a PER-KEY lock: racing first-touch callers of the
-  * same key share one (multi-job) build instead of leaking the losers'
-  * persisted frames, while different keys — different index parameter
-  * sets, different datasets — still build concurrently (a single
-  * cache-wide lock would serialize Bench's concurrent pass). Nested
-  * builds that consult OTHER caches (layout → userRoles, layout →
-  * closure) take locks in one direction only, so no cycle exists.
+  * checkpoint-backed Model). Builds are `BuildOnce`'s: one per key,
+  * different keys concurrently.
   *
   * Driver-side sidecars (centroid arrays, grids, codebooks, eigen
   * models) deliberately do NOT use this: plain JVM data survives
@@ -30,36 +62,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * context-bound values need app scoping.
   */
 final class SessionCache[K, V] {
-  private val m = TrieMap.empty[(String, K), V]
-  private val locks = TrieMap.empty[(String, K), Object]
+  private val m = new BuildOnce[(String, K), V]
 
-  private def evictStale(appId: String): Unit = {
-    m.keys.filter(_._1 != appId).foreach(m.remove)
-    locks.keys.filter(_._1 != appId).foreach(locks.remove)
-  }
-
-  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V = {
+  /** The session's application id, after evicting other applications' entries. */
+  private def liveApp(spark: SparkSession): String = {
     val appId = spark.sparkContext.applicationId
-    evictStale(appId)
-    val kk = (appId, key)
-    m.get(kk) match {
-      case Some(v) => v
-      case None =>
-        // TrieMap.getOrElseUpdate is atomic, so every racer of kk sees
-        // ONE lock object; the winner builds, the rest block then read
-        val lock = locks.getOrElseUpdate(kk, new Object)
-        lock.synchronized(m.getOrElseUpdate(kk, build))
-    }
+    m.retainKeys(_._1 == appId)
+    appId
   }
+
+  def getOrElseUpdate(spark: SparkSession, key: K)(build: => V): V =
+    m.getOrElseUpdate((liveApp(spark), key))(build)
 
   /** Replace the entry unconditionally, returning the previous value
     * (so the caller can unpersist it).
     */
-  def put(spark: SparkSession, key: K, value: V): Option[V] = {
-    val appId = spark.sparkContext.applicationId
-    evictStale(appId)
-    m.put((appId, key), value)
-  }
+  def put(spark: SparkSession, key: K, value: V): Option[V] =
+    m.put((liveApp(spark), key), value)
 
   /** Entry count for the CURRENT application (test observability). */
   def liveSize(spark: SparkSession): Int = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.{PlanCut, Tables}
 import graft.functions.vector._
 import graft.operators.TopKAgg.{topk_ids, topk_kth, topk_kth_distinct}
+import graft.rbac.Rbac
 
 /** ANN / vector-search operators over `embeddings` (SURVEY.md §2.B).
   *
@@ -34,17 +35,49 @@ object Ann {
     broadcast(Tables.embeddings(spark, dir).filter(col("vec_id") < nq)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
 
-  private def queryVec(spark: SparkSession, dir: String, qid: Long): DataFrame =
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === qid)
-      .select(col("embedding").as("qvec"))
+  /** The query row `qid` as a driver-side array — for the index-side
+    * picks (probe lists, ADC tables, LSH signatures) that run on the
+    * driver before the scan.
+    */
+  private[graft] def queryArray(spark: SparkSession, dir: String, qid: Long): Array[Float] =
+    Rbac.queryVector(spark, dir, qid).head().getSeq[Float](0).toArray
+
+  /** `df` with the exact L2 distance `dist` between its `embedding`
+    * and the one-row query frame `q` (`qvec`, see `Rbac.queryVector`),
+    * broadcast — the corpus side is only ever scanned.
+    */
+  def scored(df: DataFrame, q: DataFrame): DataFrame = withDist(df.crossJoin(broadcast(q)))
+
+  /** The `dist` column of `scored`, for a frame that already carries `qvec`. */
+  private[graft] def withDist(df: DataFrame): DataFrame =
+    df.withColumn("dist", l2_dist(col("embedding"), col("qvec")))
+
+  /** The exact top-k order contract (pgvector's `ORDER BY vector <-> q
+    * LIMIT k`, common_function.py:80): the k rows of least `dist`, ties
+    * to the smaller `id`. Every DuckDB oracle of an L2 top-k key
+    * replays exactly this order. Plans as a TakeOrderedAndProject — a
+    * k-row heap per partition, never a global sort.
+    */
+  def firstK(df: DataFrame, k: Int, id: String): DataFrame =
+    df.orderBy(col("dist"), col(id)).limit(k)
+
+  /** Exact L2 re-rank of a short list of `vec_id`s against query
+    * `qid`: only the short list (broadcast, ≤ overfetch rows) ever
+    * touches the full vectors — the second stage of PQ, OPQ, SQ and BQ
+    * search.
+    */
+  private[graft] def rerank(spark: SparkSession, dir: String, shortList: DataFrame,
+                            topk: Int, qid: Long): DataFrame =
+    firstK(scored(Tables.embeddings(spark, dir).join(broadcast(shortList), "vec_id"),
+      Rbac.queryVector(spark, dir, qid)), topk, "vec_id")
+      .select("vec_id")
 
   /** Exact cosine top-k for one query (vec_id 0), excluding the query
     * row itself. */
   def bruteForceCosineTopK(spark: SparkSession, dir: String, k: Int): DataFrame =
     corpus(spark, dir)
       .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(queryVec(spark, dir, 0)))
+      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("sim", cosine_sim(col("embedding"), col("qvec")))
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
@@ -52,12 +85,8 @@ object Ann {
 
   /** Exact L2 top-k for one query (pgvector `<->` ground truth). */
   def bruteForceL2TopK(spark: SparkSession, dir: String, k: Int): DataFrame =
-    corpus(spark, dir)
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(queryVec(spark, dir, 0)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    firstK(scored(corpus(spark, dir).filter(col("vec_id") =!= 0),
+      Rbac.queryVector(spark, dir)), k, "vec_id")
       .select("vec_id")
 
   /** Exact L1 (Manhattan) top-k — pgvector `<+>` (vector.c:729);
@@ -66,7 +95,7 @@ object Ann {
   def bruteForceL1TopK(spark: SparkSession, dir: String, k: Int): DataFrame =
     corpus(spark, dir)
       .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(queryVec(spark, dir, 0)))
+      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("dist", l1_dist(col("embedding"), col("qvec")))
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
@@ -84,7 +113,7 @@ object Ann {
                 userId: Option[Long] = None): DataFrame = {
     // the probe side is the corpus: the broadcast grant policy
     val docs = userId.fold(corpus(spark, dir))(u =>
-      graft.rbac.Rbac.restrict(corpus(spark, dir), spark, dir, u, key = "vec_id"))
+      Rbac.restrict(corpus(spark, dir), spark, dir, u, key = "vec_id"))
     docs
       .crossJoin(queryBatch(spark, dir, nq))
       .filter(col("vec_id") =!= col("query_id"))
@@ -100,7 +129,7 @@ object Ann {
   def maxInnerProductTopK(spark: SparkSession, dir: String, k: Int): DataFrame =
     corpus(spark, dir)
       .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(queryVec(spark, dir, 0)))
+      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .withColumn("ip", dot(col("embedding"), col("qvec")))
       .orderBy(col("ip").desc, col("vec_id"))
       .limit(k)
@@ -353,47 +382,16 @@ object Ann {
     (ringPairs, joinedPairs, kernelPairs)
   }
 
-  /** B27 `ann_knn_centrality`: PageRank over the exact kNN graph —
-    * graph-based data selection (a vector central in the similarity
-    * graph represents a dense semantic region; isolated low-rank
-    * points are outliers/noise — the coverage counterpart to D18's
-    * k-center and D15's quality weights). GraphX staticPageRank
-    * (Pregel) over B11's edges: r₀=1, rₜ₊₁ = 0.15 + 0.85·Σ rₜ(u)/deg⁺(u),
-    * fixed iteration count — at scale each round is one
-    * aggregateMessages pass over |E| = k·N slim edges. Every vertex
-    * has out-degree k, so there are no dangling corrections.
-    * Oracle-checked (r9): the recurrence is deterministic double
-    * arithmetic over a deterministic edge set, so DuckDB replays all
-    * `iters` rounds as unrolled CTEs. Ranks round DIRECTLY to 4dp —
-    * coarse enough that cross-engine summation-order noise (~1e-13)
-    * cannot flip a digit; rounding to 6dp first and re-rounding would
-    * double-round values near a .00005 boundary (observed: 1.2165495 →
-    * 1.216550 → 1.2166 vs the direct 1.2165).
-    */
-  /** B41 `ann_knn_centrality_nnd`: PageRank over the NN-DESCENT graph —
-    * the at-scale form of B27. The r10 scale run measured the exact
-    * build's joined candidate stream quadratic on the isotropic corpus
-    * (CALIBRATION round-10), so at 100 TB the centrality signal runs
-    * over the NND graph instead: O(iters·k·N) build (measured 1.76×
-    * candidate growth at 10× data), identical PageRank recurrence and
-    * rounding. Fully oracle-checked since r11: the descent edge set
-    * persists as the `nnd_graph_k5` sidecar (only the xxhash64 init
-    * is non-SQL) and the DuckDB oracle replays the 10-round
-    * recurrence as unrolled CTEs with 1/out-degree weights
-    * (SparkEntry oracle). Round10Spec additionally driver-replays the
-    * recurrence and asserts 4dp equality.
-    */
-  /** Scale-adaptive partition count for the GraphX edge RDDs (guide
-    * §2.2: partitions sized from the DATA, not inherited from
-    * spark.sql.shuffle.partitions). The edge lists arrive from DF
-    * plans whose final stage carries the session's shuffle partition
-    * count; Pregel then runs `iters` sequential rounds of multi-stage
-    * jobs over them, so at the oracle SFs each 10-round PageRank paid
-    * ~300 near-empty task launches for k·N ≈ 10⁴ slim rows (measured:
-    * 2/3 of ann_knn_centrality_nnd's serial time was Pregel overhead,
-    * not compute). ~64k edge rows (~1 MB of (long,long)) per partition
+  /** Scale-adaptive partition count for a GraphX edge RDD (guide §2.2:
+    * partitions sized from the DATA, not inherited from
+    * spark.sql.shuffle.partitions), for Dedup's connected components
+    * over the verified near-duplicate pairs. The pairs arrive from a DF
+    * plan whose final stage carries the session's shuffle partition
+    * count, and Pregel runs its rounds as multi-stage jobs over them,
+    * so at the oracle SFs every round paid hundreds of near-empty task
+    * launches. ~64k edge rows (~1 MB of (long,long)) per partition
     * keeps tasks milliseconds-cheap; the count GROWS linearly with the
-    * corpus (no local-mode constant), capped at 8× the scheduler's
+    * data (no local-mode constant), capped at 8× the scheduler's
     * parallelism so a 10¹²-edge run fans out with the cluster rather
     * than by partition count alone.
     */
@@ -439,11 +437,41 @@ object Ann {
       .orderBy("vec_id")
   }
 
+  /** B41 `ann_knn_centrality_nnd`: PageRank over the NN-DESCENT graph —
+    * the at-scale form of B27. The r10 scale run measured the exact
+    * build's joined candidate stream quadratic on the isotropic corpus
+    * (CALIBRATION round-10), so at 100 TB the centrality signal runs
+    * over the NND graph instead: O(iters·k·N) build (measured 1.76×
+    * candidate growth at 10× data), identical PageRank recurrence and
+    * rounding. Fully oracle-checked since r11: the descent edge set
+    * persists as the `nnd_graph_k5` sidecar (only the xxhash64 init
+    * is non-SQL) and the DuckDB oracle replays the 10-round
+    * recurrence as unrolled CTEs with 1/out-degree weights
+    * (SparkEntry oracle). Round10Spec additionally driver-replays the
+    * recurrence and asserts 4dp equality.
+    */
   def knnCentralityNnd(spark: SparkSession, dir: String, k: Int = 5,
                        iters: Int = 10, cells: Int = 0): DataFrame =
     pageRankDf(spark, dir,
       knnGraphDescent(spark, dir, k, cells = cells).select("src", "nbr"), iters)
 
+  /** B27 `ann_knn_centrality`: PageRank over the exact kNN graph —
+    * graph-based data selection (a vector central in the similarity
+    * graph represents a dense semantic region; isolated low-rank
+    * points are outliers/noise — the coverage counterpart to D18's
+    * k-center and D15's quality weights). `pageRankDf` over B11's
+    * edges: r₀=1, rₜ₊₁ = 0.15 + 0.85·Σ rₜ(u)/deg⁺(u), fixed iteration
+    * count, all rounds chained lazily into one job — at scale each
+    * round is one join + aggregate over |E| = k·N slim edges. Every
+    * vertex has out-degree k, so there are no dangling corrections.
+    * Oracle-checked (r9): the recurrence is deterministic double
+    * arithmetic over a deterministic edge set, so DuckDB replays all
+    * `iters` rounds as unrolled CTEs. Ranks round DIRECTLY to 4dp —
+    * coarse enough that cross-engine summation-order noise (~1e-13)
+    * cannot flip a digit; rounding to 6dp first and re-rounding would
+    * double-round values near a .00005 boundary (observed: 1.2165495 →
+    * 1.216550 → 1.2166 vs the direct 1.2165).
+    */
   def knnCentrality(spark: SparkSession, dir: String, k: Int = 5,
                     iters: Int = 10, cells: Int = 16): DataFrame =
     pageRankDf(spark, dir, knnEdges(spark, dir, k, cells).select("src", "nbr"), iters)
@@ -766,7 +794,7 @@ object Ann {
   def rangeSearch(spark: SparkSession, dir: String, tau: Double): DataFrame =
     corpus(spark, dir)
       .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(queryVec(spark, dir, 0)))
+      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .filter(l2_dist(col("embedding"), col("qvec")) < tau)
       .select("vec_id")
       .orderBy("vec_id")
@@ -777,7 +805,7 @@ object Ann {
   def vectorNorms(spark: SparkSession, dir: String, n: Int): DataFrame =
     corpus(spark, dir)
       .filter(col("vec_id") < n)
-      .crossJoin(broadcast(queryVec(spark, dir, 0)))
+      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
       .select(
         col("vec_id"),
         round(vec_norm(col("embedding")), 4).as("norm"),

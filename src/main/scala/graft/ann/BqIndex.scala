@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.bits._
-import graft.functions.vector._
 
 /** Binary quantization (BQ): the memory floor of the quantization
   * ladder — raw floats → SQ8 (4×) → PQ (32×) → BQ (256×). Each
@@ -106,17 +105,7 @@ object BqIndex {
     * usable (recall asserted ≥ the fixed bound in BqSpec).
     */
   def search(spark: SparkSession, dir: String, topk: Int = 10,
-             overfetch: Int = 100, qid: Long = 0): DataFrame = {
-    val shortList = hammingTopK(spark, dir, k = overfetch, qid = qid)
-      .select("vec_id")
-    Tables.embeddings(spark, dir)
-      .join(broadcast(shortList), "vec_id")
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(topk)
-      .select("vec_id")
-  }
+             overfetch: Int = 100, qid: Long = 0): DataFrame =
+    Ann.rerank(spark, dir, hammingTopK(spark, dir, k = overfetch, qid = qid).select("vec_id"),
+      topk, qid)
 }

@@ -337,9 +337,8 @@ object GraphSearch {
     */
   def rbacGraphTopK(spark: SparkSession, dir: String, userId: Long = 1,
                     k: Int = 10): DataFrame = {
-    mergeFilter(visited(spark, dir).filter(col("query_id") === 0), spark, dir, userId)
-      .orderBy(col("dist"), col("cand_id"))
-      .limit(k)
+    Ann.firstK(mergeFilter(visited(spark, dir).filter(col("query_id") === 0), spark, dir, userId),
+      k, "cand_id")
       .select(col("cand_id").as("block_id"), col("cand_id").as("document_id"))
   }
 
@@ -557,9 +556,7 @@ object GraphSearch {
                          k: Int = 10, ef: Int = -1, rounds: Int = Rounds,
                          gk: Int = GraphK, cells: Int = Cells,
                          alpha: Double = 2.0): DataFrame =
-    partitionWalk(spark, dir, userId, 1, ef, rounds, gk, cells, alpha)
-      .orderBy(col("dist"), col("cand_id"))
-      .limit(k)
+    Ann.firstK(partitionWalk(spark, dir, userId, 1, ef, rounds, gk, cells, alpha), k, "cand_id")
       .select(col("cand_id").as("block_id"), col("cand_id").as("document_id"))
 
   /** One A21-family walk, shared by the single-user key, the policy key

@@ -190,7 +190,7 @@ object GroupedKMeans {
                        topk: Int, k: Int = 4, iters: Int = 5,
                        nprobe: Int = 2): DataFrame = {
     val cents = roleCentroids(spark, dir, k, iters)
-    val q = PqIndex.queryVec(spark, dir, 0)
+    val q = Ann.queryArray(spark, dir, 0)
     def d2(a: Array[Float]): Double = {
       // Double subtraction — a Float-precision difference can flip
       // near-tied cell orderings against the Double l2_dist the

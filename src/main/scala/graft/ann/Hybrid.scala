@@ -43,10 +43,9 @@ object Hybrid {
   def hybridRrfTopK(spark: SparkSession, dir: String, k: Int = 10,
                     c: Int = 100, rrfK: Int = 60): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
     // dense retriever: exact cosine top-C, then ranks over the C rows
     val vecRanked = emb.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(qv))
+      .crossJoin(broadcast(graft.rbac.Rbac.queryVector(spark, dir)))
       .select(col("vec_id").as("doc_id"),
         round(cosine_sim(col("embedding"), col("qvec")), 4).as("sim"))
       .orderBy(col("sim").desc, col("doc_id"))

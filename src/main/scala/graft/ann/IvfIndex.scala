@@ -1,12 +1,11 @@
 package graft.ann
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.vector._
+import graft.rbac.Rbac
 
 /** IVF (inverted-file) vector index, Spark-batch edition.
   *
@@ -29,7 +28,7 @@ object IvfIndex {
 
   final case class Index(k: Int, centroids: Array[Array[Float]])
 
-  private val cache = TrieMap.empty[(String, Int), Index]
+  private val cache = new graft.BuildOnce[(String, Int), Index]
 
   /** Deterministic k-means (r13, VERDICT r12 #3): identical data +
     * identical code must yield IDENTICAL centroids on any JVM and any
@@ -117,11 +116,11 @@ object IvfIndex {
     * pruning index: recall is governed by nprobe, not centroid polish).
     */
   def getOrBuild(spark: SparkSession, dir: String, k: Int): Index =
-    cache.getOrElseUpdate((dir, k), {
+    cache.getOrElseUpdate((dir, k)) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").as("features"))
       Index(k, fitCentroids(emb, k))
-    })
+    }
 
   private val assignCache = new graft.SessionFrameCache[(String, Int)]
 
@@ -157,7 +156,7 @@ object IvfIndex {
         .persist()
     }
 
-  private val radiiCache = TrieMap.empty[(String, Int, Boolean), Map[Int, Double]]
+  private val radiiCache = new graft.BuildOnce[(String, Int, Boolean), Map[Int, Double]]
 
   /** Per-cell covering radius max‖v − c‖ — index metadata for lossless
     * triangle-inequality pruning: a cell can hold a vector within
@@ -166,7 +165,7 @@ object IvfIndex {
     */
   def cellRadii(spark: SparkSession, dir: String, k: Int,
                 unit: Boolean = false): Map[Int, Double] =
-    radiiCache.getOrElseUpdate((dir, k, unit), {
+    radiiCache.getOrElseUpdate((dir, k, unit)) {
       val idx = if (unit) getOrBuildUnit(spark, dir, k) else getOrBuild(spark, dir, k)
       val cents = spark.createDataFrame(
         idx.centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
@@ -179,19 +178,19 @@ object IvfIndex {
         .groupBy("list_id")
         .agg(max(l2_dist(col("v"), col("centroid"))).as("r"))
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    })
+    }
 
-  private val unitCache = TrieMap.empty[(String, Int), Index]
+  private val unitCache = new graft.BuildOnce[(String, Int), Index]
 
   /** Unit-sphere index: k-means over NORMALIZED vectors — the blocking
     * structure for cosine-threshold joins (cos ≥ τ ⇔ unit-L2 ≤ √(2−2τ)).
     */
   def getOrBuildUnit(spark: SparkSession, dir: String, k: Int): Index =
-    unitCache.getOrElseUpdate((dir, k), {
+    unitCache.getOrElseUpdate((dir, k)) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), vec_normalize(col("embedding")).as("features"))
       Index(k, fitCentroids(emb, k))
-    })
+    }
 
   /** B3: index-build report — list sizes (the reference's `CREATE INDEX`
     * observable). Rows-only: k-means is engine-specific.
@@ -277,10 +276,6 @@ object IvfIndex {
       .collect().map(_.getInt(0)).toSeq
   }
 
-  private def queryVec(spark: SparkSession, dir: String, qid: Long): Array[Float] =
-    Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-      .select("embedding").head().getSeq[Float](0).toArray
-
   /** B4: IVF probe search — scan only the nprobe lists, exact re-rank
     * inside them. Approximate overall (recall checked in ScalaTest).
     *
@@ -295,16 +290,11 @@ object IvfIndex {
   def search(spark: SparkSession, dir: String, k: Int = 16, nprobe: Int = 4,
              topk: Int = 10, qid: Long = 0): DataFrame = {
     val idx = getOrBuild(spark, dir, k)
-    val lists = probeLists(idx, queryVec(spark, dir, qid), nprobe)
-    withCells(spark, dir, k)
+    val lists = probeLists(idx, Ann.queryArray(spark, dir, qid), nprobe)
+    val probed = withCells(spark, dir, k)
       .filter(col("cell").isin(lists: _*)) // partition pruning at scale
       .filter(col("vec_id") =!= qid)
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(topk)
+    Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir, qid)), topk, "vec_id")
       .select(col("vec_id"), col("cell").as("list_id"))
   }
 
@@ -323,9 +313,9 @@ object IvfIndex {
   def predicateAwareSearch(spark: SparkSession, dir: String, userId: Long,
                            k: Int = 16, nprobe: Int = 2, topk: Int = 10): DataFrame = {
     val idx = getOrBuild(spark, dir, k)
-    val q = queryVec(spark, dir, 0)
+    val q = Ann.queryArray(spark, dir, 0)
     def accessible(df: DataFrame): DataFrame =
-      graft.rbac.Rbac.restrict(df, spark, dir, userId, key = "vec_id")
+      Rbac.restrict(df, spark, dir, userId, key = "vec_id")
 
     // one aggregation: accessible candidates per list (≤ k rows)
     val accPerList = accessible(assignments(spark, dir, k))
@@ -343,13 +333,8 @@ object IvfIndex {
     // search job: probe predicate = filter on the cell-attached corpus
     // (partition pruning at scale), permission = the broadcast grant
     // semi-join — the corpus side has no Exchange (ProbePlanSpec)
-    accessible(withCells(spark, dir, k).filter(col("cell").isin(lists: _*)))
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(topk)
+    val probed = accessible(withCells(spark, dir, k).filter(col("cell").isin(lists: _*)))
+    Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir)), topk, "vec_id")
       .select(col("vec_id"), col("cell").as("list_id"))
   }
 
@@ -378,7 +363,7 @@ object IvfIndex {
   def rangeSearchTriangle(spark: SparkSession, dir: String, tau: Double,
                           k: Int = 16, qid: Long = 0): DataFrame = {
     val idx = getOrBuild(spark, dir, k)
-    val q = queryVec(spark, dir, qid)
+    val q = Ann.queryArray(spark, dir, qid)
     def dist(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
@@ -397,9 +382,7 @@ object IvfIndex {
       .join(broadcast(dqc), "list_id")
       .withColumn("dvc", l2_dist(col("embedding"), col("centroid")))
       .filter(abs(col("dqc") - col("dvc")) <= tau + 1e-9) // lossless prune
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-          .select(col("embedding").as("qvec"))))
+      .crossJoin(broadcast(Rbac.queryVector(spark, dir, qid)))
       .filter(l2_dist(col("embedding"), col("qvec")) < tau)
       .select("vec_id")
       .orderBy("vec_id")
@@ -437,14 +420,14 @@ object IvfIndex {
     */
   def qdTreeSearch(spark: SparkSession, dir: String, userId: Long, k: Int = 8,
                    nprobe: Int = 0, topk: Int = 10): DataFrame = {
-    val ur = graft.rbac.Rbac.rolesOf(spark, dir, userId)
+    val ur = Rbac.rolesOf(spark, dir, userId)
     // leaf signatures intersecting the user's roles (tiny: ≤ #combs)
-    val routedSigs = graft.rbac.Rbac.permissions(spark, dir)
+    val routedSigs = Rbac.permissions(spark, dir)
       .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
       .select("comb_key", "role_id").distinct()
       .join(broadcast(ur), "role_id")
       .select("comb_key").distinct()
-    val base = graft.rbac.Rbac.blocks(spark, dir)
+    val base = Rbac.blocks(spark, dir)
       .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
       .join(broadcast(routedSigs), Seq("comb_key"), "left_semi") // leaf routing
     val routed = if (nprobe > 0) {
@@ -453,17 +436,11 @@ object IvfIndex {
       // 100 TB the leaf key (cell, comb_key) is the partition directory
       // and both predicates are partition pruning
       val idx = getOrBuild(spark, dir, k)
-      val lists = probeLists(idx, queryVec(spark, dir, 0), nprobe)
+      val lists = probeLists(idx, Ann.queryArray(spark, dir, 0), nprobe)
       base.withColumn("cell", nearest_centroid(col("embedding"), idx.centroids))
         .filter(col("cell").isin(lists: _*)).drop("cell")
     } else base
-    routed
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(topk)
+    Ann.firstK(Ann.scored(routed, Rbac.queryVector(spark, dir)), topk, "block_id")
       .select("block_id", "document_id")
   }
 }

@@ -183,6 +183,6 @@ object OpqIndex {
       .orderBy(col("adc"), col("vec_id"))
       .limit(overfetch)
       .select("vec_id")
-    PqIndex.rerank(spark, dir, shortList, topk, qid)
+    Ann.rerank(spark, dir, shortList, topk, qid)
   }
 }

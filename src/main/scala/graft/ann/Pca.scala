@@ -13,6 +13,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.vector.l2_dist
+import graft.rbac.Rbac
 
 /** B25: PCA — the dimensionality-reduction rung of the ANN ladder
   * (rotate-then-truncate before indexing; OPQ's "O"): brute-force scan
@@ -324,17 +325,13 @@ object Pca {
     val m = model(spark, dir, kPrime)
     val corpus0 = Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0)
       .select("vec_id", "embedding")
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qvec"))
+    val q = Rbac.queryVector(spark, dir)
     val projected = project(corpus0, m, kPrime)
     val qProjected = project(q, m, kPrime, vecCol = "qvec", outCol = "qproj")
     val short = projected.crossJoin(broadcast(qProjected))
       .withColumn("pdist", l2_dist(col("proj"), col("qproj")))
       .orderBy(col("pdist"), col("vec_id"))
       .limit(shortlist)
-    short.withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-      .select("vec_id")
+    Ann.firstK(Ann.withDist(short), k, "vec_id").select("vec_id")
   }
 }

@@ -1,7 +1,5 @@
 package graft.ann
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
@@ -33,10 +31,10 @@ object PqIndex {
     */
   final case class Codebook(centroids: Array[Array[Array[Float]]])
 
-  private val cache = TrieMap.empty[String, Codebook]
+  private val cache = new graft.BuildOnce[String, Codebook]
 
   def getOrBuild(spark: SparkSession, dir: String): Codebook =
-    cache.getOrElseUpdate(dir, {
+    cache.getOrElseUpdate(dir) {
       val subDim = Dim / NumSub
       val base = Tables.embeddings(spark, dir).select("embedding")
       // the 8 subspace quantizers are independent — train them
@@ -55,7 +53,7 @@ object PqIndex {
         }
       }), Duration.Inf).toArray
       Codebook(cents)
-    })
+    }
 
   private val sidecarWritten = new graft.SessionCache[String, Boolean]
 
@@ -128,22 +126,6 @@ object PqIndex {
     }
   }
 
-  private[graft] def queryVec(spark: SparkSession, dir: String, qid: Long): Array[Float] =
-    Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-      .select("embedding").head().getSeq[Float](0).toArray
-
-  private[graft] def rerank(spark: SparkSession, dir: String, shortList: DataFrame,
-                            topk: Int, qid: Long): DataFrame =
-    Tables.embeddings(spark, dir)
-      .join(broadcast(shortList), "vec_id")
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(topk)
-      .select("vec_id")
-
   /** B16: ADC search — approximate top-`overfetch` via table lookups
     * over the 8-byte codes, exact re-rank of that short list to
     * top-`topk`. Only the short list ever touches the full vectors.
@@ -151,15 +133,16 @@ object PqIndex {
   def search(spark: SparkSession, dir: String, topk: Int = 10,
              overfetch: Int = 50, qid: Long = 0): DataFrame = {
     val cb = getOrBuild(spark, dir)
+    val q = Ann.queryArray(spark, dir, qid)
     val adc = (code: Column) => ExpressionUtils.column(
-      PqAdcDistance(ExpressionUtils.expression(code), adcTable(cb, queryVec(spark, dir, qid))))
+      PqAdcDistance(ExpressionUtils.expression(code), adcTable(cb, q)))
     val shortList = codes(spark, dir)
       .filter(col("vec_id") =!= qid)
       .withColumn("adc", adc(col("code")))
       .orderBy(col("adc"), col("vec_id"))
       .limit(overfetch)
       .select("vec_id")
-    rerank(spark, dir, shortList, topk, qid)
+    Ann.rerank(spark, dir, shortList, topk, qid)
   }
 
   /** B18: IVFADC — the canonical billion-scale ANN layout (IVF cell
@@ -176,7 +159,7 @@ object PqIndex {
                    overfetch: Int = 50, nprobe: Int = 4, cells: Int = 16,
                    userId: Option[Long] = None, qid: Long = 0): DataFrame = {
     val cb = getOrBuild(spark, dir)
-    val q = queryVec(spark, dir, qid)
+    val q = Ann.queryArray(spark, dir, qid)
     val lists = IvfIndex.probeLists(IvfIndex.getOrBuild(spark, dir, cells), q, nprobe)
     val adc = (code: Column) => ExpressionUtils.column(
       PqAdcDistance(ExpressionUtils.expression(code), adcTable(cb, q)))
@@ -192,6 +175,6 @@ object PqIndex {
       .orderBy(col("adc"), col("vec_id"))
       .limit(overfetch)
       .select("vec_id")
-    rerank(spark, dir, shortList, topk, qid)
+    Ann.rerank(spark, dir, shortList, topk, qid)
   }
 }

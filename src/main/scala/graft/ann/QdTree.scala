@@ -256,11 +256,8 @@ object QdTree {
       .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
       .withColumn("cell", graft.functions.vector.nearest_centroid(col("embedding"), idx.centroids))
       .join(broadcast(routedParts), Seq("comb_key", "cell"), "left_semi") // leaf routing
-    Rbac.restrict(routed, spark, dir, userId) // permission filter
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", graft.functions.vector.l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(topk)
+    Ann.firstK(Ann.scored(Rbac.restrict(routed, spark, dir, userId), // permission filter
+      Rbac.queryVector(spark, dir)), topk, "block_id")
       .select("block_id", "document_id")
   }
 }

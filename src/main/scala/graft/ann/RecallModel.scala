@@ -1,7 +1,5 @@
 package graft.ann
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -80,7 +78,7 @@ object RecallModel {
         .getOrElse(cells)
   }
 
-  private val curveCache = TrieMap.empty[(String, Int, Int), Curve]
+  private val curveCache = new graft.BuildOnce[(String, Int, Int), Curve]
 
   /** A15 workload query vectors: (query_id, qvec_id, qvec). */
   private def workloadQueries(spark: SparkSession, dir: String): DataFrame =
@@ -108,25 +106,13 @@ object RecallModel {
   }
 
   /** Measure the recall curve of the corpus IVF index over the A15
-    * workload (one ground-truth pass + one tiny histogram), cached per
-    * (dir, cells, k) like every other index sidecar.
+    * workload (one ground-truth pass + one tiny histogram), built once
+    * per (dir, cells, k) like every other index sidecar: concurrent
+    * first-touch callers of one key share ONE distributed ground-truth
+    * build, callers of another key do not wait for it.
     */
-  private val curveLocks = TrieMap.empty[(String, Int, Int), Object]
-
-  def measure(spark: SparkSession, dir: String, cells: Int = 16, k: Int = 10): Curve = {
-    val key = (dir, cells, k)
-    // fast path: no lock once built
-    curveCache.get(key) match {
-      case Some(c) => c
-      case None =>
-        // PER-KEY lock (TrieMap.getOrElseUpdate is atomic, so each key
-        // gets exactly one monitor): concurrent first-touch callers for
-        // the same key share ONE distributed ground-truth build, while
-        // callers for a DIFFERENT (dir, cells, k) no longer serialize
-        // behind an unrelated job (a whole-object lock held across a
-        // Spark job blocked them)
-        curveLocks.getOrElseUpdate(key, new Object).synchronized {
-          curveCache.getOrElseUpdate(key, {
+  def measure(spark: SparkSession, dir: String, cells: Int = 16, k: Int = 10): Curve =
+    curveCache.getOrElseUpdate((dir, cells, k)) {
       // workload query vectors (A15: vec_id = 7·user mod n, users ≤ 20)
       val queries = workloadQueries(spark, dir)
       // exact top-k per query: one corpus scan, queries broadcast,
@@ -158,10 +144,7 @@ object RecallModel {
         p -> (1 to p).map(r => cellRankHist.getOrElse(r.toLong, 0L)).sum / total
       }
       Curve(cells, k, pts)
-          })
-        }
     }
-  }
 
   /** Query surface (`ann_recall_model`, rows-only): measured vs
     * predicted recall per nprobe — the engine's CALIBRATION.md table.

@@ -1,12 +1,9 @@
 package graft.ann
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
-import graft.functions.vector._
 import graft.functions.{Sq8AdcDistance, Sq8Encode}
 import org.apache.spark.sql.graft.{GraftInternal => ExpressionUtils}
 
@@ -32,10 +29,10 @@ object SqIndex {
   /** Per-dimension quantization grid: code c ↦ lo(i) + c·step(i). */
   final case class Grid(lo: Array[Float], step: Array[Float])
 
-  private val cache = TrieMap.empty[String, Grid]
+  private val cache = new graft.BuildOnce[String, Grid]
 
   def getOrBuild(spark: SparkSession, dir: String): Grid =
-    cache.getOrElseUpdate(dir, {
+    cache.getOrElseUpdate(dir) {
       val stats = dimStats(spark, dir).collect()
       val lo = new Array[Float](Dim)
       val step = new Array[Float](Dim)
@@ -48,7 +45,7 @@ object SqIndex {
         step(d) = if (mx > mn) (mx - mn) / 255.0f else 1.0f
       }
       Grid(lo, step)
-    })
+    }
 
   /** (dim, lo, hi) over the corpus — the training scan. */
   def dimStats(spark: SparkSession, dir: String): DataFrame =
@@ -90,8 +87,7 @@ object SqIndex {
   def search(spark: SparkSession, dir: String, topk: Int = 10,
              overfetch: Int = 50, qid: Long = 0): DataFrame = {
     val g = getOrBuild(spark, dir)
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-      .select("embedding").head().getSeq[Float](0).toArray
+    val q = Ann.queryArray(spark, dir, qid)
     val adc = (code: Column) => ExpressionUtils.column(
       Sq8AdcDistance(ExpressionUtils.expression(code), adcTable(g, q)))
     val shortList = codes(spark, dir)
@@ -100,14 +96,6 @@ object SqIndex {
       .orderBy(col("adc"), col("vec_id"))
       .limit(overfetch)
       .select("vec_id")
-    Tables.embeddings(spark, dir)
-      .join(broadcast(shortList), "vec_id")
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(topk)
-      .select("vec_id")
+    Ann.rerank(spark, dir, shortList, topk, qid)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
-import graft.functions.vector._
+import graft.ann.Ann
 
 /** Index/partition maintenance surface of the reference's dynamic
   * partitioning (controller/dynamic_partition/hnsw/deletion.py,
@@ -32,11 +32,8 @@ object Maintenance {
   def deleteAwareTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     val live = Rbac.blocks(spark, dir)
       .join(broadcast(tombstones(spark, dir)), Seq("document_id"), "left_anti")
-    Rbac.restrict(live, spark, dir, userId)
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    Ann.firstK(Ann.scored(Rbac.restrict(live, spark, dir, userId), Rbac.queryVector(spark, dir)),
+      k, "block_id")
       .select("block_id", "document_id")
   }
 

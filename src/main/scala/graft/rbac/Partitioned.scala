@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.ann.Ann
 import graft.functions.vector._
 import graft.operators.TopKAgg.topk_ids
 
@@ -35,20 +36,28 @@ object Partitioned {
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     val ur = Rbac.rolesOf(spark, dir, userId).select(col("role_id").as("partition_role"))
-    roleLayout(spark, dir)
-      .join(broadcast(ur), Seq("partition_role"), "left_semi") // partition prune
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      // merge-dedup: a block granted via 2 user roles sits in 2 role
-      // partitions with IDENTICAL distance — dedup the slim
-      // (block_id, document_id, dist) rows (map-side combined), never
-      // keying an Exchange on the 64-float embedding array
-      .groupBy("block_id", "document_id")
-      .agg(min("dist").as("dist"))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    roleMergeTopK(spark, dir,
+      roleLayout(spark, dir)
+        .join(broadcast(ur), Seq("partition_role"), "left_semi"), // partition prune
+      k)
   }
+
+  /** The role-partition merge, shared by A5 and its materialized form
+    * (`Layouts.prunedRoleSearch`): score the user's role-partition
+    * rows, dedup, top-k.
+    */
+  private[graft] def roleMergeTopK(spark: SparkSession, dir: String, rows: DataFrame,
+                                   k: Int): DataFrame =
+    Ann.firstK(
+      Ann.scored(rows, Rbac.queryVector(spark, dir))
+        // merge-dedup: a block granted via 2 user roles sits in 2 role
+        // partitions with IDENTICAL distance — dedup the slim
+        // (block_id, document_id, dist) rows (map-side combined), never
+        // keying an Exchange on the 64-float embedding array
+        .groupBy("block_id", "document_id")
+        .agg(min("dist").as("dist")),
+      k, "block_id")
+      .select("block_id", "document_id")
 
   /** DOC-side granting-role sets, array + key forms (`Rbac.combKey`)
     * — the array feeds predicate evaluation in the qd-tree build, the
@@ -81,11 +90,9 @@ object Partitioned {
     * routed-doc DISTINCT. No Exchange carries an embedding array.
     */
   def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val top = Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId)
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    val top = Ann.firstK(Ann.scored(
+      Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId), Rbac.queryVector(spark, dir)),
+      k, "block_id")
       .select("block_id", "document_id", "dist")
     Rbac.permissions(spark, dir)
       .join(broadcast(top), "document_id")
@@ -144,6 +151,8 @@ object Partitioned {
       .join(Rbac.permissions(spark, dir), "role_id")
       .select("comb_key", "document_id").distinct()
 
+  private val layoutCache = new graft.SessionFrameCache[(String, Double, Int)]
+
   /** A17: cost-model dynamic partition assignment — the reference's
     * research contribution (AnonySys_dynamic_partition.py), as a batch
     * Spark job with a deterministic, DuckDB-replayable result.
@@ -166,8 +175,6 @@ object Partitioned {
     *    converges to, computed here as one ranking + one running sum
     *    (two window functions — no iteration, same greedy order).
     */
-  private val layoutCache = new graft.SessionFrameCache[(String, Double, Int)]
-
   def costModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                       nQueries: Int = 20): DataFrame =
     // the layout is index metadata (≤ #combs rows), consumed by the
@@ -273,14 +280,6 @@ object Partitioned {
     */
   private[graft] val RankSinglePartMax: Long = 1048576L
 
-  /** A7: dynamic-partition search over the COST-MODEL layout
-    * (search.py:31): the user's role combination routes to its
-    * partition (dedicated if split, else the shared partition 0); only
-    * that partition's doc set is scanned; permission filter at merge
-    * time (merge_results_with_filter, search.py:114). Exact: a split
-    * comb's partition holds exactly its accessible docs, and partition
-    * 0 holds every unsplit comb's docs.
-    */
   /** (partition_id, document_id) doc sets of the cost-model layout —
     * docs duplicated across partitions: the storage the α budget pays
     * for. Shared by the routed search and the space report.
@@ -305,6 +304,14 @@ object Partitioned {
       .select("partition_id").distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
 
+  /** A7: dynamic-partition search over the COST-MODEL layout
+    * (search.py:31): the user's role combination routes to its
+    * partition (dedicated if split, else the shared partition 0); only
+    * that partition's doc set is scanned; permission filter at merge
+    * time (merge_results_with_filter, search.py:114). Exact: a split
+    * comb's partition holds exactly its accessible docs, and partition
+    * 0 holds every unsplit comb's docs.
+    */
   def dynamicPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int,
                            alpha: Double = 2.0): DataFrame = {
     // The reference materializes each dynamic partition as its own
@@ -318,16 +325,13 @@ object Partitioned {
     // prunedRoleSearch's role ids.
     val pids = routedPartitionIds(spark, dir, userId, alpha)
     val layoutPath = graft.sources.Layouts.costModelLayoutPath(spark, dir, alpha)
-    val routed = Tables.parquet(spark, layoutPath)
-      .filter(col("partition_id").isin(pids: _*)) // directory pruning
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
+    val routed = Ann.scored(Tables.parquet(spark, layoutPath)
+      .filter(col("partition_id").isin(pids: _*)), // directory pruning
+      Rbac.queryVector(spark, dir))
     // permission filter at merge time — the shared partition holds
     // blocks of other combs the user cannot read; the per-user grant
     // rows are bounded by the prefilter family's documented assumption
-    Rbac.restrict(routed, spark, dir, userId)
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    Ann.firstK(Rbac.restrict(routed, spark, dir, userId), k, "block_id")
       .select(col("block_id"), col("document_id"),
         col("partition_id").cast("int").as("partition_id"))
   }
@@ -339,28 +343,35 @@ object Partitioned {
     * duplication (storage ∝ Σ per-user selectivity, which is why it
     * only ever materializes a bounded user set).
     */
-  def userLayout(spark: SparkSession, dir: String, maxUsers: Int = 32): DataFrame = {
-    val ud = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") <= maxUsers)
-      .join(Rbac.permissions(spark, dir), "role_id")
-      .select("user_id", "document_id").distinct()
+  def userLayout(spark: SparkSession, dir: String, maxUsers: Int = 32): DataFrame =
     Rbac.blocks(spark, dir)
-      .join(ud, "document_id")
+      .join(boundedUserDocs(spark, dir, maxUsers), "document_id")
       .select(col("user_id").as("partition_user"), col("block_id"),
         col("document_id"), col("embedding"))
-  }
+
+  /** (user_id, document_id): the docs each of the users 1..n may read —
+    * the bounded user set the per-user layout, the batch ground truth
+    * and the recall report expand over.
+    */
+  private def boundedUserDocs(spark: SparkSession, dir: String, n: Int): DataFrame =
+    Rbac.userRoles(spark, dir)
+      .filter(col("user_id") <= n)
+      .join(Rbac.permissions(spark, dir), "role_id")
+      .select("user_id", "document_id").distinct()
+
+  /** (user_id, qvec): user u's query is corpus vector u − 1, users 1..n. */
+  private def userQueries(spark: SparkSession, dir: String, n: Int): DataFrame =
+    Tables.embeddings(spark, dir)
+      .filter(col("vec_id") < n)
+      .select((col("vec_id") + 1).as("user_id"), col("embedding").as("qvec"))
 
   /** A18: per-user-partition search — scan ONLY the user's partition;
     * no permission work at query time (the layout prepaid it). At scale
     * the partition_user filter is parquet directory pruning.
     */
   def userPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    userLayout(spark, dir)
-      .filter(col("partition_user") === userId)
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    Ann.firstK(Ann.scored(userLayout(spark, dir).filter(col("partition_user") === userId),
+      Rbac.queryVector(spark, dir)), k, "block_id")
       .select("block_id", "document_id")
 
   /** A8: batch ground truth (compute_ground_truth.py): exact top-k per
@@ -368,22 +379,15 @@ object Partitioned {
     * distributed pass — queries and grants broadcast, corpus scanned
     * once, per-user bounded heaps, shuffle = nUsers × k rows.
     */
-  def batchGroundTruth(spark: SparkSession, dir: String, nUsers: Int, k: Int): DataFrame = {
-    val users = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") <= nUsers)
-    val userDocs = users.join(Rbac.permissions(spark, dir), "role_id")
-      .select("user_id", "document_id").distinct()
-    val queries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < nUsers)
-      .select((col("vec_id") + 1).as("user_id"), col("embedding").as("qvec"))
+  def batchGroundTruth(spark: SparkSession, dir: String, nUsers: Int, k: Int): DataFrame =
     Rbac.blocks(spark, dir)
-      .join(userDocs, "document_id") // expand: block × users allowed to see it
-      .join(broadcast(queries), "user_id")
+      // expand: block × users allowed to see it
+      .join(boundedUserDocs(spark, dir, nUsers), "document_id")
+      .join(broadcast(userQueries(spark, dir, nUsers)), "user_id")
       .groupBy("user_id")
       .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("block_id"), k).as("ids"))
       .select(col("user_id"), explode(col("ids")).as("block_id"))
       .orderBy("user_id", "block_id")
-  }
 
   /** A16: recall@k report — the reference's headline quality metric
     * (basic_benchmark/test_all.py reports recall + latency per
@@ -396,20 +400,14 @@ object Partitioned {
     import org.apache.spark.sql.expressions.Window
     val exact = batchGroundTruth(spark, dir, nUsers, k)
       .withColumnRenamed("block_id", "exact_block")
-    val queries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < nUsers)
-      .select((col("vec_id") + 1).as("user_id"), col("embedding").as("qvec"))
     // global (permission-blind) over-fetch, ranked
     val cand = Rbac.blocks(spark, dir)
-      .crossJoin(broadcast(queries))
+      .crossJoin(broadcast(userQueries(spark, dir, nUsers)))
       .groupBy("user_id")
       .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("block_id"), k * 10).as("ids"))
       .select(col("user_id"), posexplode(col("ids")))
       .withColumnRenamed("pos", "rank").withColumnRenamed("col", "block_id")
-    val userDocs = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") <= nUsers)
-      .join(Rbac.permissions(spark, dir), "role_id")
-      .select("user_id", "document_id").distinct()
+    val userDocs = boundedUserDocs(spark, dir, nUsers)
     val approx = cand
       .join(userDocs,
         cand("user_id") === userDocs("user_id") &&

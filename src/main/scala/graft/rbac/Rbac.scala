@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
-import graft.functions.vector._
+import graft.ann.Ann
 
 /** Permission-aware vector search — the reference's core capability.
   *
@@ -84,10 +84,13 @@ object Rbac {
       col("vec_id").as("document_id"),
       col("embedding"))
 
-  /** The fixed benchmark query vector (vec_id = 0), one row: qvec. */
-  def queryVector(spark: SparkSession, dir: String): DataFrame =
+  /** The one query row: corpus vector `qid` as one row, `qvec` — by
+    * default the fixed benchmark query (vec_id = 0). Every exact L2
+    * search scores against it (`Ann.scored`).
+    */
+  def queryVector(spark: SparkSession, dir: String, qid: Long = 0): DataFrame =
     Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === 0)
+      .filter(col("vec_id") === qid)
       .select(col("embedding").as("qvec"))
 
   /** The user's `role_id` rows under the permission model `ur`. */
@@ -148,11 +151,8 @@ object Rbac {
     */
   def prefilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int,
                     ur: RoleModel = userRoles): DataFrame =
-    restrict(blocks(spark, dir), spark, dir, userId, ur = ur)
-      .crossJoin(broadcast(queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    Ann.firstK(Ann.scored(restrict(blocks(spark, dir), spark, dir, userId, ur = ur),
+      queryVector(spark, dir)), k, "block_id")
       .select("block_id", "document_id")
 
   /** Post-filter: global ANN top-(overfetch*k) FIRST, then permission
@@ -161,14 +161,9 @@ object Rbac {
     */
   def postfilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int,
                      overfetch: Int = 10): DataFrame = {
-    val candidates = blocks(spark, dir)
-      .crossJoin(broadcast(queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k * overfetch)
-    restrict(candidates, spark, dir, userId)
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    val candidates = Ann.firstK(Ann.scored(blocks(spark, dir), queryVector(spark, dir)),
+      k * overfetch, "block_id")
+    Ann.firstK(restrict(candidates, spark, dir, userId), k, "block_id")
       .select("block_id", "document_id")
   }
 

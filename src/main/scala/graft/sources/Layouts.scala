@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.functions.vector._
+import graft.ann.Ann
 import graft.rbac.Rbac
 
 /** Materialized physical layouts — the write-side of the reference's
@@ -397,18 +397,11 @@ object Layouts {
                        k: Int = 16, nprobe: Int = 4, topk: Int = 10,
                        qid: Long = 0): DataFrame = {
     val idx = graft.ann.IvfIndex.getOrBuild(spark, dir, k)
-    val q = graft.Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-      .select("embedding").head().getSeq[Float](0).toArray
-    val lists = graft.ann.IvfIndex.probeLists(idx, q, nprobe)
-    graft.Tables.parquet(spark, layoutPath)
+    val lists = graft.ann.IvfIndex.probeLists(idx, Ann.queryArray(spark, dir, qid), nprobe)
+    val probed = graft.Tables.parquet(spark, layoutPath)
       .filter(col("cell").isin(lists: _*)) // directory pruning
       .filter(col("vec_id") =!= qid)
-      .crossJoin(broadcast(
-        graft.Tables.embeddings(spark, dir).filter(col("vec_id") === qid)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(topk)
+    Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir, qid)), topk, "vec_id")
       .select(col("vec_id"), col("cell").cast("int").as("list_id"))
   }
 
@@ -499,16 +492,9 @@ object Layouts {
                        userId: Long, k: Int): DataFrame = {
     val roleIds = Rbac.rolesOf(spark, dir, userId)
       .collect().map(_.getLong(0)) // tiny: the user's 1-2 roles
-    graft.Tables.parquet(spark, layoutPath)
-      .filter(col("partition_role").isin(roleIds: _*)) // partition pruning
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      // dedup blocks duplicated across role partitions on slim columns
-      // (distance is identical per block), not on the embedding array
-      .groupBy("block_id", "document_id")
-      .agg(min("dist").as("dist"))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    graft.rbac.Partitioned.roleMergeTopK(spark, dir,
+      graft.Tables.parquet(spark, layoutPath)
+        .filter(col("partition_role").isin(roleIds: _*)), // partition pruning
+      k)
   }
 }

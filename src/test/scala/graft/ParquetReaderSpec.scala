@@ -246,6 +246,49 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(filesWith("""\.getOrCreate\(\)""".r) == Seq("graft/Session.scala"))
     assert(count("""sortBased\.fallbackThreshold""".r) == 1)
   }
+
+  test("one exact top-k rule: dist column, order tail, query row and query array live once") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+      .toSeq.sortBy(_._1)
+    def filesWith(re: scala.util.matching.Regex): Seq[String] =
+      sources.collect { case (f, src) if re.findFirstIn(src).isDefined => f }
+    def count(re: scala.util.matching.Regex): Int =
+      sources.map { case (_, src) => re.findAllMatchIn(src).size }.sum
+    // the exact L2 distance column: Ann.scored / Ann.withDist
+    val l2Dist = """\.withColumn\("dist", l2_dist\(col\("embedding"\), col\("qvec"\)\)\)""".r
+    assert(filesWith(l2Dist) == Seq("graft/ann/Ann.scala"))
+    assert(count(l2Dist) == 1)
+    // the order/limit tail: Ann.firstK. The only other "dist" tails rank
+    // a distance their own frame defines right above them, and none of
+    // those is the L2 distance over `embedding` (L1, half precision)
+    val tail = """(?s)orderBy\(col\("dist"\), col\([^()]*\)\)\s*\.limit\(""".r
+    val firstK = """orderBy\(col\("dist"\), col\(id\)\)\.limit\(""".r
+    assert(filesWith(firstK) == Seq("graft/ann/Ann.scala"))
+    assert(count(firstK) == 1)
+    val ownTail = ("""(?s)withColumn\("dist", (\w+)\(col\("(\w+)"\), col\("qvec"\)\)\)""" +
+      """\s*\.orderBy\(col\("dist"\), col\([^()]*\)\)\s*\.limit\(""").r
+    val own = sources.flatMap { case (_, src) =>
+      ownTail.findAllMatchIn(src).map(m => (m.group(1), m.group(2))) }
+    assert(!own.contains(("l2_dist", "embedding")), s"hand-written L2 tails: $own")
+    assert(count(tail) == 1 + own.size, s"a dist tail outside Ann.firstK: $own")
+    // the one query row: Rbac.queryVector
+    val queryRow =
+      """(?s)filter\(col\("vec_id"\) ===[^\n]*\s*\.select\(col\("embedding"\)\.as\("qvec"\)\)""".r
+    assert(filesWith(queryRow) == Seq("graft/rbac/Rbac.scala"))
+    assert(count(queryRow) == 1)
+    assert(count("""\.select\(col\("embedding"\)\.as\("qvec"\)\)""".r) == 1)
+    // the one query array: Ann.queryArray, over the query row; the only
+    // other collected vector is OPQ's rotated query (`proj`)
+    val toArray = """getSeq\[Float\]\(0\)\.toArray""".r
+    val queryArray = """queryVector\([^()]*\)\.head\(\)\.getSeq\[Float\]\(0\)\.toArray""".r
+    assert(filesWith(queryArray) == Seq("graft/ann/Ann.scala"))
+    assert(count(queryArray) == 1)
+    assert(count(toArray) == 1 + count("""(?s)\.select\("proj"\)\s*\.head\(\)\.getSeq""".r))
+  }
 }
 
 /** Walk scratch (graphTopKFor, G17's per-trigger unit): the final
