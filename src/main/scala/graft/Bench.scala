@@ -302,16 +302,6 @@ object Bench {
       rows.map(_._2).sum / rows.size))
   }
 
-  /** Replay the ambient rule against a RECORDED wall (r15): for a
-    * fixed query set the phase's total self-CPU work is wall-invariant
-    * (competition stretches the wall, not the work), so a recorded
-    * (wall, mean-load) pair plus a measured work figure yields the
-    * ambient mean the new rule would have seen: load − work/wall.
-    */
-  private[graft] def replayAmbient(wall: Double, loadMean: Double,
-                                   selfCpuSec: Double): Double =
-    math.max(0.0, loadMean - selfCpuSec / wall)
-
   /** Cached partitions currently MISSING from persisted RDDs (evicted
     * or not-yet-computed blocks). Sampled before each serial re-time:
     * a serial row whose session cache was evicted re-times the

@@ -85,6 +85,47 @@ private[graft] object PlanCut {
   private def readBack(spark: SparkSession, written: DataFrame, dir: String): DataFrame =
     spark.read.schema(written.schema).parquet(dir)
 
+  /** Disk cut for SLIM iterative rounds (r16) whose row count is
+    * BOUNDED BY CONSTRUCTION (r17): like `diskCheckpointed` but sized
+    * from a caller-known bound and without the persist of the
+    * read-back or the GC nudge. Motivation is the TASK BINARY, not
+    * shuffle disk: `checkpointed`'s rebase keeps the original lineage
+    * reachable inside the RDD DAG, so every downstream task SERIALIZES
+    * the whole multi-round build tree — measured on the serving walks
+    * at sf0.1: 192-partition final frames whose every scan spent 18.2 s
+    * of 19.3 s task time in Executor Deserialize Time (~95 ms/task of
+    * pure closure decode for KB of data), growing a round's worth of
+    * DAG per iteration. A parquet round-trip makes downstream tasks
+    * decode one flat FileScanRDD; the coalesce (≥`rowsPerPartition`
+    * slim rows per partition, floor 1) keeps the file count — and so
+    * every downstream stage's task count — proportional to the DATA
+    * rather than to rounds × shuffle.partitions. The frame is NOT
+    * persisted: re-reading a few slim parquet files per action is
+    * cheaper than block-manager traffic, keeps eviction semantics
+    * trivial, and leaves the suite's persisted-block accounting
+    * untouched.
+    *
+    * The walk rounds' visited sets grow at most nq·ef·2gk rows per
+    * round, so the caller sizes the output files from that bound
+    * instead of counting: the single parquet write IS the round's one
+    * materialization (a persist + count to size the files would
+    * materialize the round into the block manager and then re-read it
+    * for the write — two jobs, plus block-manager traffic). An
+    * over-estimated bound only costs slightly-small files (never
+    * correctness); the partition count still grows with the data
+    * through the bound's nq·ef terms.
+    */
+  def diskCutBounded(spark: SparkSession, df: DataFrame,
+                     maxRows: Long,
+                     rowsPerPartition: Long = 65536L): DataFrame = {
+    val parts = math.max(1L, maxRows / rowsPerPartition).toInt
+    val dir = ckptRoot.resolve(s"r${ckptSeq.incrementAndGet()}").toString
+    df.coalesce(parts).write.mode("overwrite").parquet(dir)
+    val rb = readBack(spark, df, dir)
+    diskDirs.put(rb, dir)
+    rb
+  }
+
   /** FULL lineage cut via a disk checkpoint — for iterative builds
     * whose per-round SHUFFLES are large (r13). `checkpointed` above
     * keeps the original lineage reachable (eviction-safe recompute),
@@ -100,62 +141,8 @@ private[graft] object PlanCut {
     * iterative-job discipline. The parquet files (megabytes: round
     * outputs are slim id pairs) live for the JVM's lifetime; the
     * gigabytes they unpin do not.
-    */
-  /** Disk cut for SLIM iterative rounds (r16): like `diskCheckpointed`
-    * but sized from the data and without the persist of the read-back
-    * or the GC nudge. Motivation is the TASK BINARY, not shuffle disk:
-    * `checkpointed`'s rebase keeps the original lineage reachable
-    * inside the RDD DAG, so every downstream task SERIALIZES the whole
-    * multi-round build tree — measured on the serving walks at sf0.1:
-    * 192-partition final frames whose every scan spent 18.2 s of 19.3 s
-    * task time in Executor Deserialize Time (~95 ms/task of pure
-    * closure decode for KB of data), growing a round's worth of DAG
-    * per iteration. A parquet round-trip makes downstream tasks decode
-    * one flat FileScanRDD; the coalesce (≥`rowsPerPartition` slim rows
-    * per partition, floor 1) keeps the file count — and so every
-    * downstream stage's task count — proportional to the DATA rather
-    * than to rounds × shuffle.partitions. The frame is NOT persisted:
-    * re-reading a few slim parquet files per action is cheaper than
-    * block-manager traffic, keeps eviction semantics trivial, and
-    * leaves the suite's persisted-block accounting untouched.
-    */
-  def diskCut(spark: SparkSession, df: DataFrame,
-              rowsPerPartition: Long = 65536L): DataFrame = {
-    val p = df.persist()
-    val n = p.count()
-    val parts = math.max(1L, n / rowsPerPartition).toInt
-    val dir = ckptRoot.resolve(s"r${ckptSeq.incrementAndGet()}").toString
-    spark.createDataFrame(p.rdd.coalesce(parts), df.schema)
-      .write.mode("overwrite").parquet(dir)
-    p.unpersist(blocking = true)
-    val rb = readBack(spark, df, dir)
-    diskDirs.put(rb, dir)
-    rb
-  }
-
-  /** `diskCut` for rounds whose row count is BOUNDED BY CONSTRUCTION
-    * (r17): the walk rounds' visited sets grow at most nq·ef·2gk rows
-    * per round, so the caller can size the output files from that
-    * bound instead of counting. This halves the per-round job count —
-    * diskCut's persist+count materializes the round once into the
-    * block manager and then re-reads it for the write (two jobs, plus
-    * block-manager traffic); here the single parquet write IS the
-    * round's one materialization. An over-estimated bound only costs
-    * slightly-small files (never correctness); the partition count
-    * still grows with the data through the bound's nq·ef terms.
-    */
-  def diskCutBounded(spark: SparkSession, df: DataFrame,
-                     maxRows: Long,
-                     rowsPerPartition: Long = 65536L): DataFrame = {
-    val parts = math.max(1L, maxRows / rowsPerPartition).toInt
-    val dir = ckptRoot.resolve(s"r${ckptSeq.incrementAndGet()}").toString
-    df.coalesce(parts).write.mode("overwrite").parquet(dir)
-    val rb = readBack(spark, df, dir)
-    diskDirs.put(rb, dir)
-    rb
-  }
-
-  /** `gcNudge` (r17): the explicit GC exists ONLY to hand superseded
+    *
+    * `gcNudge` (r17): the explicit GC exists ONLY to hand superseded
     * rounds' multi-GB shuffle files to the ContextCleaner before its
     * 30-minute sweep — the 100×-dir ENOSPC guard. Below that regime
     * (oracle-SF corpora, where a round's shuffle is megabytes) the

@@ -38,8 +38,8 @@ object Tables {
     *
     * The cache holds plain JVM data, so like the sidecar arrays in
     * SessionFrameCache's doc it outlives a session. An entry is keyed
-    * by the qualified paths and the SQL confs that change parquet
-    * inference, and holds one version stamp per path:
+    * by the qualified path and the SQL confs that change parquet
+    * inference, and holds the path's version stamp:
     *   - a file: (size, mtime), the stamp `Layouts.layoutRoot` uses;
     *   - a directory: the mtime of its `_SUCCESS` marker, which every
     *     Spark write commit rewrites (appends included). A directory
@@ -47,29 +47,24 @@ object Tables {
     *     never cached: it is read as a bare read.
     * A new stamp replaces the entry, so rewrites do not accrete entries.
     */
-  def parquet(spark: SparkSession, path: String, more: String*): DataFrame = {
-    val paths = path +: more
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val qualified = paths.map { p =>
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).makeQualified(hp)
-    }
-    val stamps = qualified.map(versionStamp(hconf, _))
-    if (schemaCacheOff.value || stamps.exists(_.isEmpty)) spark.read.parquet(paths: _*)
-    else {
-      val key = (qualified.map(_.toString),
-        InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
-      val stamp = stamps.flatten
-      Option(schemas.get(key)).filter(_._1 == stamp) match {
-        case Some((_, schema)) => spark.read.schema(schema).parquet(paths: _*)
-        case None =>
-          val df = spark.read.parquet(paths: _*) // first touch: infer once
-          // keys are distinct path SETS (FileStats file subsets can be
-          // many); a full reset costs one inference per live path set
-          if (schemas.size >= MaxSchemas) schemas.clear()
-          schemas.put(key, (stamp, df.schema))
-          df
-      }
+    val hp = new Path(path)
+    val qualified = hp.getFileSystem(hconf).makeQualified(hp)
+    versionStamp(hconf, qualified).filterNot(_ => schemaCacheOff.value) match {
+      case None => spark.read.parquet(path)
+      case Some(stamp) =>
+        val key = (qualified.toString,
+          InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")))
+        Option(schemas.get(key)).filter(_._1 == stamp) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path) // first touch: infer once
+            // a full reset costs one inference per live path
+            if (schemas.size >= MaxSchemas) schemas.clear()
+            schemas.put(key, (stamp, df.schema))
+            df
+        }
     }
   }
 
@@ -86,7 +81,7 @@ object Tables {
 
   private val MaxSchemas = 4096
   private val schemas =
-    new ConcurrentHashMap[(Seq[String], Seq[String]), (Seq[Seq[Long]], StructType)]()
+    new ConcurrentHashMap[(String, Seq[String]), (Seq[Long], StructType)]()
 
   private def versionStamp(hconf: Configuration, p: Path): Option[Seq[Long]] = Try {
     val fs = p.getFileSystem(hconf)

@@ -200,16 +200,6 @@ object Ann {
     else knnGraphDescent(spark, dir, k)
   }
 
-  /** B11 restricted to the base prefix `vec_id < maxId` — the graph an
-    * incremental insert batch (B33) walks. The IVF scaffolding (fit +
-    * radii) stays full-corpus: a full-cell radius upper-bounds the
-    * subset's, so the triangle pruning remains lossless, just slightly
-    * less tight.
-    */
-  def knnGraphOn(spark: SparkSession, dir: String, k: Int, cells: Int,
-                 maxId: Long): DataFrame =
-    knnEdges(spark, dir, k, cells, Some(maxId)).orderBy("src", "nbr")
-
   /** B11's edge set WITHOUT the query-surface total-order sort —
     * consumers that repartition anyway (GraphX centrality, the
     * serving-graph symmetrize+cap build) skip one full range-exchange

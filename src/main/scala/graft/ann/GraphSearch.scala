@@ -253,12 +253,13 @@ object GraphSearch {
       // cost even though execution would reuse the cache (observed: an
       // 8 GiB plan-string OOM before truncation). r16 cut each round to
       // DISK (a slim parquet round-trip truncates both the plan and the
-      // task binary; see PlanCut.diskCut's rationale). r17: the cut is
-      // now BOUNDED — the visited set's size is known by construction
-      // (|seeds| + r·ef·maxdeg per query), so the per-round persist +
-      // count that existed only to size the output files is dropped and
-      // each round costs exactly ONE job (the parquet write, which is
-      // also the round's one materialization). Measured on the 5-key
+      // task binary; see PlanCut.diskCutBounded's rationale). r17: the
+      // cut is now BOUNDED — the visited set's size is known by
+      // construction (|seeds| + r·ef·maxdeg per query), so the
+      // per-round persist + count that existed only to size the output
+      // files is dropped and each round costs exactly ONE job (the
+      // parquet write, which is also the round's one
+      // materialization). Measured on the 5-key
       // serving subset at 32 cores: group wall 11.7 s → 8.3 s.
       val nq = math.max(1L, queries.count())
       val nSeeds = math.max(1L, medoids.count())
@@ -730,18 +731,6 @@ object GraphSearch {
         nndNavServingGraph(spark, dir, GraphK, Cells, iters), cellMedoids(spark, dir, Cells), gt))
   }
 
-  /** Measured ef→recall curve over the NN-DESCENT graph at a given
-    * build quality (`iters`) — efRecallCurve's twin for the index that
-    * is buildable at 100×. Every point is a transient walk, released
-    * after measuring.
-    */
-  def nndEfRecallCurve(spark: SparkSession, dir: String, iters: Int,
-                       nq: Int = Nq, k: Int = 10,
-                       grid: Seq[Int] = Seq(Ef)): Seq[(Int, Double)] = {
-    val p = nndProbe(spark, dir, nq, k)
-    grid.sorted.map(ef => ef -> p(iters, ef))
-  }
-
   /** B43 (r13, VERDICT r12 #1): the MEASURED serving policy for the
     * NND index — (iters, ef) jointly, closing the 100× recall
     * boundary r12 left open. hnswlib has exactly these two knobs:
@@ -1147,12 +1136,12 @@ object GraphSearch {
       .collectFirst { case (ef, r) if r >= target => ef }
       .getOrElse(tune(cap, target, probe, from = grid.max, maxIters = 2)._2)
 
-  /** B38 (r9): model-DRIVEN serving — `efFor` wired into a serving key
-    * the way B12/B21 consume `nprobeFor`: walk at the SMALLEST measured
-    * beam width meeting the recall target (hnswlib's own efSearch
-    * tuning loop: sweep, measure, pick). The picked ef is a
-    * deterministic constant of the dataset; the sidecar carries it so
-    * the oracle replays the walk at exactly that beam width.
+  /** B38 (r9): model-DRIVEN serving — `efFor` wired into a serving
+    * key: walk at the SMALLEST measured beam width meeting the recall
+    * target (hnswlib's own efSearch tuning loop: sweep, measure,
+    * pick). The picked ef is a deterministic constant of the dataset;
+    * the sidecar carries it so the oracle replays the walk at exactly
+    * that beam width.
     */
   val RecallTarget = 0.9
 

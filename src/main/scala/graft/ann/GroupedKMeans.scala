@@ -222,22 +222,6 @@ object GroupedKMeans {
       .select("block_id")
   }
 
-  /** B21 model-driven serving: nprobe picked from the fitted
-    * nprobe→recall curve (RecallModel) at the SAME quantizer
-    * granularity (a cells=k corpus curve is the proxy for the per-role
-    * k-cell mini-indexes — same k-means resolution, so the mass-
-    * coverage shape carries over) instead of a constant. The
-    * reference's get_parameter.py feeds its dynamic partitioner the
-    * same way: fit once, serve many.
-    */
-  def partitionIvfTopKModel(spark: SparkSession, dir: String, userId: Long,
-                            topk: Int, targetRecall: Double = 0.9,
-                            k: Int = 4, iters: Int = 5): DataFrame = {
-    val nprobe = RecallModel.measure(spark, dir, cells = k, k = topk)
-      .nprobeFor(targetRecall)
-    partitionIvfTopK(spark, dir, userId, topk, k, iters, nprobe)
-  }
-
   /** (group=role, id=block, vec) — the role-partitioned corpus. */
   private[graft] def rolePoints(spark: SparkSession, dir: String): DataFrame =
     Rbac.blocks(spark, dir)

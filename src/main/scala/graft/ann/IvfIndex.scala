@@ -141,8 +141,8 @@ object IvfIndex {
 
   private val withCellsCache = new graft.SessionFrameCache[(String, Int)]
 
-  /** Corpus with its cell id attached, persisted — the in-memory mirror
-    * of the cell-partitioned parquet the index build writes at scale.
+  /** Corpus with its cell id attached, persisted — the in-memory
+    * stand-in for a cell-partitioned parquet layout at scale.
     * The bucketed self-joins (kNN graph) read it on both sides instead
     * of re-scanning + re-assigning per branch.
     */
@@ -241,14 +241,11 @@ object IvfIndex {
     * quantizer keeps cells ≈ √N, so the centroid matrix is index
     * METADATA — even 10⁵ cells × 64 dims × 4 B is ~25 MB, comfortably
     * driver-sized, and the argmin costs cells·dim flops per query.
-    * Past ~10⁵ cells use `probeListsDistributed`, which picks the same
-    * probe set as a distributed top-nprobe over a centroid table (at
-    * that scale the centroids live in a parquet sidecar anyway).
     */
   def probeLists(idx: Index, q: Array[Float], nprobe: Int): Seq[Int] = {
     // Double subtraction, matching l2_dist/NearestCentroid exactly —
     // a Float subtraction here could order near-tied centroids
-    // differently than probeListsDistributed
+    // differently than those two do
     def d2(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1 }
@@ -259,29 +256,12 @@ object IvfIndex {
       .sortBy(identity).take(nprobe).map(_._2).toSeq
   }
 
-  /** The huge-quantizer path: same probe pick as `probeLists`, but as a
-    * distributed top-nprobe over a centroid FRAME (at 10⁶+ cells the
-    * centroid set is itself a table, not a driver array). nprobe ids
-    * come back to the driver — that part is always tiny.
-    */
-  def probeListsDistributed(spark: SparkSession, idx: Index, q: Array[Float],
-                            nprobe: Int): Seq[Int] = {
-    val cents = spark.createDataFrame(
-      idx.centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
-      .toDF("list_id", "centroid")
-    cents
-      .withColumn("d", l2_dist(col("centroid"), typedLit(q)))
-      .orderBy(col("d"), col("list_id"))
-      .limit(nprobe)
-      .collect().map(_.getInt(0)).toSeq
-  }
-
   /** B4: IVF probe search — scan only the nprobe lists, exact re-rank
     * inside them. Approximate overall (recall checked in ScalaTest).
     *
     * Plan shape: the probe predicate is a FILTER on the cell-attached
-    * corpus (`withCells`, the in-memory mirror of the cell-partitioned
-    * parquet the index build writes at scale) — the corpus is never
+    * corpus (`withCells`, the in-memory stand-in for a cell-partitioned
+    * parquet layout) — the corpus is never
     * joined, shuffled, or broadcast. At 100 TB the same filter is a
     * partition predicate on the `cell=` directories, so the scan reads
     * ~nprobe/k of the bytes (pgvector `SET ivfflat.probes` semantics,
@@ -337,19 +317,6 @@ object IvfIndex {
     Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir)), topk, "vec_id")
       .select(col("vec_id"), col("cell").as("list_id"))
   }
-
-  /** B12 model-driven variant: the STARTING probe depth comes from the
-    * fitted nprobe→recall curve (RecallModel — the reference's
-    * get_parameter loop) for a recall target instead of a constant;
-    * the accessible-count escalation still applies on top (the
-    * permission filter can only LOWER the accessible pool, never the
-    * vector-side recall the model predicts).
-    */
-  def predicateAwareSearchModel(spark: SparkSession, dir: String, userId: Long,
-                                targetRecall: Double = 0.9, k: Int = 16,
-                                topk: Int = 10): DataFrame =
-    predicateAwareSearch(spark, dir, userId, k,
-      RecallModel.measure(spark, dir, k, topk).nprobeFor(targetRecall), topk)
 
   /** B14: triangle-inequality-pruned EXACT range search. With per-vector
     * centroid distances precomputed in the index (d(v,c)) and the

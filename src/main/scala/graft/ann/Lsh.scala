@@ -77,11 +77,4 @@ object Lsh {
       .limit(topk)
       .select("vec_id", "sig")
   }
-
-  /** Bucket histogram (index-build observable, rows-only). */
-  def bucketStats(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(signature(col("embedding")).as("sig"))
-      .groupBy("sig").agg(count(lit(1)).as("n"))
-      .orderBy("sig")
 }

@@ -26,11 +26,9 @@ import graft.operators.TopKAgg.topk_ids
   *
   * The fitted form is the saturating curve IVF mass-coverage follows:
   * 1 − recall(p) ≈ exp(−(α + β·p)), i.e. ln(1 − recall) linear in
-  * nprobe — fit by least squares over the measured points, then
-  * inverted to pick the smallest nprobe whose PREDICTED recall meets a
-  * target. `CALIBRATION.md` records predicted vs measured; the
-  * model-driven path is asserted ≥ the fixed-nprobe recall in
-  * RecallModelSpec.
+  * nprobe — fit by least squares over the measured points.
+  * `CALIBRATION.md` records predicted vs measured; RecallModelSpec
+  * bounds the fit's error against the measurement.
   */
 object RecallModel {
 
@@ -63,19 +61,6 @@ object RecallModel {
 
     def predict(nprobe: Int): Double =
       math.max(0.0, 1.0 - math.exp(-(alpha + beta * nprobe)))
-
-    /** Smallest nprobe whose MEASURED recall meets `target` (capped at
-      * `cells` — probing everything is always lossless). The measured
-      * points already cover every depth 1..cells at zero extra cost, so
-      * the pick never trusts the fit where a real measurement exists —
-      * a fitted pick can land below target on the very workload it was
-      * measured on (CALIBRATION.md round-5: 0.9-target pick measuring
-      * 0.871). The fitted curve remains for reporting and for
-      * extrapolating beyond the measured cell count (`predict`).
-      */
-    def nprobeFor(target: Double): Int =
-      points.sortBy(_._1).collectFirst { case (p, r) if r >= target => p }
-        .getOrElse(cells)
   }
 
   private val curveCache = new graft.BuildOnce[(String, Int, Int), Curve]
@@ -166,9 +151,9 @@ object RecallModel {
     * probed-list size over the workload's cell rankings) next to the
     * recall the same depth buys. QPS prediction = 1 / (fixed per-query
     * overhead + scan_fraction × corpus × per-row kernel cost), with
-    * the per-row constants measured in CALIBRATION.md (ScanCost, t(n)
-    * fit) — deterministic inputs, so this frame is reproducible across
-    * rounds while a timed QPS number is not.
+    * the per-row constants measured in CALIBRATION.md (round 4's scan
+    * kernel costs, round 2's t(n) fit) — deterministic inputs, so this
+    * frame is reproducible across rounds while a timed QPS number is not.
     *
     * (nprobe, scan_fraction, measured_recall) is the frontier the
     * reference plots to pick its operating point; the knee is where
@@ -204,16 +189,5 @@ object RecallModel {
         round(col("avg_rows_scanned") / total, 4).as("scan_fraction"),
         round(col("measured_recall"), 4).as("measured_recall"))
       .orderBy("nprobe")
-  }
-
-  /** Model-driven probe search: nprobe picked from the fitted curve for
-    * a recall target instead of a constant — the get_parameter loop
-    * closed (measure → fit → serve).
-    */
-  def searchAtTarget(spark: SparkSession, dir: String, targetRecall: Double,
-                     cells: Int = 16, k: Int = 10, topk: Int = 10,
-                     qid: Long = 0): DataFrame = {
-    val nprobe = measure(spark, dir, cells, k).nprobeFor(targetRecall)
-    IvfIndex.search(spark, dir, cells, nprobe, topk, qid)
   }
 }

@@ -228,8 +228,9 @@ object Partitioned {
     // range-partitioned (local ranks + per-slice offsets), so no
     // single task ever sorts an unbounded comb population. Both
     // branches are exact over the same total order (benefit desc,
-    // comb_key) — LayoutRankDispatchSpec pins them row-identical.
+    // comb_key) — Round17Spec pins them row-identical.
     val nCombs = scored.count()
+    requireIntRank(nCombs)
     val ranked =
       if (nCombs <= rankSinglePartMax) {
         val byBenefit = Window.orderBy(col("benefit").desc, col("comb_key"))
@@ -273,6 +274,12 @@ object Partitioned {
     scored.unpersist()
     out
   }
+
+  /** The benefit rank becomes the int `partition_id`: past
+    * Int.MaxValue combs it would wrap, so the build fails first.
+    */
+  private[graft] def requireIntRank(nCombs: Long): Unit =
+    require(nCombs <= Int.MaxValue, s"$nCombs combs overflow the int partition_id schema")
 
   /** Single-partition ceiling for the benefit rank — a ~1M-row 1-task
     * sort is sub-second; past it the range-partitioned prefix form

@@ -4,9 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ann.Ann
 import graft.rbac.Rbac
 
 /** Materialized physical layouts — the write-side of the reference's
@@ -313,96 +312,6 @@ object Layouts {
     }
     fs.delete(staging, true)
     (olds.length, parquetFiles.length)
-  }
-
-  /** Z-order (Morton) clustering key over two columns — the multi-
-    * dimensional file-clustering layout every lakehouse maintenance
-    * path offers (Delta OPTIMIZE ZORDER BY, Iceberg rewrite with
-    * zorder; public technique, Morton 1966): each column is bucketed
-    * into 2^16 uniform cells over its [min,max], the two 16-bit cell
-    * ids are bit-interleaved, and writing range-partitioned + sorted
-    * by the interleaved key makes every FILE cover a small rectangle
-    * in BOTH dimensions — so a 2-d predicate prunes files/row-groups
-    * where a single-column sort only prunes its own column. Built
-    * entirely from codegen'd bitwise built-ins (shiftleft/and/or) —
-    * no UDF in the write path.
-    */
-  def zorderKey(a: Column, aMin: Double, aMax: Double,
-                b: Column, bMin: Double, bMax: Double): Column = {
-    def bucket(c: Column, lo: Double, hi: Double): Column =
-      if (hi <= lo) lit(0L)
-      else least(lit(65535L), greatest(lit(0L),
-        floor((c.cast("double") - lit(lo)) / lit((hi - lo) / 65536.0)).cast("long")))
-    // spread a 16-bit value's bits to the even positions of 32 bits
-    def spread(x0: Column): Column = {
-      val x1 = (x0.bitwiseOR(shiftleft(x0, 8))).bitwiseAND(lit(0x00FF00FFL))
-      val x2 = (x1.bitwiseOR(shiftleft(x1, 4))).bitwiseAND(lit(0x0F0F0F0FL))
-      val x3 = (x2.bitwiseOR(shiftleft(x2, 2))).bitwiseAND(lit(0x33333333L))
-      (x3.bitwiseOR(shiftleft(x3, 1))).bitwiseAND(lit(0x55555555L))
-    }
-    spread(bucket(a, aMin, aMax))
-      .bitwiseOR(shiftleft(spread(bucket(b, bMin, bMax)), 1))
-  }
-
-  /** Rewrite `df` as `nFiles` parquet files clustered by the z-order of
-    * (colA, colB): ONE stats pass (min/max of both columns), then a
-    * range repartition + local sort on the interleaved key — a single
-    * shuffle, the same cost as a plain sort-by-one-column rewrite.
-    * Returns the path. ZOrderSpec measures the payoff: mean per-file
-    * (widthA × widthB) rectangle area and files-touched-by-a-2d-box
-    * both drop versus the single-column sort layout.
-    */
-  def zorderWrite(spark: SparkSession, df: DataFrame, colA: String, colB: String,
-                  outPath: String, nFiles: Int): String = {
-    val r = df.agg(min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    // empty input / all-NULL column → NULL stats; 0.0 makes the range
-    // degenerate and zorderKey collapses that dim to bucket 0 (the
-    // rewrite still writes, it just can't cluster on a dimension that
-    // has no values)
-    def stat(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
-    val key = zorderKey(col(colA), stat(0), stat(1), col(colB), stat(2), stat(3))
-    df.withColumn("__z", key)
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outPath)
-    outPath
-  }
-
-  /** Write the corpus as cell-partitioned parquet — the AT-SCALE form
-    * of `IvfIndex.withCells`: the IVF index build's assignment becomes
-    * a `cell=` directory per inverted list, so a probe scan is
-    * directory pruning (reads nprobe/k of the bytes), exactly like the
-    * role layout above does for permissions. Returns the layout path.
-    */
-  def materializeCellLayout(spark: SparkSession, dir: String, outDir: String,
-                            cells: Int = 16): String = {
-    val path = s"$outDir/blocks_by_cell"
-    if (!Files.exists(Paths.get(path))) {
-      graft.ann.IvfIndex.withCells(spark, dir, cells)
-        .repartition(col("cell")) // one writer per list directory
-        .write.partitionBy("cell").mode("overwrite").parquet(path)
-    }
-    path
-  }
-
-  /** IVF probe search over the materialized cell layout: the probe list
-    * is a PARTITION predicate — `PartitionFilters` in the scan node
-    * (asserted in CellLayoutSpec), only the nprobe directories are
-    * read. Result is identical to `IvfIndex.search` at equal
-    * parameters (same index, same lists).
-    */
-  def prunedCellSearch(spark: SparkSession, dir: String, layoutPath: String,
-                       k: Int = 16, nprobe: Int = 4, topk: Int = 10,
-                       qid: Long = 0): DataFrame = {
-    val idx = graft.ann.IvfIndex.getOrBuild(spark, dir, k)
-    val lists = graft.ann.IvfIndex.probeLists(idx, Ann.queryArray(spark, dir, qid), nprobe)
-    val probed = graft.Tables.parquet(spark, layoutPath)
-      .filter(col("cell").isin(lists: _*)) // directory pruning
-      .filter(col("vec_id") =!= qid)
-    Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir, qid)), topk, "vec_id")
-      .select(col("vec_id"), col("cell").cast("int").as("list_id"))
   }
 
   private val layoutEnsureLock = new Object

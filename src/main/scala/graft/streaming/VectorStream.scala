@@ -183,10 +183,11 @@ object VectorStream {
       : (org.apache.spark.sql.streaming.StreamingQuery, GraphInsertHandle) = {
     import graft.ann.GraphSearch
     val cutoff = GraphSearch.insertCutoff(spark, dir)
-    // nndBase (r12, PointServe's r11 precedent applied to maintenance):
-    // at the 100× dir the exact base-prefix build is the documented
-    // quadratic, so the stream maintains the NN-DESCENT serving graph
-    // instead — the index that is actually buildable at that scale.
+    // nndBase (r12, CALIBRATION.md round 11's NN-Descent point-serving
+    // row applied to maintenance): at the 100× dir the exact base-prefix
+    // build is the documented quadratic, so the stream maintains the
+    // NN-DESCENT serving graph instead — the index that is actually
+    // buildable at that scale.
     // The descent build runs full-corpus, so arriving ids are
     // RE-ARRIVALS: repairEdges replaces their lists (idempotence is
     // spec-pinned), and the drained==batch gate is unchanged (same

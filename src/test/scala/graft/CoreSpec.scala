@@ -229,14 +229,6 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(rep.map(_.getLong(1)).sum == 500L)
   }
 
-  test("distributed probe pick equals the driver-side pick") {
-    val idx = IvfIndex.getOrBuild(spark, sf, 16)
-    val q = graft.Tables.embeddings(spark, sf)
-      .filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0).toArray
-    assert(IvfIndex.probeListsDistributed(spark, idx, q, 4) ==
-      IvfIndex.probeLists(idx, q, 4))
-  }
-
   test("LSH multiprobe search overlaps exact cosine topk") {
     val exact = Ann.bruteForceCosineTopK(spark, sf, 10).collect().map(_.getLong(0)).toSet
     val lsh = Lsh.search(spark, sf).collect().map(_.getLong(0)).toSet
@@ -654,36 +646,6 @@ class DupClusterSpec extends AnyFunSuite {
   }
 }
 
-class BucketingSpec extends AnyFunSuite {
-  import SparkTest._
-  import graft.sources.Bucketing
-
-  test("bucketed join plans without a shuffle and matches the plain join") {
-    val df = Bucketing.bucketedJoinRevenue(spark, sf)
-    val plan = df.queryExecution.executedPlan.toString
-    // the JOIN itself must not shuffle: the only exchange allowed is the
-    // one for the final groupBy/orderBy, which keys on o_orderpriority
-    val joinSection = plan.split("SortMergeJoin")(1)
-    assert(!joinSection.contains("Exchange hashpartitioning(l_orderkey") &&
-      !joinSection.contains("Exchange hashpartitioning(o_orderkey"),
-      s"bucketed join still shuffles:\n$plan")
-    val expect = graft.Tables.lineitem(spark, sf)
-      .join(graft.Tables.orders(spark, sf),
-        org.apache.spark.sql.functions.col("l_orderkey") ===
-          org.apache.spark.sql.functions.col("o_orderkey"))
-      .groupBy("o_orderpriority")
-      .agg(org.apache.spark.sql.functions.round(
-        org.apache.spark.sql.functions.sum(
-          org.apache.spark.sql.functions.col("l_extendedprice") *
-            (org.apache.spark.sql.functions.lit(1.0) -
-              org.apache.spark.sql.functions.col("l_discount"))), 4).as("revenue"))
-      .orderBy("o_orderpriority")
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    val got = df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    assert(got == expect)
-  }
-}
-
 class ResizePlanSpec extends AnyFunSuite {
   import SparkTest._
   import graft.multimodal.Multimodal
@@ -817,29 +779,6 @@ class BlockedSimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"pairs must come from cell-pair equi-joins:\n$plan")
-  }
-}
-
-class CellLayoutSpec extends AnyFunSuite {
-  import SparkTest._
-  import graft.ann.IvfIndex
-  import graft.sources.Layouts
-
-  test("cell-partitioned layout probe search prunes directories, matches in-memory IVF") {
-    val out = java.nio.file.Files.createTempDirectory("graft_cells").toString
-    val path = Layouts.materializeCellLayout(spark, sf, out)
-    val df = Layouts.prunedCellSearch(spark, sf, path, k = 16, nprobe = 4)
-    val got = df.collect().map(_.getLong(0)).toSeq
-    val mem = IvfIndex.search(spark, sf, k = 16, nprobe = 4)
-      .collect().map(_.getLong(0)).toSeq
-    assert(got == mem, "partitioned probe must equal the in-memory probe")
-    // the probe predicate must prune directories, not filter rows
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"expected cell partition pruning in scan:\n$plan")
-    // and only nprobe of the 16 cell directories exist in the read
-    val dirs = new java.io.File(path).listFiles().count(_.getName.startsWith("cell="))
-    assert(dirs == 16, s"expected 16 cell directories, got $dirs")
   }
 }
 
@@ -1826,52 +1765,6 @@ class RangeJoinSpec extends AnyFunSuite {
   }
 }
 
-class ZOrderSpec extends AnyFunSuite {
-  import SparkTest._
-  import org.apache.spark.sql.functions._
-  import graft.sources.Layouts
-
-  test("z-order layout prunes on BOTH dimensions where a single sort prunes one") {
-    val ev = graft.Tables.events(spark, sf)
-      .select(col("event_id"), col("ts").cast("double").as("t"), col("value"))
-    val out = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    val zPath = Layouts.zorderWrite(spark, ev, "t", "value", s"$out/z", 16)
-    ev.repartitionByRange(16, col("t")).sortWithinPartitions("t")
-      .write.mode("overwrite").parquet(s"$out/linear")
-    val r = ev.agg(min("t"), max("t"), min("value"), max("value")).head()
-    val (tLo, tHi, vLo, vHi) =
-      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    // per-file normalized widths: z-order bounds BOTH dimensions, the
-    // single-column sort leaves the second dimension unpruned (~1)
-    def widths(path: String): (Double, Double) = {
-      val w = spark.read.parquet(path)
-        .select(input_file_name().as("f"), col("t"), col("value"))
-        .groupBy("f")
-        .agg(((max("t") - min("t")) / (tHi - tLo)).as("wt"),
-          ((max("value") - min("value")) / (vHi - vLo)).as("wv"))
-        .agg(avg("wt"), avg("wv")).head()
-      (w.getDouble(0), w.getDouble(1))
-    }
-    val (ztW, zvW) = widths(zPath)
-    val (ltW, lvW) = widths(s"$out/linear")
-    assert(ztW < 0.5 && zvW < 0.5,
-      s"z-order must bound both dims: t=$ztW value=$zvW")
-    // (~125 rows/file at sf0.001: the sampled per-file range sits below
-    // the full span, so the comparison is relative, not absolute)
-    assert(lvW > 2 * zvW,
-      s"linear layout must leave value far wider than z-order: $lvW vs $zvW")
-    // a predicate on the SECOND dimension alone: the sorted layout
-    // touches every file, the z-ordered layout skips most
-    def filesTouched(path: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(path).filter(pred)
-        .select(input_file_name()).distinct().count()
-    val band = col("value").between(vLo + 0.45 * (vHi - vLo), vLo + 0.55 * (vHi - vLo))
-    val (zf, lf) = (filesTouched(zPath, band), filesTouched(s"$out/linear", band))
-    assert(lf >= 12, s"sanity: a value band hits nearly every t-sorted file: $lf")
-    assert(zf <= lf / 2, s"z-order must skip most files on a value band: z=$zf linear=$lf")
-  }
-}
-
 class SaltedJoinSpec extends AnyFunSuite {
   import SparkTest._
   import org.apache.spark.sql.functions._
@@ -1979,7 +1872,7 @@ class GroupedKMeansSpec extends AnyFunSuite {
 
 class RecallModelSpec extends AnyFunSuite {
   import SparkTest._
-  import graft.ann.{GroupedKMeans, IvfIndex, RecallModel}
+  import graft.ann.RecallModel
 
   test("measured curve is monotone and saturates; fit inverts to a working nprobe pick") {
     val c = RecallModel.measure(spark, sf, cells = 16, k = 10)
@@ -1992,35 +1885,6 @@ class RecallModelSpec extends AnyFunSuite {
     // to pick probes from (coarse bound — it is a 2-parameter model)
     val maxErr = c.points.map { case (p, r) => math.abs(c.predict(p) - r) }.max
     assert(maxErr < 0.25, s"fit diverges from measurement: $maxErr")
-    // inversion: the pick meets its target on the MEASURED curve within
-    // the model's error, and a higher target never picks fewer probes
-    val p90 = c.nprobeFor(0.9)
-    assert(c.points(p90 - 1)._2 >= 0.9 - maxErr)
-    assert(c.nprobeFor(0.99) >= p90)
-  }
-
-  test("model-driven probe paths reach at least the fixed-nprobe recall") {
-    val exact = graft.ann.Ann.bruteForceL2TopK(spark, sf, 10)
-      .collect().map(_.getLong(0)).toSet
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double =
-      df.collect().map(_.getLong(0)).toSet.intersect(exact).size / 10.0
-    val fixed = recallOf(IvfIndex.search(spark, sf, k = 16, nprobe = 4))
-    val model = recallOf(RecallModel.searchAtTarget(spark, sf, 0.9))
-    assert(model >= fixed || model >= 0.9,
-      s"model-driven recall $model must not fall below the fixed-nprobe path $fixed")
-    // B21: per-role mini-IVF with the model-picked probe depth vs the
-    // old constant nprobe=2
-    val pExact = graft.rbac.Rbac.prefilterTopK(spark, sf, 1, 10)
-      .collect().map(_.getLong(0)).toSet
-    val fixedRole = GroupedKMeans.partitionIvfTopK(spark, sf, 1, 10, nprobe = 2)
-      .collect().map(_.getLong(0)).toSet.intersect(pExact).size / 10.0
-    val modelRole = GroupedKMeans.partitionIvfTopKModel(spark, sf, 1, 10, targetRecall = 0.9)
-      .collect().map(_.getLong(0)).toSet.intersect(pExact).size / 10.0
-    assert(modelRole >= fixedRole || modelRole >= 0.9,
-      s"B21 model-driven recall $modelRole below fixed-nprobe $fixedRole")
-    // B12: the predicate-aware search still returns k accessible rows
-    // when its starting probe comes from the model
-    assert(IvfIndex.predicateAwareSearchModel(spark, sf, 1).count() == 10)
   }
 
   test("cost frontier: scan fraction grows monotonically to 1, recall matches the curve") {
@@ -2484,67 +2348,6 @@ class IvmSpec extends AnyFunSuite {
       sum(when(col("o_orderkey") % 10 =!= 0, 1L).otherwise(0L)).as("nb"))
       .filter(col("nb") === 0).select("o_custkey").collect().map(_.getLong(0))
     onlyDelta.foreach(k => assert(!got.contains(k), s"cust $k should have vanished"))
-  }
-}
-
-class FileStatsSpec extends AnyFunSuite {
-  import SparkTest._
-  import graft.sources.FileStats
-
-  test("skipping scan prunes files on a clustered layout, results exact") {
-    val dir = java.nio.file.Files.createTempDirectory("fstats").toString
-    val table = s"$dir/events_by_value"
-    // clustered layout: range-sorted by value -> tight per-file envelopes
-    graft.Tables.events(spark, sf)
-      .select("event_id", "event_type", "value")
-      .filter(col("value").isNotNull)
-      .repartitionByRange(8, col("value"))
-      .sortWithinPartitions("value")
-      .write.mode("overwrite").parquet(table)
-    FileStats.writeSidecar(spark, table, "value")
-    // the table reads back identically with the sidecar in place
-    // (underscore paths are invisible to parquet discovery)
-    val n = spark.read.parquet(table).count()
-    assert(n == graft.Tables.events(spark, sf).filter(col("value").isNotNull).count())
-    // narrow band: prunes most files, rows identical to the full scan
-    val vals = spark.read.parquet(table).select("value")
-      .collect().map(_.getDouble(0)).sorted
-    val (lo, hi) = (vals(vals.length / 3), vals(vals.length / 3 + vals.length / 20))
-    val (pruned, matched, total) = FileStats.skippingScan(spark, table, "value", lo, hi)
-    assert(total == 8, s"expected 8 files, saw $total")
-    assert(matched <= 2, s"narrow band should touch <=2 of 8 files, touched $matched")
-    val got = pruned.select("event_id").collect().map(_.getLong(0)).toSet
-    val want = spark.read.parquet(table)
-      .filter(col("value") >= lo && col("value") <= hi)
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    assert(got == want, "pruned scan diverged from full scan")
-    // empty band short-circuits to zero files and zero rows
-    val (empty, m0, _) = FileStats.skippingScan(spark, table, "value",
-      vals.last + 1, vals.last + 2)
-    assert(m0 == 0 && empty.count() == 0)
-  }
-
-  test("stats only ever remove provably-empty files (unclustered safety)") {
-    val dir = java.nio.file.Files.createTempDirectory("fstats2").toString
-    val table = s"$dir/events_unclustered"
-    // unclustered: round-robin layout, every file spans ~the full range
-    graft.Tables.events(spark, sf)
-      .select("event_id", "value").filter(col("value").isNotNull)
-      .repartition(6)
-      .write.mode("overwrite").parquet(table)
-    FileStats.writeSidecar(spark, table, "value")
-    val vals = spark.read.parquet(table).select("value")
-      .collect().map(_.getDouble(0)).sorted
-    val (lo, hi) = (vals(vals.length / 2), vals(vals.length / 2 + 50))
-    val (pruned, matched, total) = FileStats.skippingScan(spark, table, "value", lo, hi)
-    // overlapping envelopes: skipping degrades to ~full scan but NEVER
-    // changes results
-    assert(matched == total, "unclustered files all overlap a central band")
-    val got = pruned.select("event_id").collect().map(_.getLong(0)).toSet
-    val want = spark.read.parquet(table)
-      .filter(col("value") >= lo && col("value") <= hi)
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    assert(got == want)
   }
 }
 

@@ -521,14 +521,16 @@ class GraphSearchSpec extends AnyFunSuite {
       "recall sweep must not accumulate persisted walk states")
     // and the memoized curve re-serves without any Spark work
     assert(GraphSearch.efRecallCurve(sp, sf, grid = Seq(4, 12, GraphSearch.Ef)) == curve)
-    // the NN-Descent curve probes the same way: with its navigable
-    // graph (an index build, session-cached) in place, a fresh grid
-    // leaves the block count unchanged too
+    // the NN-Descent policy probes the same way: with its navigable
+    // graph (an index build, session-cached) in place, its probe walk
+    // leaves the block count unchanged too (a target of 0 is met by
+    // the first probe, at iters = 2 and the default beam)
     GraphSearch.nndNavServingGraph(sp, sf).count()
     val n1 = sp.sparkContext.getPersistentRDDs.size
-    val nnd = GraphSearch.nndEfRecallCurve(sp, sf, iters = 2, grid = Seq(6, 20))
-    assert(nnd.map(_._1) == Seq(6, 20) && nnd.forall(p => p._2 >= 0.0 && p._2 <= 1.0))
+    val (iters, ef, r) = GraphSearch.nndServePolicy(sp, sf, target = 0.0)
+    assert((iters, ef) == (2, GraphSearch.Ef) && r >= 0.0 && r <= 1.0)
+    assert(GraphSearch.nndProbedPoints(sf).contains((iters, ef, r)))
     assert(sp.sparkContext.getPersistentRDDs.size == n1,
-      "NN-Descent recall sweep must not accumulate persisted walk states")
+      "NN-Descent probe walks must not accumulate persisted walk states")
   }
 }

@@ -185,7 +185,7 @@ class ParquetReaderSpec extends AnyFunSuite {
       array(col("id").cast("float")).as("v"), col("id").cast("string").as("s"))
     var cuts = Seq.empty[DataFrame]
     val jobs = jobsOf(sp) {
-      cuts = Seq(PlanCut.diskCut(sp, df), PlanCut.diskCutBounded(sp, df, 50L),
+      cuts = Seq(PlanCut.diskCutBounded(sp, df, 50L),
         PlanCut.diskCheckpointed(sp, df, gcNudge = false))
     }
     assert(inference(jobs).isEmpty, s"read-back inference jobs: $jobs")
@@ -289,6 +289,182 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(count(queryArray) == 1)
     assert(count(toArray) == 1 + count("""(?s)\.select\("proj"\)\s*\.head\(\)\.getSeq""".r))
   }
+
+  test("every public object member has a consumer outside its own definition") {
+    val allowed = ConsumerScan.allowed
+    val found = ConsumerScan.unreferenced
+    val offenders = found.filterNot(m =>
+      m.file.startsWith("graft/streaming/") || allowed.contains(m.name))
+    assert(offenders.isEmpty, "public members no engine code, main or perfbench " +
+      s"harness references (delete them or give them a consumer):\n${offenders.mkString("\n")}")
+    val stale = allowed.keySet -- found.map(_.name)
+    assert(stale.isEmpty, s"allow-list entries that now have a consumer or are gone: $stale")
+  }
+
+  test("every main is named in the verify skill") {
+    val skill = new String(Files.readAllBytes(Paths.get(".claude/skills/verify/SKILL.md")), "UTF-8")
+    val mains = ConsumerScan.mains
+    assert(mains.nonEmpty, "no main found: run from the repository root")
+    val unnamed = mains.filterNot(m =>
+      ("\\b" + java.util.regex.Pattern.quote(m) + "\\b").r.findFirstIn(skill).isDefined)
+    assert(unnamed.isEmpty, s"mains with no documented use in SKILL.md: $unnamed")
+  }
+}
+
+/** A text scan of the engine's sources for members and mains nothing
+  * runs. Comments are blanked (string literals are code); an object
+  * member's own definition (its line and the lines indented below it)
+  * does not count as a reference to it, and neither do the specs: a
+  * reference is any other occurrence of the name under `src/main/scala`
+  * or `perfbench/harness`.
+  */
+object ConsumerScan {
+  /** Unreferenced members that stay, and why. Everything under
+    * `graft/streaming/` stays too: the north star names the streaming
+    * units.
+    */
+  val allowed: Map[String, String] = {
+    val maintenance = "reproduces the reference's insert/delete/rollback " +
+      "maintenance scripts named in its doc"
+    Map(
+      "Layouts.compactInserts" -> maintenance,
+      "Layouts.rollbackBatch" -> maintenance,
+      "Layouts.deleteBatch" -> maintenance,
+      "Layouts.rollbackDelete" -> maintenance,
+      "Layouts.rewritePartition" -> maintenance,
+      "GroupedKMeans.sse" -> "the k-means quality reference the specs compare against",
+      "Sidecars.ToolRead" -> "a declaration Round8Spec checks",
+      "SparkEntry.entry" -> "the flagship smoke-check entry point its doc declares")
+  }
+
+  final case class Member(file: String, line: Int, name: String) {
+    override def toString = s"$file:$line $name"
+  }
+
+  private def sources(dir: String): Seq[(String, String)] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> code(new String(Files.readAllBytes(p), "UTF-8")))
+      .toSeq.sortBy(_._1)
+  }
+
+  /** `src` with every comment blanked to spaces (newlines kept). */
+  private def code(src: String): String = {
+    val out = new StringBuilder(src.length)
+    val n = src.length
+    var i = 0
+    def keep(j: Int): Unit = { out ++= src.substring(i, j); i = j }
+    def blank(j: Int): Unit = {
+      src.substring(i, j).foreach(c => out += (if (c == '\n') '\n' else ' ')); i = j
+    }
+    def end(j: Int, width: Int): Int = if (j < 0) n else j + width
+    while (i < n) {
+      if (src.startsWith("//", i)) blank(end(src.indexOf('\n', i), 0))
+      else if (src.startsWith("/*", i)) {
+        var (depth, j) = (0, i)
+        while ({
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+          depth > 0 && j < n
+        }) ()
+        blank(j)
+      } else if (src.startsWith("\"\"\"", i)) {
+        var j = end(src.indexOf("\"\"\"", i + 3), 3)
+        while (j < n && src(j) == '"') j += 1
+        keep(j)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, n))
+      } else if (src(i) == '\'' && i + 3 < n && src(i + 1) == '\\')
+        keep(end(src.indexOf('\'', i + 3), 1))
+      else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') keep(i + 3)
+      else keep(i + 1)
+    }
+    out.toString
+  }
+
+  private val objectHeader =
+    """(?:^|\s)object\s+(\w+)(?:\s+extends\s[^{}=;]*)?\s*$""".r.unanchored
+  private val memberLine =
+    ("""^(\s*)((?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|override\s+|""" +
+      """implicit\s+|lazy\s+|@\w+\s+)*)(def|val|var)\s+(\w+)""").r.unanchored
+
+  /** Per line: the name of the object whose body the line starts in. */
+  private def enclosingObjects(code: String): Array[Option[String]] = {
+    val lines = code.split("\n", -1)
+    val out = new Array[Option[String]](lines.length)
+    var stack = List.empty[Option[String]]
+    var stmt = 0 // where the current statement header began
+    var pos = 0
+    lines.indices.foreach { li =>
+      out(li) = stack.headOption.flatten
+      lines(li).indices.foreach { k =>
+        val at = pos + k
+        lines(li)(k) match {
+          case '{' =>
+            val header = code.substring(math.max(stmt, at - 300), at)
+            stack = (header match {
+              case objectHeader(name) => Some(name)
+              case _ => None
+            }) :: stack
+            stmt = at + 1
+          case '}' => stack = stack.drop(1); stmt = at + 1
+          case ';' | '=' => stmt = at + 1
+          case _ =>
+        }
+      }
+      pos += lines(li).length + 1
+    }
+    out
+  }
+
+  private val word = """\w+""".r
+
+  /** Public (no private/protected/override) object members, other than
+    * `main`, that no code outside their own definition names.
+    */
+  lazy val unreferenced: Seq[Member] = {
+    val engine = sources("src/main/scala")
+    val all = engine ++ sources("perfbench/harness")
+    val uses = all.flatMap { case (_, c) => word.findAllIn(c) }
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    engine.flatMap { case (file, c) =>
+      val lines = c.split("\n", -1)
+      val owners = enclosingObjects(c)
+      lines.indices.flatMap { li =>
+        (owners(li), lines(li)) match {
+          case (Some(obj), memberLine(indent, mods, _, name))
+              if !mods.matches("""(?s).*\b(private|protected|override)\b.*""") &&
+                name != "main" =>
+            def indentOf(l: String) = l.length - l.dropWhile(_ == ' ').length
+            val body = lines.indices.drop(li + 1).takeWhile(j =>
+              lines(j).trim.isEmpty || indentOf(lines(j)) > indent.length)
+            val closer = lines.lift(li + 1 + body.size)
+              .filter(l => l.trim.startsWith("}") || l.trim.startsWith(")"))
+            val own = (lines(li) +: body.map(lines) ++: closer.toSeq)
+              .flatMap(word.findAllIn(_)).count(_ == name)
+            if (uses.getOrElse(name, 0) == own) Some(Member(file, li + 1, s"$obj.$name"))
+            else None
+          case _ => None
+        }
+      }
+    }
+  }
+
+  /** Fully qualified name of every object that defines `def main`. */
+  lazy val mains: Seq[String] =
+    sources("src/main/scala").flatMap { case (_, c) =>
+      val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(c).map(_.group(1) + ".")
+      val owners = enclosingObjects(c)
+      c.split("\n", -1).zipWithIndex.collect {
+        case (l, li) if l.trim.startsWith("def main(") && owners(li).isDefined =>
+          pkg.getOrElse("") + owners(li).get
+      }
+    }.distinct.sorted
 }
 
 /** Walk scratch (graphTopKFor, G17's per-trigger unit): the final

@@ -188,7 +188,8 @@ class Round12Spec extends AnyFunSuite {
 
   test("G18 NND-base mode: drained stream == batch composition over the descent graph (re-arrival repair)") {
     // the 100× maintenance row runs over the NN-Descent serving graph
-    // (the index buildable there — PointServe's r11 precedent). The
+    // (the index buildable there — CALIBRATION.md round 11 served
+    // point queries over it first). The
     // descent build is full-corpus, so the arriving tail ids ALREADY
     // have lists: the cycle exercises repairEdges' spec-pinned
     // re-arrival idempotence, and the drained==batch gate must hold

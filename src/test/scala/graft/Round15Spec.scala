@@ -82,23 +82,6 @@ class Round15Spec extends AnyFunSuite {
     assert(mean < 4.0, s"tail self-work misattributed to ambient: mean=$mean")
   }
 
-  test("replayAmbient separates the two recorded r14 sf0.1 walls") {
-    // the recorded pair (bench_history.jsonl): 108.2 s wall at load
-    // mean 12.14 vs 161.3 s wall at 19.45, same query set, cpus=32
-    // (loadMax 8). Work is wall-invariant; for ANY plausible phase
-    // work (the pool saturates 8–14 cores on the quiet wall) the
-    // quiet wall replays clean and the loaded wall replays suspect —
-    // the flags the r14 rule could not tell apart (both shipped
-    // suspect=false at ceiling cpus+loadMax=40).
-    for (selfCores <- Seq(8.0, 10.0, 12.0, 14.0)) {
-      val work = selfCores * 108.2
-      val quiet = Bench.replayAmbient(108.2, 12.14, work)
-      val loaded = Bench.replayAmbient(161.3, 19.45, work)
-      assert(quiet <= 8.0, s"quiet wall flagged at selfCores=$selfCores: $quiet")
-      assert(loaded > 8.0, s"loaded wall missed at selfCores=$selfCores: $loaded")
-    }
-  }
-
   test("probed-point lookup routes through the partition key") {
     // below the ceiling nothing probes; the lookup must agree for
     // sharing users (same key → same — here empty — probe rows)

@@ -63,6 +63,15 @@ class Round17Spec extends AnyFunSuite {
     assert(single == dist, "benefit-rank dispatch diverges")
   }
 
+  test("cost-model layout fails before ranking past Int.MaxValue combs (int partition_id)") {
+    import graft.rbac.Partitioned
+    Partitioned.requireIntRank(Int.MaxValue.toLong)
+    val e = intercept[IllegalArgumentException] {
+      Partitioned.requireIntRank(Int.MaxValue.toLong + 1)
+    }
+    assert(e.getMessage.contains("int partition_id"), e.getMessage)
+  }
+
   test("events_quantiles result is unchanged by the rank-dispatch refactor") {
     val got = Analytics.valueQuantiles(spark, sf).collect()
     assert(got.length > 0)

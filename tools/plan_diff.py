@@ -6,13 +6,15 @@ Usage: python3 tools/plan_diff.py BEFORE AFTER
 Each input is the captured stdout of
 `sbt "runMain graft.Explain <sfDir> <key ...>"`: one
 `========== key ==========` header per key, followed by that key's
-formatted physical plan. Four tokens change from run to run and are
+formatted physical plan. These tokens change from run to run and are
 normalized before comparing: expression ids (`#123`), `plan_id=123`,
 the identity hash of a JVM array baked into an expression (`[[F@1b2c3d`,
-the centroid/codebook arguments of the index kernels) and the random
+the centroid/codebook arguments of the index kernels), the random
 suffix of a temporary directory (`file:/tmp/graft_ckpt_8512...`, a graph
-walk's checkpoint). sbt's own tagged log lines (`[info] ...`) are
-dropped. Prints each key whose plan differs (with a unified diff of the
+walk's checkpoint) and the round number inside it (`.../r27`, allocated
+in whatever order concurrent walks finish), and RDD ids
+(`MapPartitionsRDD[484]`, a counter every earlier job advances). sbt's
+own tagged log lines (`[info] ...`) are dropped. Prints each key whose plan differs (with a unified diff of the
 normalized plans) and each key present on one side only, and exits 1 if
 anything differs, 0 otherwise.
 """
@@ -25,14 +27,16 @@ SBT_TAG = re.compile(r"^\[(info|warn|error|success|debug)\]")
 EXPR_ID = re.compile(r"#\d+")
 PLAN_ID = re.compile(r"plan_id=\d+")
 ARRAY_HASH = re.compile(r"(\[+[BCDFIJSZ])@[0-9a-f]+")
-TMP_SUFFIX = re.compile(r"(file:/\S*?_)\d{9,}")
+TMP_SUFFIX = re.compile(r"(file:/\S*?_)\d{9,}(/r)?\d*")
+RDD_ID = re.compile(r"(RDD)\[\d+\]")
 
 
 def normalize(line):
     line = EXPR_ID.sub("#N", line.rstrip())
     line = PLAN_ID.sub("plan_id=N", line)
     line = ARRAY_HASH.sub(r"\1@H", line)
-    return TMP_SUFFIX.sub(r"\1N", line)
+    line = RDD_ID.sub(r"\1[N]", line)
+    return TMP_SUFFIX.sub(lambda m: m.group(1) + "N" + ("/rN" if m.group(2) else ""), line)
 
 
 def split_plans(text):

@@ -20,6 +20,7 @@ BEFORE = """[info] running graft.Explain
 Condition : (vec_id#12L = 0)
 Output [2]: [vec_id#12L, pq_adc(code#3, [[F@72558d04) AS adc#9]
 Location: InMemoryFileIndex [file:/tmp/graft_ckpt_1870495399263062962/r6]
+Arguments: [src#3L], MapPartitionsRDD[484] at createDataFrame at PlanCut.scala:34
 
 ========== key_b ==========
 TakeOrderedAndProject (3)
@@ -36,7 +37,8 @@ AFTER_SAME = """========== key_a ==========
 (2) Filter [codegen id : 1]
 Condition : (vec_id#301L = 0)
 Output [2]: [vec_id#2L, pq_adc(code#5, [[F@1312e82d) AS adc#11]
-Location: InMemoryFileIndex [file:/tmp/graft_ckpt_15916182252406273586/r6]
+Location: InMemoryFileIndex [file:/tmp/graft_ckpt_15916182252406273586/r9]
+Arguments: [src#8L], MapPartitionsRDD[432] at createDataFrame at PlanCut.scala:34
 ========== key_b ==========
 TakeOrderedAndProject (3)
 Arguments: 10, [dist#77 ASC NULLS FIRST, block_id#5L ASC NULLS FIRST], plan_id=4
@@ -49,7 +51,9 @@ class PlanDiffTest(unittest.TestCase):
         self.assertEqual(sorted(plans), ["key_a", "key_b"])
         self.assertIn("Condition : (vec_id#NL = 0)", plans["key_a"])
         self.assertIn("Output [2]: [vec_id#NL, pq_adc(code#N, [[F@H) AS adc#N]", plans["key_a"])
-        self.assertIn("Location: InMemoryFileIndex [file:/tmp/graft_ckpt_N/r6]", plans["key_a"])
+        self.assertIn("Location: InMemoryFileIndex [file:/tmp/graft_ckpt_N/rN]", plans["key_a"])
+        self.assertIn("Arguments: [src#NL], MapPartitionsRDD[N] at createDataFrame "
+                      "at PlanCut.scala:34", plans["key_a"])
         self.assertEqual(plans["key_b"][-1],
                          "Arguments: 10, [dist#N ASC NULLS FIRST, "
                          "block_id#NL ASC NULLS FIRST], plan_id=N")
