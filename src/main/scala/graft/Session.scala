@@ -1,5 +1,8 @@
 package graft
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session bootstrap: every main and the test suite build
@@ -17,4 +20,17 @@ object Session {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** `f` over `xs` concurrently on the global pool, each call under the
+    * caller's job description: a pool thread otherwise keeps the
+    * description of whichever thread created it, and the jobs `f`
+    * submits would be charged to that thread's key (CostLedger).
+    */
+  def parMap[A, B](spark: SparkSession, xs: Seq[A])(f: A => B): Seq[B] = {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = spark.sparkContext
+    val desc = sc.getLocalProperty(CostLedger.DescKey)
+    Await.result(Future.traverse(xs)(x => Future { sc.setJobDescription(desc); f(x) }),
+      Duration.Inf)
+  }
 }

@@ -5,7 +5,7 @@ package graft
   * The DuckDB oracle SQL interpolates `DefaultRoot`, so exactly one
   * process — the Verify run whose outputs the oracle checks — may
   * write there. Every other entrypoint that executes query functions
-  * (tests at sf0.001, Bench/TaskStats at sf0.1) redirects via
+  * (tests at sf0.001, Bench at sf0.1) redirects via
   * `graft.sidecar.dir`, otherwise a concurrent or later run at a
   * DIFFERENT scale factor would overwrite the centroids between
   * Verify and the oracle compare and fail the sidecar-replayed keys

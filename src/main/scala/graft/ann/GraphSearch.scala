@@ -976,17 +976,14 @@ object GraphSearch {
     // even though each round leaves most cores idle; the session
     // caches underneath take per-key locks, so racing users is safe
     // and the per-user results are cache-keyed and deterministic.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    userIds.map { u => scala.concurrent.Future {
+    graft.Session.parMap(spark, userIds) { u =>
       // ef = -1: each user's walk serves at ITS partition's measured
       // policy (partition sizes differ per routing, so one fixed beam
       // cannot fit all three sweep users — the r13 measurement)
       topOf(partitionWalk(spark, dir, u, nq, ef, rounds, gk, cells, alpha), k)
         .select(lit(u).as("user_id"), col("query_id"),
           col("cand_id").as("block_id"))
-    } }
-      .map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    }
       .reduce(_.unionAll(_))
       .orderBy("user_id", "query_id", "block_id")
   }

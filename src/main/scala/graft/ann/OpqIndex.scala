@@ -94,19 +94,14 @@ object OpqIndex {
   def getOrBuild(spark: SparkSession, dir: String): PqIndex.Codebook =
     cbCache.getOrElseUpdate(spark, dir) {
       val base = rotated(spark, dir).select("proj")
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val cents = Await.result(Future.sequence((0 until NumSub).map { s =>
-        Future {
-          val sub = base.select(
-            array_to_vector(slice(col("proj"), s * SubDim + 1, SubDim)
-              .cast("array<double>")).as("features"))
-          new KMeans().setK(PqIndex.CodesPerSub).setSeed(91L + s).setMaxIter(5)
-            .setInitMode("random").setFeaturesCol("features")
-            .fit(sub).clusterCenters.map(_.toArray.map(_.toFloat))
-        }
-      }), Duration.Inf).toArray
+      val cents = graft.Session.parMap(spark, 0 until NumSub) { s =>
+        val sub = base.select(
+          array_to_vector(slice(col("proj"), s * SubDim + 1, SubDim)
+            .cast("array<double>")).as("features"))
+        new KMeans().setK(PqIndex.CodesPerSub).setSeed(91L + s).setMaxIter(5)
+          .setInitMode("random").setFeaturesCol("features")
+          .fit(sub).clusterCenters.map(_.toArray.map(_.toFloat))
+      }.toArray
       PqIndex.Codebook(cents)
     }
 

@@ -39,19 +39,14 @@ object PqIndex {
       val base = Tables.embeddings(spark, dir).select("embedding")
       // the 8 subspace quantizers are independent — train them
       // concurrently (separate MLlib fits share the session safely)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val cents = Await.result(Future.sequence((0 until NumSub).map { s =>
-        Future {
-          val sub = base.select(
-            array_to_vector(slice(col("embedding"), s * subDim + 1, subDim)
-              .cast("array<double>")).as("features"))
-          new KMeans().setK(CodesPerSub).setSeed(42L + s).setMaxIter(5)
-            .setInitMode("random").setFeaturesCol("features")
-            .fit(sub).clusterCenters.map(_.toArray.map(_.toFloat))
-        }
-      }), Duration.Inf).toArray
+      val cents = graft.Session.parMap(spark, 0 until NumSub) { s =>
+        val sub = base.select(
+          array_to_vector(slice(col("embedding"), s * subDim + 1, subDim)
+            .cast("array<double>")).as("features"))
+        new KMeans().setK(CodesPerSub).setSeed(42L + s).setMaxIter(5)
+          .setInitMode("random").setFeaturesCol("features")
+          .fit(sub).clusterCenters.map(_.toArray.map(_.toFloat))
+      }.toArray
       Codebook(cents)
     }
 

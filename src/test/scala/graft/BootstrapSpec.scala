@@ -20,9 +20,11 @@ class BootstrapSpec extends AnyFunSuite {
 
   test("a failed warm-up returns its first line") {
     val missing = Files.createTempDirectory("warm_missing").resolve("nope").toString
-    val err = Bench.warmUp(spark, missing, None)
+    val (builds, err) = Bench.warmUp(spark, missing, None)
     assert(err.isDefined, "warm-up against a missing directory reported no failure")
     assert(err.get.nonEmpty && !err.get.contains('\n'), s"not one line: $err")
     assert(err.get.contains("nope"), s"the failure does not name the missing path: $err")
+    assert(err.get.startsWith("session: "), s"the failure does not name its build: $err")
+    assert(builds.isEmpty, s"builds reported done after the first failed: $builds")
   }
 }

@@ -51,37 +51,6 @@ class Round15Spec extends AnyFunSuite {
       "serving sharing users added probe walks at the oracle SF (pin violated)")
   }
 
-  test("ambientStats: a saturated-but-quiet phase reads ambient ~0; external load surfaces") {
-    // 5 s cadence, self runs a steady 12 cores (cumulative CPU ramps
-    // 60 s per sample); host load = self + ambient
-    def series(ambient: Double): Seq[(Double, Double, Double)] =
-      (0 to 24).map(i => (i * 5.0, 12.0 + ambient, i * 5.0 * 12.0))
-    val Some((aQuiet, _, selfQuiet)) = Bench.ambientStats(series(0.5))
-    assert(math.abs(aQuiet - 0.5) < 0.01 && math.abs(selfQuiet - 12.0) < 0.01,
-      s"quiet phase misread: ambient=$aQuiet self=$selfQuiet")
-    val Some((aLoaded, aPeak, _)) = Bench.ambientStats(series(11.0))
-    assert(math.abs(aLoaded - 11.0) < 0.01 && aPeak >= aLoaded,
-      s"external load not surfaced: ambient=$aLoaded")
-    // the r14 rule saw the SAME mean in both once self crossed the
-    // whole-process ceiling — the ambient rule separates them
-    assert(aQuiet <= 8.0 && aLoaded > 8.0,
-      "ambient rule failed to split quiet from loaded at the driver threshold")
-    assert(Bench.ambientStats(Seq((0.0, 5.0, 0.0))).isEmpty, "single sample must rate nothing")
-  }
-
-  test("ambientStats uses the trailing-60s self window, not the phase cumulative") {
-    // 120 s idle then 120 s at 16 self-cores: by the tail, cumulative
-    // self (~8) would misread half the phase's own work as ambient;
-    // the trailing window sees the true 16
-    val s = (0 to 48).map { i =>
-      val w = i * 5.0
-      val cpu = if (w <= 120) 0.0 else (w - 120) * 16.0
-      (w, if (w <= 120) 1.0 else 17.0, cpu)
-    }
-    val Some((mean, _, _)) = Bench.ambientStats(s)
-    assert(mean < 4.0, s"tail self-work misattributed to ambient: mean=$mean")
-  }
-
   test("probed-point lookup routes through the partition key") {
     // below the ceiling nothing probes; the lookup must agree for
     // sharing users (same key → same — here empty — probe rows)

@@ -13,8 +13,19 @@ the centroid/codebook arguments of the index kernels), the random
 suffix of a temporary directory (`file:/tmp/graft_ckpt_8512...`, a graph
 walk's checkpoint) and the round number inside it (`.../r27`, allocated
 in whatever order concurrent walks finish), and RDD ids
-(`MapPartitionsRDD[484]`, a counter every earlier job advances). sbt's
-own tagged log lines (`[info] ...`) are dropped. Prints each key whose plan differs (with a unified diff of the
+(`MapPartitionsRDD[484]`, a counter every earlier job advances),
+whole-stage codegen ids and query-stage ids (both numbered in the order
+stages happen to run). sbt's own tagged log lines (`[info] ...`) are
+dropped.
+
+A cached relation's adaptive plan prints as its final plan once an
+earlier action has materialized the cache, and as its initial plan
+before that, so one plan has two forms depending on what ran first in
+the JVM. Each plan is reduced to the initial form: a `== Final Plan ==`
+subtree is dropped with the detail blocks of the operators only it
+holds, and operators are renumbered in the order the tree names them.
+
+Prints each key whose plan differs (with a unified diff of the
 normalized plans) and each key present on one side only, and exits 1 if
 anything differs, 0 otherwise.
 """
@@ -29,6 +40,12 @@ PLAN_ID = re.compile(r"plan_id=\d+")
 ARRAY_HASH = re.compile(r"(\[+[BCDFIJSZ])@[0-9a-f]+")
 TMP_SUFFIX = re.compile(r"(file:/\S*?_)\d{9,}(/r)?\d*")
 RDD_ID = re.compile(r"(RDD)\[\d+\]")
+CODEGEN_ID = re.compile(r"\[codegen id : \d+\]")
+FINAL_FLAG = re.compile(r"isFinalPlan=(true|false)")
+NODE_ID = re.compile(r"\((\d+)\)")
+DETAIL_HEAD = re.compile(r"^\((\d+)\) (.*)$")
+OPERATOR_REF = re.compile(r"(operator id(?: =|:) )(\d+)")
+STAGE_ID = re.compile(r"^Arguments: \d+$")
 
 
 def normalize(line):
@@ -36,7 +53,84 @@ def normalize(line):
     line = PLAN_ID.sub("plan_id=N", line)
     line = ARRAY_HASH.sub(r"\1@H", line)
     line = RDD_ID.sub(r"\1[N]", line)
+    line = CODEGEN_ID.sub("[codegen id : N]", line)
+    line = FINAL_FLAG.sub("isFinalPlan=_", line)
     return TMP_SUFFIX.sub(lambda m: m.group(1) + "N" + ("/rN" if m.group(2) else ""), line)
+
+
+def collapse_final(lines):
+    """(in_tree, line) pairs with each `== Final Plan ==` subtree dropped
+    and its `== Initial Plan ==` root put where an unexecuted adaptive
+    plan prints its child. Tree lines lose their `:` bars: the tree below
+    an executed adaptive plan prints without its parent's bars.
+    """
+    out, tree, i = [], False, 0
+    while i < len(lines):
+        line = lines[i]
+        if line == "== Physical Plan ==" or line.startswith("Subquery:"):
+            out.append((False, line))
+            tree = True
+            i += 1
+            continue
+        if not line:
+            tree = False
+        elif tree and line.strip() == "+- == Final Plan ==":
+            col = line.index("+")
+            j = next((j for j in range(i + 1, len(lines) - 1)
+                      if lines[j].strip() == "+- == Initial Plan =="
+                      and lines[j].index("+") == col), None)
+            if j is not None:
+                line, i = " " * col + "+- " + lines[j + 1].lstrip(), j + 1
+        if tree:
+            art = len(line) - len(line.lstrip(" :"))
+            line = line[:art].replace(":", " ") + line[art:]
+        out.append((tree, line))
+        i += 1
+    return out
+
+
+def initial_form(lines):
+    """The plan in its initial form, operators renumbered by first mention
+    in a tree, each section's detail blocks in that order, blocks of
+    operators no tree names dropped.
+    """
+    tagged = collapse_final(lines)
+    ids = {}
+    for in_tree, line in tagged:
+        m = NODE_ID.search(line) if in_tree else None
+        if m:
+            ids.setdefault(m.group(1), len(ids) + 1)
+    out, blocks, block, stage = [], [], None, False
+
+    def flush():
+        for _, lines_ in sorted(blocks):
+            out.extend(["", *lines_])
+        blocks.clear()
+
+    def refs(line):
+        return OPERATOR_REF.sub(lambda m: m.group(1) + str(ids.get(m.group(2), m.group(2))), line)
+
+    for in_tree, line in tagged:
+        head = None if in_tree else DETAIL_HEAD.match(line)
+        if head:
+            block = [] if head.group(1) not in ids else [f"({ids[head.group(1)]}) {head.group(2)}"]
+            if block:
+                blocks.append((ids[head.group(1)], block))
+            stage = head.group(2).endswith("QueryStage")
+        elif block is not None and line:
+            block.append("Arguments: N" if stage and STAGE_ID.match(line) else refs(line))
+        else:
+            block = None
+            if not line:
+                continue
+            if in_tree:
+                line = NODE_ID.sub(lambda m: f"({ids[m.group(1)]})", line, count=1)
+            else:
+                flush()
+                line = refs(line)
+            out.append(line)
+    flush()
+    return out
 
 
 def split_plans(text):
@@ -49,11 +143,12 @@ def split_plans(text):
             plans[key] = []
         elif key is not None and not SBT_TAG.match(raw):
             plans[key].append(normalize(raw))
-    for lines in plans.values():
+    for key, lines in plans.items():
         while lines and not lines[-1]:
             lines.pop()
         while lines and not lines[0]:
             lines.pop(0)
+        plans[key] = initial_form(lines)
     return plans
 
 

@@ -44,6 +44,115 @@ TakeOrderedAndProject (3)
 Arguments: 10, [dist#77 ASC NULLS FIRST, block_id#5L ASC NULLS FIRST], plan_id=4
 """
 
+# one cached relation explained before the cache was materialized (its
+# adaptive plan is initial) ...
+CACHED_INITIAL = """========== key_c ==========
+== Physical Plan ==
+AdaptiveSparkPlan (8)
++- BroadcastHashJoin LeftSemi BuildRight (7)
+   :- Filter (5)
+   :  +- InMemoryTableScan (1) (columnarIn=false, columnarOut=true)
+   :        +- InMemoryRelation (2)
+   :              +- AdaptiveSparkPlan (4)
+   :                 +- Exchange (3)
+   :                    +- Scan parquet  (0)
+   +- Scan parquet  (6)
+
+
+(0) Scan parquet
+Output [1]: [doc_id#16L]
+
+(1) InMemoryTableScan
+Output [1]: [doc_id#16L]
+
+(2) InMemoryRelation
+Arguments: [doc_id#16L], StorageLevel(disk, memory, deserialized, 1 replicas)
+
+(3) Exchange
+Arguments: hashpartitioning(doc_id#16L, 4), ENSURE_REQUIREMENTS, [plan_id=23]
+
+(4) AdaptiveSparkPlan
+Output [1]: [doc_id#16L]
+Arguments: isFinalPlan=false
+
+(5) Filter
+Condition : isnotnull(doc_id#16L)
+
+(6) Scan parquet
+Output [1]: [doc_id#40L]
+
+(7) BroadcastHashJoin
+Join type: LeftSemi
+
+(8) AdaptiveSparkPlan
+Arguments: isFinalPlan=false
+"""
+
+# ... and after an earlier key materialized it: the final plan prints
+# above the initial one, operators are numbered differently and the
+# parent tree's `:` bars stop at the adaptive plan
+CACHED_FINAL = """========== key_c ==========
+== Physical Plan ==
+AdaptiveSparkPlan (11)
++- BroadcastHashJoin LeftSemi BuildRight (10)
+   :- Filter (8)
+   :  +- InMemoryTableScan (1) (columnarIn=false, columnarOut=true)
+   :        +- InMemoryRelation (2)
+   :              +- AdaptiveSparkPlan (7)
+                     +- == Final Plan ==
+                        ResultQueryStage (5)
+                        +- ShuffleQueryStage (4), Statistics(sizeInBytes=23.4 KiB, rowCount=1.00E+3)
+                           +- Exchange (3)
+                              +- * ColumnarToRow (12)
+                                 +- Scan parquet  (0)
+                     +- == Initial Plan ==
+                        Exchange (6)
+                        +- Scan parquet  (0)
+   +- Scan parquet  (9)
+
+
+(0) Scan parquet
+Output [1]: [doc_id#16L]
+
+(1) InMemoryTableScan
+Output [1]: [doc_id#16L]
+
+(2) InMemoryRelation
+Arguments: [doc_id#16L], StorageLevel(disk, memory, deserialized, 1 replicas)
+
+(3) Exchange
+Arguments: hashpartitioning(doc_id#16L, 4), ENSURE_REQUIREMENTS, [plan_id=566]
+
+(4) ShuffleQueryStage
+Output [1]: [doc_id#16L]
+Arguments: 0
+
+(5) ResultQueryStage
+Arguments: 1
+
+(6) Exchange
+Arguments: hashpartitioning(doc_id#16L, 4), ENSURE_REQUIREMENTS, [plan_id=23]
+
+(7) AdaptiveSparkPlan
+Output [1]: [doc_id#16L]
+Arguments: isFinalPlan=true
+
+(8) Filter
+Condition : isnotnull(doc_id#16L)
+
+(9) Scan parquet
+Output [1]: [doc_id#40L]
+
+(10) BroadcastHashJoin
+Join type: LeftSemi
+
+(11) AdaptiveSparkPlan
+Arguments: isFinalPlan=false
+
+(12) ColumnarToRow [codegen id : 1]
+Input [1]: [doc_id#16L]
+"""
+
 
 class PlanDiffTest(unittest.TestCase):
     def test_split_normalizes_run_tokens_and_drops_sbt_lines(self):
@@ -77,6 +186,21 @@ class PlanDiffTest(unittest.TestCase):
         changed, one_side = plan_diff.diff_plans(
             plan_diff.split_plans(BEFORE), plan_diff.split_plans(after))
         self.assertEqual((changed, one_side), ([], ["key_b"]))
+
+    def test_a_cached_relation_in_final_and_initial_form_is_identical(self):
+        initial = plan_diff.split_plans(CACHED_INITIAL)
+        final = plan_diff.split_plans(CACHED_FINAL)
+        self.assertEqual(plan_diff.diff_plans(initial, final), ([], []))
+        plan = final["key_c"]
+        self.assertFalse(any("Final Plan" in l or "QueryStage" in l or "ColumnarToRow" in l
+                             for l in plan), plan)
+        self.assertIn("                  +- AdaptiveSparkPlan (6)", plan)
+        self.assertIn("                     +- Exchange (7)", plan)
+        # the initial subtree still decides: a changed operator under it shows
+        changed = CACHED_FINAL.replace("(doc_id#16L, 4), ENSURE_REQUIREMENTS, [plan_id=23]",
+                                       "(doc_id#16L, 8), ENSURE_REQUIREMENTS, [plan_id=23]")
+        diff, _ = plan_diff.diff_plans(initial, plan_diff.split_plans(changed))
+        self.assertEqual([k for k, _ in diff], ["key_c"])
 
     def test_exit_status(self):
         with tempfile.TemporaryDirectory() as d:
