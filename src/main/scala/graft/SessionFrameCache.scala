@@ -52,9 +52,8 @@ final class BuildOnce[K, V] {
   * keys its entries by applicationId, and entries of a different
   * (dead) application are evicted on first touch by a new session so a
   * long-lived JVM cycling sessions doesn't accrete one value per
-  * session (the convention Bpe.scala established for its
-  * checkpoint-backed Model). Builds are `BuildOnce`'s: one per key,
-  * different keys concurrently.
+  * session. Builds are `BuildOnce`'s: one per key, different keys
+  * concurrently.
   *
   * Driver-side sidecars (centroid arrays, grids, codebooks, eigen
   * models) deliberately do NOT use this: plain JVM data survives

@@ -25,15 +25,44 @@ object Ann {
   private def corpus(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select("vec_id", "embedding")
 
-  /** The benchmark query batch: corpus rows vec_id < nq as (query_id,
-    * qvec), shared by the exact ground truth and every graph walk over
-    * it. nq is a bounded constant (point selection), so the per-round
-    * distance attach may broadcast the query vectors; at large nq drop
-    * the hint and it becomes a query_id equi-join.
+  /** The one batch query frame: embedding rows as (query_id, [user_id],
+    * [qvec_id], qvec) — `qvec_id` (with `selfId`) is the vector's own
+    * vec_id, `user_id` the one batch permission key (`exactTopK`).
+    */
+  private[graft] def queryFrame(rows: DataFrame, queryId: Column = col("vec_id"),
+                                selfId: Boolean = false,
+                                userId: Option[Column] = None): DataFrame =
+    rows.select(Seq(queryId.as("query_id")) ++ userId.map(_.as("user_id")) ++
+      Option.when(selfId)(col("vec_id").as("qvec_id")) :+ col("embedding").as("qvec"): _*)
+
+  /** The benchmark query batch: corpus rows vec_id < nq, shared by
+    * every graph walk over it. nq is a bounded constant (point
+    * selection), so the per-round distance attach may broadcast the
+    * query vectors; at large nq drop the hint and it becomes a query_id
+    * equi-join.
     */
   private[graft] def queryBatch(spark: SparkSession, dir: String, nq: Int): DataFrame =
-    broadcast(Tables.embeddings(spark, dir).filter(col("vec_id") < nq)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
+    broadcast(queryFrame(Tables.embeddings(spark, dir).filter(col("vec_id") < nq)))
+
+  /** The one batched exact top-k (compute_ground_truth.py): (query_id,
+    * ids of the k L2-nearest corpus vectors, ties to the smaller id) —
+    * corpus scanned once, queries broadcast, shuffle = |queries| × k
+    * ids. `excludeSelf` drops `vec_id = qvec_id`; with `users` each
+    * query sees only its `user_id`'s docs (`Rbac.accessiblePairs`).
+    */
+  private[graft] def exactTopK(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
+                               excludeSelf: Boolean, users: Seq[Long] = Nil): DataFrame = {
+    val q = broadcast(queries)
+    val pairs =
+      if (users.isEmpty) corpus(spark, dir).crossJoin(q)
+      else corpus(spark, dir)
+        .join(Rbac.accessiblePairs(spark, dir, users).withColumnRenamed("document_id", "vec_id"),
+          "vec_id")
+        .join(q, "user_id")
+    (if (excludeSelf) pairs.filter(col("vec_id") =!= col("qvec_id")) else pairs)
+      .groupBy("query_id")
+      .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("vec_id"), k).as("ids"))
+  }
 
   /** The query row `qid` as a driver-side array — for the index-side
     * picks (probe lists, ADC tables, LSH signatures) that run on the
@@ -101,27 +130,18 @@ object Ann {
       .limit(k)
       .select("vec_id")
 
-  /** Batch exact top-k: `nq` query vectors × corpus, one partial-agg
-    * pass (compute_ground_truth.py computes this per user with FAISS;
-    * here it is a single distributed plan: corpus scanned once, queries
-    * broadcast, shuffle = nq × k ids). With `userId` the corpus is
-    * first restricted to the user's accessible docs: the end-to-end
-    * ground truth of a permission-filtered walk (compute_ground_truth's
-    * per-user quantity).
+  /** Batch exact top-k of the `nq` benchmark queries, self left out.
+    * With `userId`: the ground truth of a permission-filtered walk
+    * (compute_ground_truth's per-user quantity).
     */
   def batchTopK(spark: SparkSession, dir: String, nq: Int, k: Int,
-                userId: Option[Long] = None): DataFrame = {
-    // the probe side is the corpus: the broadcast grant policy
-    val docs = userId.fold(corpus(spark, dir))(u =>
-      Rbac.restrict(corpus(spark, dir), spark, dir, u, key = "vec_id"))
-    docs
-      .crossJoin(queryBatch(spark, dir, nq))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id")
-      .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("vec_id"), k).as("ids"))
+                userId: Option[Long] = None): DataFrame =
+    exactTopK(spark, dir,
+      queryFrame(Tables.embeddings(spark, dir).filter(col("vec_id") < nq),
+        selfId = true, userId = userId.map(lit)),
+      k, excludeSelf = true, users = userId.toSeq)
       .select(col("query_id"), explode(col("ids")).as("block_id"))
       .orderBy("query_id", "block_id")
-  }
 
   /** Max-inner-product top-k — pgvector's `<#>` operator class (its
     * negation is ordered ascending; equivalently max dot product).

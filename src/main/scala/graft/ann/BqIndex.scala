@@ -1,7 +1,5 @@
 package graft.ann
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -34,21 +32,17 @@ object BqIndex {
 
   val Dim = 64
 
-  private val cache = TrieMap.empty[String, Array[Double]]
+  private val cache = new graft.BuildOnce[String, Array[Double]]
 
   /** Per-dim mean thresholds — one posexplode + groupBy(dim) scan;
     * the shuffle carries dims × partitions partial rows, never corpus
     * data (map-side combine).
     */
   def getOrBuild(spark: SparkSession, dir: String): Array[Double] =
-    // synchronized like the other sidecar caches: racing first-touch
-    // callers would each run the distributed training scan
-    cache.synchronized {
-      cache.getOrElseUpdate(dir, {
-        val out = new Array[Double](Dim)
-        buildReport(spark, dir).collect().foreach(r => out(r.getLong(0).toInt) = r.getDouble(1))
-        out
-      })
+    cache.getOrElseUpdate(dir) {
+      val out = new Array[Double](Dim)
+      buildReport(spark, dir).collect().foreach(r => out(r.getLong(0).toInt) = r.getDouble(1))
+      out
     }
 
   /** BQ build observable: (dim, thresh) — deterministic (4dp-rounded

@@ -384,9 +384,8 @@ object GraphSearch {
     val cutoff = insertCutoff(spark, dir)
     val vis = visitedCache.getOrElseUpdate(
       spark, (dir, s"insert$InsertTail", ef, rounds, gk, cells)) {
-      val batch = broadcast(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") >= cutoff)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec")))
+      val batch = broadcast(Ann.queryFrame(Tables.embeddings(spark, dir)
+        .filter(col("vec_id") >= cutoff)))
       buildVisited(spark, dir, batch, ef, rounds,
         servingGraph(spark, dir, gk, cells, baseMax = cutoff),
         cellMedoids(spark, dir, cells, baseMax = cutoff))

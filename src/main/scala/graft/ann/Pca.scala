@@ -203,17 +203,14 @@ object Pca {
     (order.map(vals).toArray, order.map(vecs).toArray)
   }
 
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), PcaModel]
+  private val modelCache = new graft.BuildOnce[(String, Int), PcaModel]
 
   /** Fit (or reuse) the PCA model: one distributed moments pass + the
-    * driver eigensolve. Cached per (dir, k) like the other index
+    * driver eigensolve. Built once per (dir, k) like the other index
     * sidecars.
     */
   def model(spark: SparkSession, dir: String, k: Int): PcaModel =
-    // synchronized like BqIndex.getOrBuild: racing first-touch callers
-    // would each run the moments scan + eigensolve
-    modelCache.synchronized { modelCache.getOrElseUpdate((dir, k), {
+    modelCache.getOrElseUpdate((dir, k)) {
       val emb = Tables.embeddings(spark, dir)
       val d = emb.select(size(col("embedding"))).head().getInt(0)
       val row = emb.agg(cov_moments(col("embedding"), d).as("m")).head()
@@ -236,7 +233,7 @@ object Pca {
       val total = (0 until d).map(i => cov(i)(i)).sum
       val (vals, vecs) = topEigen(cov, k)
       PcaModel(d, n, mean, vals, vecs, total)
-    })}
+    }
 
   /** Per-component mean offset — ONE definition shared by `project`
     * (which bakes it into the plan as a float literal) and the oracle

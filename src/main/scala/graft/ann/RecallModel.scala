@@ -5,7 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.vector._
-import graft.operators.TopKAgg.topk_ids
 
 /** nprobe → recall model — the Spark half of the reference's parameter
   * fitting (controller/dynamic_partition/get_parameter.py:135
@@ -65,12 +64,23 @@ object RecallModel {
 
   private val curveCache = new graft.BuildOnce[(String, Int, Int), Curve]
 
-  /** A15 workload query vectors: (query_id, qvec_id, qvec). */
-  private def workloadQueries(spark: SparkSession, dir: String): DataFrame =
-    graft.rbac.Maintenance.workloadGen(spark, dir)
-      .select(col("query_id"), col("vec_id").as("qvec_id")).distinct()
-      .join(Tables.embeddings(spark, dir), col("qvec_id") === col("vec_id"))
-      .select(col("query_id"), col("qvec_id"), col("embedding").as("qvec"))
+  /** The A15 workload (`Maintenance.workloadGen`: vec_id = 7·user mod
+    * n, users ≤ 20) as the batch query frame: (query_id, qvec_id, qvec).
+    */
+  private def workload(spark: SparkSession, dir: String): DataFrame =
+    Ann.queryFrame(graft.rbac.Maintenance.workloadGen(spark, dir)
+      .select("query_id", "vec_id").distinct()
+      .join(Tables.embeddings(spark, dir), "vec_id"), col("query_id"), selfId = true)
+
+  /** The workload's exact top-k ids: (query_id, ids). The query vector
+    * is itself a corpus row: it is left out, as every serving path
+    * (IvfIndex.search vec_id =!= qid) and the repo's ground-truth
+    * convention do — a self-match at distance 0 always lands at
+    * cell_rank 1 and would inflate the whole curve by 1/k, making the
+    * model under-pick nprobe for a recall target.
+    */
+  private[graft] def exact(spark: SparkSession, dir: String, k: Int): DataFrame =
+    Ann.exactTopK(spark, dir, workload(spark, dir), k, excludeSelf = true)
 
   /** Per-query cell ranking (query_id as q2, list_id, cell_rank):
     * |queries|×cells tiny frame ordered by (distance, cid) — the same
@@ -98,24 +108,11 @@ object RecallModel {
     */
   def measure(spark: SparkSession, dir: String, cells: Int = 16, k: Int = 10): Curve =
     curveCache.getOrElseUpdate((dir, cells, k)) {
-      // workload query vectors (A15: vec_id = 7·user mod n, users ≤ 20)
-      val queries = workloadQueries(spark, dir)
-      // exact top-k per query: one corpus scan, queries broadcast,
-      // shuffle = |queries|·k ids (the batch ground-truth shape).
-      // The query vector is itself a corpus row: exclude it, as every
-      // serving path (IvfIndex.search vec_id =!= qid) and the repo's
-      // ground-truth convention do — a self-match at distance 0 always
-      // lands at cell_rank 1 and would inflate the whole curve by 1/k,
-      // making the model under-pick nprobe for a recall target
-      val exact = Tables.embeddings(spark, dir)
-        .crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("qvec_id"))
-        .groupBy("query_id")
-        .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("vec_id"), k).as("ids"))
+      val queries = workload(spark, dir)
       val qcells = queryCellRanks(spark, dir, cells, queries)
       // rank of each exact neighbor's cell in its query's ordering —
       // the histogram is ≤ cells rows
-      val cellRankHist = exact
+      val cellRankHist = exact(spark, dir, k)
         .select(col("query_id"), explode(col("ids")).as("nbr"))
         .join(IvfIndex.assignments(spark, dir, cells)
           .withColumnRenamed("list_id", "nbr_cell"), col("nbr") === col("vec_id"))
@@ -161,7 +158,7 @@ object RecallModel {
     */
   def costFrontier(spark: SparkSession, dir: String,
                    cells: Int = 16, k: Int = 10): DataFrame = {
-    val queries = workloadQueries(spark, dir)
+    val queries = workload(spark, dir)
     val sizes = IvfIndex.buildReport(spark, dir, cells) // (list_id, n_vectors)
     val nQ = queries.count().toDouble
     val total = Tables.embeddings(spark, dir).count().toDouble

@@ -5,8 +5,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.ann.Ann
-import graft.functions.vector._
-import graft.operators.TopKAgg.topk_ids
 
 /** The reference's partitioned physical layouts, re-expressed as
   * DataFrame partitionings (SURVEY.md §2 A5–A8, A10).
@@ -348,29 +346,14 @@ object Partitioned {
     * partition per user holding exactly that user's accessible blocks —
     * the paper's strawman layout: zero query-time filtering, maximal
     * duplication (storage ∝ Σ per-user selectivity, which is why it
-    * only ever materializes a bounded user set).
+    * only ever materializes a bounded user set: customer keys
+    * 0..maxUsers).
     */
   def userLayout(spark: SparkSession, dir: String, maxUsers: Int = 32): DataFrame =
     Rbac.blocks(spark, dir)
-      .join(boundedUserDocs(spark, dir, maxUsers), "document_id")
+      .join(Rbac.accessiblePairs(spark, dir, 0L to maxUsers), "document_id")
       .select(col("user_id").as("partition_user"), col("block_id"),
         col("document_id"), col("embedding"))
-
-  /** (user_id, document_id): the docs each of the users 1..n may read —
-    * the bounded user set the per-user layout, the batch ground truth
-    * and the recall report expand over.
-    */
-  private def boundedUserDocs(spark: SparkSession, dir: String, n: Int): DataFrame =
-    Rbac.userRoles(spark, dir)
-      .filter(col("user_id") <= n)
-      .join(Rbac.permissions(spark, dir), "role_id")
-      .select("user_id", "document_id").distinct()
-
-  /** (user_id, qvec): user u's query is corpus vector u − 1, users 1..n. */
-  private def userQueries(spark: SparkSession, dir: String, n: Int): DataFrame =
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < n)
-      .select((col("vec_id") + 1).as("user_id"), col("embedding").as("qvec"))
 
   /** A18: per-user-partition search — scan ONLY the user's partition;
     * no permission work at query time (the layout prepaid it). At scale
@@ -382,19 +365,26 @@ object Partitioned {
       .select("block_id", "document_id")
 
   /** A8: batch ground truth (compute_ground_truth.py): exact top-k per
-    * (user u, query vector u-1) pair for users 1..nUsers, in ONE
-    * distributed pass — queries and grants broadcast, corpus scanned
-    * once, per-user bounded heaps, shuffle = nUsers × k rows.
+    * (user u, query vector u-1) pair for users 1..nUsers, in ONE pass.
     */
   def batchGroundTruth(spark: SparkSession, dir: String, nUsers: Int, k: Int): DataFrame =
-    Rbac.blocks(spark, dir)
-      // expand: block × users allowed to see it
-      .join(boundedUserDocs(spark, dir, nUsers), "document_id")
-      .join(broadcast(userQueries(spark, dir, nUsers)), "user_id")
-      .groupBy("user_id")
-      .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("block_id"), k).as("ids"))
+    usersTopK(spark, dir, nUsers, k, permitted = true)
       .select(col("user_id"), explode(col("ids")).as("block_id"))
       .orderBy("user_id", "block_id")
+
+  /** (user_id, ids): exact top-k for users 1..nUsers, user u's query
+    * being corpus vector u − 1 (itself kept), over the user's docs when
+    * `permitted`, else the whole corpus.
+    */
+  private def usersTopK(spark: SparkSession, dir: String, nUsers: Int, k: Int,
+                        permitted: Boolean): DataFrame = {
+    val user = col("vec_id") + 1
+    val queries = Ann.queryFrame(Tables.embeddings(spark, dir).filter(col("vec_id") < nUsers),
+      queryId = user, userId = Some(user))
+    Ann.exactTopK(spark, dir, queries, k, excludeSelf = false,
+      users = if (permitted) 1L to nUsers else Nil)
+      .withColumnRenamed("query_id", "user_id")
+  }
 
   /** A16: recall@k report — the reference's headline quality metric
     * (basic_benchmark/test_all.py reports recall + latency per
@@ -408,13 +398,10 @@ object Partitioned {
     val exact = batchGroundTruth(spark, dir, nUsers, k)
       .withColumnRenamed("block_id", "exact_block")
     // global (permission-blind) over-fetch, ranked
-    val cand = Rbac.blocks(spark, dir)
-      .crossJoin(broadcast(userQueries(spark, dir, nUsers)))
-      .groupBy("user_id")
-      .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("block_id"), k * 10).as("ids"))
+    val cand = usersTopK(spark, dir, nUsers, k * 10, permitted = false)
       .select(col("user_id"), posexplode(col("ids")))
       .withColumnRenamed("pos", "rank").withColumnRenamed("col", "block_id")
-    val userDocs = boundedUserDocs(spark, dir, nUsers)
+    val userDocs = Rbac.accessiblePairs(spark, dir, 1L to nUsers)
     val approx = cand
       .join(userDocs,
         cand("user_id") === userDocs("user_id") &&

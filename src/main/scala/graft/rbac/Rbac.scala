@@ -30,6 +30,7 @@ import graft.ann.Ann
   *     frame's doc key against the user's grant rows;
   *   - `accessibleDocs`: the same grant rows as a DISTINCT doc set, for
   *     callers that want the set itself;
+  *   - `accessiblePairs`: a small user set's (user_id, document_id) set;
   *   - `roleSet` / `combKey`: the one role-combination key.
   *
   * Architecture note (Spark-first, not a port): the reference prunes the
@@ -93,19 +94,26 @@ object Rbac {
       .filter(col("vec_id") === qid)
       .select(col("embedding").as("qvec"))
 
+  /** The one user-role filter: (user_id, role_id) of `users` under `ur`
+    * (a one-value IN plans as `user_id = u`). */
+  private def heldRoles(spark: SparkSession, dir: String, users: Seq[Long],
+                        ur: RoleModel): DataFrame =
+    ur(spark, dir).filter(col("user_id").isin(users: _*))
+
   /** The user's `role_id` rows under the permission model `ur`. */
   def rolesOf(spark: SparkSession, dir: String, userId: Long,
               ur: RoleModel = userRoles): DataFrame =
-    ur(spark, dir).filter(col("user_id") === userId).select("role_id")
+    heldRoles(spark, dir, Seq(userId), ur).select("role_id")
 
-  /** The user's grant rows (document_id): one row per (held role, granted
-    * doc), so a doc granted by two of the user's roles appears twice.
+  /** The one grant-rows body, (user_id, document_id): one row per (user,
+    * held role, granted doc), so a doc granted by two of a user's roles
+    * appears twice.
     */
-  private def grants(spark: SparkSession, dir: String, userId: Long,
+  private def grants(spark: SparkSession, dir: String, users: Seq[Long],
                      ur: RoleModel): DataFrame =
     permissions(spark, dir)
-      .join(broadcast(rolesOf(spark, dir, userId, ur)), "role_id")
-      .select("document_id")
+      .join(broadcast(heldRoles(spark, dir, users, ur)), "role_id")
+      .select("user_id", "document_id")
 
   /** The one permission filter: `df`'s rows whose `key` column names a
     * document the user may read — a left-semi join (EXISTS) against the
@@ -122,7 +130,7 @@ object Rbac {
   def restrict(df: DataFrame, spark: SparkSession, dir: String, userId: Long,
                key: String = "document_id", ur: RoleModel = userRoles,
                walkBounded: Boolean = false): DataFrame = {
-    val g = grants(spark, dir, userId, ur).select(col("document_id").as(key))
+    val g = grants(spark, dir, Seq(userId), ur).select(col("document_id").as(key))
     df.join(if (walkBounded) g else broadcast(g), Seq(key), "left_semi")
   }
 
@@ -133,7 +141,12 @@ object Rbac {
     */
   def accessibleDocs(spark: SparkSession, dir: String, userId: Long,
                      ur: RoleModel = userRoles): DataFrame =
-    grants(spark, dir, userId, ur).distinct()
+    grants(spark, dir, Seq(userId), ur).select("document_id").distinct()
+
+  /** The grant rows' many-user form: DISTINCT (user_id, document_id)
+    * pairs of a small user set, for batch callers. */
+  def accessiblePairs(spark: SparkSession, dir: String, users: Seq[Long]): DataFrame =
+    grants(spark, dir, users, userRoles).distinct()
 
   /** A role set, as an aggregate: the group's sorted distinct role ids. */
   def roleSet: Column = sort_array(collect_set(col("role_id")))

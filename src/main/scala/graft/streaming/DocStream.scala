@@ -28,8 +28,7 @@ object DocStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  private val dictCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, (Long, Long)), Array[Long]]
+  private val dictCache = new graft.BuildOnce[(String, Int, (Long, Long)), Array[Long]]
 
   /** Distinct word-8-gram hashes of the eval set (source = 'src0'),
     * sorted — the decontamination dictionary (same kernel as C7),
@@ -38,11 +37,12 @@ object DocStream {
     * stale eval set.
     */
   def evalShingleDict(spark: SparkSession, dir: String, n: Int = 8): Array[Long] =
-    dictCache.getOrElseUpdate((dir, n, Staging.sourceStamp(dir, "documents.parquet")),
+    dictCache.getOrElseUpdate((dir, n, Staging.sourceStamp(dir, "documents.parquet"))) {
       Tables.documents(spark, dir)
         .filter(col("source") === "src0")
         .select(explode(ngrams.word_nshingle_hashes(col("text"), n)).as("h"))
-        .distinct().collect().map(_.getLong(0)).sorted)
+        .distinct().collect().map(_.getLong(0)).sorted
+    }
 
   /** The gate itself — shared verbatim by the streaming path and its
     * batch mirror (the test's equivalence oracle). `keep` is the

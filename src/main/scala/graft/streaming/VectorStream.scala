@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ann.IvfIndex
+import graft.ann.{Ann, IvfIndex}
 import graft.functions.vector._
 
 /** Streaming vector ingest: arriving embeddings are routed to their IVF
@@ -92,8 +92,7 @@ object VectorStream {
   def graphServeStream(spark: SparkSession, dir: String, queryDir: String,
                        outDir: String, checkpoint: String, k: Int = 10)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    spark.readStream.schema(rawSchema).parquet(queryDir)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+    Ann.queryFrame(spark.readStream.schema(rawSchema).parquet(queryDir))
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -200,11 +199,11 @@ object VectorStream {
       else GraphSearch.cellMedoids(spark, dir, cells, baseMax = cutoff)
     val handle = new GraphInsertHandle(base)
     val reader = spark.readStream.schema(rawSchema)
-    val q = (if (maxFilesPerTrigger > 0)
-               reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-             else reader)
+    val arriving = (if (maxFilesPerTrigger > 0)
+                      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
+                    else reader)
       .parquet(vecDir)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+    val q = Ann.queryFrame(arriving)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

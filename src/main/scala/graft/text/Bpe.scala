@@ -1,7 +1,5 @@
 package graft.text
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -110,10 +108,10 @@ object Bpe {
       slice(syms, lit(1), size(syms) - 1),
       (x, i) => struct(x.as("a"), element_at(syms, i + 2).as("b")))
 
-  // keyed by applicationId too: the cached Model holds localCheckpoint
-  // blocks owned by ONE SparkContext — serving them to a new session
-  // in the same JVM would fail on dead block references
-  private val modelCache = TrieMap.empty[(String, String, Int, Long), Model]
+  // session-scoped: the cached Model holds localCheckpoint blocks owned
+  // by ONE SparkContext — serving them to a new session in the same JVM
+  // would fail on dead block references
+  private val modelCache = new graft.SessionCache[(String, Int, Long), Model]
 
   /** Driver-side merge-loop ceiling (r17, guide §5 / VERDICT r16 #3):
     * the trainer's per-round work is TWO scans of the (word, cnt,
@@ -186,16 +184,10 @@ object Bpe {
     */
   def train(spark: SparkSession, dir: String, numMerges: Int = 24,
             driverMax: Long = DriverVocabMax): Model = {
-    // entries keyed to a DIFFERENT application belong to a stopped
-    // context in this JVM: their checkpoint blocks are dead and the
-    // Model can never be served again — drop them so a long-lived JVM
-    // cycling SparkSessions doesn't accrete one Model per session.
     // `driverMax` rides in the key so the dispatch-equality spec can
     // force the distributed branch without poisoning the default
     // entry.
-    val appId = spark.sparkContext.applicationId
-    modelCache.keys.filter(_._1 != appId).foreach(modelCache.remove)
-    modelCache.getOrElseUpdate((appId, dir, numMerges, driverMax), {
+    modelCache.getOrElseUpdate(spark, (dir, numMerges, driverMax)) {
       // localCheckpoint (not bare persist) each round: the fold
       // expression is large, and 24 rounds of accreted lineage make
       // re-planning and plan stringification quadratic — checkpointing
@@ -264,7 +256,7 @@ object Bpe {
       }
       Model(merges.result(), words)
       }
-    })
+    }
   }
 
   /** D19 `text_bpe_train`: the learned merge table — (rank, left,

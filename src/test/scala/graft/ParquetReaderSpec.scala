@@ -233,11 +233,13 @@ class SourcePolicySpec extends AnyFunSuite {
     // go through Rbac.restrict
     assert(filesWith("""accessibleDocs\(""".r).filter(outsideRbac) == Seq("graft/SparkEntry.scala"))
     // one grant join
-    assert(count("""\.join\(broadcast\(rolesOf\(""".r) == 1)
-    // a user's roles come from Rbac.rolesOf — the one user-role filter
-    assert(filesWith("""(?s)userRoles\([^()]*\)\s*\.filter\(col\("user_id"\) ===""".r).isEmpty)
-    assert(filesWith("""filter\(col\("user_id"\) ===""".r) == Seq("graft/rbac/Rbac.scala"))
-    assert(count("""filter\(col\("user_id"\) ===""".r) == 1)
+    assert(count("""\.join\(broadcast\(heldRoles\(""".r) == 1)
+    // a user's roles come from Rbac.heldRoles (through rolesOf for one
+    // user) — the one user-role filter, for one user or a small set
+    assert(filesWith("""(?s)userRoles\([^()]*\)\s*\.filter\(col\("user_id"\)""".r).isEmpty)
+    assert(filesWith("""filter\(col\("user_id"\) ===""".r).isEmpty)
+    assert(filesWith("""filter\(col\("user_id"\)\.isin\(""".r) == Seq("graft/rbac/Rbac.scala"))
+    assert(count("""filter\(col\("user_id"\)\.isin\(""".r) == 1)
     // one comb_key definition
     val rbacFiles = sources.filter(s => !outsideRbac(s._1))
     assert(count("""sort_array\(collect_set\(""".r, rbacFiles) == 1)
@@ -288,6 +290,45 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(filesWith(queryArray) == Seq("graft/ann/Ann.scala"))
     assert(count(queryArray) == 1)
     assert(count(toArray) == 1 + count("""(?s)\.select\("proj"\)\s*\.head\(\)\.getSeq""".r))
+  }
+
+  test("one batch query frame and one batched exact top-k") {
+    val sources = ConsumerScan.sources("src/main/scala")
+    def count(re: scala.util.matching.Regex, files: Seq[(String, String)] = sources): Int =
+      files.map { case (_, src) => re.findAllMatchIn(src).size }.sum
+    // Equivalence's quadratic batch top-k is the independent reference
+    // the blocked kNN graph is checked against, so it keeps its own copy
+    val engine = sources.filter(_._1 != "graft/Equivalence.scala")
+    val batchBody = """topk_ids\(l2_dist\(col\("embedding"\), col\("qvec"\)\)""".r
+    assert(count(batchBody, engine) == 1, "a batched L2 top-k outside Ann.exactTopK")
+    assert(count(batchBody, sources.filter(_._1 == "graft/ann/Ann.scala")) == 1)
+    val queryRow = """col\("embedding"\)\.as\("qvec"\)""".r
+    val rowFiles = engine.collect { case (f, src) if queryRow.findFirstIn(src).isDefined => f }
+    assert(rowFiles == Seq("graft/ann/Ann.scala", "graft/rbac/Rbac.scala") &&
+      count(queryRow, engine) == 2,
+      s"query rows outside Rbac.queryVector and Ann.queryFrame: $rowFiles")
+    val gone = Seq("boundedUserDocs", "userQueries", "workloadQueries")
+      .filter(n => sources.exists(_._2.contains(n)))
+    assert(gone.isEmpty, s"deleted per-caller frames or grant rules are back: $gone")
+  }
+
+  test("one build-once rule: application scoping and locks live in SessionFrameCache") {
+    val sources = ConsumerScan.sources("src/main/scala")
+    def filesWith(re: scala.util.matching.Regex): Seq[String] =
+      sources.collect { case (f, src) if re.findFirstIn(src).isDefined => f }
+    // SessionCache scopes context-bound values by application; a store
+    // reading applicationId itself re-implements that eviction
+    assert(filesWith("""applicationId""".r) == Seq("graft/SessionFrameCache.scala"))
+    // BuildOnce takes a per-key lock. Layouts locks the filesystem:
+    // it serializes the check-then-write of a layout directory on disk,
+    // which no in-memory store owns
+    val locks = filesWith("""\.synchronized\b""".r)
+    assert(locks == Seq("graft/SessionFrameCache.scala", "graft/sources/Layouts.scala"),
+      s"hand-rolled locks outside BuildOnce: $locks")
+    val layouts = sources.find(_._1 == "graft/sources/Layouts.scala").get._2
+    assert("""\.synchronized\b""".r.findAllMatchIn(layouts).size ==
+      """layoutEnsureLock\.synchronized\b""".r.findAllMatchIn(layouts).size,
+      "a lock in Layouts other than its filesystem lock")
   }
 
   test("every public object member has a consumer outside its own definition") {
@@ -341,7 +382,8 @@ object ConsumerScan {
     override def toString = s"$file:$line $name"
   }
 
-  private def sources(dir: String): Seq[(String, String)] = {
+  /** (relative path, code with comments blanked) of every source under `dir`. */
+  def sources(dir: String): Seq[(String, String)] = {
     val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     Files.walk(root).iterator().asScala
