@@ -273,9 +273,6 @@ object Bench {
     kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
-    // bench usually runs at a different SF than the oracle's Verify —
-    // never let its sidecar writes clobber the oracle's fixed path
-    Sidecars.isolate("graft_bench_sidecars")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Env.int("SPARK_GRAFT_CPUS", 4)
     val spark = Session.local(cpus)

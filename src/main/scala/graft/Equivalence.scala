@@ -17,7 +17,6 @@ import graft.operators.TopKAgg.topk_ids
   */
 object Equivalence {
   def main(args: Array[String]): Unit = {
-    Sidecars.isolate("graft_equiv_sidecars") // see Bench — don't clobber the oracle path
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
     val spark = Session.local(cpus)

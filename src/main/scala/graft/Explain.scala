@@ -7,7 +7,6 @@ package graft
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    Sidecars.isolate("graft_explain_sidecars") // see Bench — don't clobber the oracle path
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("rbac_prefilter_topk", "ann_batch_topk", "q1_pricing_summary")

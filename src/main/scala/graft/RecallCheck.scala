@@ -11,7 +11,6 @@ package graft
   */
 object RecallCheck {
   def main(args: Array[String]): Unit = {
-    Sidecars.isolate("graft_recallcheck_sidecars")
     val dir = args(0)
     val cpus = Env.int("SPARK_GRAFT_CPUS", 8)
     val spark = Session.local(cpus)

@@ -39,7 +39,6 @@ package graft
   */
 object ScaleStats {
   def main(args: Array[String]): Unit = {
-    Sidecars.isolate("graft_scalestats_sidecars")
     val dir = args(0)
     val atScale = args.length > 1 && args(1) == "atscale"
     val cpus = Env.int("SPARK_GRAFT_CPUS", 8)

@@ -1,95 +1,97 @@
 package graft
 
-/** Root directory for oracle sidecar tables (fitted centroids etc.).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.ann.{Ann, GraphSearch, GroupedKMeans, Half, IvfIndex, Lsh, OpqIndex, Pca, PqIndex, QdTree}
+import graft.dedup.Dedup
+import graft.multimodal.Multimodal
+import graft.text.TextOps
+
+/** Oracle sidecar tables: build-side index state (fitted centroids,
+  * codebooks, seeded constants, hash-derived graphs, measured policy
+  * picks) persisted as parquet so the DuckDB oracle can replay
+  * everything downstream of it in SQL.
   *
-  * The DuckDB oracle SQL interpolates `DefaultRoot`, so exactly one
-  * process — the Verify run whose outputs the oracle checks — may
-  * write there. Every other entrypoint that executes query functions
-  * (tests at sf0.001, Bench at sf0.1) redirects via
-  * `graft.sidecar.dir`, otherwise a concurrent or later run at a
-  * DIFFERENT scale factor would overwrite the centroids between
-  * Verify and the oracle compare and fail the sidecar-replayed keys
-  * with mystery diffs (this happened: a test-suite run at sf0.001
-  * racing a sf0.01 Verify). Redirected processes additionally skip
-  * the writes entirely (`active` = false): nothing reads a redirected
-  * sidecar, and the skip keeps the write job out of benchmark-timed
-  * query runs.
+  * The oracle SQL interpolates one fixed root, `DefaultRoot`, so
+  * exactly one process may write there: `graft.Verify`, whose outputs
+  * the oracle checks. Verify writes, before each key it runs, the files
+  * that key's oracle reads (and the `ToolRead` files of the mm keys),
+  * each once per run. No query function writes a sidecar: tests,
+  * Bench and every other main run the same functions without a disk
+  * side effect, so a concurrent run at a different scale factor can no
+  * longer overwrite the files between Verify and the oracle compare.
   */
 object Sidecars {
   val DefaultRoot = "/tmp/graft_oracle_sidecars"
 
-  /** Every sidecar file the engine may write — `path` rejects names
-    * outside this list and SidecarPathSpec checks that every oracle
-    * `read_parquet` names a member, so a writer/oracle filename drift
-    * fails fast instead of surfacing as oracle value diffs.
+  /** Every sidecar file, with the frame persisted under it. A frame
+    * takes exactly the parameters its key passes; where the file name
+    * carries a parameter, the entry fixes it. SidecarPathSpec checks
+    * that every oracle `read_parquet` names a key of this table, so a
+    * writer/oracle filename drift fails fast instead of surfacing as
+    * oracle value diffs.
     */
-  val Known: Set[String] = Set(
-    "ivf_centroids_k16.parquet",
-    "ivf_centroids_k8.parquet",
-    "ivf_unit_centroids_k8.parquet",
-    "role_centroids_k4.parquet",
-    "pq_codebook.parquet",
-    "opq_components.parquet",
-    "opq_codebook.parquet",
-    "pca_components_k32.parquet",
-    "qdtree_splits.parquet",
-    "graph_ef.parquet",
-    // r11 — the xxhash64/seeded-constant family promoted to
-    // sidecar-replay oracles: the engine-specific derivation (seeded
-    // hyperplanes, xxhash64 sketches, descent init) is persisted once
-    // and DuckDB replays everything DOWNSTREAM of it in SQL
-    "lsh_hyperplanes.parquet",
-    "simhash_sigs.parquet",
-    "hash_buckets.parquet",
-    "nnd_graph_k5.parquet",
-    "nnd_graph_k8.parquet",
-    // r13 — B43's policy replay pair: the descent graph at the
-    // POLICY-picked iters plus the one-row (iters, ef) parameter table
-    "nnd_graph_model.parquet",
-    "nnd_serve.parquet",
-    // r14 — A22's policy replay pair: the routed partition graph at
-    // the policy-picked iters plus its one-row (iters, ef) table
-    "dynpart_graph.parquet",
-    "dynpart_serve.parquet",
-    // r15 — the mm payload sidecars (VERDICT r14 #7): the media
-    // tables' exact payload bytes persist once so the parity tool can
-    // re-decode them with INDEPENDENT parsers (stdlib wave, a hand
-    // PGM reader, a zlib PNG un-filterer) and diff the decoded
-    // features row-for-row — read by tools/check_parity.py, not by
-    // any oracle SQL
-    "media_payloads.parquet",
-    "media_png.parquet",
-    // r16 — JPEG payload bytes (VERDICT r15 #7): the parity tool's
-    // from-spec SOF header parser checks mm_jpeg_features' NON-codec
-    // columns (geometry, byte length, rolling checksum) without
-    // crossing the declared imageio codec boundary for the pixel stats
-    "media_jpeg.parquet",
-    "half_vecs.parquet")
+  val frames: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "ivf_centroids_k16.parquet" -> ((s, d) => IvfIndex.centroidFrame(s, d, 16)),
+    "ivf_centroids_k8.parquet" -> ((s, d) => IvfIndex.centroidFrame(s, d, 8)),
+    "ivf_unit_centroids_k8.parquet" -> ((s, d) => IvfIndex.unitCentroidFrame(s, d, 8)),
+    "role_centroids_k4.parquet" -> ((s, d) => GroupedKMeans.centroidFrame(s, d, 4, 5)),
+    "pq_codebook.parquet" -> PqIndex.codebookFrame,
+    "opq_components.parquet" -> OpqIndex.componentFrame,
+    "opq_codebook.parquet" -> OpqIndex.codebookFrame,
+    "pca_components_k32.parquet" -> ((s, d) => Pca.componentFrame(s, d, 32)),
+    "qdtree_splits.parquet" -> QdTree.splitFrame,
+    "graph_ef.parquet" -> GraphSearch.efFrame,
+    // the xxhash64/seeded-constant family: the engine-specific
+    // derivation (seeded hyperplanes, xxhash64 sketches, descent init)
+    // persists and DuckDB replays everything DOWNSTREAM of it in SQL
+    "lsh_hyperplanes.parquet" -> ((s, _) => Lsh.hyperplaneFrame(s)),
+    "simhash_sigs.parquet" -> Dedup.simhashSigs,
+    "hash_buckets.parquet" -> ((s, d) => TextOps.hashBuckets(s, d, 16)),
+    // the canonical descent graphs: iters 2, derived cells, rho 0.5
+    // (k=5 feeds B41's centrality, k=8 the B39 serving walk)
+    "nnd_graph_k5.parquet" -> ((s, d) => Ann.knnGraphDescent(s, d, 5)),
+    "nnd_graph_k8.parquet" -> ((s, d) => Ann.knnGraphDescent(s, d, 8)),
+    // B43's policy replay pair: the descent graph at the POLICY-picked
+    // iters plus the one-row (iters, ef) parameter table
+    "nnd_graph_model.parquet" -> GraphSearch.nndServeGraph,
+    "nnd_serve.parquet" -> GraphSearch.nndServeFrame,
+    // A22's policy replay pair at user 1, alpha 2.0
+    "dynpart_graph.parquet" -> ((s, d) => GraphSearch.partitionServeGraph(s, d, 1, 2.0)),
+    "dynpart_serve.parquet" -> ((s, d) => GraphSearch.partitionServeFrame(s, d, 1, 2.0)),
+    // the media tables' exact payload bytes, re-decoded by the parity
+    // tool's independent parsers (stdlib wave, a hand PGM reader, a
+    // zlib PNG un-filterer, a from-spec JPEG SOF header parser)
+    "media_payloads.parquet" -> ((s, d) => Multimodal.mediaTable(s, d).toDF()),
+    "media_png.parquet" -> ((s, d) => Multimodal.pngTable(s, d).toDF()),
+    "media_jpeg.parquet" -> ((s, d) => Multimodal.jpegTable(s, d).toDF()),
+    "half_vecs.parquet" -> Half.halfVecs)
 
-  /** Sidecars consumed by the PARITY TOOL (tools/check_parity.py)
-    * rather than by oracle SQL — the mm payload dumps it re-decodes
-    * with independent parsers. Declared so SidecarPathSpec can keep
-    * requiring every other registered sidecar to be read by an oracle.
+  /** Sidecars read by the PARITY TOOL (tools/check_parity.py) rather
+    * than by oracle SQL, each with the mm keys whose outputs the tool
+    * diffs against its independent decode of the file.
     */
-  val ToolRead: Set[String] =
-    Set("media_payloads.parquet", "media_png.parquet", "media_jpeg.parquet")
+  val ToolRead: Map[String, Set[String]] = Map(
+    "media_payloads.parquet" -> Set("mm_binary_features", "mm_audio_features",
+      "mm_frame_sample", "mm_resize_plan"),
+    "media_png.parquet" -> Set("mm_png_features"),
+    "media_jpeg.parquet" -> Set("mm_jpeg_features"))
 
-  def root: String = sys.props.getOrElse("graft.sidecar.dir", DefaultRoot)
+  private val oracleRead =
+    ("""read_parquet\('""" + java.util.regex.Pattern.quote(DefaultRoot) + """/([^/']+)/""").r
 
-  /** Writes happen only in the one process that owns the oracle path. */
-  def active: Boolean = root == DefaultRoot
+  /** The registered files query `key` reads: those its oracle SQL
+    * names in `read_parquet`, plus its `ToolRead` files.
+    */
+  def readBy(key: String, oracleSql: Option[String]): Seq[String] =
+    (oracleSql.toSeq.flatMap(oracleRead.findAllMatchIn(_).map(_.group(1))) ++
+      ToolRead.collect { case (f, keys) if keys(key) => f }).distinct.sorted
 
-  def path(name: String): String = {
-    require(Known.contains(name), s"unregistered sidecar name: $name")
-    s"$root/$name"
+  /** The one writer: sidecar `name` of dataset `dir`, as one parquet
+    * file under `root/name`.
+    */
+  def write(spark: SparkSession, dir: String, root: String, name: String): Unit = {
+    require(frames.contains(name), s"unregistered sidecar name: $name")
+    frames(name)(spark, dir).coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
   }
-
-  /** Redirect this JVM's sidecar writes to a fresh isolated directory
-    * (no-op if the property is already set explicitly).
-    */
-  def isolate(prefix: String): Unit =
-    if (!sys.props.contains("graft.sidecar.dir")) {
-      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-      System.setProperty("graft.sidecar.dir", dir)
-    }
 }

@@ -57,10 +57,7 @@ object SparkEntry {
     "ann_bruteforce_topk" -> ((s, d) => Ann.bruteForceCosineTopK(s, d, 10)),
     "ann_bruteforce_l2_topk" -> ((s, d) => Ann.bruteForceL2TopK(s, d, 10)),
     "ann_pca_build" -> ((s, d) => graft.ann.Pca.pcaBuild(s, d)),
-    "ann_pca_topk" -> ((s, d) => {
-      graft.ann.Pca.writeComponentSidecar(s, d, 32) // oracle replays projection
-      graft.ann.Pca.pcaTopK(s, d)
-    }),
+    "ann_pca_topk" -> ((s, d) => graft.ann.Pca.pcaTopK(s, d)),
     "ann_maxip_topk" -> ((s, d) => Ann.maxInnerProductTopK(s, d, 10)),
     "ann_l1_topk" -> ((s, d) => Ann.bruteForceL1TopK(s, d, 10)),
     "ann_sparse_topk" -> ((s, d) => graft.ann.Sparse.sparseTopK(s, d)),
@@ -81,164 +78,60 @@ object SparkEntry {
     // nnd_graph_k5 sidecar and the DuckDB oracle replays the 10-round
     // recurrence as unrolled CTEs (oracle below, near line 1218).
     "ann_knn_centrality_nnd" -> ((s, d) => Ann.knnCentralityNnd(s, d)),
-    "ann_graph_topk_model" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.writeEfSidecar(s, d) // model-picked beam width
-      graft.ann.GraphSearch.graphTopKModel(s, d)
-    }),
-    "ann_graph_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // oracle replays the medoid seeds
-      graft.ann.GraphSearch.graphTopK(s, d)
-    }),
-    "rbac_graph_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.rbacGraphTopK(s, d)
-    }),
-    "ann_graph_delete_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.graphDeleteTopK(s, d)
-    }),
-    "ann_graph_insert" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.insertNeighbors(s, d)
-    }),
-    "ann_graph_insert_links" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.insertReciprocalLinks(s, d)
-    }),
-    "ann_graph_upsert_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.graphUpsertTopK(s, d)
-    }),
-    "ann_graph_topk_nnd" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // oracle replays the medoid seeds
-      graft.ann.GraphSearch.graphTopKNnd(s, d)
-    }),
+    "ann_graph_topk_model" -> ((s, d) => graft.ann.GraphSearch.graphTopKModel(s, d)),
+    "ann_graph_topk" -> ((s, d) => graft.ann.GraphSearch.graphTopK(s, d)),
+    "rbac_graph_topk" -> ((s, d) => graft.ann.GraphSearch.rbacGraphTopK(s, d)),
+    "ann_graph_delete_topk" -> ((s, d) => graft.ann.GraphSearch.graphDeleteTopK(s, d)),
+    "ann_graph_insert" -> ((s, d) => graft.ann.GraphSearch.insertNeighbors(s, d)),
+    "ann_graph_insert_links" -> ((s, d) => graft.ann.GraphSearch.insertReciprocalLinks(s, d)),
+    "ann_graph_upsert_topk" -> ((s, d) => graft.ann.GraphSearch.graphUpsertTopK(s, d)),
+    "ann_graph_topk_nnd" -> ((s, d) => graft.ann.GraphSearch.graphTopKNnd(s, d)),
     // B43 (r13): NND serving at the MEASURED (iters, ef) policy — the
     // key that meets the recall target at every corpus size, escalating
     // descent iterations only where the beam knob has saturated
-    "ann_graph_topk_nnd_model" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.writeNndServeSidecars(s, d)
-      graft.ann.GraphSearch.graphTopKNndModel(s, d)
-    }),
+    "ann_graph_topk_nnd_model" -> ((s, d) => graft.ann.GraphSearch.graphTopKNndModel(s, d)),
     "ann_knn_classify" -> ((s, d) => graft.ann.Classify.knnClassify(s, d)),
-    "ann_graph_classify" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.Classify.graphClassify(s, d)
-    }),
-    "ann_cell_label_stats" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.Classify.cellLabelStats(s, d)
-    }),
-    "rbac_partition_graph_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.partitionGraphTopK(s, d)
-    }),
+    "ann_graph_classify" -> ((s, d) => graft.ann.Classify.graphClassify(s, d)),
+    "ann_cell_label_stats" -> ((s, d) => graft.ann.Classify.cellLabelStats(s, d)),
+    "rbac_partition_graph_topk" -> ((s, d) => graft.ann.GraphSearch.partitionGraphTopK(s, d)),
     // A22 (r14): the partitioned serving path AT the measured
     // (iters, ef) policy — B43's sidecar-replay convention, so the
     // key stays value-checkable above the exact-build ceiling
-    "rbac_partition_graph_policy_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.writePartitionServeSidecars(s, d)
-      graft.ann.GraphSearch.partitionGraphPolicyTopK(s, d)
-    }),
-    "rbac_partition_graph_sweep" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.GraphSearch.partitionGraphSweep(s, d)
-    }),
+    "rbac_partition_graph_policy_topk" -> ((s, d) => graft.ann.GraphSearch.partitionGraphPolicyTopK(s, d)),
+    "rbac_partition_graph_sweep" -> ((s, d) => graft.ann.GraphSearch.partitionGraphSweep(s, d)),
     "hybrid_rrf_topk" -> ((s, d) => graft.ann.Hybrid.hybridRrfTopK(s, d)),
     "ann_half_topk" -> ((s, d) => graft.ann.Half.halfTopK(s, d)),
     "events_props_stats" -> ((s, d) => Analytics.eventsPropsStats(s, d)),
     "vector_norms" -> ((s, d) => Ann.vectorNorms(s, d, n = 100)),
-    "ann_ivf_build" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // lets the oracle replay the assignment
-      IvfIndex.buildReport(s, d)
-    }),
-    "ann_ivf_search" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // lets the oracle replay probe + scan
-      IvfIndex.search(s, d)
-    }),
+    "ann_ivf_build" -> ((s, d) => IvfIndex.buildReport(s, d)),
+    "ann_ivf_search" -> ((s, d) => IvfIndex.search(s, d)),
     "ann_lsh_search" -> ((s, d) => Lsh.search(s, d)),
-    "qdtree_partition_assign" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 8) // lets the oracle replay the assignment
-      IvfIndex.qdTreeAssign(s, d)
-    }),
+    "qdtree_partition_assign" -> ((s, d) => IvfIndex.qdTreeAssign(s, d)),
     "qdtree_routed_topk" -> ((s, d) => IvfIndex.qdTreeSearch(s, d, 1)),
-    "qdtree_greedy_build" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 8) // oracle re-derives group cells
-      QdTree.writeSplitSidecar(s, d)         // and re-routes through the splits
-      QdTree.leafReport(s, d)
-    }),
+    "qdtree_greedy_build" -> ((s, d) => QdTree.leafReport(s, d)),
     "qdtree_greedy_topk" -> ((s, d) => QdTree.routedTopK(s, d, 1)),
-    "ann_predicate_probe" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // lets the oracle replay the escalation
-      IvfIndex.predicateAwareSearch(s, d, 1)
-    }),
+    "ann_predicate_probe" -> ((s, d) => IvfIndex.predicateAwareSearch(s, d, 1)),
     "ann_range_triangle" -> ((s, d) => IvfIndex.rangeSearchTriangle(s, d, tau = 1.3)),
-    "ann_pq_build" -> ((s, d) => {
-      PqIndex.writeCodebookSidecar(s, d) // oracle replays subspace-0 encoding
-      PqIndex.buildReport(s, d)
-    }),
-    "ann_opq_build" -> ((s, d) => {
-      graft.ann.OpqIndex.writeSidecars(s, d) // oracle replays rotation + encode
-      graft.ann.OpqIndex.buildReport(s, d)
-    }),
-    "ann_opq_search" -> ((s, d) => {
-      graft.ann.OpqIndex.writeSidecars(s, d) // oracle replays the full serving path
-      graft.ann.OpqIndex.search(s, d)
-    }),
+    "ann_pq_build" -> ((s, d) => PqIndex.buildReport(s, d)),
+    "ann_opq_build" -> ((s, d) => graft.ann.OpqIndex.buildReport(s, d)),
+    "ann_opq_search" -> ((s, d) => graft.ann.OpqIndex.search(s, d)),
     "ann_sq_build" -> ((s, d) => SqIndex.buildReport(s, d)),
-    "rbac_partition_index_build" -> ((s, d) => {
-      graft.ann.GroupedKMeans.writeCentroidSidecar(s, d) // oracle replays the assignment
-      graft.ann.GroupedKMeans.partitionIndexBuild(s, d)
-    }),
-    "rbac_partition_ivf_topk" -> ((s, d) => {
-      graft.ann.GroupedKMeans.writeCentroidSidecar(s, d) // oracle replays probe + route
-      graft.ann.GroupedKMeans.partitionIvfTopK(s, d, 1, 10)
-    }),
+    "rbac_partition_index_build" -> ((s, d) => graft.ann.GroupedKMeans.partitionIndexBuild(s, d)),
+    "rbac_partition_ivf_topk" -> ((s, d) => graft.ann.GroupedKMeans.partitionIvfTopK(s, d, 1, 10)),
     "ann_sq_search" -> ((s, d) => SqIndex.search(s, d)),
     "ann_bq_build" -> ((s, d) => graft.ann.BqIndex.buildReport(s, d)),
     "ann_hamming_topk" -> ((s, d) => graft.ann.BqIndex.hammingTopK(s, d)),
     "ann_bq_jaccard_topk" -> ((s, d) => graft.ann.BqIndex.jaccardTopK(s, d)),
     "ann_bq_search" -> ((s, d) => graft.ann.BqIndex.search(s, d)),
-    "ann_recall_model" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // oracle replays the whole curve
-      graft.ann.RecallModel.report(s, d)
-    }),
-    "ann_cost_frontier" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      graft.ann.RecallModel.costFrontier(s, d)
-    }),
-    "ann_pq_search" -> ((s, d) => {
-      PqIndex.writeCodebookSidecar(s, d) // oracle replays encode + ADC
-      PqIndex.search(s, d)
-    }),
-    "ann_ivfpq_search" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16) // oracle replays probe + cells
-      PqIndex.writeCodebookSidecar(s, d)      // and encode + ADC
-      PqIndex.ivfAdcSearch(s, d)
-    }),
-    "rbac_ivfpq_topk" -> ((s, d) => {
-      IvfIndex.writeCentroidSidecar(s, d, 16)
-      PqIndex.writeCodebookSidecar(s, d)
-      PqIndex.ivfAdcSearch(s, d, userId = Some(1))
-    }),
+    "ann_recall_model" -> ((s, d) => graft.ann.RecallModel.report(s, d)),
+    "ann_cost_frontier" -> ((s, d) => graft.ann.RecallModel.costFrontier(s, d)),
+    "ann_pq_search" -> ((s, d) => PqIndex.search(s, d)),
+    "ann_ivfpq_search" -> ((s, d) => PqIndex.ivfAdcSearch(s, d)),
+    "rbac_ivfpq_topk" -> ((s, d) => PqIndex.ivfAdcSearch(s, d, userId = Some(1))),
     // --- F. Multimodal plumbing ---
-    "mm_binary_features" -> ((s, d) => {
-      // r15: payload sidecar → check_parity re-decodes independently
-      Multimodal.writeMediaSidecar(s, d)
-      Multimodal.features(s, d).toDF().orderBy("media_id")
-    }),
-    "mm_jpeg_features" -> ((s, d) => {
-      // payload sidecar for the parity tool's independent header check
-      Multimodal.writeJpegSidecar(s, d)
-      Multimodal.jpegFeatures(s, d).toDF().orderBy("media_id")
-    }),
-    "mm_png_features" -> ((s, d) => {
-      Multimodal.writePngSidecar(s, d)
-      Multimodal.pngFeatures(s, d).toDF().orderBy("media_id")
-    }),
+    "mm_binary_features" -> ((s, d) => Multimodal.features(s, d).toDF().orderBy("media_id")),
+    "mm_jpeg_features" -> ((s, d) => Multimodal.jpegFeatures(s, d).toDF().orderBy("media_id")),
+    "mm_png_features" -> ((s, d) => Multimodal.pngFeatures(s, d).toDF().orderBy("media_id")),
     "mm_audio_features" -> ((s, d) => Multimodal.audioFeatures(s, d).toDF().orderBy("media_id")),
     "mm_frame_sample" -> ((s, d) => Multimodal.frameSamplePlan(s, d)),
     "mm_resize_plan" -> ((s, d) => Multimodal.resizePlan(s, d)),
@@ -260,14 +153,10 @@ object SparkEntry {
     // SemDeDup blocking past it — the oracle SFs take the exact branch
     "dedup_embedding_auto" -> ((s, d) => Dedup.embeddingPairsAuto(s, d)),
     "dedup_substring" -> ((s, d) => Dedup.substringSpans(s, d)),
-    "dedup_semantic" -> ((s, d) => {
-      // the paper's knob: cells ∝ corpus (= 8 at every oracle SF, so
-      // the oracle's k8 sidecar replay is untouched; only the scaled
-      // bench dirs cluster wider)
-      val cells = Dedup.semanticCells(s, d)
-      graft.ann.IvfIndex.writeUnitCentroidSidecar(s, d, cells) // oracle replays clustering
-      Dedup.semanticDedup(s, d, cells = cells)
-    }),
+    // the paper's knob: cells ∝ corpus (= 8 at every oracle SF, so
+    // the oracle's k8 sidecar replay is untouched; only the scaled
+    // bench dirs cluster wider)
+    "dedup_semantic" -> ((s, d) => Dedup.semanticDedup(s, d, cells = Dedup.semanticCells(s, d))),
     // --- D. Text analysis ---
     "text_lang_id" -> ((s, d) => TextOps.langId(s, d)),
     "text_quality" -> ((s, d) => TextOps.quality(s, d)),
@@ -1292,7 +1181,7 @@ object SparkEntry {
          |  PARTITION BY query_id ORDER BY dist, cand_id) <= 10
          |ORDER BY query_id, block_id""".stripMargin,
     // B38 (r9): the SAME walk at the model-picked beam width — the ef
-    // sidecar (written by the key from the measured recall curve)
+    // sidecar (Verify writes it from the measured recall curve)
     // parameterizes every round's beam rank, so the oracle value-checks
     // the walk the model actually chose.
     "ann_graph_topk_model" ->
@@ -1613,8 +1502,8 @@ object SparkEntry {
          |WHERE e.vec_id <> 0 AND list_distance(e.embedding::DOUBLE[], q.v) < 1.3
          |ORDER BY e.vec_id""".stripMargin,
     // B3: the ASSIGNMENT half of the IVF build is deterministic given
-    // the fitted centroids, which the query emits as a sidecar table
-    // (IvfIndex.writeCentroidSidecar) — the oracle replays the argmin
+    // the fitted centroids, which Verify persists as a sidecar table
+    // (IvfIndex.centroidFrame) — the oracle replays the argmin
     // independently: double subtract-square-accumulate in index order,
     // ties to the smallest list id (NearestCentroid's `s < best`).
     // The KMeans fit itself stays spec-covered (recall specs) — this
@@ -1881,7 +1770,7 @@ object SparkEntry {
          |WHERE a.rn = 1
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // B19 build: the greedy tree's CONTENTS are deterministic given
-    // its chosen splits, which the query emits as a sidecar — the
+    // its chosen splits, which Verify persists as a sidecar — the
     // oracle re-derives every (comb, cell) group (signature arithmetic
     // + k=8 assignment replay) and re-routes it through the split
     // table with a recursive descent (role-membership / cell-equality

@@ -14,10 +14,18 @@ object Verify {
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // the one sidecar writer's one caller: before each key, the files
+    // its oracle (or the parity tool's mm decode) reads, once per run
+    val oracleSql = SparkEntry.oracleSql
+    val written = scala.collection.mutable.Set.empty[String]
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        Sidecars.readBy(name, oracleSql.get(name)).filterNot(written).foreach { f =>
+          Sidecars.write(spark, sfDir, Sidecars.DefaultRoot, f)
+          written += f
+        }
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -33,7 +41,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    val json = oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Reproducibility stamp (r14, VERDICT r13 #2): the oracle SQL
@@ -47,10 +55,8 @@ object Verify {
     // of diffing values.
     val fp = Bench.dataFingerprint(sfDir)
     Files.writeString(Paths.get(s"$outDir/data_fingerprint"), fp)
-    if (Sidecars.active) {
-      Files.createDirectories(Paths.get(Sidecars.root))
-      Files.writeString(Paths.get(s"${Sidecars.root}/data_fingerprint"), fp)
-    }
+    Files.createDirectories(Paths.get(Sidecars.DefaultRoot))
+    Files.writeString(Paths.get(s"${Sidecars.DefaultRoot}/data_fingerprint"), fp)
     spark.stop()
   }
 }

@@ -518,8 +518,6 @@ object Ann {
   val descentInitStats =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int, Int), Long]
 
-  private val nndSidecarWritten = new graft.SessionCache[(String, Int), Boolean]
-
   private val corpusCount = new graft.SessionCache[String, Long]
 
   /** Descent partition count ∝ corpus (r12, VERDICT r11 #4): the fixed
@@ -552,35 +550,14 @@ object Ann {
     // corpus; an explicit positive value pins it (tests, stats runs)
     val c = if (cells > 0) cells else descentCells(spark, dir)
     val key = (dir, k, iters, c, (rho * 100).toInt)
-    // oracle sidecar (r11): the canonical descent graphs (k=5 feeds
-    // B41's centrality, k=8 the B39 serving walk). The descent init is
-    // xxhash64-derived — no SQL derivation — but EVERYTHING downstream
-    // (symmetrize + M_max cap + the beam walk; the PageRank recurrence)
-    // is deterministic SQL given the edges, so persisting them promotes
-    // both consumers to full oracle rows (B31/B27's replay discipline).
-    def maybeSidecar(built: DataFrame): DataFrame = {
-      // the sidecar pin follows the DERIVED cell count (r12): at the
-      // oracle SFs descentCells floors to 16, so the persisted graphs
-      // stay bit-identical to the r11 oracles; a caller pinning any
-      // OTHER cells gets no sidecar (it would desync the replay)
-      if (graft.Sidecars.active && iters == 2 &&
-          c == descentCells(spark, dir) &&
-          rho == 0.5 && (k == 5 || k == 8))
-        nndSidecarWritten.getOrElseUpdate(spark, (dir, k)) {
-          built.coalesce(1).write.mode("overwrite")
-            .parquet(graft.Sidecars.path(s"nnd_graph_k$k.parquet"))
-          true
-        }
-      built
-    }
     if (collectStats) {
       // stats runs bypass the cache (they must re-execute to count) but
       // still replace it without leaking the old persisted frame
       val built = buildDescent(spark, dir, k, iters, c, rho, collectStats)
       descentCache.put(spark, key, built).foreach(_.unpersist())
-      maybeSidecar(built)
-    } else maybeSidecar(descentCache.getOrElseUpdate(spark, key)(
-      buildDescent(spark, dir, k, iters, c, rho, collectStats)))
+      built
+    } else descentCache.getOrElseUpdate(spark, key)(
+      buildDescent(spark, dir, k, iters, c, rho, collectStats))
   }
 
   /** Dense-rank remap of an id subset: (vec_id, rid) with rid a

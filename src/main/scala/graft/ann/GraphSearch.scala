@@ -583,9 +583,6 @@ object GraphSearch {
     mergeFilter(vis, spark, dir, userId)
   }
 
-  private val partModelSidecarWritten =
-    new graft.SessionCache[(String, Long, Double), Boolean]
-
   /** Sidecars for A22's oracle replay — B43's convention applied to
     * the PARTITIONED serving path: the user's routed partition graph
     * (whatever branch the size dispatch built — exact at the oracle
@@ -598,24 +595,21 @@ object GraphSearch {
     * convention — at the oracle SFs those edges are the exact kNN
     * build's, above the ceiling the descent+nav build's).
     */
-  def writePartitionServeSidecars(spark: SparkSession, dir: String,
-                                  userId: Long = 1, alpha: Double = 2.0): Unit =
-    if (graft.Sidecars.active)
-      // alpha is in the key (ADVICE r14): the policy pick AND the
-      // routed member graph both depend on it — a second call at a
-      // different alpha must re-write, not reuse, the sidecar pair
-      partModelSidecarWritten.getOrElseUpdate(spark, (dir, userId, alpha)) {
-        val (iters, ef, _) = partitionServePolicy(spark, dir, userId, alpha)
-        val (edges, _) =
-          partitionGraphIndex(spark, dir, userId, GraphK, Cells, alpha, iters)
-        edges.coalesce(1).write.mode("overwrite")
-          .parquet(graft.Sidecars.path("dynpart_graph.parquet"))
-        spark.range(1)
-          .select(lit(iters).as("iters"), lit(ef).as("ef"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(graft.Sidecars.path("dynpart_serve.parquet"))
-        true
-      }
+  def partitionServeGraph(spark: SparkSession, dir: String,
+                          userId: Long, alpha: Double): DataFrame = {
+    val (iters, _, _) = partitionServePolicy(spark, dir, userId, alpha)
+    partitionGraphIndex(spark, dir, userId, GraphK, Cells, alpha, iters)._1
+  }
+
+  def partitionServeFrame(spark: SparkSession, dir: String,
+                          userId: Long, alpha: Double): DataFrame = {
+    val (iters, ef, _) = partitionServePolicy(spark, dir, userId, alpha)
+    policyRow(spark, iters, ef)
+  }
+
+  /** The one-row (iters, ef) parameter table of a policy replay. */
+  private def policyRow(spark: SparkSession, iters: Int, ef: Int): DataFrame =
+    spark.range(1).select(lit(iters).as("iters"), lit(ef).as("ef"))
 
   /** A22 `rbac_partition_graph_policy_topk` (r14): the partitioned
     * serving surface (the reference's dynamic-partition search,
@@ -756,30 +750,22 @@ object GraphSearch {
   def nndProbedPoints(dir: String): Seq[(Int, Int, Double)] =
     measuredPoints(dir, s"nndnav q$Nq k10")
 
-  private val nndModelSidecarWritten = new graft.SessionCache[String, Boolean]
-
   /** Sidecars for the model-NND oracle replay: the descent graph at
     * the POLICY-picked iters (the only hash-derived part) plus a
     * one-row (iters, ef) parameter table — B38's graph_ef convention
-    * extended to the pair of knobs. Written unconditionally to their
-    * own paths (never touching the iters=2 `nnd_graph_k8` pin), so the
-    * oracle replays whatever the policy picked at THIS dir.
+    * extended to the pair of knobs. Their own paths (never the iters=2
+    * `nnd_graph_k8` pin), so the oracle replays whatever the policy
+    * picked at THIS dir. The graph is the FINAL navigable edge set —
+    * the graph IS the index and the oracle walks it verbatim (no SQL
+    * symmetrize/cap replay: long links are added after the cap).
     */
-  def writeNndServeSidecars(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active) nndModelSidecarWritten.getOrElseUpdate(spark, dir) {
-      val (iters, ef, _) = nndServePolicy(spark, dir)
-      // the model sidecar is the FINAL navigable edge set — the graph
-      // IS the index and the oracle walks it verbatim (no SQL
-      // symmetrize/cap replay: long links are added after the cap)
-      nndNavServingGraph(spark, dir, iters = iters)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("nnd_graph_model.parquet"))
-      spark.range(1)
-        .select(lit(iters).as("iters"), lit(ef).as("ef"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("nnd_serve.parquet"))
-      true
-    }
+  def nndServeGraph(spark: SparkSession, dir: String): DataFrame =
+    nndNavServingGraph(spark, dir, iters = nndServePolicy(spark, dir)._1)
+
+  def nndServeFrame(spark: SparkSession, dir: String): DataFrame = {
+    val (iters, ef, _) = nndServePolicy(spark, dir)
+    policyRow(spark, iters, ef)
+  }
 
   /** B43: the walk over the NAVIGABLE NND graph at the measured
     * (iters, ef) policy — what a user should run at ANY corpus size:
@@ -1145,12 +1131,8 @@ object GraphSearch {
     efFor(spark, dir, RecallTarget)
 
   /** One-row (ef) sidecar for the oracle's parameterized walk replay. */
-  def writeEfSidecar(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active) {
-      spark.range(1).select(lit(modelEf(spark, dir)).as("ef"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("graph_ef.parquet"))
-    }
+  def efFrame(spark: SparkSession, dir: String): DataFrame =
+    spark.range(1).select(lit(modelEf(spark, dir)).as("ef"))
 
   def graphTopKModel(spark: SparkSession, dir: String, nq: Int = Nq,
                      k: Int = 10): DataFrame =

@@ -127,25 +127,13 @@ object GroupedKMeans {
       .orderBy("partition_role", "cell")
   }
 
-  private val sidecarWritten = new graft.SessionCache[(String, Int, Int), Boolean]
-
-  /** Oracle sidecar: the fitted per-role centroid table
-    * (group, cid, centroid), once per session to a fixed path — the
-    * DuckDB oracle replays per-role assignment, probe pick and the
-    * routed top-k from it (IvfIndex.writeCentroidSidecar's convention).
+  /** The collected centroids as a (tiny) local DataFrame
+    * (group, cid, centroid) — also the oracle sidecar frame the DuckDB
+    * oracle replays per-role assignment, probe pick and the routed
+    * top-k from.
     */
-  def writeCentroidSidecar(spark: SparkSession, dir: String,
-                           k: Int = 4, iters: Int = 5): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, (dir, k, iters)) {
-      centroidFrame(spark, dir, k, iters)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path(s"role_centroids_k$k.parquet"))
-      true
-    }
-
-  /** The collected centroids as a (tiny) local DataFrame. */
-  private def centroidFrame(spark: SparkSession, dir: String,
-                            k: Int, iters: Int): DataFrame = {
+  def centroidFrame(spark: SparkSession, dir: String,
+                    k: Int, iters: Int): DataFrame = {
     import spark.implicits._
     roleCentroids(spark, dir, k, iters)
       .map(c => (c._1, c._2, c._3.toSeq)).toSeq

@@ -31,17 +31,14 @@ import graft.functions.vector._
   */
 object Half {
 
-  private val sidecarWritten = new graft.SessionCache[String, Boolean]
+  /** Oracle sidecar frame: the rounded corpus (vec_id, hvec). */
+  def halfVecs(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), half_round(col("embedding")).as("hvec"))
 
   def halfTopK(spark: SparkSession, dir: String, k: Int = 10,
                qid: Long = 0): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, dir) {
-      emb.select(col("vec_id"), half_round(col("embedding")).as("hvec"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("half_vecs.parquet"))
-      true
-    }
     val q = emb.filter(col("vec_id") === qid)
       .select(half_round(col("embedding")).as("qvec"))
     emb.filter(col("vec_id") =!= qid)

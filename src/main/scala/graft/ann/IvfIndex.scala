@@ -201,38 +201,25 @@ object IvfIndex {
       .agg(count(lit(1)).as("n_vectors"))
       .orderBy("list_id")
 
-  private val sidecarWritten = new graft.SessionCache[(String, Int), Boolean]
-
-  /** Oracle sidecar: the fitted centroid table (list_id, centroid),
-    * written once per session to a fixed path so the DuckDB oracle can
-    * REPLAY the nearest-centroid assignment independently (same
-    * double-precision subtract-square-accumulate in index order, ties
-    * to the smallest list id). The path carries only k: the driver
-    * runs Verify for one sf dir and the oracle immediately after, so
-    * the sidecar on disk always belongs to the run being checked.
+  /** Oracle sidecar frame: the fitted centroid table (list_id,
+    * centroid), from which the DuckDB oracle REPLAYS the nearest-
+    * centroid assignment independently (same double-precision
+    * subtract-square-accumulate in index order, ties to the smallest
+    * list id).
     */
-  def writeCentroidSidecar(spark: SparkSession, dir: String, k: Int): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, (dir, k)) {
-      import spark.implicits._
-      val out = graft.Sidecars.path(s"ivf_centroids_k$k.parquet")
-      getOrBuild(spark, dir, k).centroids.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toSeq) }
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(out)
-      true
-    }
+  def centroidFrame(spark: SparkSession, dir: String, k: Int): DataFrame =
+    listFrame(spark, getOrBuild(spark, dir, k))
 
-  /** Unit-sphere variant of `writeCentroidSidecar` (C10's quantizer). */
-  def writeUnitCentroidSidecar(spark: SparkSession, dir: String, k: Int): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, (dir + "#unit", k)) {
-      import spark.implicits._
-      val out = graft.Sidecars.path(s"ivf_unit_centroids_k$k.parquet")
-      getOrBuildUnit(spark, dir, k).centroids.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toSeq) }
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(out)
-      true
-    }
+  /** Unit-sphere variant of `centroidFrame` (C10's quantizer). */
+  def unitCentroidFrame(spark: SparkSession, dir: String, k: Int): DataFrame =
+    listFrame(spark, getOrBuildUnit(spark, dir, k))
+
+  private def listFrame(spark: SparkSession, idx: Index): DataFrame = {
+    import spark.implicits._
+    idx.centroids.zipWithIndex.toSeq
+      .map { case (c, i) => (i, c.toSeq) }
+      .toDF("list_id", "centroid")
+  }
 
   /** nprobe nearest list ids for a query vector — computed driver-side
     * over the (tiny) centroid set, exactly like pgvector's probe pick.

@@ -41,8 +41,6 @@ object Lsh {
       if (s > 0) 1 << i else 0
     }.sum
 
-  private val sidecarWritten = new graft.SessionCache[String, Boolean]
-
   /** Oracle sidecar (r11): the seeded hyperplane matrix (bit, plane) —
     * 12 rows of 64 floats. The signature is sign bits of double dot
     * products against these CONSTANTS, so given the sidecar DuckDB
@@ -51,20 +49,15 @@ object Lsh {
     * oracle-checked (it was rows-only only because the seeded matrix
     * itself has no SQL derivation).
     */
-  def writeHyperplaneSidecar(spark: SparkSession): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, "hp") {
-      import spark.implicits._
-      hyperplanes.zipWithIndex.toSeq
-        .map { case (p, i) => (i, p.toSeq) }
-        .toDF("bit", "plane")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("lsh_hyperplanes.parquet"))
-      true
-    }
+  def hyperplaneFrame(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    hyperplanes.zipWithIndex.toSeq
+      .map { case (p, i) => (i, p.toSeq) }
+      .toDF("bit", "plane")
+  }
 
   /** B5: multiprobe LSH cosine search for query vec_id=0, top-k. */
   def search(spark: SparkSession, dir: String, topk: Int = 10, qid: Long = 0): DataFrame = {
-    writeHyperplaneSidecar(spark)
     val qsig = signatureOf(Ann.queryArray(spark, dir, qid))
     val probes = qsig +: (0 until NumBits).map(b => qsig ^ (1 << b))
     Tables.embeddings(spark, dir).select("vec_id", "embedding")

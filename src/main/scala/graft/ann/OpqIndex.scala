@@ -113,36 +113,24 @@ object OpqIndex {
         PqEncode(ExpressionUtils.expression(col("proj")), cb.centroids)).as("code"))
   }
 
-  private val sidecarWritten = new graft.SessionCache[String, Boolean]
-
-  /** Oracle sidecars: the permuted rotation rows exactly as the plan
-    * bakes them (FLOAT component vectors in POSITION order + FLOAT
-    * mean offsets — Pca.writeComponentSidecar's convention) and the
-    * rotated-space codebook (PqIndex.writeCodebookSidecar's). The
-    * ALLOCATION choice itself stays spec-territory, like the k-means
-    * fits and the greedy qd-tree splits: the oracle replays rotation,
-    * encode, ADC and re-rank from the emitted constants.
+  /** Oracle sidecar frames: the permuted rotation rows exactly as the
+    * plan bakes them (FLOAT component vectors in POSITION order + FLOAT
+    * mean offsets — Pca.componentFrame's convention) and the
+    * rotated-space codebook (PqIndex.codebookFrame's). The ALLOCATION
+    * choice itself stays spec-territory, like the k-means fits and the
+    * greedy qd-tree splits: the oracle replays rotation, encode, ADC
+    * and re-rank from the emitted constants.
     */
-  def writeSidecars(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      val m = Pca.model(spark, dir, Dim)
-      val perm = order(spark, dir)
-      perm.toSeq.zipWithIndex.map { case (c, p) =>
-        (p, m.components(c).map(_.toFloat).toSeq, Pca.meanOffset(m, c).toFloat)
-      }.toDF("p", "comp", "offset")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("opq_components.parquet"))
-      val cb = getOrBuild(spark, dir)
-      val rows = for {
-        s <- cb.centroids.indices
-        c <- cb.centroids(s).indices
-      } yield (s, c, cb.centroids(s)(c).toSeq)
-      rows.toDF("sub", "code", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("opq_codebook.parquet"))
-      true
-    }
+  def componentFrame(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val m = Pca.model(spark, dir, Dim)
+    order(spark, dir).toSeq.zipWithIndex.map { case (c, p) =>
+      (p, m.components(c).map(_.toFloat).toSeq, Pca.meanOffset(m, c).toFloat)
+    }.toDF("p", "comp", "offset")
+  }
+
+  def codebookFrame(spark: SparkSession, dir: String): DataFrame =
+    PqIndex.codebookRows(spark, getOrBuild(spark, dir))
 
   /** `ann_opq_build`: subspace-0 code-usage histogram (B15's build
     * observable, rotated space) — deterministic given the emitted

@@ -237,7 +237,7 @@ object Pca {
 
   /** Per-component mean offset — ONE definition shared by `project`
     * (which bakes it into the plan as a float literal) and the oracle
-    * sidecar writer, so the replayed constants cannot drift from the
+    * sidecar frame, so the replayed constants cannot drift from the
     * planned ones.
     */
   private[graft] def meanOffset(m: PcaModel, c: Int): Double = {
@@ -245,25 +245,18 @@ object Pca {
     (0 until m.d).map(i => comp(i) * m.mean(i)).sum
   }
 
-  private val sidecarWritten = new graft.SessionCache[(String, Int), Boolean]
-
-  /** Oracle sidecar: the projection constants exactly as `project`
-    * bakes them into the plan — FLOAT component vectors and the FLOAT
-    * mean offsets — so the oracle replays projection, projected-space
-    * shortlist and exact re-rank (IvfIndex.writeCentroidSidecar's
-    * convention).
+  /** Oracle sidecar frame: the projection constants exactly as
+    * `project` bakes them into the plan — FLOAT component vectors and
+    * the FLOAT mean offsets — so the oracle replays projection,
+    * projected-space shortlist and exact re-rank.
     */
-  def writeComponentSidecar(spark: SparkSession, dir: String, k: Int): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, (dir, k)) {
-      import spark.implicits._
-      val m = model(spark, dir, k)
-      (0 until k).map { c =>
-        (c, m.components(c).map(_.toFloat).toSeq, meanOffset(m, c).toFloat)
-      }.toDF("c", "comp", "offset")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path(s"pca_components_k$k.parquet"))
-      true
-    }
+  def componentFrame(spark: SparkSession, dir: String, k: Int): DataFrame = {
+    import spark.implicits._
+    val m = model(spark, dir, k)
+    (0 until k).map { c =>
+      (c, m.components(c).map(_.toFloat).toSeq, meanOffset(m, c).toFloat)
+    }.toDF("c", "comp", "offset")
+  }
 
   /** Project onto the first k' components: k' codegen'd dot kernels
     * against broadcast-literal component vectors; the per-component

@@ -50,25 +50,20 @@ object PqIndex {
       Codebook(cents)
     }
 
-  private val sidecarWritten = new graft.SessionCache[String, Boolean]
-
-  /** Oracle sidecar: the trained codebook as (sub, code, centroid)
-    * rows, once per session (IvfIndex.writeCentroidSidecar's
-    * convention) — the oracle replays subspace-0 encoding from it.
+  /** Oracle sidecar frame: the trained codebook as (sub, code,
+    * centroid) rows — the oracle replays encoding and ADC from it.
     */
-  def writeCodebookSidecar(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      val cb = getOrBuild(spark, dir)
-      val rows = for {
-        s <- cb.centroids.indices
-        c <- cb.centroids(s).indices
-      } yield (s, c, cb.centroids(s)(c).toSeq)
-      rows.toDF("sub", "code", "centroid")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("pq_codebook.parquet"))
-      true
-    }
+  def codebookFrame(spark: SparkSession, dir: String): DataFrame =
+    codebookRows(spark, getOrBuild(spark, dir))
+
+  private[ann] def codebookRows(spark: SparkSession, cb: Codebook): DataFrame = {
+    import spark.implicits._
+    val rows = for {
+      s <- cb.centroids.indices
+      c <- cb.centroids(s).indices
+    } yield (s, c, cb.centroids(s)(c).toSeq)
+    rows.toDF("sub", "code", "centroid")
+  }
 
   private def encodeCol(emb: Column, cb: Codebook): Column =
     ExpressionUtils.column(PqEncode(ExpressionUtils.expression(emb), cb.centroids))

@@ -206,24 +206,18 @@ object QdTree {
     Tree(groups.withColumnRenamed("node", "leaf_id"), chosen.toSeq, nLeaves)
   }
 
-  private val sidecarWritten = new graft.SessionCache[String, Boolean]
-
-  /** Oracle sidecar: the chosen splits (node, ptype, pval), once per
-    * session — the oracle re-routes every (comb, cell) group through
-    * the tree independently and checks the leaf contents. The greedy
-    * CHOICE of splits stays spec-territory (QdTreeGreedySpec), same
-    * stance as the k-means fits behind the IVF replays.
+  /** Oracle sidecar frame: the chosen splits (node, ptype, pval) —
+    * the oracle re-routes every (comb, cell) group through the tree
+    * independently and checks the leaf contents. The greedy CHOICE of
+    * splits stays spec-territory (QdTreeGreedySpec), same stance as
+    * the k-means fits behind the IVF replays.
     */
-  def writeSplitSidecar(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active) sidecarWritten.getOrElseUpdate(spark, dir) {
-      import spark.implicits._
-      getOrBuild(spark, dir).splits
-        .map(s => (s.node, s.ptype, s.pval))
-        .toDF("node", "ptype", "pval")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("qdtree_splits.parquet"))
-      true
-    }
+  def splitFrame(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    getOrBuild(spark, dir).splits
+      .map(s => (s.node, s.ptype, s.pval))
+      .toDF("node", "ptype", "pval")
+  }
 
   /** Leaf report — the build observable (leaf sizes). */
   def leafReport(spark: SparkSession, dir: String): DataFrame =

@@ -151,29 +151,26 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  private val simhashSidecarWritten = new graft.SessionCache[String, Boolean]
+  /** Oracle sidecar frame (r11): the per-doc 64-bit sketch
+    * (doc_id, sig) — the xxhash64 half with no SQL derivation. Given
+    * stored signatures DuckDB replays the pair search exactly
+    * (bit_count(xor()) over the quadratic pair space == the banded
+    * join, which is LOSSLESS for hamming <= 3 by pigeonhole over the
+    * 4x16 bands), so C3 is fully oracle-checked downstream of the
+    * sketch.
+    */
+  def simhashSigs(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .transform(graft.Tables.spread(spark, _))
+      .select(col("doc_id"), simhash64(wordShingles(col("text"), 2)).as("sig"))
 
   /** C3: SimHash near-dup pairs (custom sketch expression + banded
     * hamming join). Pairs with hamming distance ≤ maxHamming over
     * 64-bit simhash of word bigrams. Oracle-checked since r11 via the
-    * signature sidecar (the sketch is xxhash64-derived; everything
-    * downstream — banding, hamming, the pair set — replays in SQL).
+    * signature sidecar.
     */
   def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-      .transform(graft.Tables.spread(spark, _))
-    val sigs = docs.select(col("doc_id"), simhash64(wordShingles(col("text"), 2)).as("sig"))
-    // oracle sidecar (r11): the per-doc 64-bit sketch — the xxhash64
-    // half with no SQL derivation. Given stored signatures DuckDB
-    // replays the pair search exactly (bit_count(xor()) over the
-    // quadratic pair space == the banded join, which is LOSSLESS for
-    // hamming <= 3 by pigeonhole over the 4x16 bands), so C3 is fully
-    // oracle-checked downstream of the sketch.
-    if (graft.Sidecars.active) simhashSidecarWritten.getOrElseUpdate(spark, dir) {
-      sigs.coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("simhash_sigs.parquet"))
-      true
-    }
+    val sigs = simhashSigs(spark, dir)
     // 4 bands × 16 bits: ≤3 differing bits leave ≥1 band identical.
     val banded = sigs.select(col("doc_id"), col("sig"),
       posexplode(array((0 until 4).map(bnd =>

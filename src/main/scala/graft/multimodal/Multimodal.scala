@@ -303,48 +303,6 @@ object Multimodal {
     (w, h, s.toDouble / (nf.toLong * w * h) / 255.0)
   }
 
-  /** Payload sidecars for the INDEPENDENT mm value check (r15, VERDICT
-    * r14 #7): the media tables' exact bytes persist once per Verify so
-    * tools/check_parity.py can re-decode them with parsers sharing no
-    * code with the engine (Python's stdlib `wave`, a hand PGM reader,
-    * a zlib PNG un-filterer) and diff the decoded features
-    * row-for-row. This upgrades the mm rows-only keys to
-    * independently-checked WITHOUT touching the declared codec
-    * boundary — the payloads are data, the check re-derives the
-    * features from them. Bounded: one row per document at the oracle
-    * SFs. Gated like every sidecar write (only the oracle-owning
-    * Verify process writes; bench/test runs skip).
-    */
-  private val mediaSidecarWritten = new graft.SessionCache[(String, String), Boolean]
-  def writeMediaSidecar(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active)
-      mediaSidecarWritten.getOrElseUpdate(spark, (dir, "media")) {
-        mediaTable(spark, dir).toDF().coalesce(1).write.mode("overwrite")
-          .parquet(graft.Sidecars.path("media_payloads.parquet"))
-        true
-      }
-  def writePngSidecar(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active)
-      mediaSidecarWritten.getOrElseUpdate(spark, (dir, "png")) {
-        pngTable(spark, dir).toDF().coalesce(1).write.mode("overwrite")
-          .parquet(graft.Sidecars.path("media_png.parquet"))
-        true
-      }
-  /** JPEG payload dump (r16, VERDICT r15 #7): the parity tool re-reads
-    * these bytes with a from-spec SOF marker-walk parser and checks
-    * mm_jpeg_features' non-codec columns (media_id, kind, n_bytes,
-    * checksum, width, height) row-for-row — the geometry lives in the
-    * JPEG HEADER, so the check needs no pixel decode and the imageio
-    * codec boundary (mean luma) stays where it is declared.
-    */
-  def writeJpegSidecar(spark: SparkSession, dir: String): Unit =
-    if (graft.Sidecars.active)
-      mediaSidecarWritten.getOrElseUpdate(spark, (dir, "jpeg")) {
-        jpegTable(spark, dir).toDF().coalesce(1).write.mode("overwrite")
-          .parquet(graft.Sidecars.path("media_jpeg.parquet"))
-        true
-      }
-
   /** F1: binary → typed feature extraction via mapPartitions (decoder
     * dispatch initialized once per partition; rows stream through in
     * one pass). The parsers above are the "codec"; a compressed-format

@@ -59,8 +59,9 @@ object Maintenance {
   }
 
   /** A15: deterministic query-workload generation
-    * (generate_queries.py / services/rbac_generator): n queries pairing
-    * user u with query vector (u*7) mod corpus-size.
+    * (generate_queries.py / services/rbac_generator): one query per
+    * customer key 0..nQueries — nQueries + 1 queries, since keys start
+    * at 0 — pairing user u with query vector (u*7) mod corpus-size.
     */
   def workloadGen(spark: SparkSession, dir: String, nQueries: Int = 20): DataFrame = {
     val total = Tables.embeddings(spark, dir)

@@ -314,7 +314,12 @@ object Layouts {
     (olds.length, parquetFiles.length)
   }
 
-  private val layoutEnsureLock = new Object
+  /** Stamped layout root → its layout path, once the directory exists.
+    * Racing first callers of one layout share one build, different
+    * layouts build concurrently, and later calls take no lock and make
+    * no `Files.exists` stat.
+    */
+  private val built = new graft.BuildOnce[String, String]
 
   /** Shared tmp root for a per-dataset materialized layout. Scoped by
     * OS user and by a hash of the dataset's CANONICAL path (two
@@ -351,7 +356,7 @@ object Layouts {
     // the user-comb workload weights (customer) — stamp all three
     val out = layoutRoot(dir, s"costmodel_a${alpha}_q$nQueries",
       Seq("embeddings.parquet", "documents.parquet", "customer.parquet"))
-    layoutEnsureLock.synchronized {
+    built.getOrElseUpdate(out) {
       val path = s"$out/blocks_by_costmodel"
       if (!Files.exists(Paths.get(path))) {
         Rbac.blocks(spark, dir)
@@ -378,9 +383,8 @@ object Layouts {
     * granted partitions. Result is identical to `Rbac.prefilterTopK`
     * (the role partitions of the user's roles hold exactly the
     * accessible blocks — shares the prefilter oracle); the layout is
-    * materialized once per dataset (same lifetime as the index
-    * sidecars) under a lock so concurrent bench queries share one
-    * build.
+    * materialized once per stamped layout path (`built`), so
+    * concurrent bench queries share one build.
     */
   def prefilterPruned(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     // the role layout bakes in blocks (embeddings) AND the permission
@@ -388,9 +392,7 @@ object Layouts {
     // either regenerates, and is scoped per user/checkout
     val out = layoutRoot(dir, "role",
       Seq("embeddings.parquet", "documents.parquet"))
-    val path = layoutEnsureLock.synchronized {
-      materializeRoleLayout(spark, dir, out)
-    }
+    val path = built.getOrElseUpdate(out)(materializeRoleLayout(spark, dir, out))
     prunedRoleSearch(spark, dir, path, userId, k)
   }
 

@@ -106,28 +106,24 @@ object TextOps {
       .orderBy("doc_id", "rnk")
   }
 
-  private val hashDictWritten = new graft.SessionCache[String, Boolean]
+  /** Oracle sidecar frame: the corpus's token → bucket dictionary. */
+  def hashBuckets(spark: SparkSession, dir: String, dims: Int): DataFrame =
+    Tables.documents(spark, dir)
+      .select(explode(ws(col("text"))).as("token")).distinct()
+      .withColumn("bucket", pmod(xxhash64(col("token")), lit(dims)).cast("int"))
 
   /** D6: hashed bag-of-words embedding (services/embedding_service.py
     * stand-in — that uses spacy vectors, unavailable here; the hashing
     * trick is the standard scalable featurizer). Output long form:
     * (doc_id, bucket, weight) with weight = bucket term count / doc
     * token count. Oracle-checked since r11 via the token→bucket
-    * dictionary sidecar: xxhash64 lives ONLY in the dictionary
-    * derivation, so given (token, bucket) rows DuckDB replays the
-    * featurize — tokenize, dictionary join, per-doc bucket counts,
-    * the weight quotient — exactly.
+    * dictionary sidecar (`hashBuckets`): xxhash64 lives ONLY in the
+    * dictionary derivation, so given (token, bucket) rows DuckDB
+    * replays the featurize — tokenize, dictionary join, per-doc bucket
+    * counts, the weight quotient — exactly.
     */
   def hashEmbedding(spark: SparkSession, dir: String, dims: Int = 16): DataFrame = {
     val w = ws(col("text"))
-    if (graft.Sidecars.active) hashDictWritten.getOrElseUpdate(spark, dir) {
-      Tables.documents(spark, dir)
-        .select(explode(w).as("token")).distinct()
-        .withColumn("bucket", pmod(xxhash64(col("token")), lit(dims)).cast("int"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(graft.Sidecars.path("hash_buckets.parquet"))
-      true
-    }
     Tables.documents(spark, dir)
       .transform(graft.Tables.spread(spark, _))
       .select(col("doc_id"), size(w).cast("double").as("n_tokens"),

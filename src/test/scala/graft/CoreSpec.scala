@@ -10,11 +10,6 @@ import graft.operators.TopKAgg.topk_ids
 import graft.rbac.Rbac
 
 object SparkTest {
-  // the suite executes every query fn at sf0.001 — redirect sidecar
-  // writes so a test run can never clobber the oracle's fixed path
-  // while a Verify at another SF is in flight (Sidecars.scala)
-  Sidecars.isolate("graft_test_sidecars")
-
   @volatile private var current: SparkSession = null
   // self-healing: SessionCycleSpec stops the shared session to prove
   // the engine's caches survive app cycling — the next access here

@@ -85,7 +85,9 @@ class ParquetReaderSpec extends AnyFunSuite {
       ("rolePartitionTopK", u => Partitioned.rolePartitionTopK(sp, sf, u, k), 2),
       ("combPartitionTopK", u => Partitioned.combPartitionTopK(sp, sf, u, k), 2),
       ("dynamicPartitionTopK", u => Partitioned.dynamicPartitionTopK(sp, sf, u, k), 2),
-      ("prefilterPruned", u => sources.Layouts.prefilterPruned(sp, sf, u, k), 3),
+      // after the first call the role layout is a BuildOnce hit, so no
+      // call builds (and reads the corpus for) the layout's block frame
+      ("prefilterPruned", u => sources.Layouts.prefilterPruned(sp, sf, u, k), 2),
       ("predicateAwareSearch", u => ann.IvfIndex.predicateAwareSearch(sp, sf, u, topk = k), 2))
     for ((name, f, reads) <- strategies) {
       f(3L).collect() // first touch: layouts, indexes, schemas
@@ -319,16 +321,30 @@ class SourcePolicySpec extends AnyFunSuite {
     // SessionCache scopes context-bound values by application; a store
     // reading applicationId itself re-implements that eviction
     assert(filesWith("""applicationId""".r) == Seq("graft/SessionFrameCache.scala"))
-    // BuildOnce takes a per-key lock. Layouts locks the filesystem:
-    // it serializes the check-then-write of a layout directory on disk,
-    // which no in-memory store owns
+    // BuildOnce takes a per-key lock; every other store, the on-disk
+    // layouts included, builds through it
     val locks = filesWith("""\.synchronized\b""".r)
-    assert(locks == Seq("graft/SessionFrameCache.scala", "graft/sources/Layouts.scala"),
+    assert(locks == Seq("graft/SessionFrameCache.scala"),
       s"hand-rolled locks outside BuildOnce: $locks")
-    val layouts = sources.find(_._1 == "graft/sources/Layouts.scala").get._2
-    assert("""\.synchronized\b""".r.findAllMatchIn(layouts).size ==
-      """layoutEnsureLock\.synchronized\b""".r.findAllMatchIn(layouts).size,
-      "a lock in Layouts other than its filesystem lock")
+  }
+
+  test("one sidecar writer: only Verify writes, through Sidecars.write") {
+    val sources = ConsumerScan.sources("src/main/scala")
+      .filter(_._1 != "graft/Sidecars.scala")
+    def filesWith(re: scala.util.matching.Regex): Seq[String] =
+      sources.collect { case (f, src) if re.findFirstIn(src).isDefined => f }
+    val names = Sidecars.frames.keys.map(java.util.regex.Pattern.quote).mkString("|")
+    val offenders = Seq(
+      "Sidecars.active" -> """Sidecars\.active\b""".r,
+      "Sidecars.path(" -> """Sidecars\.path\(""".r,
+      "a *Written cache" -> """\w+Written\s*=\s*new\b""".r,
+      "a write*Sidecar def" -> """def\s+write\w*Sidecars?\b""".r,
+      "a .parquet( aimed at a sidecar" ->
+        ("""\.parquet\([^)\n]*(Sidecars\.|""" + names + ")").r
+    ).flatMap { case (what, re) => filesWith(re).map(f => s"$f: $what") }
+    assert(offenders.isEmpty, s"sidecar writes outside Sidecars.scala: $offenders")
+    assert(filesWith("""Sidecars\.write\(""".r) == Seq("graft/Verify.scala"),
+      "the sidecar writer has a caller other than Verify")
   }
 
   test("every public object member has a consumer outside its own definition") {
@@ -374,7 +390,6 @@ object ConsumerScan {
       "Layouts.rollbackDelete" -> maintenance,
       "Layouts.rewritePartition" -> maintenance,
       "GroupedKMeans.sse" -> "the k-means quality reference the specs compare against",
-      "Sidecars.ToolRead" -> "a declaration Round8Spec checks",
       "SparkEntry.entry" -> "the flagship smoke-check entry point its doc declares")
   }
 

@@ -56,35 +56,52 @@ class SessionCacheSpec extends AnyFunSuite {
 }
 
 class SidecarPathSpec extends AnyFunSuite {
-  test("oracle SQL reads sidecars ONLY from the default root; tests are isolated") {
+  test("oracle SQL reads sidecars only as registered files under the default root") {
     // every read_parquet of a sidecar in the oracle must point at the
-    // path Verify writes (the one process allowed to own it), and must
-    // name a REGISTERED sidecar file — `Sidecars.path` rejects names
-    // outside `Known`, so a writer/oracle filename drift fails on one
-    // side or the other instead of as a mystery oracle value diff
+    // root Verify writes (the one process allowed to own it), and must
+    // name a file of the one table Verify writes from, so a
+    // writer/oracle filename drift fails here instead of as a mystery
+    // oracle value diff
     val refs = SparkEntry.oracleSql.values
       .flatMap(_.linesIterator.filter(_.contains("read_parquet"))).toSeq
     refs.foreach { l =>
       assert(l.contains(Sidecars.DefaultRoot), s"oracle sidecar path drifted: $l")
-      assert(Sidecars.Known.exists(n => l.contains(s"/$n/")),
+      assert(Sidecars.frames.keys.exists(n => l.contains(s"/$n/")),
         s"oracle reads an unregistered sidecar file: $l")
     }
     assert(refs.nonEmpty, "expected sidecar-replayed oracles to exist")
     // every registered sidecar is actually consumed — by some oracle,
-    // or (the r15 mm payload dumps) by the parity tool's independent
+    // or (the mm payload dumps) by the parity tool's independent
     // decoders, declared in ToolRead
-    assert(Sidecars.ToolRead.subsetOf(Sidecars.Known),
+    assert(Sidecars.ToolRead.keySet.subsetOf(Sidecars.frames.keySet),
       "ToolRead names an unregistered sidecar")
-    (Sidecars.Known -- Sidecars.ToolRead).foreach { n =>
-      assert(refs.exists(_.contains(s"/$n/")), s"sidecar $n written but never read")
+    (Sidecars.frames.keySet -- Sidecars.ToolRead.keySet).foreach { n =>
+      assert(refs.exists(_.contains(s"/$n/")), s"sidecar $n registered but never read")
     }
-    // ...while THIS test JVM (which executes every query fn at
-    // sf0.001) must be isolated from the oracle's root — not by
-    // accident of suite ordering, but by the same idempotent call the
-    // harness makes (no-op if SparkTest initialized first)
-    Sidecars.isolate("graft_test_sidecars")
-    assert(Sidecars.root != Sidecars.DefaultRoot,
-      "test harness must not share the oracle's sidecar root")
+  }
+
+  test("every ToolRead key is a query key") {
+    val keys = Sidecars.ToolRead.values.flatten.toSet
+    assert(keys.nonEmpty)
+    assert(keys.subsetOf(SparkEntry.queries.keySet),
+      s"ToolRead names unknown keys: ${keys -- SparkEntry.queries.keySet}")
+  }
+
+  test("readBy names the files a key's oracle reads plus its ToolRead files") {
+    def readBy(key: String) = Sidecars.readBy(key, SparkEntry.oracleSql.get(key))
+    assert(readBy("ann_graph_topk_nnd") ==
+      Seq("ivf_centroids_k16.parquet", "nnd_graph_k8.parquet"))
+    assert(readBy("mm_audio_features") == Seq("media_payloads.parquet"))
+    assert(readBy("q1_pricing_summary").isEmpty)
+  }
+
+  test("the one writer persists every registered sidecar as a non-empty table") {
+    import SparkTest._
+    val root = java.nio.file.Files.createTempDirectory("graft_sidecars").toString
+    Sidecars.frames.keys.toSeq.sorted.foreach { n =>
+      Sidecars.write(spark, sf, root, n)
+      assert(spark.read.parquet(s"$root/$n").count() > 0, s"sidecar $n is empty")
+    }
   }
 }
 

@@ -9,7 +9,10 @@ Each input is the captured stdout of
 formatted physical plan. These tokens change from run to run and are
 normalized before comparing: expression ids (`#123`), `plan_id=123`,
 the identity hash of a JVM array baked into an expression (`[[F@1b2c3d`,
-the centroid/codebook arguments of the index kernels), the random
+the centroid/codebook arguments of the index kernels), the class
+name and identity hash of a JVM lambda
+(`Multimodal$$$Lambda$6868/0x00007f70ad80b000@39821f5d`, a typed
+Dataset operator's function, numbered in class-loading order), the random
 suffix of a temporary directory (`file:/tmp/graft_ckpt_8512...`, a graph
 walk's checkpoint) and the round number inside it (`.../r27`, allocated
 in whatever order concurrent walks finish), and RDD ids
@@ -38,6 +41,7 @@ SBT_TAG = re.compile(r"^\[(info|warn|error|success|debug)\]")
 EXPR_ID = re.compile(r"#\d+")
 PLAN_ID = re.compile(r"plan_id=\d+")
 ARRAY_HASH = re.compile(r"(\[+[BCDFIJSZ])@[0-9a-f]+")
+LAMBDA = re.compile(r"(\$Lambda)\S*?@[0-9a-f]+")
 TMP_SUFFIX = re.compile(r"(file:/\S*?_)\d{9,}(/r)?\d*")
 RDD_ID = re.compile(r"(RDD)\[\d+\]")
 CODEGEN_ID = re.compile(r"\[codegen id : \d+\]")
@@ -52,6 +56,7 @@ def normalize(line):
     line = EXPR_ID.sub("#N", line.rstrip())
     line = PLAN_ID.sub("plan_id=N", line)
     line = ARRAY_HASH.sub(r"\1@H", line)
+    line = LAMBDA.sub(r"\1@H", line)
     line = RDD_ID.sub(r"\1[N]", line)
     line = CODEGEN_ID.sub("[codegen id : N]", line)
     line = FINAL_FLAG.sub("isFinalPlan=_", line)

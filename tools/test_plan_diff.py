@@ -168,6 +168,12 @@ class PlanDiffTest(unittest.TestCase):
                          "block_id#NL ASC NULLS FIRST], plan_id=N")
         self.assertFalse(any(l.startswith("[") for p in plans.values() for l in p))
 
+    def test_a_lambda_identity_is_normalized(self):
+        self.assertEqual(
+            plan_diff.normalize("Arguments: graft.M$$$Lambda$6868/0x00007f70ad80b000@39821f5d, "
+                                "obj#12: graft.M$Row"),
+            "Arguments: graft.M$$$Lambda@H, obj#N: graft.M$Row")
+
     def test_renumbered_plans_are_identical(self):
         changed, one_side = plan_diff.diff_plans(
             plan_diff.split_plans(BEFORE), plan_diff.split_plans(AFTER_SAME))
