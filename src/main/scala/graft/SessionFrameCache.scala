@@ -36,6 +36,8 @@ final class BuildOnce[K, V] {
 
   def keys: Iterable[K] = m.keys
 
+  def entries: Seq[(K, V)] = m.toSeq
+
   /** Drop every entry, and its lock, whose key fails `keep`. */
   def retainKeys(keep: K => Boolean): Unit = {
     m.keys.filterNot(keep).foreach(m.remove)

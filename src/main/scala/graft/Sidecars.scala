@@ -87,6 +87,10 @@ object Sidecars {
     (oracleSql.toSeq.flatMap(oracleRead.findAllMatchIn(_).map(_.group(1))) ++
       ToolRead.collect { case (f, keys) if keys(key) => f }).distinct.sorted
 
+  /** Remove every registered sidecar file under `root`. */
+  def clear(root: String): Unit =
+    frames.keys.foreach(n => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root, n)))
+
   /** The one writer: sidecar `name` of dataset `dir`, as one parquet
     * file under `root/name`.
     */

@@ -12,42 +12,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SqlSurface {
 
-  // keyed by the SparkSession ITSELF (not applicationId): temp views
-  // and function registrations live in one SESSION, and sibling
+  // keyed by the SparkSession ITSELF as well as its application: temp
+  // views and function registrations live in one SESSION, and sibling
   // sessions from newSession() share an applicationId but not a view
-  // catalog. Entries of stopped contexts are evicted on touch.
-  private val registered =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
+  // catalog.
+  private val registered = new SessionCache[(SparkSession, String), Unit]
 
-  /** Register testdata tables as temp views + the function surface. */
-  def init(spark: SparkSession, dir: String): Unit = {
-    registered.keys.filter(_._1.sparkContext.isStopped).foreach(registered.remove)
-    registered.getOrElseUpdate((spark, dir), {
+  /** Register testdata tables as temp views + the function surface,
+    * plus the grant tables under the reference's names (`user_roles`,
+    * `permission_assignment`) — `Rbac`'s frames, not a SQL re-derivation.
+    */
+  def init(spark: SparkSession, dir: String): Unit =
+    registered.getOrElseUpdate(spark, (spark, dir)) {
       GraftExtensions.install(spark)
       Tables.names.foreach { t =>
         // events needs the nanos-aware reader (Tables.events), not a raw scan
         val df = if (t == "events") Tables.events(spark, dir) else Tables.table(spark, dir, t)
         df.createOrReplaceTempView(t)
       }
-      true
-    })
-  }
+      rbac.Rbac.userRoles(spark, dir).createOrReplaceTempView("user_roles")
+      rbac.Rbac.permissions(spark, dir).createOrReplaceTempView("permission_assignment")
+    }
 
   /** SQL spelling of the prefilter top-k (same result as
-    * Rbac.prefilterTopK — the DataFrame and SQL paths share the oracle).
+    * Rbac.prefilterTopK — the DataFrame and SQL paths share the oracle):
+    * the accessible docs are common_function.py's prefilter join of
+    * PermissionAssignment and UserRoles.
     */
   def prefilterTopKSql(spark: SparkSession, dir: String): DataFrame = {
     init(spark, dir)
     spark.sql(
-      """WITH ur AS (
-        |  SELECT c_custkey % 10 AS role_id FROM customer WHERE c_custkey = 1
-        |  UNION
-        |  SELECT (c_custkey * 3 + 1) % 10 FROM customer WHERE c_custkey = 1
-        |), perm AS (
-        |  SELECT doc_id % 10 AS role_id, doc_id AS document_id FROM documents
-        |  UNION
-        |  SELECT (doc_id div 10) % 10, doc_id FROM documents
-        |), acc AS (SELECT DISTINCT document_id FROM perm JOIN ur USING (role_id)),
+      """WITH acc AS (
+        |  SELECT DISTINCT pa.document_id FROM permission_assignment pa
+        |  JOIN user_roles ur ON pa.role_id = ur.role_id
+        |  WHERE ur.user_id = 1
+        |),
         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)
         |SELECT e.vec_id AS block_id, e.vec_id AS document_id
         |FROM embeddings e JOIN acc ON e.vec_id = acc.document_id, q

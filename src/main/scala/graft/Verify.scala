@@ -14,6 +14,19 @@ object Verify {
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // Reproducibility stamp (r14, VERDICT r13 #2): the oracle SQL
+    // interpolates ONE fixed sidecar root, so the dataset fingerprint is
+    // stamped into BOTH the outDir and the sidecar root; check_parity
+    // refuses a mismatch with a named diagnostic instead of diffing
+    // values. A root stamped for another dataset (or not at all) is
+    // cleared first, so it never holds two datasets' files.
+    val fp = Bench.dataFingerprint(sfDir)
+    val rootStamp = Paths.get(s"${Sidecars.DefaultRoot}/data_fingerprint")
+    if (!Files.exists(rootStamp) || Files.readString(rootStamp) != fp) {
+      Sidecars.clear(Sidecars.DefaultRoot)
+      Files.createDirectories(rootStamp.getParent)
+      Files.writeString(rootStamp, fp)
+    }
     // the one sidecar writer's one caller: before each key, the files
     // its oracle (or the parity tool's mm decode) reads, once per run
     val oracleSql = SparkEntry.oracleSql
@@ -44,19 +57,14 @@ object Verify {
     val json = oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Reproducibility stamp (r14, VERDICT r13 #2): the oracle SQL
-    // interpolates ONE fixed sidecar root, so a later Verify at a
-    // different dataset overwrites the sidecars out from under any
-    // RECORDED outDir — re-running the oracle against the recorded
-    // outputs then fails with mystery value diffs (the r13 audit hit
-    // this adjudicating the 10× parity claims). Stamp the dataset
-    // fingerprint into BOTH the outDir and the sidecar root;
-    // check_parity refuses a mismatch with a named diagnostic instead
-    // of diffing values.
-    val fp = Bench.dataFingerprint(sfDir)
+    // the parity tool's independent decodes: each payload file with the
+    // kept mm keys it checks
+    val toolRead = Sidecars.ToolRead.toSeq.sortBy(_._1)
+      .map { case (f, keys) => f -> keys.filter(keep).toSeq.sorted }
+      .filter(_._2.nonEmpty)
+      .map { case (f, keys) => s"${q(f)}: ${keys.map(q).mkString("[", ",", "]")}" }
+    Files.writeString(Paths.get(s"$outDir/tool_read.json"), toolRead.mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/data_fingerprint"), fp)
-    Files.createDirectories(Paths.get(Sidecars.DefaultRoot))
-    Files.writeString(Paths.get(s"${Sidecars.DefaultRoot}/data_fingerprint"), fp)
     spark.stop()
   }
 }

@@ -90,7 +90,7 @@ object GraphSearch {
 
   /** The serving graph over an ARBITRARY member subset (A21's routed
     * dynamic partition). `tag` names the subset for the session cache —
-    * it must determine `members` (e.g. "dynpart<user>").
+    * it must determine `members` (e.g. "dynpart[<partition ids>]").
     *
     * DISPATCHED like B42 (r14, VERDICT r13 #1): below the measured
     * exact-build ceiling the subset gets exact kNN edges + the
@@ -146,21 +146,30 @@ object GraphSearch {
   private def buildGraph(spark: SparkSession, dir: String, gk: Int,
                          edges: DataFrame): DataFrame = {
       val g = edges.select("src", "nbr")
-      val e = Tables.embeddings(spark, dir)
-      val w = Window.partitionBy("src").orderBy(col("dist"), col("nbr"))
-      val und = g.union(g.select(col("nbr").as("src"), col("src").as("nbr")))
-        .distinct()
-        .join(e.select(col("vec_id").as("src"), col("embedding").as("es")), "src")
-        .join(e.select(col("vec_id").as("nbr"), col("embedding").as("en")), "nbr")
-        .withColumn("dist", l2_dist(col("es"), col("en")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2 * gk)
-        .select("src", "nbr")
+      val und = degreeCap(spark, dir,
+        g.union(g.select(col("nbr").as("src"), col("src").as("nbr"))).distinct(), gk)
       // lineage-cut (r10): the edge set is referenced once per walk
       // round and composed by the repair family — without the rebase
       // every consumer re-pays plan analysis of the whole build tree
       // (ruinous for the NND build, whose plan grows per descent round)
       PlanCut.checkpointed(spark, und)
+  }
+
+  /** THE degree cap (hnswlib's M_max prune), shared by the graph build
+    * and the insert repair: each src's candidate edges ranked by
+    * (endpoint L2 distance, nbr), the first 2·gk kept.
+    */
+  private def degreeCap(spark: SparkSession, dir: String, cand: DataFrame,
+                        gk: Int): DataFrame = {
+    val e = Tables.embeddings(spark, dir)
+    val w = Window.partitionBy("src").orderBy(col("dist"), col("nbr"))
+    cand
+      .join(e.select(col("vec_id").as("src"), col("embedding").as("es")), "src")
+      .join(e.select(col("vec_id").as("nbr"), col("embedding").as("en")), "nbr")
+      .withColumn("dist", l2_dist(col("es"), col("en")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 2 * gk)
+      .select("src", "nbr")
   }
 
   /** Entry points: for every non-empty IVF cell, the member closest to
@@ -395,60 +404,62 @@ object GraphSearch {
       .orderBy("src", "nbr")
   }
 
-  /** The user's routed member docs (A7's routing) — the id set whose
-    * serving graph A21 builds. One definition shared by the index
-    * build, the serve policy's ceiling check, and the specs.
+  /** A routed partition set's member docs (A7's routing) — the id set
+    * whose serving graph A21 builds. One definition shared by the index
+    * build and the serve policy's ceiling check.
     */
-  def partitionMembers(spark: SparkSession, dir: String, userId: Long,
-                       alpha: Double = 2.0): DataFrame = {
-    import graft.rbac.Partitioned
-    val pids = Partitioned.routedPartitionIds(spark, dir, userId, alpha)
-    Partitioned.costModelPartitionDocs(spark, dir, alpha)
+  private def partitionMembers(spark: SparkSession, dir: String, pids: Seq[Int],
+                               alpha: Double): DataFrame =
+    graft.rbac.Partitioned.costModelPartitionDocs(spark, dir, alpha)
       .filter(col("partition_id").isin(pids: _*))
       .select(col("document_id").as("vec_id")).distinct()
-  }
 
   /** Routed member-set size, session-cached — read by the serve
     * policy (the exact-ceiling pin) and by every A21 key's dispatch.
     */
-  private val memberCountCache = new graft.SessionCache[(String, Long, Double), Long]
+  private val memberCountCache = new graft.SessionCache[(String, Seq[Int], Double), Long]
   def partitionMemberCount(spark: SparkSession, dir: String, userId: Long,
-                           alpha: Double = 2.0): Long =
-    memberCountCache.getOrElseUpdate(spark, (dir, userId, alpha))(
-      partitionMembers(spark, dir, userId, alpha).count())
+                           alpha: Double = 2.0): Long = {
+    val pids = routedPartitions(spark, dir, userId, alpha)
+    memberCountCache.getOrElseUpdate(spark, (dir, pids, alpha))(
+      partitionMembers(spark, dir, pids, alpha).count())
+  }
 
   /** A21's per-partition index state (graph + medoid seeds over the
     * user's routed member docs) WITHOUT the walk — what the layout job
     * builds at scale, and what Bench's warm-up pre-builds (the walk
-    * itself stays timed: it is the search, as for B31-B37). The cache
-    * tag carries userId AND alpha — both determine the member set.
+    * itself stays timed: it is the search, as for B31-B37). The index
+    * belongs to the PARTITION (search.py:31): the cache tag carries the
+    * routed partition set and alpha, which determine the member set.
     */
   def partitionGraphIndex(spark: SparkSession, dir: String, userId: Long = 1,
                           gk: Int = GraphK, cells: Int = Cells,
                           alpha: Double = 2.0, iters: Int = 2): (DataFrame, DataFrame) = {
     // iters (the descent build-quality knob) only exists above the
     // exact ceiling; the medoid seeds don't depend on it
-    val tag = s"dynpart${userId}_a$alpha"
+    val pids = routedPartitions(spark, dir, userId, alpha)
+    val tag = s"dynpart[${pids.mkString(",")}]_a$alpha"
     val gtag = if (iters == 2) tag else s"${tag}_i$iters"
-    val members = partitionMembers(spark, dir, userId, alpha)
+    val members = partitionMembers(spark, dir, pids, alpha)
     (servingGraphOn(spark, dir, gtag, members, gk, cells, iters),
       cellMedoidsOn(spark, dir, tag, members, cells))
   }
 
-  /** Canonical identity of the user's routed partition set — the key
-    * the serve policy is layout metadata OF (r15, VERDICT r14 #2): a
-    * user's comb routes to partition ids; users whose combs land on
-    * the same partitions share one member set, one serving graph, and
-    * therefore ONE measured (iters, ef) policy row. Typically a single
-    * id (comb → partition is many-to-one), rendered canonically so a
-    * multi-partition routing still keys stably.
+  /** The user's routed partition ids, sorted — the key of every A21
+    * structure (r15, VERDICT r14 #2): users whose combs land on the same
+    * partitions share one member set, serving graph, walk and measured
+    * (iters, ef) policy row. Rendered by `routedPartitionKey`.
     */
-  private val routedKeyCache = new graft.SessionCache[(String, Long, Double), String]
+  private val routedCache = new graft.SessionCache[(String, Long, Double), Seq[Int]]
+  private def routedPartitions(spark: SparkSession, dir: String, userId: Long,
+                               alpha: Double): Seq[Int] =
+    routedCache.getOrElseUpdate(spark, (dir, userId, alpha))(
+      graft.rbac.Partitioned.routedPartitionIds(spark, dir, userId, alpha)
+        .map(_.intValue).sorted)
+
   private[graft] def routedPartitionKey(spark: SparkSession, dir: String,
                                         userId: Long, alpha: Double = 2.0): String =
-    routedKeyCache.getOrElseUpdate(spark, (dir, userId, alpha))(
-      graft.rbac.Partitioned.routedPartitionIds(spark, dir, userId, alpha)
-        .map(_.intValue).sorted.mkString(","))
+    routedPartitions(spark, dir, userId, alpha).mkString(",")
 
   /** Deterministic probe representative per routed partition set: the
     * SMALLEST user id in A15's workload sample (user_id ≤ 20, the
@@ -464,7 +475,7 @@ object GraphSearch {
     probeUserCache.getOrElseUpdate(spark, (dir, alpha)) {
       import graft.rbac.Partitioned
       Partitioned.costModelLayout(spark, dir, alpha)
-        .join(Partitioned.userCombs(spark, dir)
+        .join(graft.rbac.Rbac.userCombsFrom(graft.rbac.Rbac.userRoles(spark, dir))
           .filter(col("user_id") <= 20), "comb_key")
         .groupBy("user_id")
         .agg(sort_array(collect_set(col("partition_id"))).as("pids"))
@@ -477,8 +488,7 @@ object GraphSearch {
   private def partitionGraphKey(pkey: String, alpha: Double): String =
     s"dynpart $pkey a$alpha"
 
-  private val partPolicyCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Double, Double), (Int, Int, Double)]
+  private val partPolicyCache = new graft.BuildOnce[(String, String, Double, Double), (Int, Int, Double)]
 
   /** A21's measured per-partition serving policy (r14, VERDICT r13
     * #1): (iters, ef) for THIS user's routed partition, the
@@ -501,7 +511,7 @@ object GraphSearch {
                            alpha: Double = 2.0,
                            target: Double = RecallTarget): (Int, Int, Double) = {
     val pkey = routedPartitionKey(spark, dir, userId, alpha)
-    partPolicyCache.getOrElseUpdate((dir, pkey, alpha, target), {
+    partPolicyCache.getOrElseUpdate((dir, pkey, alpha, target)) {
       val m = partitionMemberCount(spark, dir, userId, alpha)
       if (m <= Ann.KnnExactMaxN) (2, Ef, -1.0)
       else {
@@ -518,7 +528,7 @@ object GraphSearch {
             probe(spark, dir, Nq, 10, ef, Rounds, edges, medoids, gt, Some(pu))
           })
       }
-    })
+    }
   }
 
   /** Every (iters, ef, recall) point the policy probed for the
@@ -547,7 +557,7 @@ object GraphSearch {
     * is initialize/partition index creation). The user's comb routes to
     * its partition ids (bounded driver metadata, as A7); the routed
     * partitions' member docs get their OWN exact-kNN serving graph +
-    * medoid seeds (session-cached per user tag — at scale these are the
+    * medoid seeds (session-cached per partition set — at scale these are the
     * per-partition graph indexes built by the layout job); query 0
     * walks that graph; the permission semi-join runs at merge time
     * (the shared partition holds other combs' blocks).
@@ -564,9 +574,9 @@ object GraphSearch {
     * partition graph, permission-filtered at merge. ef = -1 (the
     * shipped default) serves at the MEASURED per-partition policy; an
     * explicit ef is an attribution probe (RecallCheck's sweep) and
-    * walks the default-quality graph. The walk is session-cached under
-    * one tag carrying user, batch width, alpha and build level (the
-    * beam rides in the cache key itself).
+    * walks the default-quality graph. The walk is session-cached per
+    * routed partition set, batch width, alpha and build level (the beam
+    * rides in the cache key itself); only the merge filter is per user.
     */
   private def partitionWalk(spark: SparkSession, dir: String, userId: Long, nq: Int,
                             ef: Int, rounds: Int, gk: Int, cells: Int,
@@ -574,7 +584,7 @@ object GraphSearch {
     val (iters, efR) =
       if (ef > 0) (2, ef)
       else { val (i, e, _) = partitionServePolicy(spark, dir, userId, alpha); (i, e) }
-    val tag = s"dynpart${userId}_q${nq}_a${alpha}_i$iters"
+    val tag = s"dynpart[${routedPartitionKey(spark, dir, userId, alpha)}]_q${nq}_a${alpha}_i$iters"
     val vis = visitedCache.getOrElseUpdate(spark, (dir, tag, efR, rounds, gk, cells)) {
       val (edges, medoids) =
         partitionGraphIndex(spark, dir, userId, gk, cells, alpha, iters)
@@ -737,12 +747,11 @@ object GraphSearch {
     */
   def nndServePolicy(spark: SparkSession, dir: String,
                      target: Double = RecallTarget): (Int, Int, Double) =
-    servePolicyCache.getOrElseUpdate((dir, target),
+    servePolicyCache.getOrElseUpdate((dir, target))(
       tune(math.min(1024L, Tables.embeddings(spark, dir).count()).toInt, target,
         nndProbe(spark, dir, Nq, 10)))
 
-  private val servePolicyCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Double), (Int, Int, Double)]
+  private val servePolicyCache = new graft.BuildOnce[(String, Double), (Int, Int, Double)]
 
   /** Every (iters, ef, recall) point this process probed at `dir` —
     * the calibration table's rows. Measured points only, never fits.
@@ -788,10 +797,8 @@ object GraphSearch {
   }
 
   /** The re-pruned adjacency of the nodes TOUCHED by `links` (reverse
-    * edges unioned into their current lists, ranked by (distance, nbr),
-    * capped at 2·gk). Every id must resolve in the corpus table (the
-    * distance attach is a vec_id equi-join). Base edges and reverse
-    * edges are deduplicated before ranking: on a
+    * edges unioned into their current lists, through `degreeCap`).
+    * Base edges and reverse edges are deduplicated before ranking: on a
     * RE-insert a touched node's current list may already carry the
     * reverse edge from the batch node's previous insertion, and a
     * duplicate (src, nbr) row would occupy two window ranks — the
@@ -803,16 +810,8 @@ object GraphSearch {
                              links: DataFrame, gk: Int): DataFrame = {
     val rev = links.select(col("nbr").as("src"), col("src").as("nbr"))
     val touched = rev.select("src").distinct()
-    val cand = g.join(touched, Seq("src"), "left_semi").unionAll(rev).distinct()
-    val e = Tables.embeddings(spark, dir)
-    val w = Window.partitionBy("src").orderBy(col("dist"), col("nbr"))
-    cand
-      .join(e.select(col("vec_id").as("src"), col("embedding").as("es")), "src")
-      .join(e.select(col("vec_id").as("nbr"), col("embedding").as("en")), "nbr")
-      .withColumn("dist", l2_dist(col("es"), col("en")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 2 * gk)
-      .select("src", "nbr")
+    degreeCap(spark, dir,
+      g.join(touched, Seq("src"), "left_semi").unionAll(rev).distinct(), gk)
   }
 
   /** One full repair: `g` with every touched node's list replaced by
@@ -947,16 +946,17 @@ object GraphSearch {
     * a query BATCH (B31's nq) — per user: A7's routing → that user's
     * per-partition graph index → one batch walk → permission semi-join
     * at merge → per-query top-k. Output (user_id, query_id, block_id).
-    * Each user's walk is session-cached like the single-user key's
-    * (the per-partition indexes are layout-job artifacts at scale).
+    * Each walk is session-cached per routed partition set like the
+    * single-user key's (the per-partition indexes are layout-job
+    * artifacts at scale).
     */
   def partitionGraphSweep(spark: SparkSession, dir: String,
                           userIds: Seq[Long] = SweepUsers, nq: Int = Nq,
                           k: Int = 10, ef: Int = -1, rounds: Int = Rounds,
                           gk: Int = GraphK, cells: Int = Cells,
                           alpha: Double = 2.0): DataFrame = {
-    // the per-user walks are INDEPENDENT jobs (distinct routed graphs,
-    // distinct visited caches) — overlap them (guide §2.6, r17): the
+    // walks of different partition sets are INDEPENDENT jobs (distinct
+    // routed graphs, distinct visited caches) — overlap them (r17): the
     // sequential map serialized 3 × rounds of frontier-round latency
     // even though each round leaves most cores idle; the session
     // caches underneath take per-key locks, so racing users is safe
@@ -981,15 +981,14 @@ object GraphSearch {
     * accumulate persisted walk states for the session lifetime). Every
     * curve, policy pick and probe count reads it.
     */
-  private val measured = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), Double]
+  private val measured = new graft.BuildOnce[(String, String, Int, Int), Double]
 
   private[graft] def measure(dir: String, graph: String, iters: Int, ef: Int)(
       recall: => Double): Double =
-    measured.getOrElseUpdate((dir, graph, iters, ef), recall)
+    measured.getOrElseUpdate((dir, graph, iters, ef))(recall)
 
   private def measuredPoints(dir: String, graph: String): Seq[(Int, Int, Double)] =
-    measured.toSeq.collect { case ((`dir`, `graph`, i, e), r) => (i, e, r) }
+    measured.entries.collect { case ((`dir`, `graph`, i, e), r) => (i, e, r) }
       .sortBy(p => (p._1, p._2))
 
   /** Fraction of the exact answer set a result recovers. */

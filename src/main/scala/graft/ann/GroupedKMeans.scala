@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.vector._
-import graft.rbac.Rbac
+import graft.rbac.{Partitioned, Rbac}
 
 /** Grouped k-means — k-means for MANY groups in ONE distributed job
   * (reference: build_role_indexes.py / build_dynamic_partition_indexes
@@ -194,22 +194,21 @@ object GroupedKMeans {
     val centDf = centroidFrame(spark, dir, k, iters)
       .filter(col("group").isin(roles.toSeq.map(Long.box): _*))
     val probedDf = probed.toSeq.toDF("group", "cid")
-    assign(rolePoints(spark, dir).filter(col("group").isin(roles.toSeq.map(Long.box): _*)),
-      centDf)
+    val probedRows = assign(
+      rolePoints(spark, dir).filter(col("group").isin(roles.toSeq.map(Long.box): _*)), centDf)
       .join(broadcast(probedDf), Seq("group", "cid"), "left_semi") // cell pruning
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("qd", l2_dist(col("vec"), col("qvec")))
-      .groupBy(col("id").as("block_id"))
-      .agg(min("qd").as("qd")) // block dedup across role partitions
-      .orderBy(col("qd"), col("block_id"))
-      .limit(topk)
+    // merge across role partitions with block dedup: the role-partition
+    // merge tail (a block is its own document, Rbac.blocks)
+    Partitioned.roleMergeTopK(spark, dir,
+      probedRows.select(col("id").as("block_id"), col("id").as("document_id"),
+        col("vec").as("embedding")),
+      topk)
       .select("block_id")
   }
 
-  /** (group=role, id=block, vec) — the role-partitioned corpus. */
+  /** (group=role, id=block, vec) — the role layout's rows, renamed. */
   private[graft] def rolePoints(spark: SparkSession, dir: String): DataFrame =
-    Rbac.blocks(spark, dir)
-      .join(Rbac.permissions(spark, dir), "document_id")
-      .select(col("role_id").as("group"), col("block_id").as("id"),
+    Partitioned.roleLayout(spark, dir)
+      .select(col("partition_role").as("group"), col("block_id").as("id"),
         col("embedding").as("vec"))
 }

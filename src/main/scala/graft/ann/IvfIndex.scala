@@ -363,27 +363,20 @@ object IvfIndex {
 
   /** B10: qd-tree routed search (qd_tree.py:644
     * find_relevant_partitions): route to exactly the leaves whose
-    * role-set signature INTERSECTS the user's roles. A doc is
-    * accessible iff its granting set intersects the user's roles, so
-    * signature routing is LOSSLESS — the routed scan holds exactly the
-    * accessible blocks and the result equals the prefilter answer
-    * (shared DuckDB oracle). `nprobe > 0` additionally prunes the
+    * role-set signature INTERSECTS the user's roles. A leaf's
+    * signature IS its docs' granting role set, so "signature
+    * intersects the user's roles" ⟺ "the doc is granted by ≥1 user
+    * role": the routing is the one permission filter (`Rbac.restrict`,
+    * as in `Partitioned.combPartitionTopK`), the routed scan holds
+    * exactly the accessible blocks and the result equals the prefilter
+    * answer (shared DuckDB oracle). `nprobe > 0` additionally prunes the
     * vector dimension of the leaf key (the recall/latency knob the
     * qd-tree layout offers at scale — asserted ≥ recall floor in
     * ScalaTest); 0 scans all routed cells = exact.
     */
   def qdTreeSearch(spark: SparkSession, dir: String, userId: Long, k: Int = 8,
                    nprobe: Int = 0, topk: Int = 10): DataFrame = {
-    val ur = Rbac.rolesOf(spark, dir, userId)
-    // leaf signatures intersecting the user's roles (tiny: ≤ #combs)
-    val routedSigs = Rbac.permissions(spark, dir)
-      .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
-      .select("comb_key", "role_id").distinct()
-      .join(broadcast(ur), "role_id")
-      .select("comb_key").distinct()
-    val base = Rbac.blocks(spark, dir)
-      .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
-      .join(broadcast(routedSigs), Seq("comb_key"), "left_semi") // leaf routing
+    val base = Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId) // leaf routing
     val routed = if (nprobe > 0) {
       // vector-side leaf pruning: cell computed inside the scan (no join
       // against the assignment — a corpus-sized semi-join at scale); at

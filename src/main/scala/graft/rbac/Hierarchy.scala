@@ -116,13 +116,9 @@ object Hierarchy {
     * actually buys scan reduction. Deterministic and fully
     * SQL-replayed (recursive CTE feeding the same layout CTE as A17).
     */
-  private val layoutCache = new graft.SessionFrameCache[(String, Double, Int)]
-
   def costModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                       nQueries: Int = 20): DataFrame =
-    layoutCache.getOrElseUpdate(spark, (dir, alpha, nQueries))(
-      Partitioned.buildCostModelLayoutFrom(spark, dir,
-        effectiveUserRoles(spark, dir), alpha, nQueries).persist())
+    Partitioned.cachedCostModelLayout(spark, dir, "tree", alpha, nQueries)
 
   /** A19 step 3: per-user selectivity under the HIERARCHY — the
     * second, structurally different permission distribution the layout
@@ -219,7 +215,5 @@ object Hierarchy {
     */
   def dagCostModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                          nQueries: Int = 20): DataFrame =
-    layoutCache.getOrElseUpdate(spark, (dir + "#dag", alpha, nQueries))(
-      Partitioned.buildCostModelLayoutFrom(spark, dir,
-        dagEffectiveUserRoles(spark, dir), alpha, nQueries).persist())
+    Partitioned.cachedCostModelLayout(spark, dir, "dag", alpha, nQueries)
 }

@@ -23,7 +23,15 @@ object Partitioned {
     * `documentblocks_role_%` tables (initialize_partitions.py:350).
     */
   def roleLayout(spark: SparkSession, dir: String): DataFrame =
-    Rbac.blocks(spark, dir)
+    roleLayoutOf(spark, dir, Rbac.blocks(spark, dir))
+
+  /** THE role-layout rows of a block frame (block_id, document_id,
+    * embedding), one per granting role — also the materialized layout,
+    * its insert routing (`Layouts`) and `GroupedKMeans.rolePoints`.
+    */
+  private[graft] def roleLayoutOf(spark: SparkSession, dir: String,
+                                  blocks: DataFrame): DataFrame =
+    blocks
       .join(Rbac.permissions(spark, dir), "document_id")
       .select(col("role_id").as("partition_role"), col("block_id"),
         col("document_id"), col("embedding"))
@@ -110,30 +118,6 @@ object Partitioned {
       .withColumn("partition_id",
         ascii(substring(md5(col("comb_key")), 1, 1)) % nParts)
 
-  /** USER role combinations (user-side, ≤ #role-pairs — distinct from
-    * `combKeys` which is the DOC-side granting-set signature): each
-    * user's sorted role set, the unit the reference's cost model
-    * assigns to partitions (init_user_role_combination_data,
-    * AnonySys_dynamic_partition.py:38).
-    */
-  def userCombs(spark: SparkSession, dir: String): DataFrame =
-    userCombsFrom(Rbac.userRoles(spark, dir))
-
-  /** Same, from an explicit (user_id, role_id) frame — the hierarchy
-    * layout injects the closure-expanded roles here (Hierarchy
-    * .costModelLayout); every downstream comb derivation follows.
-    */
-  private[rbac] def userCombsFrom(ur: DataFrame): DataFrame =
-    ur.groupBy("user_id").agg(Rbac.combKey(Rbac.roleSet).as("comb_key"))
-
-  /** USER-side (comb_key, role_id) pairs of every user role-comb. */
-  def combRoles(spark: SparkSession, dir: String): DataFrame =
-    combRolesFrom(Rbac.userRoles(spark, dir))
-
-  private[rbac] def combRolesFrom(ur: DataFrame): DataFrame =
-    ur.join(userCombsFrom(ur), "user_id")
-      .select("comb_key", "role_id").distinct()
-
   /** (comb_key, document_id): the docs a user-comb can access — ONE
     * derivation shared by the cost-model layout build, the routed
     * search's partition doc sets, and the calibration validation, so
@@ -145,11 +129,25 @@ object Partitioned {
 
   private[rbac] def combAccessibleDocsFrom(spark: SparkSession, dir: String,
                                            ur: DataFrame): DataFrame =
-    combRolesFrom(ur)
+    Rbac.combRolesFrom(ur)
       .join(Rbac.permissions(spark, dir), "role_id")
       .select("comb_key", "document_id").distinct()
 
-  private val layoutCache = new graft.SessionFrameCache[(String, Double, Int)]
+  private val layoutCache = new graft.SessionFrameCache[(String, String, Double, Int)]
+
+  /** The one cost-model layout cache, keyed by (dir, permission model
+    * `flat`/`tree`/`dag`, α, workload). */
+  private[rbac] def cachedCostModelLayout(spark: SparkSession, dir: String, model: String,
+                                          alpha: Double, nQueries: Int): DataFrame = {
+    val ur: Rbac.RoleModel = model match {
+      case "flat" => Rbac.userRoles
+      case "tree" => Hierarchy.effectiveUserRoles
+      case "dag" => Hierarchy.dagEffectiveUserRoles
+    }
+    // index metadata (≤ #combs rows), persisted by the build
+    layoutCache.getOrElseUpdate(spark, (dir, model, alpha, nQueries))(
+      buildCostModelLayoutFrom(spark, dir, ur(spark, dir), alpha, nQueries))
+  }
 
   /** A17: cost-model dynamic partition assignment — the reference's
     * research contribution (AnonySys_dynamic_partition.py), as a batch
@@ -175,15 +173,7 @@ object Partitioned {
     */
   def costModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                       nQueries: Int = 20): DataFrame =
-    // the layout is index metadata (≤ #combs rows), consumed by the
-    // layout query, the routed search, and the space report — compute
-    // once per (dir, α, workload) and persist, like the IVF caches
-    layoutCache.getOrElseUpdate(spark, (dir, alpha, nQueries))(
-      buildCostModelLayout(spark, dir, alpha, nQueries).persist())
-
-  private def buildCostModelLayout(spark: SparkSession, dir: String, alpha: Double,
-                                   nQueries: Int): DataFrame =
-    buildCostModelLayoutFrom(spark, dir, Rbac.userRoles(spark, dir), alpha, nQueries)
+    cachedCostModelLayout(spark, dir, "flat", alpha, nQueries)
 
   /** The layout build over an EXPLICIT (user_id, role_id) frame — the
     * flat path passes Rbac.userRoles; the hierarchy path passes the
@@ -202,7 +192,7 @@ object Partitioned {
       .groupBy("comb_key").agg(countDistinct("document_id").as("n_docs"))
     val weights = Maintenance.workloadGen(spark, dir, nQueries)
       .select("user_id")
-      .join(userCombsFrom(ur), "user_id")
+      .join(Rbac.userCombsFrom(ur), "user_id")
       .groupBy("comb_key").agg(count(lit(1)).as("n_queries"))
     val scored = combDocs
       .join(weights, Seq("comb_key"), "left")

@@ -153,9 +153,21 @@ object Rbac {
 
   /** THE comb_key definition: a role set's ids, comma-joined — a doc's
     * granting set (`Partitioned.combRoleSets`) and a user's held set
-    * (`Partitioned.userCombsFrom`) alike.
+    * (`userCombsFrom`) alike.
     */
   def combKey(roles: Column): Column = concat_ws(",", roles)
+
+  /** (user_id, comb_key): each user's held role set in `ur` — the unit
+    * the cost model assigns to partitions (AnonySys_dynamic_partition
+    * .py:38) and users share a selectivity by.
+    */
+  def userCombsFrom(ur: DataFrame): DataFrame =
+    ur.groupBy("user_id").agg(combKey(roleSet).as("comb_key"))
+
+  /** USER-side (comb_key, role_id) pairs of every user comb of `ur`. */
+  def combRolesFrom(ur: DataFrame): DataFrame =
+    ur.join(userCombsFrom(ur), "user_id")
+      .select("comb_key", "role_id").distinct()
 
   /** Pre-filtered exact L2 top-k (common_function.py:134) under the
     * permission model `ur`.
@@ -207,20 +219,15 @@ object Rbac {
     // count back to users: O(combos × grants) instead of O(users × docs).
     val roleBlocks = permissions(spark, dir)
       .join(b, "document_id") // (role_id, document_id) actually backed by blocks
-    val userCombos = ur(spark, dir)
-      .groupBy("user_id")
-      .agg(roleSet.as("rs"))
-      .withColumn("comb_key", combKey(col("rs")))
-    // (comb_key, role_id) exploded → EQUI-join with the grant rows. The
+    val held = ur(spark, dir)
+    // (comb_key, role_id) pairs → EQUI-join with the grant rows. An
     // array_contains formulation is a BroadcastNestedLoopJoin evaluating
     // |combos| predicates per grant row — the equi-join hashes once.
-    val combRoles = userCombos.select("comb_key", "rs").distinct()
-      .select(col("comb_key"), explode(col("rs")).as("role_id"))
-    val comboCounts = broadcast(combRoles)
+    val comboCounts = broadcast(combRolesFrom(held))
       .join(roleBlocks, "role_id")
       .groupBy("comb_key")
       .agg(countDistinct("document_id").as("accessible_blocks"))
-    userCombos.select("user_id", "comb_key")
+    userCombsFrom(held)
       .join(broadcast(comboCounts), "comb_key")
       .crossJoin(broadcast(total))
       .select(col("user_id"), col("accessible_blocks"),

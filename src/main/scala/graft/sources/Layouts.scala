@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.rbac.Rbac
+import graft.rbac.{Partitioned, Rbac}
 
 /** Materialized physical layouts — the write-side of the reference's
   * partition tables (controller/baseline/prefilter/initialize_partitions
@@ -34,10 +34,7 @@ object Layouts {
                                 blocks: DataFrame, outDir: String): String = {
     val path = s"$outDir/blocks_by_role"
     if (!Files.exists(Paths.get(path))) {
-      blocks
-        .join(Rbac.permissions(spark, dir), "document_id")
-        .select(col("role_id").as("partition_role"), col("block_id"),
-          col("document_id"), col("embedding"))
+      Partitioned.roleLayoutOf(spark, dir, blocks)
         .withColumn("batch_id", lit(0L)) // base build = batch 0
         .repartition(col("partition_role")) // one writer per partition dir
         .write.partitionBy("partition_role").mode("overwrite").parquet(path)
@@ -64,10 +61,7 @@ object Layouts {
     */
   def compactInserts(spark: SparkSession, dir: String, layoutPath: String,
                      inserts: DataFrame, batchId: Long = 1L): Unit = {
-    val routed = inserts
-      .join(Rbac.permissions(spark, dir), "document_id")
-      .select(col("role_id").as("partition_role"), col("block_id"),
-        col("document_id"), col("embedding"))
+    val routed = Partitioned.roleLayoutOf(spark, dir, inserts)
     val existing = graft.Tables.parquet(spark, layoutPath)
       .select("partition_role", "block_id")
     val toAppend = routed
@@ -360,7 +354,7 @@ object Layouts {
       val path = s"$out/blocks_by_costmodel"
       if (!Files.exists(Paths.get(path))) {
         Rbac.blocks(spark, dir)
-          .join(graft.rbac.Partitioned.costModelPartitionDocs(spark, dir, alpha, nQueries),
+          .join(Partitioned.costModelPartitionDocs(spark, dir, alpha, nQueries),
             "document_id")
           .select(col("partition_id"), col("block_id"), col("document_id"),
             col("embedding"))
@@ -403,7 +397,7 @@ object Layouts {
                        userId: Long, k: Int): DataFrame = {
     val roleIds = Rbac.rolesOf(spark, dir, userId)
       .collect().map(_.getLong(0)) // tiny: the user's 1-2 roles
-    graft.rbac.Partitioned.roleMergeTopK(spark, dir,
+    Partitioned.roleMergeTopK(spark, dir,
       graft.Tables.parquet(spark, layoutPath)
         .filter(col("partition_role").isin(roleIds: _*)), // partition pruning
       k)

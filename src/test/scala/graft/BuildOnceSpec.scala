@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The index-model stores build each key once: racing first touches of
@@ -64,5 +66,25 @@ class BuildOnceSpec extends AnyFunSuite {
     assert(store.getOrElseUpdate(2)(sys.error("rebuilt")) == 20)
     assert(store.getOrElseUpdate(1)(sys.error("rebuilt")) == 10)
     assert(builds.get == 2)
+  }
+
+  test("two threads measuring one point run the slow probe once") {
+    val dir = freshDir() // a key no other spec has measured
+    val start = new CountDownLatch(1)
+    val runs = new java.util.concurrent.atomic.AtomicInteger
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Double]
+    val threads = (1 to 2).map(_ => new Thread(() => {
+      start.await()
+      got.add(ann.GraphSearch.measure(dir, "race", 2, 64) {
+        runs.incrementAndGet()
+        Thread.sleep(500) // a probe walk: long enough for the racer to arrive
+        0.5
+      })
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    assert(got.asScala.toSeq == Seq(0.5, 0.5))
+    assert(runs.get == 1, s"the probe body ran ${runs.get} times for one point")
   }
 }

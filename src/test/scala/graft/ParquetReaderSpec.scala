@@ -279,6 +279,26 @@ class SourcePolicySpec extends AnyFunSuite {
       ownTail.findAllMatchIn(src).map(m => (m.group(1), m.group(2))) }
     assert(!own.contains(("l2_dist", "embedding")), s"hand-written L2 tails: $own")
     assert(count(tail) == 1 + own.size, s"a dist tail outside Ann.firstK: $own")
+    // ...and an L2 tail under any other names: an l2_dist column that
+    // the same def orders and limits. Only two stay, neither an exact
+    // L2 over the corpus: half precision (`hvec`) and PCA's projected
+    // short list (`proj`), which Ann.firstK re-ranks exactly
+    val l2Col = ("""withColumn\("(\w+)", l2_dist\(col\("(\w+)"\), col\("(\w+)"\)\)\)""" +
+      """|l2_dist\(col\("(\w+)"\), col\("(\w+)"\)\)\.as\("(\w+)"\)""").r
+    val l2Tails = ConsumerScan.sources("src/main/scala").flatMap { case (f, src) =>
+      l2Col.findAllMatchIn(src).flatMap { m =>
+        val (name, a, b) =
+          if (m.group(1) != null) (m.group(1), m.group(2), m.group(3))
+          else (m.group(6), m.group(4), m.group(5))
+        val rest = src.substring(m.end)
+        val sameDef = rest.take("""\bdef\b""".r.findFirstMatchIn(rest).fold(rest.length)(_.start))
+        val ranked = ("""(?s)\.orderBy\(col\("""" + name + """"\)[^\n]*\)\s*\.limit\(""").r
+        ranked.findFirstIn(sameDef).map(_ => s"$f: l2_dist($a, $b)")
+      }
+    }
+    assert(l2Tails.sorted == Seq(
+      "graft/ann/Half.scala: l2_dist(hvec, qvec)", "graft/ann/Pca.scala: l2_dist(proj, qproj)"),
+      s"hand-written L2 order/limit tails: $l2Tails")
     // the one query row: Rbac.queryVector
     val queryRow =
       """(?s)filter\(col\("vec_id"\) ===[^\n]*\s*\.select\(col\("embedding"\)\.as\("qvec"\)\)""".r
@@ -326,6 +346,41 @@ class SourcePolicySpec extends AnyFunSuite {
     val locks = filesWith("""\.synchronized\b""".r)
     assert(locks == Seq("graft/SessionFrameCache.scala"),
       s"hand-rolled locks outside BuildOnce: $locks")
+    // a bare TrieMap memo runs its build in every racing caller; the
+    // only others are Ann's descent recorders, which record counts a
+    // build observed and build nothing
+    val recorders = """val (descentCandStats|descentInitStats) =\s*scala\.collection\.concurrent\.TrieMap""".r
+    val trieMaps = sources.filter(_._1 != "graft/SessionFrameCache.scala")
+      .filter { case (_, src) => "TrieMap".r.findAllMatchIn(src).size >
+        recorders.findAllMatchIn(src).size }
+      .map(_._1)
+    assert(trieMaps.isEmpty, s"TrieMap stores outside BuildOnce / SessionCache: $trieMaps")
+    assert(sources.map { case (_, src) => recorders.findAllMatchIn(src).size }.sum == 2)
+  }
+
+  test("one derivation per layout: role rows, comb routing, user combs, layout cache, degree cap") {
+    val sources = ConsumerScan.sources("src/main/scala")
+    def count(re: scala.util.matching.Regex): Int =
+      sources.map { case (_, src) => re.findAllMatchIn(src).size }.sum
+    def source(f: String): String = sources.find(_._1 == f).map(_._2).get
+    // the role layout rows: Partitioned.roleLayoutOf, which the
+    // materialized layout, its insert routing and GroupedKMeans' points call
+    assert(count("""\.join\(Rbac\.permissions\(spark, dir\), "document_id"\)""".r) == 1,
+      "a second block → granting-role layout derivation")
+    // the one M_max degree cap: GraphSearch.degreeCap
+    assert(count("""col\("rn"\) <= 2 \* gk""".r) == 1, "a second graph degree cap")
+    // comb and qd-tree leaf routing IS the permission filter
+    assert(!source("graft/ann/IvfIndex.scala").contains("Rbac.permissions"),
+      "qd-tree routing re-derives the grant rows")
+    // the user-comb frames live in Rbac
+    for (d <- Seq("userCombsFrom", "combRolesFrom"))
+      assert(sources.collect { case (f, src) if src.contains(s"def $d") => f } ==
+        Seq("graft/rbac/Rbac.scala"), s"$d defined outside Rbac")
+    // one cost-model layout cache, keyed by permission model
+    assert(!source("graft/rbac/Hierarchy.scala").contains("layoutCache"))
+    assert(count("\"#dag\"".r) == 0, "a dataset-dir suffix keying a layout cache")
+    // A21's graph indexes and walks belong to the routed partition set
+    assert(count("""dynpart\$\{?userId""".r) == 0, "a user-keyed partition graph tag")
   }
 
   test("one sidecar writer: only Verify writes, through Sidecars.write") {

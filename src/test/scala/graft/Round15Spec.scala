@@ -58,4 +58,19 @@ class Round15Spec extends AnyFunSuite {
     assert(GraphSearch.partitionProbed(spark, sf, u).isEmpty,
       "oracle-SF policy recorded probe points despite the pin")
   }
+
+  test("users sharing a routed partition set share one partition graph index, built once") {
+    val sharing = (0L to 20L)
+      .groupBy(u => GraphSearch.routedPartitionKey(spark, sf, u))
+      .collect { case (key, us) if key.nonEmpty && us.size >= 2 => us.sorted }
+    assert(sharing.nonEmpty, "no two sample users share a routed partition set")
+    val us = sharing.minBy(_.head)
+    val (a, b) = (us(0), us(1))
+    val (ga, ma) = GraphSearch.partitionGraphIndex(spark, sf, a)
+    val jobs = JobLog.jobsOf(spark)(GraphSearch.partitionGraphIndex(spark, sf, b))
+    val (gb, mb) = GraphSearch.partitionGraphIndex(spark, sf, b)
+    assert((gb eq ga) && (mb eq ma),
+      s"users $a/$b route to one partition set but got different graph indexes")
+    assert(jobs.isEmpty, s"user $b's index rebuilt what user $a's built: $jobs")
+  }
 }

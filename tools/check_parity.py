@@ -239,11 +239,24 @@ def _expected_resize_plan(rows, tw=224, th=224):
     return exp
 
 
+# mm key -> (check name, expected-rows decoder, engine columns to
+# EXCLUDE — the jpeg geometry check diffs every non-codec column and
+# leaves mean_intensity at the declared imageio boundary). Which payload
+# file feeds which key is graft.Sidecars.ToolRead, written by Verify to
+# <outDir>/tool_read.json for the keys it ran.
+DECODERS = {
+    "mm_binary_features": ("mm_binary_features", _expected_binary_features, set()),
+    "mm_audio_features": ("mm_audio_features", _expected_audio_features, set()),
+    "mm_frame_sample": ("mm_frame_sample", _expected_frame_sample, set()),
+    "mm_resize_plan": ("mm_resize_plan", _expected_resize_plan, set()),
+    "mm_png_features": ("mm_png_features", _expected_png_features, set()),
+    "mm_jpeg_features": ("mm_jpeg_features_geometry", _expected_jpeg_geometry,
+                         {"mean_intensity"}),
+}
+
+
 def _read_payloads(name):
-    path = SIDECAR_ROOT / name
-    if not path.exists():
-        return None
-    t = pq.read_table(path)
+    t = pq.read_table(SIDECAR_ROOT / name)
     cols = {c: t.column(c).to_pylist() for c in ("media_id", "kind", "payload")}
     return sorted(
         zip(cols["media_id"], cols["kind"], cols["payload"]), key=lambda r: r[0]
@@ -252,53 +265,48 @@ def _read_payloads(name):
 
 def mm_independent_checks(out_dir):
     """Re-decode the engine's payload sidecars with the independent
-    parsers above and diff its mm feature outputs row-for-row.
-    Returns (n_pass, n_fail); absent sidecars/outputs are skipped
-    (subset Verify runs)."""
-    media = _read_payloads("media_payloads.parquet")
-    png = _read_payloads("media_png.parquet")
-    jpeg = _read_payloads("media_jpeg.parquet")
-    # (check name, engine output dir, expected rows, engine columns to
-    # EXCLUDE — the jpeg geometry check diffs every non-codec column and
-    # leaves mean_intensity at the declared imageio boundary)
-    checks = []
-    if media is not None:
-        checks += [
-            ("mm_binary_features", "mm_binary_features",
-             _expected_binary_features(media), set()),
-            ("mm_audio_features", "mm_audio_features",
-             _expected_audio_features(media), set()),
-            ("mm_frame_sample", "mm_frame_sample",
-             _expected_frame_sample(media), set()),
-            ("mm_resize_plan", "mm_resize_plan",
-             _expected_resize_plan(media), set()),
-        ]
-    if png is not None:
-        checks.append(("mm_png_features", "mm_png_features",
-                       _expected_png_features(png), set()))
-    if jpeg is not None:
-        checks.append(("mm_jpeg_features_geometry", "mm_jpeg_features",
-                       _expected_jpeg_geometry(jpeg), {"mean_intensity"}))
+    parsers above and diff its mm feature outputs row-for-row, for every
+    (payload file, mm key) pair Verify listed in tool_read.json.
+    Returns (n_pass, n_fail); a listed key whose payload file, decoder
+    or output is missing is a FAIL naming the key."""
+    listing = out_dir / "tool_read.json"
+    if not listing.exists():
+        print(f"FAIL mm_independent: no {listing} (re-run graft.Verify)")
+        return 0, 1
     n_pass = n_fail = 0
-    for name, out_key, exp_rows, drop_cols in checks:
-        pdir = out_dir / out_key
-        if not pdir.exists():
+    for fname, keys in sorted(json.loads(listing.read_text()).items()):
+        if not (SIDECAR_ROOT / fname).exists():
+            for key in keys:
+                print(f"FAIL mm_independent:{key}: payload sidecar {SIDECAR_ROOT / fname} is missing")
+            n_fail += len(keys)
             continue
-        tbl = pq.read_table(pdir)
-        cols = [c for c in tbl.column_names if c not in drop_cols]
-        got = canon(zip(*[tbl.column(c).to_pylist() for c in cols]))
-        exp = canon(exp_rows)
-        if got == exp:
-            print(f"PASS mm_independent:{name} ({len(got)} rows)")
-            n_pass += 1
-        else:
-            dg = [r for r in got if r not in exp][:2]
-            de = [r for r in exp if r not in got][:2]
-            print(
-                f"FAIL mm_independent:{name}: {len(got)} vs {len(exp)} rows; "
-                f"engine-only={dg} independent-only={de}"
-            )
-            n_fail += 1
+        rows = _read_payloads(fname)
+        for key in keys:
+            pdir = out_dir / key
+            if key not in DECODERS:
+                print(f"FAIL mm_independent:{key}: no independent decoder for {fname}")
+                n_fail += 1
+                continue
+            if not pdir.exists():
+                print(f"FAIL mm_independent:{key}: no spark output at {pdir}")
+                n_fail += 1
+                continue
+            name, expected, drop_cols = DECODERS[key]
+            tbl = pq.read_table(pdir)
+            cols = [c for c in tbl.column_names if c not in drop_cols]
+            got = canon(zip(*[tbl.column(c).to_pylist() for c in cols]))
+            exp = canon(expected(rows))
+            if got == exp:
+                print(f"PASS mm_independent:{name} ({len(got)} rows)")
+                n_pass += 1
+            else:
+                dg = [r for r in got if r not in exp][:2]
+                de = [r for r in exp if r not in got][:2]
+                print(
+                    f"FAIL mm_independent:{name}: {len(got)} vs {len(exp)} rows; "
+                    f"engine-only={dg} independent-only={de}"
+                )
+                n_fail += 1
     return n_pass, n_fail
 
 
@@ -331,7 +339,7 @@ def main():
     # would fail with mystery value diffs on every sidecar-replayed key
     # — name the condition instead.
     out_fp_file = out_dir / "data_fingerprint"
-    side_fp_file = Path("/tmp/graft_oracle_sidecars/data_fingerprint")
+    side_fp_file = SIDECAR_ROOT / "data_fingerprint"
     if out_fp_file.exists() and side_fp_file.exists():
         out_fp, side_fp = out_fp_file.read_text(), side_fp_file.read_text()
         if out_fp != side_fp:

@@ -16,7 +16,8 @@ Dataset operator's function, numbered in class-loading order), the random
 suffix of a temporary directory (`file:/tmp/graft_ckpt_8512...`, a graph
 walk's checkpoint) and the round number inside it (`.../r27`, allocated
 in whatever order concurrent walks finish), and RDD ids
-(`MapPartitionsRDD[484]`, a counter every earlier job advances),
+(`MapPartitionsRDD[484]`, `VertexRDDImpl[8470]`, a counter every
+earlier job advances),
 whole-stage codegen ids and query-stage ids (both numbered in the order
 stages happen to run). sbt's own tagged log lines (`[info] ...`) are
 dropped.
@@ -43,7 +44,7 @@ PLAN_ID = re.compile(r"plan_id=\d+")
 ARRAY_HASH = re.compile(r"(\[+[BCDFIJSZ])@[0-9a-f]+")
 LAMBDA = re.compile(r"(\$Lambda)\S*?@[0-9a-f]+")
 TMP_SUFFIX = re.compile(r"(file:/\S*?_)\d{9,}(/r)?\d*")
-RDD_ID = re.compile(r"(RDD)\[\d+\]")
+RDD_ID = re.compile(r"(RDD\w*)\[\d+\]")
 CODEGEN_ID = re.compile(r"\[codegen id : \d+\]")
 FINAL_FLAG = re.compile(r"isFinalPlan=(true|false)")
 NODE_ID = re.compile(r"\((\d+)\)")

@@ -168,6 +168,12 @@ class PlanDiffTest(unittest.TestCase):
                          "block_id#NL ASC NULLS FIRST], plan_id=N")
         self.assertFalse(any(l.startswith("[") for p in plans.values() for l in p))
 
+    def test_an_rdd_subclass_id_is_normalized(self):
+        self.assertEqual(
+            plan_diff.normalize("Arguments: obj#7: scala.Tuple2, VertexRDDImpl[8470] at RDD "
+                                "at VertexRDD.scala:57"),
+            "Arguments: obj#N: scala.Tuple2, VertexRDDImpl[N] at RDD at VertexRDD.scala:57")
+
     def test_a_lambda_identity_is_normalized(self):
         self.assertEqual(
             plan_diff.normalize("Arguments: graft.M$$$Lambda$6868/0x00007f70ad80b000@39821f5d, "
