@@ -577,11 +577,26 @@ object Bench {
       build("sq")(graft.ann.SqIndex.getOrBuild(spark, sfDir))
       build("role_centroids")(graft.ann.GroupedKMeans.roleCentroids(spark, sfDir, 4, 5))
       build("recall_model")(graft.ann.RecallModel.measure(spark, sfDir)) // nprobe→recall curve
+      // role closures (A19/A20 metadata sidecars, session-cached)
+      build("role_closures") {
+        graft.rbac.Hierarchy.roleClosure(spark).count()
+        graft.rbac.Hierarchy.dagClosure(spark).count()
+      }
+      // the driver-side grant index of each permission model, which
+      // every permission filter and role routing below reads
+      build("grant_index")(Seq(graft.rbac.Rbac.Flat, graft.rbac.Rbac.Tree, graft.rbac.Rbac.Dag)
+        .foreach(graft.rbac.Rbac.grantIndex(spark, sfDir, _)))
       // one-time role-layout materialization (the pruned prefilter's
       // "index build" — steady state serves from the existing layout)
       build("role_layout")(graft.sources.Layouts.prefilterPruned(spark, sfDir, 1, 1).count())
-      // cost-model layout (A7's routed-scan substrate, round 6)
-      build("costmodel_layout")(graft.sources.Layouts.costModelLayoutPath(spark, sfDir))
+      // cost-model layout (A7's routed-scan substrate, round 6): the
+      // materialized layout, which an earlier JVM may have left on
+      // disk, and the in-memory layout plus the grant index's route
+      // map, which no earlier JVM can leave
+      build("costmodel_layout") {
+        graft.sources.Layouts.costModelLayoutPath(spark, sfDir)
+        graft.rbac.Partitioned.routedPartitionIds(spark, sfDir, 0L)
+      }
       build("bq")(graft.ann.BqIndex.getOrBuild(spark, sfDir)) // BQ thresholds (B23)
       // PCA eigenbasis + OPQ rotated codebook (B25/B30): one-time fits,
       // warmed like the other quantizers so no pool row pays them. The
@@ -595,11 +610,6 @@ object Bench {
       }
       if (warms("ann_opq_build", "ann_opq_search"))
         build("opq")(graft.ann.OpqIndex.getOrBuild(spark, sfDir))
-      // role closures (A19/A20 metadata sidecars, session-cached)
-      build("role_closures") {
-        graft.rbac.Hierarchy.roleClosure(spark).count()
-        graft.rbac.Hierarchy.dagClosure(spark).count()
-      }
       // graph-serving index state (B31-B37): the symmetrized kNN graph
       // + medoid entry points, full and base-prefix (B33) variants —
       // index builds; the WALK itself stays timed (it is the search).

@@ -83,6 +83,17 @@ object Tables {
   private val schemas =
     new ConcurrentHashMap[(String, Seq[String]), (Seq[Long], StructType)]()
 
+  /** `path`'s version stamp, the one `parquet` keys its schema by —
+    * for driver-side values read from a file (`Ann.queryArray`). None:
+    * no stable version, so no cached value.
+    */
+  private[graft] def stamp(spark: SparkSession, path: String): Option[(String, Seq[Long])] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val hp = new Path(path)
+    val qualified = hp.getFileSystem(hconf).makeQualified(hp)
+    versionStamp(hconf, qualified).map(qualified.toString -> _)
+  }
+
   private def versionStamp(hconf: Configuration, p: Path): Option[Seq[Long]] = Try {
     val fs = p.getFileSystem(hconf)
     val st = fs.getFileStatus(p)

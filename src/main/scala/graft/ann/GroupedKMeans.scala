@@ -183,8 +183,7 @@ object GroupedKMeans {
       while (i < a.length) { val x = a(i).toDouble - q(i).toDouble; s += x * x; i += 1 }
       s
     }
-    val roles = Rbac.rolesOf(spark, dir, userId)
-      .collect().map(_.getLong(0)).toSet // tiny: the user's 1-2 roles
+    val roles = Rbac.heldRoleIds(spark, dir, userId).toSet // tiny: the user's 1-2 roles
     // probe pick per role over the tiny collected centroid set
     val probed = cents.filter(c => roles.contains(c._1))
       .groupBy(_._1).iterator.flatMap { case (_, cs) =>

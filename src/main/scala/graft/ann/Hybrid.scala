@@ -44,8 +44,7 @@ object Hybrid {
                     c: Int = 100, rrfK: Int = 60): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     // dense retriever: exact cosine top-C, then ranks over the C rows
-    val vecRanked = emb.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(graft.rbac.Rbac.queryVector(spark, dir)))
+    val vecRanked = Ann.withQuery(emb.filter(col("vec_id") =!= 0), spark, dir, 0)
       .select(col("vec_id").as("doc_id"),
         round(cosine_sim(col("embedding"), col("qvec")), 4).as("sim"))
       .orderBy(col("sim").desc, col("doc_id"))

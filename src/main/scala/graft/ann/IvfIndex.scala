@@ -257,11 +257,12 @@ object IvfIndex {
   def search(spark: SparkSession, dir: String, k: Int = 16, nprobe: Int = 4,
              topk: Int = 10, qid: Long = 0): DataFrame = {
     val idx = getOrBuild(spark, dir, k)
-    val lists = probeLists(idx, Ann.queryArray(spark, dir, qid), nprobe)
+    val q = Ann.queryArray(spark, dir, qid)
+    val lists = probeLists(idx, q, nprobe)
     val probed = withCells(spark, dir, k)
       .filter(col("cell").isin(lists: _*)) // partition pruning at scale
       .filter(col("vec_id") =!= qid)
-    Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir, qid)), topk, "vec_id")
+    Ann.firstK(Ann.scored(probed, q), topk, "vec_id")
       .select(col("vec_id"), col("cell").as("list_id"))
   }
 
@@ -298,10 +299,11 @@ object IvfIndex {
     val lists = ordered.take(probes)
 
     // search job: probe predicate = filter on the cell-attached corpus
-    // (partition pruning at scale), permission = the broadcast grant
-    // semi-join — the corpus side has no Exchange (ProbePlanSpec)
+    // (partition pruning at scale), permission = `Rbac.restrict` (the
+    // grant index's InSet, or above its bound the broadcast grant
+    // semi-join) — the corpus side has no Exchange (ProbePlanSpec)
     val probed = accessible(withCells(spark, dir, k).filter(col("cell").isin(lists: _*)))
-    Ann.firstK(Ann.scored(probed, Rbac.queryVector(spark, dir)), topk, "vec_id")
+    Ann.firstK(Ann.scored(probed, q), topk, "vec_id")
       .select(col("vec_id"), col("cell").as("list_id"))
   }
 
@@ -329,14 +331,14 @@ object IvfIndex {
     val cents = spark.createDataFrame(
       idx.centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
       .toDF("list_id", "centroid")
-    Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    val pruned = Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .filter(col("vec_id") =!= qid)
       .withColumn("list_id", nearest_centroid(col("embedding"), idx.centroids))
       .join(broadcast(cents), "list_id")
       .join(broadcast(dqc), "list_id")
       .withColumn("dvc", l2_dist(col("embedding"), col("centroid")))
       .filter(abs(col("dqc") - col("dvc")) <= tau + 1e-9) // lossless prune
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir, qid)))
+    Ann.withQuery(pruned, q)
       .filter(l2_dist(col("embedding"), col("qvec")) < tau)
       .select("vec_id")
       .orderBy("vec_id")
@@ -377,17 +379,18 @@ object IvfIndex {
   def qdTreeSearch(spark: SparkSession, dir: String, userId: Long, k: Int = 8,
                    nprobe: Int = 0, topk: Int = 10): DataFrame = {
     val base = Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId) // leaf routing
+    val q = Ann.queryArray(spark, dir, 0)
     val routed = if (nprobe > 0) {
       // vector-side leaf pruning: cell computed inside the scan (no join
       // against the assignment — a corpus-sized semi-join at scale); at
       // 100 TB the leaf key (cell, comb_key) is the partition directory
       // and both predicates are partition pruning
       val idx = getOrBuild(spark, dir, k)
-      val lists = probeLists(idx, Ann.queryArray(spark, dir, 0), nprobe)
+      val lists = probeLists(idx, q, nprobe)
       base.withColumn("cell", nearest_centroid(col("embedding"), idx.centroids))
         .filter(col("cell").isin(lists: _*)).drop("cell")
     } else base
-    Ann.firstK(Ann.scored(routed, Rbac.queryVector(spark, dir)), topk, "block_id")
+    Ann.firstK(Ann.scored(routed, q), topk, "block_id")
       .select("block_id", "document_id")
   }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
-import graft.rbac.Rbac
 import graft.functions.vector._
 
 /** Random-hyperplane LSH for cosine similarity (B5).
@@ -58,13 +57,13 @@ object Lsh {
 
   /** B5: multiprobe LSH cosine search for query vec_id=0, top-k. */
   def search(spark: SparkSession, dir: String, topk: Int = 10, qid: Long = 0): DataFrame = {
-    val qsig = signatureOf(Ann.queryArray(spark, dir, qid))
+    val q = Ann.queryArray(spark, dir, qid)
+    val qsig = signatureOf(q)
     val probes = qsig +: (0 until NumBits).map(b => qsig ^ (1 << b))
-    Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    Ann.withQuery(Tables.embeddings(spark, dir).select("vec_id", "embedding")
       .withColumn("sig", signature(col("embedding")))
       .filter(col("sig").isin(probes: _*))
-      .filter(col("vec_id") =!= qid)
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir, qid)))
+      .filter(col("vec_id") =!= qid), q)
       .withColumn("sim", cosine_sim(col("embedding"), col("qvec")))
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(topk)

@@ -13,7 +13,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
 import graft.functions.vector.l2_dist
-import graft.rbac.Rbac
 
 /** B25: PCA — the dimensionality-reduction rung of the ANN ladder
   * (rotate-then-truncate before indexing; OPQ's "O"): brute-force scan
@@ -315,10 +314,10 @@ object Pca {
     val m = model(spark, dir, kPrime)
     val corpus0 = Tables.embeddings(spark, dir).filter(col("vec_id") =!= 0)
       .select("vec_id", "embedding")
-    val q = Rbac.queryVector(spark, dir)
-    val projected = project(corpus0, m, kPrime)
-    val qProjected = project(q, m, kPrime, vecCol = "qvec", outCol = "qproj")
-    val short = projected.crossJoin(broadcast(qProjected))
+    // the query's projection folds to a literal: the same per-coordinate
+    // expression as the corpus side, over the bound query vector
+    val projected = Ann.withQuery(project(corpus0, m, kPrime), spark, dir, 0)
+    val short = project(projected, m, kPrime, vecCol = "qvec", outCol = "qproj")
       .withColumn("pdist", l2_dist(col("proj"), col("qproj")))
       .orderBy(col("pdist"), col("vec_id"))
       .limit(shortlist)

@@ -141,7 +141,7 @@ object PqIndex {
     * exact re-rank of the short list. Scan bytes drop by
     * (nprobe/cells)·(1/32) of the raw corpus — the two pruning axes the
     * reference gets from IVFFlat indexes and we compose declaratively.
-    * With `userId`, the grant semi-join makes it the
+    * With `userId`, the permission filter (`Rbac.restrict`) makes it the
     * compressed RBAC serving path (prefilter semantics on the probe
     * set).
     */

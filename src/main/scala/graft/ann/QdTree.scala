@@ -233,13 +233,15 @@ object QdTree {
   def routedTopK(spark: SparkSession, dir: String, userId: Long,
                  topk: Int = 10): DataFrame = {
     val tree = getOrBuild(spark, dir)
-    val ur = Rbac.rolesOf(spark, dir, userId)
     // per-leaf role index ∩ user roles → relevant leaves → the
-    // (comb, cell) partitions to scan (index metadata, broadcast)
-    val relevantLeaves = tree.assign
+    // (comb, cell) partitions to scan (index metadata, broadcast); the
+    // user's roles come from the grant index, else a broadcast join
+    val leafRoles = tree.assign
       .select(col("leaf_id"), explode(col("roles")).as("role_id")).distinct()
-      .join(broadcast(ur), "role_id")
-      .select("leaf_id").distinct()
+    val relevantLeaves = (Rbac.grantIndex(spark, dir) match {
+      case Some(ix) => leafRoles.filter(col("role_id").isin(ix.rolesOf(userId): _*))
+      case None => leafRoles.join(broadcast(Rbac.rolesOf(spark, dir, userId)), "role_id")
+    }).select("leaf_id").distinct()
     val routedParts = tree.assign
       .join(broadcast(relevantLeaves), Seq("leaf_id"), "left_semi")
       .select("comb_key", "cell")
@@ -249,7 +251,7 @@ object QdTree {
       .withColumn("cell", graft.functions.vector.nearest_centroid(col("embedding"), idx.centroids))
       .join(broadcast(routedParts), Seq("comb_key", "cell"), "left_semi") // leaf routing
     Ann.firstK(Ann.scored(Rbac.restrict(routed, spark, dir, userId), // permission filter
-      Rbac.queryVector(spark, dir)), topk, "block_id")
+      Ann.queryArray(spark, dir, 0)), topk, "block_id")
       .select("block_id", "document_id")
   }
 }

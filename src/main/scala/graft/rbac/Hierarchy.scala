@@ -104,7 +104,7 @@ object Hierarchy {
     * the flat derivation routed through the expanded role set.
     */
   def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
-    Rbac.accessibleDocs(spark, dir, userId, effectiveUserRoles)
+    Rbac.accessibleDocs(spark, dir, userId, Rbac.Tree)
 
   /** A19 step 4: the A17 cost-model layout over the HIERARCHY's
     * permission distribution — same greedy (workload weights, log-load
@@ -118,7 +118,7 @@ object Hierarchy {
     */
   def costModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                       nQueries: Int = 20): DataFrame =
-    Partitioned.cachedCostModelLayout(spark, dir, "tree", alpha, nQueries)
+    Partitioned.cachedCostModelLayout(spark, dir, Rbac.Tree, alpha, nQueries)
 
   /** A19 step 3: per-user selectivity under the HIERARCHY — the
     * second, structurally different permission distribution the layout
@@ -130,13 +130,13 @@ object Hierarchy {
     * docs its held roles' subtrees grant.
     */
   def selectivityStats(spark: SparkSession, dir: String): DataFrame =
-    Rbac.selectivityStats(spark, dir, effectiveUserRoles)
+    Rbac.selectivityStats(spark, dir, Rbac.Tree)
 
   /** A19 step 2: exact pre-filtered L2 top-k through the expanded role
     * set — the flat prefilter's plan; only the permission model changed.
     */
   def hierarchyTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    Rbac.prefilterTopK(spark, dir, userId, k, effectiveUserRoles)
+    Rbac.prefilterTopK(spark, dir, userId, k, Rbac.Tree)
 
   // ------------------------------------------------------------------
   // DAG hierarchy: SHARED subtrees (multi-parent roles) — the
@@ -201,13 +201,13 @@ object Hierarchy {
 
   /** Docs accessible to `userId` under the DAG hierarchy. */
   def dagAccessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
-    Rbac.accessibleDocs(spark, dir, userId, dagEffectiveUserRoles)
+    Rbac.accessibleDocs(spark, dir, userId, Rbac.Dag)
 
   /** Exact pre-filtered top-k under the DAG hierarchy — same corpus
     * plan as `hierarchyTopK`, third permission model.
     */
   def dagTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    Rbac.prefilterTopK(spark, dir, userId, k, dagEffectiveUserRoles)
+    Rbac.prefilterTopK(spark, dir, userId, k, Rbac.Dag)
 
   /** A17's greedy layout fed the DAG's permission distribution — the
     * THIRD structurally different input (flat / tree / shared-subtree
@@ -215,5 +215,5 @@ object Hierarchy {
     */
   def dagCostModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                          nQueries: Int = 20): DataFrame =
-    Partitioned.cachedCostModelLayout(spark, dir, "dag", alpha, nQueries)
+    Partitioned.cachedCostModelLayout(spark, dir, Rbac.Dag, alpha, nQueries)
 }

@@ -32,7 +32,7 @@ object Maintenance {
   def deleteAwareTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     val live = Rbac.blocks(spark, dir)
       .join(broadcast(tombstones(spark, dir)), Seq("document_id"), "left_anti")
-    Ann.firstK(Ann.scored(Rbac.restrict(live, spark, dir, userId), Rbac.queryVector(spark, dir)),
+    Ann.firstK(Ann.scored(Rbac.restrict(live, spark, dir, userId), Ann.queryArray(spark, dir, 0)),
       k, "block_id")
       .select("block_id", "document_id")
   }

@@ -41,11 +41,16 @@ object Partitioned {
     * through the partitioned plan.
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val ur = Rbac.rolesOf(spark, dir, userId).select(col("role_id").as("partition_role"))
-    roleMergeTopK(spark, dir,
-      roleLayout(spark, dir)
-        .join(broadcast(ur), Seq("partition_role"), "left_semi"), // partition prune
-      k)
+    val layout = roleLayout(spark, dir)
+    // partition prune: the user's role ids from the grant index, else a
+    // broadcast semi-join against the role rows
+    val pruned = Rbac.grantIndex(spark, dir) match {
+      case Some(ix) => layout.filter(col("partition_role").isin(ix.rolesOf(userId): _*))
+      case None =>
+        val ur = Rbac.rolesOf(spark, dir, userId).select(col("role_id").as("partition_role"))
+        layout.join(broadcast(ur), Seq("partition_role"), "left_semi")
+    }
+    roleMergeTopK(spark, dir, pruned, k)
   }
 
   /** The role-partition merge, shared by A5 and its materialized form
@@ -55,7 +60,7 @@ object Partitioned {
   private[graft] def roleMergeTopK(spark: SparkSession, dir: String, rows: DataFrame,
                                    k: Int): DataFrame =
     Ann.firstK(
-      Ann.scored(rows, Rbac.queryVector(spark, dir))
+      Ann.scored(rows, Ann.queryArray(spark, dir, 0))
         // merge-dedup: a block granted via 2 user roles sits in 2 role
         // partitions with IDENTICAL distance — dedup the slim
         // (block_id, document_id, dist) rows (map-side combined), never
@@ -97,7 +102,7 @@ object Partitioned {
     */
   def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     val top = Ann.firstK(Ann.scored(
-      Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId), Rbac.queryVector(spark, dir)),
+      Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId), Ann.queryArray(spark, dir, 0)),
       k, "block_id")
       .select("block_id", "document_id", "dist")
     Rbac.permissions(spark, dir)
@@ -133,21 +138,16 @@ object Partitioned {
       .join(Rbac.permissions(spark, dir), "role_id")
       .select("comb_key", "document_id").distinct()
 
-  private val layoutCache = new graft.SessionFrameCache[(String, String, Double, Int)]
+  private val layoutCache = new graft.SessionFrameCache[(String, Rbac.RoleModel, Double, Int)]
 
-  /** The one cost-model layout cache, keyed by (dir, permission model
-    * `flat`/`tree`/`dag`, α, workload). */
-  private[rbac] def cachedCostModelLayout(spark: SparkSession, dir: String, model: String,
-                                          alpha: Double, nQueries: Int): DataFrame = {
-    val ur: Rbac.RoleModel = model match {
-      case "flat" => Rbac.userRoles
-      case "tree" => Hierarchy.effectiveUserRoles
-      case "dag" => Hierarchy.dagEffectiveUserRoles
-    }
+  /** The one cost-model layout cache, keyed by (dir, permission model,
+    * α, workload). */
+  private[rbac] def cachedCostModelLayout(spark: SparkSession, dir: String,
+                                          model: Rbac.RoleModel,
+                                          alpha: Double, nQueries: Int): DataFrame =
     // index metadata (≤ #combs rows), persisted by the build
     layoutCache.getOrElseUpdate(spark, (dir, model, alpha, nQueries))(
-      buildCostModelLayoutFrom(spark, dir, ur(spark, dir), alpha, nQueries))
-  }
+      buildCostModelLayoutFrom(spark, dir, model.frame(spark, dir), alpha, nQueries))
 
   /** A17: cost-model dynamic partition assignment — the reference's
     * research contribution (AnonySys_dynamic_partition.py), as a batch
@@ -173,7 +173,7 @@ object Partitioned {
     */
   def costModelLayout(spark: SparkSession, dir: String, alpha: Double = 2.0,
                       nQueries: Int = 20): DataFrame =
-    cachedCostModelLayout(spark, dir, "flat", alpha, nQueries)
+    cachedCostModelLayout(spark, dir, Rbac.Flat, alpha, nQueries)
 
   /** The layout build over an EXPLICIT (user_id, role_id) frame — the
     * flat path passes Rbac.userRoles; the hierarchy path passes the
@@ -289,15 +289,31 @@ object Partitioned {
   /** The user's routed partition ids — bounded driver metadata (the
     * comb maps to one partition; like prunedRoleSearch's role ids).
     * ONE definition shared by A7's routed scan, A21's per-partition
-    * graph serving, and their specs.
+    * graph serving, and their specs. Read from the grant index's route
+    * map (`costModelRoutes`) with no job; above the index bound, one
+    * join of the layout with the user's comb, collected.
     */
   def routedPartitionIds(spark: SparkSession, dir: String, userId: Long,
                          alpha: Double = 2.0): Seq[Integer] =
-    costModelLayout(spark, dir, alpha)
-      .join(Rbac.rolesOf(spark, dir, userId).agg(Rbac.combKey(Rbac.roleSet).as("comb_key")),
-        "comb_key")
-      .select("partition_id").distinct()
-      .collect().map(r => Int.box(r.getInt(0))).toSeq
+    Rbac.grantIndex(spark, dir) match {
+      case Some(ix) =>
+        ix.combOf(userId).flatMap(costModelRoutes(spark, dir, ix, alpha).get)
+          .map(Int.box).toSeq
+      case None =>
+        costModelLayout(spark, dir, alpha)
+          .join(Rbac.rolesOf(spark, dir, userId).agg(Rbac.combKey(Rbac.roleSet).as("comb_key")),
+            "comb_key")
+          .select("partition_id").distinct()
+          .collect().map(r => Int.box(r.getInt(0))).toSeq
+    }
+
+  /** The flat cost-model layout's comb key → partition id map at α,
+    * collected once into the grant index `ix`.
+    */
+  private def costModelRoutes(spark: SparkSession, dir: String, ix: Rbac.GrantIndex,
+                                     alpha: Double): Map[String, Int] =
+    ix.routes(alpha)(costModelLayout(spark, dir, alpha).select("comb_key", "partition_id")
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap)
 
   /** A7: dynamic-partition search over the COST-MODEL layout
     * (search.py:31): the user's role combination routes to its
@@ -322,7 +338,7 @@ object Partitioned {
     val layoutPath = graft.sources.Layouts.costModelLayoutPath(spark, dir, alpha)
     val routed = Ann.scored(Tables.parquet(spark, layoutPath)
       .filter(col("partition_id").isin(pids: _*)), // directory pruning
-      Rbac.queryVector(spark, dir))
+      Ann.queryArray(spark, dir, 0))
     // permission filter at merge time — the shared partition holds
     // blocks of other combs the user cannot read; the per-user grant
     // rows are bounded by the prefilter family's documented assumption
@@ -351,7 +367,7 @@ object Partitioned {
     */
   def userPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
     Ann.firstK(Ann.scored(userLayout(spark, dir).filter(col("partition_user") === userId),
-      Rbac.queryVector(spark, dir)), k, "block_id")
+      Ann.queryArray(spark, dir, 0)), k, "block_id")
       .select("block_id", "document_id")
 
   /** A8: batch ground truth (compute_ground_truth.py): exact top-k per

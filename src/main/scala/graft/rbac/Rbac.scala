@@ -1,9 +1,13 @@
 package graft.rbac
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.DynamicVariable
 
-import graft.Tables
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftInternal
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+
+import graft.{BuildOnce, SessionCache, Tables}
 import graft.ann.Ann
 
 /** Permission-aware vector search — the reference's core capability.
@@ -26,7 +30,10 @@ import graft.ann.Ann
   * layout. That question is answered here and nowhere else:
   *   - `rolesOf`: the user's role rows under a permission model (flat
   *     `userRoles`, or the tree/DAG effective roles of `Hierarchy`);
-  *   - `restrict`: the one permission filter, a left-semi join of a
+  *   - `grantIndex`: the same grants as driver-side maps (user → roles,
+  *     role → docs, user → comb key), below `DriverGrantRowsMax`;
+  *   - `restrict`: the one permission filter — the user's doc ids as an
+  *     `InSet` filter, or above the index bound a left-semi join of a
   *     frame's doc key against the user's grant rows;
   *   - `accessibleDocs`: the same grant rows as a DISTINCT doc set, for
   *     callers that want the set itself;
@@ -35,20 +42,41 @@ import graft.ann.Ann
   *
   * Architecture note (Spark-first, not a port): the reference prunes the
   * ANN scan with per-role PARTITION TABLES + per-table indexes
-  * (controller/baseline/prefilter/initialize_partitions.py). On Spark the
-  * same pruning is a BROADCAST SEMI-JOIN of the user's (small) grant
-  * rows into the (100 TB) block scan — no data movement on the big side,
-  * and the top-k is a TakeOrderedAndProject (per-partition bounded heap,
-  * k rows shipped per partition), not a global sort.
+  * (controller/baseline/prefilter/initialize_partitions.py) and answers
+  * its grant lookups from PostgreSQL indexes (common_function.py:80).
+  * On Spark the grant lookup is the driver-side `grantIndex` while the
+  * model's grant rows fit under `DriverGrantRowsMax`: the user's doc ids
+  * bind into the plan as an `InSet` filter, evaluated inside the scan
+  * stage on every query, and the call runs no grant job. Only above the
+  * bound is the pruning a BROADCAST SEMI-JOIN of the user's (small)
+  * grant rows into the (100 TB) block scan — no data movement on the
+  * big side. Either way the top-k is a TakeOrderedAndProject
+  * (per-partition bounded heap, k rows shipped per partition), not a
+  * global sort.
   */
 object Rbac {
   val NumRoles = 10
 
   /** A permission model: the (user_id, role_id) frame a user's grants
-    * derive from — flat `userRoles`, `Hierarchy.effectiveUserRoles`
-    * (role tree) or `Hierarchy.dagEffectiveUserRoles` (role DAG).
+    * derive from — `Flat` (`userRoles`), `Tree`
+    * (`Hierarchy.effectiveUserRoles`) or `Dag`
+    * (`Hierarchy.dagEffectiveUserRoles`). A value, not a function, so
+    * the grant index and the cost-model layout cache key on it.
     */
-  type RoleModel = (SparkSession, String) => DataFrame
+  sealed abstract class RoleModel {
+    def frame(spark: SparkSession, dir: String): DataFrame
+  }
+  case object Flat extends RoleModel {
+    def frame(spark: SparkSession, dir: String): DataFrame = userRoles(spark, dir)
+  }
+  case object Tree extends RoleModel {
+    def frame(spark: SparkSession, dir: String): DataFrame =
+      Hierarchy.effectiveUserRoles(spark, dir)
+  }
+  case object Dag extends RoleModel {
+    def frame(spark: SparkSession, dir: String): DataFrame =
+      Hierarchy.dagEffectiveUserRoles(spark, dir)
+  }
 
   // UserRoles / PermissionAssignment are small DERIVED DIMENSION tables
   // consumed by nearly every RBAC query — persist once per dataset, the
@@ -86,8 +114,8 @@ object Rbac {
       col("embedding"))
 
   /** The one query row: corpus vector `qid` as one row, `qvec` — by
-    * default the fixed benchmark query (vec_id = 0). Every exact L2
-    * search scores against it (`Ann.scored`).
+    * default the fixed benchmark query (vec_id = 0). Read only by
+    * `Ann.queryArray`, whose driver-side array every query site binds.
     */
   def queryVector(spark: SparkSession, dir: String, qid: Long = 0): DataFrame =
     Tables.embeddings(spark, dir)
@@ -98,12 +126,109 @@ object Rbac {
     * (a one-value IN plans as `user_id = u`). */
   private def heldRoles(spark: SparkSession, dir: String, users: Seq[Long],
                         ur: RoleModel): DataFrame =
-    ur(spark, dir).filter(col("user_id").isin(users: _*))
+    ur.frame(spark, dir).filter(col("user_id").isin(users: _*))
 
   /** The user's `role_id` rows under the permission model `ur`. */
   def rolesOf(spark: SparkSession, dir: String, userId: Long,
-              ur: RoleModel = userRoles): DataFrame =
+              ur: RoleModel = Flat): DataFrame =
     heldRoles(spark, dir, Seq(userId), ur).select("role_id")
+
+  /** Driver-side grant index of one permission model: user → held role
+    * ids, role → granted doc ids, user → comb key (`userCombsFrom`), and
+    * per α the cost-model layout's comb key → partition id map
+    * (`Partitioned.routedPartitionIds` fills it on first use). It holds
+    * grant and routing metadata only, never answers.
+    */
+  private[graft] final class GrantIndex(roles: Map[Long, Array[Long]],
+                                        docs: Map[Long, Array[Long]],
+                                        combs: Map[Long, String]) {
+    def rolesOf(userId: Long): Seq[Long] = roles.getOrElse(userId, Array.emptyLongArray).toSeq
+
+    /** The user's distinct granted doc ids, ascending. */
+    def docsOf(userId: Long): Seq[Long] =
+      rolesOf(userId).flatMap(r => docs.getOrElse(r, Array.emptyLongArray)).distinct.sorted
+
+    def combOf(userId: Long): Option[String] = combs.get(userId)
+
+    private val routeMaps = new BuildOnce[Double, Map[String, Int]]
+
+    def routes(alpha: Double)(build: => Map[String, Int]): Map[String, Int] =
+      routeMaps.getOrElseUpdate(alpha)(build)
+  }
+
+  /** Size ceiling of the driver grant path: the model's user-role rows
+    * plus its permission rows. Below it the grants are collected once
+    * into a `GrantIndex` and each call binds the user's doc ids as an
+    * `InSet` — no grant job per call, where the broadcast semi-join runs
+    * two (its build-side collect and the broadcast). Above it — the
+    * org-sized grant tables of a large deployment — every strategy keeps
+    * the broadcast semi-join, the only path that runs at any size.
+    *
+    * The bound also caps one user's `InSet` (at most the model's
+    * permission rows), whose ids ride in the plan of every call.
+    * Measured (4 vCPUs, local[4], the sf0.1 corpus of 2k blocks, median
+    * per call): a top-k behind an `InSet` of n ids against the same
+    * top-k behind a broadcast semi-join of n cached rows —
+    *   n = 2^10: 131 vs 171 ms; 2^12: 125 vs 162; 2^14: 181 vs 125;
+    *   2^16: 557 vs 137; 2^17: 1105 vs 149; 2^18: 2679 vs 178 ms —
+    * so the list wins up to ~2^13 ids and costs ~8 µs per id past it
+    * (parquet pushdown of the list, planning, task serialization). The
+    * one-time collect of 2^19 rows took 172 ms. At 2^16 rows the
+    * perfbench/sf0.1 flat model (15k users, 5k docs: 39.5k rows, at most
+    * 1.8k docs per user) takes the index, while its tree and DAG models
+    * (~92k rows, up to every doc per user) keep the broadcast path; a
+    * model under the bound whose users each hold more than ~2^14 docs
+    * would pay up to ~4× per call on the index path.
+    */
+  private[graft] val DriverGrantRowsMax: Long = 65536L
+
+  private val indexCache = new SessionCache[(String, RoleModel), Option[GrantIndex]]
+  private val broadcastGrants = new DynamicVariable(false)
+
+  /** Test hook: run `body` with every strategy on the broadcast grant
+    * path, as above `DriverGrantRowsMax`.
+    */
+  private[graft] def withBroadcastGrants[T](body: => T): T =
+    broadcastGrants.withValue(true)(body)
+
+  /** The grant index of model `ur`, derived from its persisted frames —
+    * None when the rows exceed `DriverGrantRowsMax` (or under
+    * `withBroadcastGrants`). Keyed like `dimCache`, so it is never
+    * staler than the frames it is collected from.
+    */
+  private[graft] def grantIndex(spark: SparkSession, dir: String,
+                                ur: RoleModel = Flat): Option[GrantIndex] =
+    if (broadcastGrants.value) None
+    else indexCache.getOrElseUpdate(spark, (dir, ur)) {
+      val max = DriverGrantRowsMax.toInt
+      val held = ur.frame(spark, dir)
+      val urRows = held.select("user_id", "role_id").limit(max + 1).collect()
+      val permRows = if (urRows.length > max) Array.empty[Row]
+        else permissions(spark, dir).limit(max + 1 - urRows.length).collect()
+      if (urRows.length + permRows.length > max) None
+      else {
+        def grouped(rows: Array[Row]): Map[Long, Array[Long]] =
+          rows.groupMap(_.getLong(0))(_.getLong(1)).map { case (k, v) => k -> v.sorted }
+        val combs = userCombsFrom(held).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        Some(new GrantIndex(grouped(urRows), grouped(permRows), combs))
+      }
+    }
+
+  /** `c IN ids` as one `InSet` node over a bigint — `isin` builds one
+    * literal per id, which every analyzer rule walks before OptimizeIn
+    * folds them into the same set: ~40 µs per id per call (4k ids:
+    * 257 ms against 125 ms for the node, see `DriverGrantRowsMax`).
+    */
+  private def inSet(c: Column, ids: Seq[Long]): Column =
+    GraftInternal.column(InSet(GraftInternal.expression(c.cast("long")), ids.toSet[Any]))
+
+  /** The user's held role ids under `ur` — the routing key of the
+    * role-keyed layouts: the index's, else one collect of `rolesOf`.
+    */
+  private[graft] def heldRoleIds(spark: SparkSession, dir: String, userId: Long,
+                                 ur: RoleModel = Flat): Seq[Long] =
+    grantIndex(spark, dir, ur).map(_.rolesOf(userId))
+      .getOrElse(rolesOf(spark, dir, userId, ur).collect().map(_.getLong(0)).toSeq)
 
   /** The one grant-rows body, (user_id, document_id): one row per (user,
     * held role, granted doc), so a doc granted by two of a user's roles
@@ -116,9 +241,11 @@ object Rbac {
       .select("user_id", "document_id")
 
   /** The one permission filter: `df`'s rows whose `key` column names a
-    * document the user may read — a left-semi join (EXISTS) against the
-    * user's grant rows. A semi-join needs no DISTINCT on its build side,
-    * so the grant rows join as they are. The two join policies:
+    * document the user may read. Below `DriverGrantRowsMax` it is one
+    * `InSet` of the grant index's doc ids, evaluated inside the scan
+    * stage. Above it, a left-semi join (EXISTS) against the user's
+    * grant rows. A semi-join needs no DISTINCT on its build side, so the
+    * grant rows join as they are. The two join policies:
     *   - default: the probe side is the corpus (the prefilter family) —
     *     the grant rows are BROADCAST and the corpus side never moves;
     *   - `walkBounded`: the probe side is bounded by a graph walk
@@ -128,11 +255,14 @@ object Rbac {
     *     broadcast cap a forced hint pins them to.
     */
   def restrict(df: DataFrame, spark: SparkSession, dir: String, userId: Long,
-               key: String = "document_id", ur: RoleModel = userRoles,
-               walkBounded: Boolean = false): DataFrame = {
-    val g = grants(spark, dir, Seq(userId), ur).select(col("document_id").as(key))
-    df.join(if (walkBounded) g else broadcast(g), Seq(key), "left_semi")
-  }
+               key: String = "document_id", ur: RoleModel = Flat,
+               walkBounded: Boolean = false): DataFrame =
+    grantIndex(spark, dir, ur) match {
+      case Some(ix) => df.filter(inSet(col(key), ix.docsOf(userId)))
+      case None =>
+        val g = grants(spark, dir, Seq(userId), ur).select(col("document_id").as(key))
+        df.join(if (walkBounded) g else broadcast(g), Seq(key), "left_semi")
+    }
 
   /** Docs accessible to `userId` — prefilter step 1
     * (common_function.py:91: DISTINCT pa.document_id ⋈ UserRoles): the
@@ -140,13 +270,13 @@ object Rbac {
     * go through `restrict`.
     */
   def accessibleDocs(spark: SparkSession, dir: String, userId: Long,
-                     ur: RoleModel = userRoles): DataFrame =
+                     ur: RoleModel = Flat): DataFrame =
     grants(spark, dir, Seq(userId), ur).select("document_id").distinct()
 
   /** The grant rows' many-user form: DISTINCT (user_id, document_id)
     * pairs of a small user set, for batch callers. */
   def accessiblePairs(spark: SparkSession, dir: String, users: Seq[Long]): DataFrame =
-    grants(spark, dir, users, userRoles).distinct()
+    grants(spark, dir, users, Flat).distinct()
 
   /** A role set, as an aggregate: the group's sorted distinct role ids. */
   def roleSet: Column = sort_array(collect_set(col("role_id")))
@@ -171,13 +301,15 @@ object Rbac {
 
   /** Pre-filtered exact L2 top-k (common_function.py:134) under the
     * permission model `ur`.
-    * Plan at scale: parquet scan → broadcast semi-join on the grant rows
-    * → codegen'd L2 → TakeOrderedAndProject (k rows per partition).
+    * Plan at scale: parquet scan → the grant filter (`restrict`: an
+    * `InSet`, or above the index bound a broadcast semi-join) →
+    * codegen'd L2 against the literal query → TakeOrderedAndProject (k
+    * rows per partition).
     */
   def prefilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int,
-                    ur: RoleModel = userRoles): DataFrame =
+                    ur: RoleModel = Flat): DataFrame =
     Ann.firstK(Ann.scored(restrict(blocks(spark, dir), spark, dir, userId, ur = ur),
-      queryVector(spark, dir)), k, "block_id")
+      Ann.queryArray(spark, dir, 0)), k, "block_id")
       .select("block_id", "document_id")
 
   /** Post-filter: global ANN top-(overfetch*k) FIRST, then permission
@@ -186,7 +318,7 @@ object Rbac {
     */
   def postfilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int,
                      overfetch: Int = 10): DataFrame = {
-    val candidates = Ann.firstK(Ann.scored(blocks(spark, dir), queryVector(spark, dir)),
+    val candidates = Ann.firstK(Ann.scored(blocks(spark, dir), Ann.queryArray(spark, dir, 0)),
       k * overfetch, "block_id")
     Ann.firstK(restrict(candidates, spark, dir, userId), k, "block_id")
       .select("block_id", "document_id")
@@ -206,7 +338,7 @@ object Rbac {
     * metric the reference reports for every strategy.
     */
   def selectivityStats(spark: SparkSession, dir: String,
-                       ur: RoleModel = userRoles): DataFrame = {
+                       ur: RoleModel = Flat): DataFrame = {
     val b = blocks(spark, dir).select("document_id")
     // total as a broadcast 1-row frame keeps the whole plan lazy and
     // cluster-side (no driver collect).
@@ -219,7 +351,7 @@ object Rbac {
     // count back to users: O(combos × grants) instead of O(users × docs).
     val roleBlocks = permissions(spark, dir)
       .join(b, "document_id") // (role_id, document_id) actually backed by blocks
-    val held = ur(spark, dir)
+    val held = ur.frame(spark, dir)
     // (comb_key, role_id) pairs → EQUI-join with the grant rows. An
     // array_contains formulation is a BroadcastNestedLoopJoin evaluating
     // |combos| predicates per grant row — the equi-join hashes once.

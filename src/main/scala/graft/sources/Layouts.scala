@@ -395,8 +395,7 @@ object Layouts {
     */
   def prunedRoleSearch(spark: SparkSession, dir: String, layoutPath: String,
                        userId: Long, k: Int): DataFrame = {
-    val roleIds = Rbac.rolesOf(spark, dir, userId)
-      .collect().map(_.getLong(0)) // tiny: the user's 1-2 roles
+    val roleIds = Rbac.heldRoleIds(spark, dir, userId) // tiny: the user's 1-2 roles
     Partitioned.roleMergeTopK(spark, dir,
       graft.Tables.parquet(spark, layoutPath)
         .filter(col("partition_role").isin(roleIds: _*)), // partition pruning

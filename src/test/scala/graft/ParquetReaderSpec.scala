@@ -77,18 +77,21 @@ class ParquetReaderSpec extends AnyFunSuite {
     import graft.rbac.{Partitioned, Rbac}
     val sp = spark
     val k = 10
-    // (strategy, parquet reads per call)
+    // (strategy, parquet reads per call): the scanned corpus or layout
+    // only — the query vector is a literal fetched once per file version
+    // (Ann.queryArray), so no call reads the query row
     val strategies: Seq[(String, Long => DataFrame, Int)] = Seq(
-      ("prefilterTopK", u => Rbac.prefilterTopK(sp, sf, u, k), 2),
-      ("postfilterTopK", u => Rbac.postfilterTopK(sp, sf, u, k), 2),
-      ("rlsTopK", u => Rbac.rlsTopK(sp, sf, u, k), 2),
-      ("rolePartitionTopK", u => Partitioned.rolePartitionTopK(sp, sf, u, k), 2),
-      ("combPartitionTopK", u => Partitioned.combPartitionTopK(sp, sf, u, k), 2),
-      ("dynamicPartitionTopK", u => Partitioned.dynamicPartitionTopK(sp, sf, u, k), 2),
+      ("prefilterTopK", u => Rbac.prefilterTopK(sp, sf, u, k), 1),
+      ("postfilterTopK", u => Rbac.postfilterTopK(sp, sf, u, k), 1),
+      ("rlsTopK", u => Rbac.rlsTopK(sp, sf, u, k), 1),
+      ("rolePartitionTopK", u => Partitioned.rolePartitionTopK(sp, sf, u, k), 1),
+      ("combPartitionTopK", u => Partitioned.combPartitionTopK(sp, sf, u, k), 1),
+      ("dynamicPartitionTopK", u => Partitioned.dynamicPartitionTopK(sp, sf, u, k), 1),
       // after the first call the role layout is a BuildOnce hit, so no
       // call builds (and reads the corpus for) the layout's block frame
-      ("prefilterPruned", u => sources.Layouts.prefilterPruned(sp, sf, u, k), 2),
-      ("predicateAwareSearch", u => ann.IvfIndex.predicateAwareSearch(sp, sf, u, topk = k), 2))
+      ("prefilterPruned", u => sources.Layouts.prefilterPruned(sp, sf, u, k), 1),
+      // it scans the IVF index's persisted cell frame, no parquet file
+      ("predicateAwareSearch", u => ann.IvfIndex.predicateAwareSearch(sp, sf, u, topk = k), 0))
     for ((name, f, reads) <- strategies) {
       f(3L).collect() // first touch: layouts, indexes, schemas
       val bare = jobsOf(sp)(Tables.withoutSchemaCache(f(3L).collect()))
@@ -234,8 +237,12 @@ class SourcePolicySpec extends AnyFunSuite {
     // the accessible SET is for SparkEntry's report keys only; filters
     // go through Rbac.restrict
     assert(filesWith("""accessibleDocs\(""".r).filter(outsideRbac) == Seq("graft/SparkEntry.scala"))
-    // one grant join
+    // one grant join, and one grant-index filter in its place below
+    // the index bound
     assert(count("""\.join\(broadcast\(heldRoles\(""".r) == 1)
+    assert(filesWith("""inSet\(col\(key\), ix\.docsOf\(""".r) == Seq("graft/rbac/Rbac.scala"))
+    assert(count("""inSet\(col\(key\), ix\.docsOf\(""".r) == 1)
+    assert(filesWith("""new GrantIndex\(""".r) == Seq("graft/rbac/Rbac.scala"))
     // a user's roles come from Rbac.heldRoles (through rolesOf for one
     // user) — the one user-role filter, for one user or a small set
     assert(filesWith("""(?s)userRoles\([^()]*\)\s*\.filter\(col\("user_id"\)""".r).isEmpty)
@@ -311,6 +318,16 @@ class SourcePolicySpec extends AnyFunSuite {
     val queryArray = """queryVector\([^()]*\)\.head\(\)\.getSeq\[Float\]\(0\)\.toArray""".r
     assert(filesWith(queryArray) == Seq("graft/ann/Ann.scala"))
     assert(count(queryArray) == 1)
+    // ...the only reader of the query row; every query site binds the
+    // array through the one literal binding, Ann.withQuery
+    val code = ConsumerScan.sources("src/main/scala")
+    val rowReaders = code.collect {
+      case (f, src) if """(?<!def )queryVector\(""".r.findFirstIn(src).isDefined => f }
+    assert(rowReaders == Seq("graft/ann/Ann.scala"), s"query-row readers: $rowReaders")
+    val binding = """withColumn\("qvec", typedLit\(""".r
+    assert(code.collect { case (f, src) if binding.findFirstIn(src).isDefined => f } ==
+      Seq("graft/ann/Ann.scala"))
+    assert(code.map { case (_, src) => binding.findAllMatchIn(src).size }.sum == 1)
     assert(count(toArray) == 1 + count("""(?s)\.select\("proj"\)\s*\.head\(\)\.getSeq""".r))
   }
 

@@ -12,8 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.rbac.{Hierarchy, Maintenance, Partitioned, Rbac}
 
 /** The one permission path: every doc-restricted serving key filters
-  * through exactly one semi-join against the user's grant rows
-  * (`Rbac.restrict`), whose broadcast side carries no shuffle.
+  * through `Rbac.restrict` — on the broadcast grant path (above
+  * `Rbac.DriverGrantRowsMax`, forced here by `Rbac.withBroadcastGrants`)
+  * exactly one semi-join against the user's grant rows, whose broadcast
+  * side carries no shuffle.
   */
 class PermissionPlanSpec extends AnyFunSuite {
   import SparkTest._
@@ -40,6 +42,7 @@ class PermissionPlanSpec extends AnyFunSuite {
   }
 
   test("each doc-restricted key has exactly one broadcast grant semi-join, with no shuffle") {
+    // the broadcast grant path; below the bound GrantIndexSpec covers them
     val sp = spark
     val keys: Seq[(String, () => DataFrame)] = Seq(
       "prefilterTopK" -> (() => Rbac.prefilterTopK(sp, sf, 1, 10)),
@@ -52,7 +55,7 @@ class PermissionPlanSpec extends AnyFunSuite {
       "hierarchyTopK" -> (() => Hierarchy.hierarchyTopK(sp, sf, 7, 10)),
       "dagTopK" -> (() => Hierarchy.dagTopK(sp, sf, 7, 10)),
       "QdTree.routedTopK" -> (() => ann.QdTree.routedTopK(sp, sf, 1)))
-    withoutAqe(sp) {
+    withoutAqe(sp)(Rbac.withBroadcastGrants {
       for ((name, f) <- keys) {
         val plan = f().queryExecution.executedPlan
         val semis = grantSemiJoins(sp, plan)
@@ -68,7 +71,7 @@ class PermissionPlanSpec extends AnyFunSuite {
         val shuffles = build.collect { case e: ShuffleExchangeExec => e }
         assert(shuffles.isEmpty, s"$name: the broadcast grant side shuffles:\n$build")
       }
-    }
+    })
   }
 
   test("partition-pruned strategies restrict without a grant semi-join") {
@@ -97,8 +100,7 @@ class PermissionPlanSpec extends AnyFunSuite {
     val sp = spark
     val corpus = Rbac.blocks(sp, sf).select("document_id")
     for ((name, ur) <- Seq[(String, Rbac.RoleModel)](
-        "flat" -> Rbac.userRoles, "tree" -> Hierarchy.effectiveUserRoles,
-        "dag" -> Hierarchy.dagEffectiveUserRoles)) {
+        "flat" -> Rbac.Flat, "tree" -> Rbac.Tree, "dag" -> Rbac.Dag)) {
       val acc = Rbac.accessibleDocs(sp, sf, 7, ur).collect().map(_.getLong(0))
       assert(acc.length == acc.distinct.length, s"$name: accessibleDocs repeats a doc")
       val kept = Rbac.restrict(corpus, sp, sf, 7, ur = ur).collect().map(_.getLong(0))
