@@ -215,9 +215,8 @@ object Bench {
   }
 
   /** Digest of (name, size, mtime) over every file of the benched
-    * dataset — the layout tmp-root stamp (Layouts.layoutRoot) promoted
-    * into the bench artifact, so cross-round tooling can detect a
-    * testdata regeneration mechanically (round-8: sizes were re-drawn
+    * dataset, in the bench artifact, so cross-round tooling can detect
+    * a testdata regeneration mechanically (round-8: sizes were re-drawn
     * and absolute times silently stopped being comparable).
     */
   private[graft] def dataFingerprint(dir: String): String = {
@@ -229,7 +228,7 @@ object Bench {
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
           .flatMap(c => walk(c, s"$rel/${c.getName}")).toSeq
-      else if (f.isFile) Seq(s"$rel:${f.length}:${f.lastModified}")
+      else if (f.isFile) Seq((rel +: Tables.localStamp(f.getPath)).mkString(":"))
       else Seq.empty // missing path: falls through to the sentinel
     val entries = walk(root, "")
     // a missing or empty dataset dir must NEVER hash to a
@@ -579,8 +578,8 @@ object Bench {
       build("recall_model")(graft.ann.RecallModel.measure(spark, sfDir)) // nprobe→recall curve
       // role closures (A19/A20 metadata sidecars, session-cached)
       build("role_closures") {
-        graft.rbac.Hierarchy.roleClosure(spark).count()
-        graft.rbac.Hierarchy.dagClosure(spark).count()
+        graft.rbac.Hierarchy.roleClosure(spark, sfDir).count()
+        graft.rbac.Hierarchy.dagClosure(spark, sfDir).count()
       }
       // the driver-side grant index of each permission model, which
       // every permission filter and role routing below reads

@@ -66,7 +66,7 @@ object RecallCheck {
       val (iters, ef, recall) = ann.GraphSearch.nndServePolicy(spark, dir)
       println(s"MODEL_NND iters=$iters ef=$ef recall=$recall")
       // every point the sweep probed — the calibration table's rows
-      ann.GraphSearch.nndProbedPoints(dir).foreach { case (i, e, r) =>
+      ann.GraphSearch.nndProbedPoints(spark, dir).foreach { case (i, e, r) =>
         println(s"MODEL_NND_POINT iters=$i ef=$e recall=$r")
       }
       spark.stop(); return
@@ -112,7 +112,7 @@ object RecallCheck {
           println(s"PARTITION_POINT u=$u pid=$pk iters=$i ef=$e batch_recall=$r")
         }
       }
-      println(s"PARTITION_PROBE_TOTAL ${ann.GraphSearch.partitionProbeCount(dir)}")
+      println(s"PARTITION_PROBE_TOTAL ${ann.GraphSearch.partitionProbeCount(spark, dir)}")
       // the r15 sharing demo (VERDICT r14 #2 done-criterion): serve a
       // SECOND user routed to an already-probed partition set and show
       // the probe counter does not move — the policy row is layout
@@ -126,9 +126,9 @@ object RecallCheck {
             sweepKeys(ann.GraphSearch.routedPartitionKey(spark, dir, u)))
       sharer match {
         case Some(u) =>
-          val before = ann.GraphSearch.partitionProbeCount(dir)
+          val before = ann.GraphSearch.partitionProbeCount(spark, dir)
           val (i, e, r) = ann.GraphSearch.partitionServePolicy(spark, dir, u)
-          val after = ann.GraphSearch.partitionProbeCount(dir)
+          val after = ann.GraphSearch.partitionProbeCount(spark, dir)
           println(s"PARTITION_SHARED_USER u=$u " +
             s"pid=${ann.GraphSearch.routedPartitionKey(spark, dir, u)} " +
             s"(iters=$i,ef=$e,recall=$r) probes_before=$before probes_after=$after")

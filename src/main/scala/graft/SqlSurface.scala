@@ -16,14 +16,14 @@ object SqlSurface {
   // views and function registrations live in one SESSION, and sibling
   // sessions from newSession() share an applicationId but not a view
   // catalog.
-  private val registered = new SessionCache[(SparkSession, String), Unit]
+  private val registered = new SessionCache[SparkSession, Unit]
 
   /** Register testdata tables as temp views + the function surface,
     * plus the grant tables under the reference's names (`user_roles`,
     * `permission_assignment`) — `Rbac`'s frames, not a SQL re-derivation.
     */
   def init(spark: SparkSession, dir: String): Unit =
-    registered.getOrElseUpdate(spark, (spark, dir)) {
+    registered.getOrElseUpdate(spark, dir, spark) {
       GraftExtensions.install(spark)
       Tables.names.foreach { t =>
         // events needs the nanos-aware reader (Tables.events), not a raw scan

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.util.{DynamicVariable, Try}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,12 +36,12 @@ object Tables {
     * newly appended files behave exactly as with a bare read; only the
     * StructType is reused.
     *
-    * The cache holds plain JVM data, so like the sidecar arrays in
-    * SessionFrameCache's doc it outlives a session. An entry is keyed
-    * by the qualified path and the SQL confs that change parquet
-    * inference, and holds the path's version stamp:
-    *   - a file: (size, mtime), the stamp `Layouts.layoutRoot` uses;
-    *   - a directory: the mtime of its `_SUCCESS` marker, which every
+    * The cache holds plain JVM data, so like `BuildOnce`'s entries it
+    * outlives a session. An entry is keyed by the qualified path and the
+    * SQL confs that change parquet inference, and holds the path's
+    * version stamp, the one `version` is made of:
+    *   - a file: its (size, mtime);
+    *   - a directory: the stamp of its `_SUCCESS` marker, which every
     *     Spark write commit rewrites (appends included). A directory
     *     WITHOUT the marker (a write in flight, a foreign writer) is
     *     never cached: it is read as a bare read.
@@ -50,8 +50,9 @@ object Tables {
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val hp = new Path(path)
-    val qualified = hp.getFileSystem(hconf).makeQualified(hp)
-    versionStamp(hconf, qualified).filterNot(_ => schemaCacheOff.value) match {
+    val fs = hp.getFileSystem(hconf)
+    val qualified = fs.makeQualified(hp)
+    versionStamp(fs, qualified).filterNot(_ => schemaCacheOff.value) match {
       case None => spark.read.parquet(path)
       case Some(stamp) =>
         val key = (qualified.toString,
@@ -83,22 +84,31 @@ object Tables {
   private val schemas =
     new ConcurrentHashMap[(String, Seq[String]), (Seq[Long], StructType)]()
 
-  /** `path`'s version stamp, the one `parquet` keys its schema by —
-    * for driver-side values read from a file (`Ann.queryArray`). None:
-    * no stable version, so no cached value.
+  /** The data version of dataset `dir`: the version stamp of each of
+    * its tables (`names`), a fixed `Unstamped` for a table with none
+    * (missing, or a directory without its commit marker). Every derived
+    * store (`graft.Store`) keys its entries by it, so an in-place
+    * rewrite of any table re-derives what was built from the dataset.
     */
-  private[graft] def stamp(spark: SparkSession, path: String): Option[(String, Seq[Long])] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val hp = new Path(path)
-    val qualified = hp.getFileSystem(hconf).makeQualified(hp)
-    versionStamp(hconf, qualified).map(qualified.toString -> _)
+  private[graft] def version(spark: SparkSession, dir: String): Seq[Long] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    names.flatMap(n => versionStamp(fs, new Path(root, s"$n.parquet")).getOrElse(Unstamped))
   }
 
-  private def versionStamp(hconf: Configuration, p: Path): Option[Seq[Long]] = Try {
-    val fs = p.getFileSystem(hconf)
+  private val Unstamped = Seq(-1L, -1L)
+
+  /** A local file's (size, mtime) — the one modification-time read. */
+  private[graft] def localStamp(path: String): Seq[Long] =
+    stampOf(localFs.getFileStatus(new Path(new java.io.File(path).toURI)))
+
+  private lazy val localFs = FileSystem.getLocal(new Configuration())
+
+  private def stampOf(st: FileStatus): Seq[Long] = Seq(st.getLen, st.getModificationTime)
+
+  private def versionStamp(fs: FileSystem, p: Path): Option[Seq[Long]] = Try {
     val st = fs.getFileStatus(p)
-    if (st.isFile) Seq(st.getLen, st.getModificationTime)
-    else Seq(fs.getFileStatus(new Path(p, "_SUCCESS")).getModificationTime)
+    stampOf(if (st.isFile) st else fs.getFileStatus(new Path(p, "_SUCCESS")))
   }.toOption // missing path, glob or missing marker: uncached bare read
 
   private val schemaCacheOff = new DynamicVariable(false)

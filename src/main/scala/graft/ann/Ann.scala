@@ -65,25 +65,17 @@ object Ann {
       .agg(topk_ids(l2_dist(col("embedding"), col("qvec")), col("vec_id"), k).as("ids"))
   }
 
-  private val queryArrays = new BuildOnce[(String, Long, Seq[Long]), Array[Float]]
+  private val queryArrays = new BuildOnce[Long, Array[Float]]
 
   /** The query row `qid` (`Rbac.queryVector`) as a driver-side array —
     * the value every query site binds (`withQuery`), and the input of
     * the index-side picks (probe lists, ADC tables, LSH signatures).
-    * Fetched once per version stamp of the embeddings file (the stamp
-    * `Tables.parquet` keys its schema by), so an in-place rewrite
-    * re-fetches it; a new stamp replaces the entry. A path with no
-    * stamp is fetched on every call.
+    * Fetched once per data version of `dir`, so an in-place rewrite
+    * re-fetches it.
     */
-  private[graft] def queryArray(spark: SparkSession, dir: String, qid: Long): Array[Float] = {
-    def fetch(): Array[Float] = Rbac.queryVector(spark, dir, qid).head().getSeq[Float](0).toArray
-    Tables.stamp(spark, s"$dir/embeddings.parquet") match {
-      case None => fetch()
-      case Some((path, stamp)) =>
-        queryArrays.retainKeys(key => key._1 != path || key._2 != qid || key._3 == stamp)
-        queryArrays.getOrElseUpdate((path, qid, stamp))(fetch())
-    }
-  }
+  private[graft] def queryArray(spark: SparkSession, dir: String, qid: Long): Array[Float] =
+    queryArrays.getOrElseUpdate(spark, dir, qid)(
+      Rbac.queryVector(spark, dir, qid).head().getSeq[Float](0).toArray)
 
   /** `df` with the query vector `q` bound as the literal column `qvec`
     * — the one query binding: a literal plans no scan and no broadcast,
@@ -234,7 +226,7 @@ object Ann {
     */
   def knnGraphAuto(spark: SparkSession, dir: String, k: Int = 5,
                    maxExactN: Long = KnnExactMaxN): DataFrame = {
-    val n = corpusCount.getOrElseUpdate(spark, dir)(
+    val n = corpusCount.getOrElseUpdate(spark, dir, ())(
       graft.Tables.embeddings(spark, dir).count())
     if (n <= maxExactN) knnGraph(spark, dir, k)
     else knnGraphDescent(spark, dir, k)
@@ -519,7 +511,7 @@ object Ann {
     * joins + one aggregate over |E| ≈ k·N slim rows (checkpoint the
     * graph between rounds to cut lineage).
     */
-  private val descentCache = new graft.SessionFrameCache[(String, Int, Int, Int, Int)]
+  private val descentCache = new graft.SessionCache[(Int, Int, Int, Int), DataFrame]
 
   /** Candidate-row count of the last sampled round per descent run —
     * recorded only when `collectStats` (the counting job is pure test
@@ -538,7 +530,7 @@ object Ann {
   val descentInitStats =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int, Int), Long]
 
-  private val corpusCount = new graft.SessionCache[String, Long]
+  private val corpusCount = new graft.SessionCache[Unit, Long]
 
   /** Descent partition count ∝ corpus (r12, VERDICT r11 #4): the fixed
     * cells=16 left a N/16-row single-task `row_number` window in the
@@ -558,7 +550,7 @@ object Ann {
     * re-measured by RecallCheck at both scaled dirs (CALIBRATION r12).
     */
   def descentCells(spark: SparkSession, dir: String): Int = {
-    val n = corpusCount.getOrElseUpdate(spark, dir)(
+    val n = corpusCount.getOrElseUpdate(spark, dir, ())(
       graft.Tables.embeddings(spark, dir).count())
     math.max(16, math.round(math.sqrt(n / 8.0)).toInt)
   }
@@ -569,14 +561,14 @@ object Ann {
     // cells = 0 (the default) derives the partition count from the
     // corpus; an explicit positive value pins it (tests, stats runs)
     val c = if (cells > 0) cells else descentCells(spark, dir)
-    val key = (dir, k, iters, c, (rho * 100).toInt)
+    val key = (k, iters, c, (rho * 100).toInt)
     if (collectStats) {
       // stats runs bypass the cache (they must re-execute to count) but
-      // still replace it without leaking the old persisted frame
+      // still replace it (the store releases the old persisted frame)
       val built = buildDescent(spark, dir, k, iters, c, rho, collectStats)
-      descentCache.put(spark, key, built).foreach(_.unpersist())
+      descentCache.put(spark, dir, key, built)
       built
-    } else descentCache.getOrElseUpdate(spark, key)(
+    } else descentCache.getOrElseUpdate(spark, dir, key)(
       buildDescent(spark, dir, k, iters, c, rho, collectStats))
   }
 

@@ -32,14 +32,14 @@ object BqIndex {
 
   val Dim = 64
 
-  private val cache = new graft.BuildOnce[String, Array[Double]]
+  private val cache = new graft.BuildOnce[Unit, Array[Double]]
 
   /** Per-dim mean thresholds — one posexplode + groupBy(dim) scan;
     * the shuffle carries dims × partitions partial rows, never corpus
     * data (map-side combine).
     */
   def getOrBuild(spark: SparkSession, dir: String): Array[Double] =
-    cache.getOrElseUpdate(dir) {
+    cache.getOrElseUpdate(spark, dir, ()) {
       val out = new Array[Double](Dim)
       buildReport(spark, dir).collect().foreach(r => out(r.getLong(0).toInt) = r.getDouble(1))
       out

@@ -60,9 +60,9 @@ object GraphSearch {
   /** Batch width of the serving walk (matches ann_batch_topk's nq). */
   val Nq = 8
 
-  private val graphCache = new graft.SessionFrameCache[(String, Int, Int, String)]
-  private val medoidCache = new graft.SessionFrameCache[(String, Int, String)]
-  private val visitedCache = new graft.SessionFrameCache[(String, String, Int, Int, Int, Int)]
+  private val graphCache = new graft.SessionCache[(Int, Int, String), DataFrame]
+  private val medoidCache = new graft.SessionCache[(Int, String), DataFrame]
+  private val visitedCache = new graft.SessionCache[(String, Int, Int, Int, Int), DataFrame]
 
   private def baseTag(baseMax: Long): String =
     if (baseMax < 0) "full" else s"prefix$baseMax"
@@ -82,7 +82,7 @@ object GraphSearch {
     */
   def servingGraph(spark: SparkSession, dir: String, gk: Int = GraphK,
                    cells: Int = Cells, baseMax: Long = -1L): DataFrame =
-    graphCache.getOrElseUpdate(spark, (dir, gk, cells, baseTag(baseMax))) {
+    graphCache.getOrElseUpdate(spark, dir, (gk, cells, baseTag(baseMax))) {
       buildGraph(spark, dir, gk,
         Ann.knnEdges(spark, dir, gk, cells,
           if (baseMax < 0) None else Some(baseMax)))
@@ -107,7 +107,7 @@ object GraphSearch {
                      members: DataFrame, gk: Int = GraphK,
                      cells: Int = Cells, iters: Int = 2,
                      links: Int = 2): DataFrame =
-    graphCache.getOrElseUpdate(spark, (dir, gk, cells, tag)) {
+    graphCache.getOrElseUpdate(spark, dir, (gk, cells, tag)) {
       val m = members.select(col("vec_id"))
       val n = m.count()
       if (n <= Ann.KnnExactMaxN) {
@@ -193,7 +193,7 @@ object GraphSearch {
 
   private def cellMedoidsFrom(spark: SparkSession, dir: String, cells: Int,
                               tag: String, base: DataFrame): DataFrame =
-    medoidCache.getOrElseUpdate(spark, (dir, cells, tag)) {
+    medoidCache.getOrElseUpdate(spark, dir, (cells, tag)) {
       val idx = IvfIndex.getOrBuild(spark, dir, cells)
       val m = base
         // the own-cell distance IS the min over centroids (that is what
@@ -213,7 +213,7 @@ object GraphSearch {
     */
   def visited(spark: SparkSession, dir: String, nq: Int = Nq, ef: Int = Ef,
               rounds: Int = Rounds, gk: Int = GraphK, cells: Int = Cells): DataFrame =
-    visitedCache.getOrElseUpdate(spark, (dir, s"serve$nq", ef, rounds, gk, cells)) {
+    visitedCache.getOrElseUpdate(spark, dir, (s"serve$nq", ef, rounds, gk, cells)) {
       buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
         servingGraph(spark, dir, gk, cells), cellMedoids(spark, dir, cells))
     }
@@ -392,7 +392,7 @@ object GraphSearch {
                       cells: Int = Cells): DataFrame = {
     val cutoff = insertCutoff(spark, dir)
     val vis = visitedCache.getOrElseUpdate(
-      spark, (dir, s"insert$InsertTail", ef, rounds, gk, cells)) {
+      spark, dir, (s"insert$InsertTail", ef, rounds, gk, cells)) {
       val batch = broadcast(Ann.queryFrame(Tables.embeddings(spark, dir)
         .filter(col("vec_id") >= cutoff)))
       buildVisited(spark, dir, batch, ef, rounds,
@@ -417,11 +417,11 @@ object GraphSearch {
   /** Routed member-set size, session-cached — read by the serve
     * policy (the exact-ceiling pin) and by every A21 key's dispatch.
     */
-  private val memberCountCache = new graft.SessionCache[(String, Seq[Int], Double), Long]
+  private val memberCountCache = new graft.SessionCache[(Seq[Int], Double), Long]
   def partitionMemberCount(spark: SparkSession, dir: String, userId: Long,
                            alpha: Double = 2.0): Long = {
     val pids = routedPartitions(spark, dir, userId, alpha)
-    memberCountCache.getOrElseUpdate(spark, (dir, pids, alpha))(
+    memberCountCache.getOrElseUpdate(spark, dir, (pids, alpha))(
       partitionMembers(spark, dir, pids, alpha).count())
   }
 
@@ -450,10 +450,10 @@ object GraphSearch {
     * partitions share one member set, serving graph, walk and measured
     * (iters, ef) policy row. Rendered by `routedPartitionKey`.
     */
-  private val routedCache = new graft.SessionCache[(String, Long, Double), Seq[Int]]
+  private val routedCache = new graft.SessionCache[(Long, Double), Seq[Int]]
   private def routedPartitions(spark: SparkSession, dir: String, userId: Long,
                                alpha: Double): Seq[Int] =
-    routedCache.getOrElseUpdate(spark, (dir, userId, alpha))(
+    routedCache.getOrElseUpdate(spark, dir, (userId, alpha))(
       graft.rbac.Partitioned.routedPartitionIds(spark, dir, userId, alpha)
         .map(_.intValue).sorted)
 
@@ -469,10 +469,10 @@ object GraphSearch {
     * nondeterministic across Verify/Bench orderings). One bounded
     * driver query (≤ sample-size rows), session-cached.
     */
-  private val probeUserCache = new graft.SessionCache[(String, Double), Map[String, Long]]
+  private val probeUserCache = new graft.SessionCache[Double, Map[String, Long]]
   private def policyProbeUsers(spark: SparkSession, dir: String,
                                alpha: Double): Map[String, Long] =
-    probeUserCache.getOrElseUpdate(spark, (dir, alpha)) {
+    probeUserCache.getOrElseUpdate(spark, dir, alpha) {
       import graft.rbac.Partitioned
       Partitioned.costModelLayout(spark, dir, alpha)
         .join(graft.rbac.Rbac.userCombsFrom(graft.rbac.Rbac.userRoles(spark, dir))
@@ -488,7 +488,7 @@ object GraphSearch {
   private def partitionGraphKey(pkey: String, alpha: Double): String =
     s"dynpart $pkey a$alpha"
 
-  private val partPolicyCache = new graft.BuildOnce[(String, String, Double, Double), (Int, Int, Double)]
+  private val partPolicyCache = new graft.BuildOnce[(String, Double, Double), (Int, Int, Double)]
 
   /** A21's measured per-partition serving policy (r14, VERDICT r13
     * #1): (iters, ef) for THIS user's routed partition, the
@@ -511,7 +511,7 @@ object GraphSearch {
                            alpha: Double = 2.0,
                            target: Double = RecallTarget): (Int, Int, Double) = {
     val pkey = routedPartitionKey(spark, dir, userId, alpha)
-    partPolicyCache.getOrElseUpdate((dir, pkey, alpha, target)) {
+    partPolicyCache.getOrElseUpdate(spark, dir, (pkey, alpha, target)) {
       val m = partitionMemberCount(spark, dir, userId, alpha)
       if (m <= Ann.KnnExactMaxN) (2, Ef, -1.0)
       else {
@@ -522,7 +522,7 @@ object GraphSearch {
         val pu = policyProbeUsers(spark, dir, alpha).getOrElse(pkey, userId)
         lazy val gt = groundTruth(spark, dir, Nq, 10, Some(pu))
         tune(math.min(1024L, m).toInt, target, (iters, ef) =>
-          measure(dir, partitionGraphKey(pkey, alpha), iters, ef) {
+          measure(spark, dir, partitionGraphKey(pkey, alpha), iters, ef) {
             val (edges, medoids) =
               partitionGraphIndex(spark, dir, pu, GraphK, Cells, alpha, iters)
             probe(spark, dir, Nq, 10, ef, Rounds, edges, medoids, gt, Some(pu))
@@ -538,15 +538,15 @@ object GraphSearch {
     */
   def partitionProbed(spark: SparkSession, dir: String, userId: Long,
                       alpha: Double = 2.0): Seq[(Int, Int, Double)] =
-    measuredPoints(dir, partitionGraphKey(routedPartitionKey(spark, dir, userId, alpha), alpha))
+    measuredPoints(spark, dir, partitionGraphKey(routedPartitionKey(spark, dir, userId, alpha), alpha))
 
   /** Total probe walks taken across every partition policy at `dir` —
     * the quantity the partition-keyed memo bounds (a second user on a
     * shared partition must add ZERO to it; the calibration demo's
     * counter).
     */
-  def partitionProbeCount(dir: String): Int =
-    measured.keys.count { case (d, g, _, _) => d == dir && g.startsWith("dynpart ") }
+  def partitionProbeCount(spark: SparkSession, dir: String): Int =
+    measured.entries(spark, dir).count(_._1._1.startsWith("dynpart "))
 
   /** A21 `rbac_partition_graph_topk`: the reference's LITERAL serving
     * architecture in graph form — cost-model dynamic partitions with a
@@ -585,7 +585,7 @@ object GraphSearch {
       if (ef > 0) (2, ef)
       else { val (i, e, _) = partitionServePolicy(spark, dir, userId, alpha); (i, e) }
     val tag = s"dynpart[${routedPartitionKey(spark, dir, userId, alpha)}]_q${nq}_a${alpha}_i$iters"
-    val vis = visitedCache.getOrElseUpdate(spark, (dir, tag, efR, rounds, gk, cells)) {
+    val vis = visitedCache.getOrElseUpdate(spark, dir, (tag, efR, rounds, gk, cells)) {
       val (edges, medoids) =
         partitionGraphIndex(spark, dir, userId, gk, cells, alpha, iters)
       buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), efR, rounds, edges, medoids)
@@ -653,7 +653,7 @@ object GraphSearch {
     */
   def nndServingGraph(spark: SparkSession, dir: String, gk: Int = GraphK,
                       cells: Int = Cells, iters: Int = 2): DataFrame =
-    graphCache.getOrElseUpdate(spark, (dir, gk, cells, s"nnd$iters")) {
+    graphCache.getOrElseUpdate(spark, dir, (gk, cells, s"nnd$iters")) {
       // `cells` here is the SERVING knob (medoid entry points, walk
       // seeds) and stays fixed at Cells; the descent build derives its
       // own partition count from the corpus (Ann.descentCells, r12) —
@@ -687,7 +687,7 @@ object GraphSearch {
   def nndNavServingGraph(spark: SparkSession, dir: String, gk: Int = GraphK,
                          cells: Int = Cells, iters: Int = 2,
                          links: Int = 2): DataFrame =
-    graphCache.getOrElseUpdate(spark, (dir, gk, cells, s"nndnav$iters-$links")) {
+    graphCache.getOrElseUpdate(spark, dir, (gk, cells, s"nndnav$iters-$links")) {
       val base = nndServingGraph(spark, dir, gk, cells, iters)
       val ids = Tables.embeddings(spark, dir).select(col("vec_id"))
       val n = Tables.embeddings(spark, dir).count()
@@ -709,7 +709,7 @@ object GraphSearch {
                  gk: Int = GraphK, cells: Int = Cells,
                  iters: Int = 2): DataFrame =
     visitedCache.getOrElseUpdate(
-      spark, (dir, s"nndserve$nq-i$iters", ef, rounds, gk, cells)) {
+      spark, dir, (s"nndserve$nq-i$iters", ef, rounds, gk, cells)) {
       buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
         nndServingGraph(spark, dir, gk, cells, iters),
         cellMedoids(spark, dir, cells))
@@ -729,7 +729,7 @@ object GraphSearch {
   private def nndProbe(spark: SparkSession, dir: String, nq: Int,
                        k: Int): (Int, Int) => Double = {
     lazy val gt = groundTruth(spark, dir, nq, k)
-    (iters, ef) => measure(dir, s"nndnav q$nq k$k", iters, ef)(
+    (iters, ef) => measure(spark, dir, s"nndnav q$nq k$k", iters, ef)(
       probe(spark, dir, nq, k, ef, Rounds,
         nndNavServingGraph(spark, dir, GraphK, Cells, iters), cellMedoids(spark, dir, Cells), gt))
   }
@@ -747,17 +747,17 @@ object GraphSearch {
     */
   def nndServePolicy(spark: SparkSession, dir: String,
                      target: Double = RecallTarget): (Int, Int, Double) =
-    servePolicyCache.getOrElseUpdate((dir, target))(
+    servePolicyCache.getOrElseUpdate(spark, dir, target)(
       tune(math.min(1024L, Tables.embeddings(spark, dir).count()).toInt, target,
         nndProbe(spark, dir, Nq, 10)))
 
-  private val servePolicyCache = new graft.BuildOnce[(String, Double), (Int, Int, Double)]
+  private val servePolicyCache = new graft.BuildOnce[Double, (Int, Int, Double)]
 
   /** Every (iters, ef, recall) point this process probed at `dir` —
     * the calibration table's rows. Measured points only, never fits.
     */
-  def nndProbedPoints(dir: String): Seq[(Int, Int, Double)] =
-    measuredPoints(dir, s"nndnav q$Nq k10")
+  def nndProbedPoints(spark: SparkSession, dir: String): Seq[(Int, Int, Double)] =
+    measuredPoints(spark, dir, s"nndnav q$Nq k10")
 
   /** Sidecars for the model-NND oracle replay: the descent graph at
     * the POLICY-picked iters (the only hash-derived part) plus a
@@ -786,7 +786,7 @@ object GraphSearch {
                         k: Int = 10): DataFrame = {
     val (iters, ef, _) = nndServePolicy(spark, dir)
     val vis = visitedCache.getOrElseUpdate(
-      spark, (dir, s"nndnavserve$nq-i$iters", ef, Rounds, GraphK, Cells)) {
+      spark, dir, (s"nndnavserve$nq-i$iters", ef, Rounds, GraphK, Cells)) {
       buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, Rounds,
         nndNavServingGraph(spark, dir, iters = iters),
         cellMedoids(spark, dir, Cells))
@@ -882,7 +882,7 @@ object GraphSearch {
     // on: insertNeighbors walks with (ef, rounds), so two callers with
     // different walk parameters must get DIFFERENT repaired graphs
     // (the r8 alpha-in-key lesson, re-applied to r9's own cache)
-    graphCache.getOrElseUpdate(spark, (dir, gk, cells, s"repaired_e${ef}_r$rounds")) {
+    graphCache.getOrElseUpdate(spark, dir, (gk, cells, s"repaired_e${ef}_r$rounds")) {
       val cutoff = insertCutoff(spark, dir)
       val links = insertNeighbors(spark, dir, ef, rounds, gk, cells)
       PlanCut.checkpointed(spark, repairEdges(spark, dir,
@@ -918,7 +918,7 @@ object GraphSearch {
                       k: Int = 10, ef: Int = Ef, rounds: Int = Rounds,
                       gk: Int = GraphK, cells: Int = Cells): DataFrame = {
     val vis = visitedCache.getOrElseUpdate(
-      spark, (dir, s"upsert$nq", ef, rounds, gk, cells)) {
+      spark, dir, (s"upsert$nq", ef, rounds, gk, cells)) {
       // seeds = FULL-corpus medoids (the maintained index covers the
       // new nodes' cells too); tombstones stay in the traversal
       buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), ef, rounds,
@@ -973,7 +973,7 @@ object GraphSearch {
       .orderBy("user_id", "query_id", "block_id")
   }
 
-  /** The one memo of measured points: (dir, graph, iters, ef) → recall
+  /** The one memo of measured points: (dir version; graph, iters, ef) → recall
     * of the walk over that graph at that build level and beam. Points
     * are constants of the dataset, kept as plain driver data, NOT as
     * persisted walk frames: every probe walk is transient and released
@@ -981,14 +981,15 @@ object GraphSearch {
     * accumulate persisted walk states for the session lifetime). Every
     * curve, policy pick and probe count reads it.
     */
-  private val measured = new graft.BuildOnce[(String, String, Int, Int), Double]
+  private val measured = new graft.BuildOnce[(String, Int, Int), Double]
 
-  private[graft] def measure(dir: String, graph: String, iters: Int, ef: Int)(
-      recall: => Double): Double =
-    measured.getOrElseUpdate((dir, graph, iters, ef))(recall)
+  private[graft] def measure(spark: SparkSession, dir: String, graph: String,
+                             iters: Int, ef: Int)(recall: => Double): Double =
+    measured.getOrElseUpdate(spark, dir, (graph, iters, ef))(recall)
 
-  private def measuredPoints(dir: String, graph: String): Seq[(Int, Int, Double)] =
-    measured.entries.collect { case ((`dir`, `graph`, i, e), r) => (i, e, r) }
+  private def measuredPoints(spark: SparkSession, dir: String,
+                             graph: String): Seq[(Int, Int, Double)] =
+    measured.entries(spark, dir).collect { case ((`graph`, i, e), r) => (i, e, r) }
       .sortBy(p => (p._1, p._2))
 
   /** Fraction of the exact answer set a result recovers. */
@@ -1072,7 +1073,7 @@ object GraphSearch {
   private def exactProbe(spark: SparkSession, dir: String, nq: Int,
                          k: Int): (Int, Int) => Double = {
     lazy val gt = groundTruth(spark, dir, nq, k)
-    (_, ef) => measure(dir, s"exact q$nq k$k", 0, ef) {
+    (_, ef) => measure(spark, dir, s"exact q$nq k$k", 0, ef) {
       if (ef == Ef)
         recall(pairs(topOf(visited(spark, dir, nq), k).select("query_id", "cand_id")), gt)
       else probe(spark, dir, nq, k, ef, Rounds, servingGraph(spark, dir),

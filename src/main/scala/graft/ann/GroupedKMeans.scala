@@ -140,18 +140,17 @@ object GroupedKMeans {
       .toDF("group", "cid", "centroid") // encoder already yields array<float>
   }
 
-  private val centCache = new graft.BuildOnce[(String, Int, Int), Array[(Long, Int, Array[Float])]]
+  private val centCache = new graft.BuildOnce[(Int, Int), Array[(Long, Int, Array[Float])]]
 
   /** Fitted per-role centroids, collected (groups×k tiny) and cached
-    * per (dir, k, iters) — the in-memory mirror of the per-partition
-    * index sidecars the reference persists. Same lifetime assumption
-    * as the IvfIndex/PqIndex caches: a dir's corpus is immutable for
-    * the session. Built once per key, so concurrent bench queries share
-    * ONE fit (and one persist scope) instead of racing duplicate jobs.
+    * per (dir version, k, iters) — the in-memory mirror of the
+    * per-partition index sidecars the reference persists. Built once
+    * per key, so concurrent bench queries share ONE fit (and one
+    * persist scope) instead of racing duplicate jobs.
     */
   private[graft] def roleCentroids(spark: SparkSession, dir: String,
                                    k: Int, iters: Int): Array[(Long, Int, Array[Float])] =
-    centCache.getOrElseUpdate((dir, k, iters)) {
+    centCache.getOrElseUpdate(spark, dir, (k, iters)) {
       val points = rolePoints(spark, dir)
       points.persist()
       try fit(points, k, iters).collect().map(r =>

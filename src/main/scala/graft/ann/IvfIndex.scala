@@ -28,7 +28,7 @@ object IvfIndex {
 
   final case class Index(k: Int, centroids: Array[Array[Float]])
 
-  private val cache = new graft.BuildOnce[(String, Int), Index]
+  private val cache = new graft.BuildOnce[Int, Index]
 
   /** Deterministic k-means (r13, VERDICT r12 #3): identical data +
     * identical code must yield IDENTICAL centroids on any JVM and any
@@ -116,19 +116,19 @@ object IvfIndex {
     * pruning index: recall is governed by nprobe, not centroid polish).
     */
   def getOrBuild(spark: SparkSession, dir: String, k: Int): Index =
-    cache.getOrElseUpdate((dir, k)) {
+    cache.getOrElseUpdate(spark, dir, k) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding").as("features"))
       Index(k, fitCentroids(emb, k))
     }
 
-  private val assignCache = new graft.SessionFrameCache[(String, Int)]
+  private val assignCache = new graft.SessionCache[Int, DataFrame]
 
   /** (vec_id, list_id): nearest-centroid assignment, computed entirely
     * inside the scan stage (no join, no aggregation, no shuffle).
     */
   def assignments(spark: SparkSession, dir: String, k: Int): DataFrame =
-    assignCache.getOrElseUpdate(spark, (dir, k)) {
+    assignCache.getOrElseUpdate(spark, dir, k) {
       val idx = getOrBuild(spark, dir, k)
       // nearest_centroid bakes the (tiny) centroid matrix into the
       // expression: one argmin pass inside the scan stage — no join, no
@@ -139,7 +139,7 @@ object IvfIndex {
         .persist() // the assignment IS the index; reused across searches
     }
 
-  private val withCellsCache = new graft.SessionFrameCache[(String, Int)]
+  private val withCellsCache = new graft.SessionCache[Int, DataFrame]
 
   /** Corpus with its cell id attached, persisted — the in-memory
     * stand-in for a cell-partitioned parquet layout at scale.
@@ -147,7 +147,7 @@ object IvfIndex {
     * of re-scanning + re-assigning per branch.
     */
   def withCells(spark: SparkSession, dir: String, k: Int): DataFrame =
-    withCellsCache.getOrElseUpdate(spark, (dir, k)) {
+    withCellsCache.getOrElseUpdate(spark, dir, k) {
       val idx = getOrBuild(spark, dir, k)
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
@@ -156,7 +156,7 @@ object IvfIndex {
         .persist()
     }
 
-  private val radiiCache = new graft.BuildOnce[(String, Int, Boolean), Map[Int, Double]]
+  private val radiiCache = new graft.BuildOnce[(Int, Boolean), Map[Int, Double]]
 
   /** Per-cell covering radius max‖v − c‖ — index metadata for lossless
     * triangle-inequality pruning: a cell can hold a vector within
@@ -165,7 +165,7 @@ object IvfIndex {
     */
   def cellRadii(spark: SparkSession, dir: String, k: Int,
                 unit: Boolean = false): Map[Int, Double] =
-    radiiCache.getOrElseUpdate((dir, k, unit)) {
+    radiiCache.getOrElseUpdate(spark, dir, (k, unit)) {
       val idx = if (unit) getOrBuildUnit(spark, dir, k) else getOrBuild(spark, dir, k)
       val cents = spark.createDataFrame(
         idx.centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
@@ -180,13 +180,13 @@ object IvfIndex {
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     }
 
-  private val unitCache = new graft.BuildOnce[(String, Int), Index]
+  private val unitCache = new graft.BuildOnce[Int, Index]
 
   /** Unit-sphere index: k-means over NORMALIZED vectors — the blocking
     * structure for cosine-threshold joins (cos ≥ τ ⇔ unit-L2 ≤ √(2−2τ)).
     */
   def getOrBuildUnit(spark: SparkSession, dir: String, k: Int): Index =
-    unitCache.getOrElseUpdate((dir, k)) {
+    unitCache.getOrElseUpdate(spark, dir, k) {
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), vec_normalize(col("embedding")).as("features"))
       Index(k, fitCentroids(emb, k))

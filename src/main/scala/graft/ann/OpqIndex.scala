@@ -70,21 +70,21 @@ object OpqIndex {
   private def order(spark: SparkSession, dir: String): Array[Int] =
     allocate(Pca.model(spark, dir, Dim).eigenvalues)
 
-  private val rotatedCache = new graft.SessionFrameCache[String]
+  private val rotatedCache = new graft.SessionCache[Unit, DataFrame]
 
   /** (vec_id, proj) — the corpus in the permuted eigenbasis, persisted
     * once per session (the rotation feeds 8 KMeans fits + the encode
     * scan; at 100 TB this is the rotated copy an OPQ index stores).
     */
   private[graft] def rotated(spark: SparkSession, dir: String): DataFrame =
-    rotatedCache.getOrElseUpdate(spark, dir) {
+    rotatedCache.getOrElseUpdate(spark, dir, ()) {
       val m = Pca.model(spark, dir, Dim)
       Pca.projectComponents(Tables.embeddings(spark, dir), m, order(spark, dir).toSeq)
         .select("vec_id", "proj")
         .persist()
     }
 
-  private val cbCache = new graft.SessionCache[String, PqIndex.Codebook]
+  private val cbCache = new graft.SessionCache[Unit, PqIndex.Codebook]
 
   /** Sub-codebooks trained on the ROTATED slices — PqIndex's training
     * shape (independent seeded fits, concurrent), different input
@@ -92,7 +92,7 @@ object OpqIndex {
     * rotated frame.
     */
   def getOrBuild(spark: SparkSession, dir: String): PqIndex.Codebook =
-    cbCache.getOrElseUpdate(spark, dir) {
+    cbCache.getOrElseUpdate(spark, dir, ()) {
       val base = rotated(spark, dir).select("proj")
       val cents = graft.Session.parMap(spark, 0 until NumSub) { s =>
         val sub = base.select(

@@ -202,14 +202,14 @@ object Pca {
     (order.map(vals).toArray, order.map(vecs).toArray)
   }
 
-  private val modelCache = new graft.BuildOnce[(String, Int), PcaModel]
+  private val modelCache = new graft.BuildOnce[Int, PcaModel]
 
   /** Fit (or reuse) the PCA model: one distributed moments pass + the
     * driver eigensolve. Built once per (dir, k) like the other index
     * sidecars.
     */
   def model(spark: SparkSession, dir: String, k: Int): PcaModel =
-    modelCache.getOrElseUpdate((dir, k)) {
+    modelCache.getOrElseUpdate(spark, dir, k) {
       val emb = Tables.embeddings(spark, dir)
       val d = emb.select(size(col("embedding"))).head().getInt(0)
       val row = emb.agg(cov_moments(col("embedding"), d).as("m")).head()

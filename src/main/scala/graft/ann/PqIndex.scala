@@ -31,10 +31,10 @@ object PqIndex {
     */
   final case class Codebook(centroids: Array[Array[Array[Float]]])
 
-  private val cache = new graft.BuildOnce[String, Codebook]
+  private val cache = new graft.BuildOnce[Unit, Codebook]
 
   def getOrBuild(spark: SparkSession, dir: String): Codebook =
-    cache.getOrElseUpdate(dir) {
+    cache.getOrElseUpdate(spark, dir, ()) {
       val subDim = Dim / NumSub
       val base = Tables.embeddings(spark, dir).select("embedding")
       // the 8 subspace quantizers are independent — train them
@@ -75,7 +75,7 @@ object PqIndex {
       .select(col("vec_id"), encodeCol(col("embedding"), cb).as("code"))
   }
 
-  private val codesCellCache = new graft.SessionFrameCache[(String, Int)]
+  private val codesCellCache = new graft.SessionCache[Int, DataFrame]
 
   /** (vec_id, list_id, code) — the compressed corpus WITH its IVF cell,
     * persisted: the in-memory mirror of the cell-partitioned compressed
@@ -84,7 +84,7 @@ object PqIndex {
     * a join against the corpus — encode and assign happen in ONE scan.
     */
   def codesWithCells(spark: SparkSession, dir: String, cells: Int): DataFrame =
-    codesCellCache.getOrElseUpdate(spark, (dir, cells)) {
+    codesCellCache.getOrElseUpdate(spark, dir, cells) {
       val cb = getOrBuild(spark, dir)
       val ivf = IvfIndex.getOrBuild(spark, dir, cells)
       Tables.embeddings(spark, dir)

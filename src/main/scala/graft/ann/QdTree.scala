@@ -48,7 +48,7 @@ object QdTree {
 
   // session-scoped: Tree.assign is a persisted frame bound to one
   // SparkContext (SessionCache evicts entries of dead applications)
-  private val cache = new graft.SessionCache[(String, Int, Long, Int, Int), Tree]
+  private val cache = new graft.SessionCache[(Int, Long, Int, Int), Tree]
 
   /** Doc groups that move together under every predicate:
     * (comb_key, roles, cell, n_blocks), cell from the same IVF index
@@ -83,7 +83,7 @@ object QdTree {
   def getOrBuild(spark: SparkSession, dir: String, cells: Int = 8,
                  minLeaf: Long = 8L, maxDepth: Int = 8,
                  leafBudget: Int = 24): Tree =
-    cache.getOrElseUpdate(spark, (dir, cells, minLeaf, maxDepth, leafBudget)) {
+    cache.getOrElseUpdate(spark, dir, (cells, minLeaf, maxDepth, leafBudget)) {
       build(spark, dir, cells, minLeaf, maxDepth, leafBudget)
     }
 

@@ -62,7 +62,7 @@ object RecallModel {
       math.max(0.0, 1.0 - math.exp(-(alpha + beta * nprobe)))
   }
 
-  private val curveCache = new graft.BuildOnce[(String, Int, Int), Curve]
+  private val curveCache = new graft.BuildOnce[(Int, Int), Curve]
 
   /** The A15 workload (`Maintenance.workloadGen`: vec_id = 7·user mod
     * n, users ≤ 20) as the batch query frame: (query_id, qvec_id, qvec).
@@ -107,7 +107,7 @@ object RecallModel {
     * build, callers of another key do not wait for it.
     */
   def measure(spark: SparkSession, dir: String, cells: Int = 16, k: Int = 10): Curve =
-    curveCache.getOrElseUpdate((dir, cells, k)) {
+    curveCache.getOrElseUpdate(spark, dir, (cells, k)) {
       val queries = workload(spark, dir)
       val qcells = queryCellRanks(spark, dir, cells, queries)
       // rank of each exact neighbor's cell in its query's ordering —

@@ -29,10 +29,10 @@ object SqIndex {
   /** Per-dimension quantization grid: code c ↦ lo(i) + c·step(i). */
   final case class Grid(lo: Array[Float], step: Array[Float])
 
-  private val cache = new graft.BuildOnce[String, Grid]
+  private val cache = new graft.BuildOnce[Unit, Grid]
 
   def getOrBuild(spark: SparkSession, dir: String): Grid =
-    cache.getOrElseUpdate(dir) {
+    cache.getOrElseUpdate(spark, dir, ()) {
       val stats = dimStats(spark, dir).collect()
       val lo = new Array[Float](Dim)
       val step = new Array[Float](Dim)

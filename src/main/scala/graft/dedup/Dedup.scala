@@ -60,14 +60,14 @@ object Dedup {
     * so the verified output equals the exact pairwise result — which is
     * what the DuckDB oracle computes.
     */
-  private val pairsCache = new graft.SessionFrameCache[(String, Double)]
+  private val pairsCache = new graft.SessionCache[Double, DataFrame]
 
   def minhashLsh(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     // compute-once + persist: `dedup_clusters` consumes the same verified
     // pair set — without the cache it would re-run the whole
     // shingle→minhash→band→verify pipeline before its connected
     // components pass (the pair set is tiny; the pipeline is not)
-    pairsCache.getOrElseUpdate(spark, (dir, threshold)) {
+    pairsCache.getOrElseUpdate(spark, dir, threshold) {
       val sets = shingleSets(spark, dir)
         .transform(graft.Tables.spread(spark, _))
       verifiedPairs(candidatePairs(sets, "s", bands = 16, rowsPerBand = 4),
@@ -198,13 +198,13 @@ object Dedup {
     * A size-ratio prefilter (|g1|/|g2| ≥ t, implied by Jaccard ≥ t)
     * prunes candidates for free.
     */
-  private val ngramPairsCache = new graft.SessionFrameCache[(String, Double)]
+  private val ngramPairsCache = new graft.SessionCache[Double, DataFrame]
 
   def ngramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
     // cached like minhashLsh: verifiedPairs persists its (tiny) output,
     // so the cache both reuses the verified pair set and guarantees
     // repeated invocations don't accrete persisted frames
-    ngramPairsCache.getOrElseUpdate(spark, (dir, threshold)) {
+    ngramPairsCache.getOrElseUpdate(spark, dir, threshold) {
       val par = spark.sparkContext.defaultParallelism
       val g = Tables.documents(spark, dir)
         .repartition(par) // testdata = 1 row group; spread the heavy map
@@ -365,7 +365,7 @@ object Dedup {
     * spill, ENOSPC). Exactness is spec-pinned against the executed
     * join's pre-filter count at the oracle SFs.
     */
-  private val estimateCache = new graft.SessionCache[(String, Int, Int), Long]
+  private val estimateCache = new graft.SessionCache[(Int, Int), Long]
 
   def embeddingCandidateEstimate(spark: SparkSession, dir: String,
                                  tau: Double = 0.45, cells: Int = 8): Long =
@@ -373,7 +373,7 @@ object Dedup {
     // branch's breaker, and the bench artifact's estimate log all ask
     // for the same number — one histogram pass per (dir, τ, cells)
     // serves them all
-    estimateCache.getOrElseUpdate(spark, (dir, (tau * 1000).toInt, cells)) {
+    estimateCache.getOrElseUpdate(spark, dir, ((tau * 1000).toInt, cells)) {
       import graft.ann.IvfIndex
       val idx = IvfIndex.getOrBuildUnit(spark, dir, cells)
       val hist = Tables.embeddings(spark, dir)

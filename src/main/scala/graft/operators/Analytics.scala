@@ -305,7 +305,7 @@ object Analytics {
     */
   private[graft] val DistributedRankMinRows = 40L * 1000 * 1000
 
-  private val eventCountCache = new graft.SessionCache[String, Long]
+  private val eventCountCache = new graft.SessionCache[Unit, Long]
 
   private def typeQuantiles(spark: SparkSession, dir: String,
                             qs: Seq[(String, Double)],
@@ -314,7 +314,7 @@ object Analytics {
     val counts = events.groupBy("event_type").agg(count(col("value")).as("n"))
     // parquet count(*) is footer-metadata only — the dispatch probe
     // never scans the table; session-cached besides
-    val totalRows = eventCountCache.getOrElseUpdate(spark, dir)(
+    val totalRows = eventCountCache.getOrElseUpdate(spark, dir, ())(
       Tables.events(spark, dir).count())
     val ranked = typeRanks(spark, events.filter(col("value").isNotNull),
         totalRows, distRankMinRows)
@@ -613,13 +613,13 @@ object Analytics {
     * through ONE task, which grows with SF. All ties at the max are
     * kept, as in the oracle's scalar subquery.
     */
-  // session-scoped (SessionFrameCache): the persisted frame is bound to
+  // session-scoped (SessionCache): the persisted frame is bound to
   // ONE SparkContext — serving it to a later session in the same JVM
   // would fail on the stopped context
-  private val q15RevCache = new graft.SessionFrameCache[String]
+  private val q15RevCache = new graft.SessionCache[Unit, DataFrame]
 
   def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val rev = q15RevCache.getOrElseUpdate(spark, dir)(
+    val rev = q15RevCache.getOrElseUpdate(spark, dir, ())(
       Tables.lineitem(spark, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp"))
         .filter(col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
@@ -805,10 +805,10 @@ object Analytics {
     * the filter read ONE materialization.
     */
   // session-scoped like q15RevCache
-  private val q11Cache = new graft.SessionFrameCache[String]
+  private val q11Cache = new graft.SessionCache[Unit, DataFrame]
 
   def q11ImportantStock(spark: SparkSession, dir: String): DataFrame = {
-    val v = q11Cache.getOrElseUpdate(spark, dir)(
+    val v = q11Cache.getOrElseUpdate(spark, dir, ())(
       partsupp(spark, dir)
         .join(Tables.supplier(spark, dir).filter(col("s_nationkey") === 3),
           col("ps_suppkey") === col("s_suppkey"))

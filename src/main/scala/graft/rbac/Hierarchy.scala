@@ -41,20 +41,20 @@ object Hierarchy {
       .select(expr("id div 2").as("parent"), col("id").as("child"))
 
   // Closures are ROLE METADATA (≤ |roles|² pairs, derived from the
-  // role ids alone) — computed once per session and persisted, like
-  // the centroid sidecars, so the per-query plans see a flat cached
-  // frame instead of re-running the iterative join chain (the tree
-  // loop is height many joins; the DAG loop adds a driver-side count
-  // per round).
-  private val closureCache = new graft.SessionFrameCache[String]
+  // role ids alone) — computed once per session and dataset version
+  // and persisted, like the centroid sidecars, so the per-query plans
+  // see a flat cached frame instead of re-running the iterative join
+  // chain (the tree loop is height many joins; the DAG loop adds a
+  // driver-side count per round).
+  private val closureCache = new graft.SessionCache[String, DataFrame]
 
   /** Transitive closure (role_id, desc_id): desc_id is in role_id's
     * subtree (reflexive — a role is its own descendant). Iterative
     * one-level-per-round edge join, exact because the round count
     * equals the tree height.
     */
-  def roleClosure(spark: SparkSession): DataFrame =
-    closureCache.getOrElseUpdate(spark, "tree") {
+  def roleClosure(spark: SparkSession, dir: String): DataFrame =
+    closureCache.getOrElseUpdate(spark, dir, "tree") {
       val height = math.ceil(math.log(Rbac.NumRoles) / math.log(2)).toInt
       var closure = spark.range(0, Rbac.NumRoles)
         .select(col("id").as("role_id"), col("id").as("desc_id"))
@@ -77,7 +77,7 @@ object Hierarchy {
   // Effective-role frames are org-sized DIMENSION tables like
   // Rbac.userRoles — persisted once per (dataset, closure), so the
   // per-query grant rows read a flat cached frame.
-  private val effectiveCache = new graft.SessionFrameCache[(String, String)]
+  private val effectiveCache = new graft.SessionCache[String, DataFrame]
 
   /** Every user's held roles expanded through a role closure
     * (role_id, desc_id) — the one body of the tree and DAG
@@ -85,7 +85,7 @@ object Hierarchy {
     */
   private def expand(spark: SparkSession, dir: String, name: String,
                      closure: => DataFrame): DataFrame =
-    effectiveCache.getOrElseUpdate(spark, (dir, name)) {
+    effectiveCache.getOrElseUpdate(spark, dir, name) {
       Rbac.userRoles(spark, dir)
         .join(broadcast(closure), "role_id")
         .select(col("user_id"), col("desc_id").as("role_id"))
@@ -98,7 +98,7 @@ object Hierarchy {
     * pluggable anywhere the flat frame is (still org-sized).
     */
   def effectiveUserRoles(spark: SparkSession, dir: String): DataFrame =
-    expand(spark, dir, "tree", roleClosure(spark))
+    expand(spark, dir, "tree", roleClosure(spark, dir))
 
   /** A19 step 1: docs accessible to `userId` under the hierarchy —
     * the flat derivation routed through the expanded role set.
@@ -166,8 +166,8 @@ object Hierarchy {
     * after longest-path rounds. Per-round `count()` actions run over
     * role-metadata frames (|roles|² pairs at worst), never the corpus.
     */
-  def dagClosure(spark: SparkSession): DataFrame =
-    closureCache.getOrElseUpdate(spark, "dag") {
+  def dagClosure(spark: SparkSession, dir: String): DataFrame =
+    closureCache.getOrElseUpdate(spark, dir, "dag") {
       // each round persists BEFORE its count and releases the previous
       // round's cache: the fixed-point check then reads one cached
       // frame per round instead of recomputing the whole join chain
@@ -197,7 +197,7 @@ object Hierarchy {
     * multi-parent closure plugged in.
     */
   def dagEffectiveUserRoles(spark: SparkSession, dir: String): DataFrame =
-    expand(spark, dir, "dag", dagClosure(spark))
+    expand(spark, dir, "dag", dagClosure(spark, dir))
 
   /** Docs accessible to `userId` under the DAG hierarchy. */
   def dagAccessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =

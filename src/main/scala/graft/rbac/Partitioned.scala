@@ -138,15 +138,15 @@ object Partitioned {
       .join(Rbac.permissions(spark, dir), "role_id")
       .select("comb_key", "document_id").distinct()
 
-  private val layoutCache = new graft.SessionFrameCache[(String, Rbac.RoleModel, Double, Int)]
+  private val layoutCache = new graft.SessionCache[(Rbac.RoleModel, Double, Int), DataFrame]
 
-  /** The one cost-model layout cache, keyed by (dir, permission model,
-    * α, workload). */
+  /** The one cost-model layout cache, keyed by (dir version; permission
+    * model, α, workload). */
   private[rbac] def cachedCostModelLayout(spark: SparkSession, dir: String,
                                           model: Rbac.RoleModel,
                                           alpha: Double, nQueries: Int): DataFrame =
     // index metadata (≤ #combs rows), persisted by the build
-    layoutCache.getOrElseUpdate(spark, (dir, model, alpha, nQueries))(
+    layoutCache.getOrElseUpdate(spark, dir, (model, alpha, nQueries))(
       buildCostModelLayoutFrom(spark, dir, model.frame(spark, dir), alpha, nQueries))
 
   /** A17: cost-model dynamic partition assignment — the reference's
@@ -289,15 +289,15 @@ object Partitioned {
   /** The user's routed partition ids — bounded driver metadata (the
     * comb maps to one partition; like prunedRoleSearch's role ids).
     * ONE definition shared by A7's routed scan, A21's per-partition
-    * graph serving, and their specs. Read from the grant index's route
-    * map (`costModelRoutes`) with no job; above the index bound, one
-    * join of the layout with the user's comb, collected.
+    * graph serving, and their specs. Below the grant index bound, the
+    * user's comb routed through `costModelRoutes` with no job; above
+    * it, one join of the layout with the user's comb, collected.
     */
   def routedPartitionIds(spark: SparkSession, dir: String, userId: Long,
                          alpha: Double = 2.0): Seq[Integer] =
     Rbac.grantIndex(spark, dir) match {
       case Some(ix) =>
-        ix.combOf(userId).flatMap(costModelRoutes(spark, dir, ix, alpha).get)
+        ix.combOf(userId).flatMap(costModelRoutes(spark, dir, alpha).get)
           .map(Int.box).toSeq
       case None =>
         costModelLayout(spark, dir, alpha)
@@ -307,12 +307,15 @@ object Partitioned {
           .collect().map(r => Int.box(r.getInt(0))).toSeq
     }
 
+  private val routeCache = new graft.SessionCache[Double, Map[String, Int]]
+
   /** The flat cost-model layout's comb key → partition id map at α,
-    * collected once into the grant index `ix`.
+    * collected once, next to the grant index.
     */
-  private def costModelRoutes(spark: SparkSession, dir: String, ix: Rbac.GrantIndex,
-                                     alpha: Double): Map[String, Int] =
-    ix.routes(alpha)(costModelLayout(spark, dir, alpha).select("comb_key", "partition_id")
+  private def costModelRoutes(spark: SparkSession, dir: String,
+                              alpha: Double): Map[String, Int] =
+    routeCache.getOrElseUpdate(spark, dir, alpha)(costModelLayout(spark, dir, alpha)
+      .select("comb_key", "partition_id")
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap)
 
   /** A7: dynamic-partition search over the COST-MODEL layout

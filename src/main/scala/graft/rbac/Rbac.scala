@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftInternal
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
-import graft.{BuildOnce, SessionCache, Tables}
+import graft.{SessionCache, Tables}
 import graft.ann.Ann
 
 /** Permission-aware vector search — the reference's core capability.
@@ -83,11 +83,11 @@ object Rbac {
   // way a warehouse pins its dimensions. The block table is NOT cached:
   // at 100 TB the fact side is always a fresh parquet scan and the
   // local plans should keep that shape.
-  private val dimCache = new graft.SessionFrameCache[(String, String)]
+  private val dimCache = new SessionCache[String, DataFrame]
 
   /** UserRoles(user_id, role_id) — every user holds exactly 1-2 roles. */
   def userRoles(spark: SparkSession, dir: String): DataFrame =
-    dimCache.getOrElseUpdate(spark, ("ur", dir)) {
+    dimCache.getOrElseUpdate(spark, dir, "ur") {
       val c = Tables.customer(spark, dir).select(col("c_custkey").as("user_id"))
       c.withColumn("role_id", col("user_id") % NumRoles)
         .union(c.withColumn("role_id", (col("user_id") * 3 + 1) % NumRoles))
@@ -97,7 +97,7 @@ object Rbac {
 
   /** PermissionAssignment(role_id, document_id). */
   def permissions(spark: SparkSession, dir: String): DataFrame =
-    dimCache.getOrElseUpdate(spark, ("perm", dir)) {
+    dimCache.getOrElseUpdate(spark, dir, "perm") {
       val d = Tables.documents(spark, dir).select(col("doc_id").as("document_id"))
       d.withColumn("role_id", col("document_id") % NumRoles)
         .union(d.withColumn("role_id", expr("document_id div 10") % NumRoles))
@@ -134,10 +134,8 @@ object Rbac {
     heldRoles(spark, dir, Seq(userId), ur).select("role_id")
 
   /** Driver-side grant index of one permission model: user → held role
-    * ids, role → granted doc ids, user → comb key (`userCombsFrom`), and
-    * per α the cost-model layout's comb key → partition id map
-    * (`Partitioned.routedPartitionIds` fills it on first use). It holds
-    * grant and routing metadata only, never answers.
+    * ids, role → granted doc ids, user → comb key (`userCombsFrom`). It
+    * holds grant and routing metadata only, never answers.
     */
   private[graft] final class GrantIndex(roles: Map[Long, Array[Long]],
                                         docs: Map[Long, Array[Long]],
@@ -149,11 +147,6 @@ object Rbac {
       rolesOf(userId).flatMap(r => docs.getOrElse(r, Array.emptyLongArray)).distinct.sorted
 
     def combOf(userId: Long): Option[String] = combs.get(userId)
-
-    private val routeMaps = new BuildOnce[Double, Map[String, Int]]
-
-    def routes(alpha: Double)(build: => Map[String, Int]): Map[String, Int] =
-      routeMaps.getOrElseUpdate(alpha)(build)
   }
 
   /** Size ceiling of the driver grant path: the model's user-role rows
@@ -182,7 +175,7 @@ object Rbac {
     */
   private[graft] val DriverGrantRowsMax: Long = 65536L
 
-  private val indexCache = new SessionCache[(String, RoleModel), Option[GrantIndex]]
+  private val indexCache = new SessionCache[RoleModel, Option[GrantIndex]]
   private val broadcastGrants = new DynamicVariable(false)
 
   /** Test hook: run `body` with every strategy on the broadcast grant
@@ -193,13 +186,13 @@ object Rbac {
 
   /** The grant index of model `ur`, derived from its persisted frames —
     * None when the rows exceed `DriverGrantRowsMax` (or under
-    * `withBroadcastGrants`). Keyed like `dimCache`, so it is never
-    * staler than the frames it is collected from.
+    * `withBroadcastGrants`). Keyed by the data version like every
+    * store, so it is never staler than the frames it is collected from.
     */
   private[graft] def grantIndex(spark: SparkSession, dir: String,
                                 ur: RoleModel = Flat): Option[GrantIndex] =
     if (broadcastGrants.value) None
-    else indexCache.getOrElseUpdate(spark, (dir, ur)) {
+    else indexCache.getOrElseUpdate(spark, dir, ur) {
       val max = DriverGrantRowsMax.toInt
       val held = ur.frame(spark, dir)
       val urRows = held.select("user_id", "role_id").limit(max + 1).collect()

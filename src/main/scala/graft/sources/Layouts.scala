@@ -308,31 +308,29 @@ object Layouts {
     (olds.length, parquetFiles.length)
   }
 
-  /** Stamped layout root → its layout path, once the directory exists.
-    * Racing first callers of one layout share one build, different
-    * layouts build concurrently, and later calls take no lock and make
-    * no `Files.exists` stat.
+  /** Layout prefix → its layout path, once the directory exists, per
+    * data version. Racing first callers of one layout share one build,
+    * different layouts build concurrently, and later calls take no lock
+    * and make no `Files.exists` stat.
     */
   private val built = new graft.BuildOnce[String, String]
 
   /** Shared tmp root for a per-dataset materialized layout. Scoped by
     * OS user and by a hash of the dataset's CANONICAL path (two
     * checkouts with the same directory basename cannot collide), and
-    * stamped with (size, mtime) of EVERY source table the layout bakes
-    * in — regenerating any of them re-materializes the layout instead
+    * named by a digest of the dataset's data version (`Tables.version`)
+    * — rewriting any of its tables re-materializes the layout instead
     * of serving a stale one.
     */
-  private[graft] def layoutRoot(dir: String, prefix: String,
-                                sources: Seq[String]): String = {
-    val stamp = sources.map { f =>
-      val p = Paths.get(dir, f)
-      s"${Files.size(p)}_${Files.getLastModifiedTime(p).toMillis}"
-    }.mkString("_")
+  private def layoutRoot(spark: SparkSession, dir: String, prefix: String): String = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(graft.Tables.version(spark, dir).mkString(",").getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
     val dirId = java.lang.Integer.toHexString(
       Paths.get(dir).toAbsolutePath.normalize.toString.hashCode)
     val user = System.getProperty("user.name", "nouser")
     s"${System.getProperty("java.io.tmpdir")}/graft_layouts_$user/" +
-      s"${prefix}_${new java.io.File(dir).getName}_${dirId}_$stamp"
+      s"${prefix}_${new java.io.File(dir).getName}_${dirId}_$digest"
   }
 
   /** Materialized COST-MODEL layout (A7's at-scale substrate): the
@@ -346,12 +344,9 @@ object Layouts {
     */
   def costModelLayoutPath(spark: SparkSession, dir: String, alpha: Double = 2.0,
                           nQueries: Int = 20): String = {
-    // layout bakes in blocks (embeddings), permissions (documents) and
-    // the user-comb workload weights (customer) — stamp all three
-    val out = layoutRoot(dir, s"costmodel_a${alpha}_q$nQueries",
-      Seq("embeddings.parquet", "documents.parquet", "customer.parquet"))
-    built.getOrElseUpdate(out) {
-      val path = s"$out/blocks_by_costmodel"
+    val prefix = s"costmodel_a${alpha}_q$nQueries"
+    built.getOrElseUpdate(spark, dir, prefix) {
+      val path = s"${layoutRoot(spark, dir, prefix)}/blocks_by_costmodel"
       if (!Files.exists(Paths.get(path))) {
         Rbac.blocks(spark, dir)
           .join(Partitioned.costModelPartitionDocs(spark, dir, alpha, nQueries),
@@ -377,16 +372,12 @@ object Layouts {
     * granted partitions. Result is identical to `Rbac.prefilterTopK`
     * (the role partitions of the user's roles hold exactly the
     * accessible blocks — shares the prefilter oracle); the layout is
-    * materialized once per stamped layout path (`built`), so
-    * concurrent bench queries share one build.
+    * materialized once per data version (`built`), so concurrent
+    * bench queries share one build.
     */
   def prefilterPruned(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    // the role layout bakes in blocks (embeddings) AND the permission
-    // dimension (documents) — the stamped root re-materializes when
-    // either regenerates, and is scoped per user/checkout
-    val out = layoutRoot(dir, "role",
-      Seq("embeddings.parquet", "documents.parquet"))
-    val path = built.getOrElseUpdate(out)(materializeRoleLayout(spark, dir, out))
+    val path = built.getOrElseUpdate(spark, dir, "role")(
+      materializeRoleLayout(spark, dir, layoutRoot(spark, dir, "role")))
     prunedRoleSearch(spark, dir, path, userId, k)
   }
 

@@ -28,16 +28,16 @@ object DocStream {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  private val dictCache = new graft.BuildOnce[(String, Int, (Long, Long)), Array[Long]]
+  private val dictCache = new graft.BuildOnce[Int, Array[Long]]
 
   /** Distinct word-8-gram hashes of the eval set (source = 'src0'),
     * sorted — the decontamination dictionary (same kernel as C7),
-    * computed once per (dir, n, source-file stamp): a regenerated
-    * dataset re-derives the dictionary instead of gating against a
-    * stale eval set.
+    * computed once per (dir version, n): a regenerated dataset
+    * re-derives the dictionary instead of gating against a stale eval
+    * set.
     */
   def evalShingleDict(spark: SparkSession, dir: String, n: Int = 8): Array[Long] =
-    dictCache.getOrElseUpdate((dir, n, Staging.sourceStamp(dir, "documents.parquet"))) {
+    dictCache.getOrElseUpdate(spark, dir, n) {
       Tables.documents(spark, dir)
         .filter(col("source") === "src0")
         .select(explode(ngrams.word_nshingle_hashes(col("text"), n)).as("h"))

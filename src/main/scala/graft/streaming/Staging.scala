@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
 /** FileStreamSource monitors a DIRECTORY (new files appear → new
   * micro-batches); testdata ships single files, so each stream stages
@@ -33,28 +34,18 @@ private[streaming] object Staging {
       if (Files.exists(dst)) return d.toString
       throw new java.io.FileNotFoundException(src.toString)
     }
-    val srcMtime = Files.getLastModifiedTime(src)
-    val fresh = Files.exists(dst) &&
-      Files.size(dst) == Files.size(src) &&
-      Files.getLastModifiedTime(dst) == srcMtime
+    val srcStamp = graft.Tables.localStamp(src.toString)
+    val fresh = Files.exists(dst) && graft.Tables.localStamp(dst.toString) == srcStamp
     if (!fresh) {
       Files.createDirectories(d)
       val tmp = Files.createTempFile(d.getParent, "graft_stage_tmp_", ".parquet")
       try {
         Files.copy(src, tmp, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(tmp, srcMtime)
+        Files.setLastModifiedTime(tmp, FileTime.fromMillis(srcStamp(1)))
         Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
           StandardCopyOption.REPLACE_EXISTING)
       } finally Files.deleteIfExists(tmp)
     }
     d.toString
-  }
-
-  /** Content identity of the source file — cache keys derived from a
-    * path must change when the file is regenerated (size, mtime).
-    */
-  def sourceStamp(dir: String, fileName: String): (Long, Long) = {
-    val p: Path = Paths.get(dir, fileName)
-    (Files.size(p), Files.getLastModifiedTime(p).toMillis)
   }
 }

@@ -111,7 +111,7 @@ object Bpe {
   // session-scoped: the cached Model holds localCheckpoint blocks owned
   // by ONE SparkContext — serving them to a new session in the same JVM
   // would fail on dead block references
-  private val modelCache = new graft.SessionCache[(String, Int, Long), Model]
+  private val modelCache = new graft.SessionCache[(Int, Long), Model]
 
   /** Driver-side merge-loop ceiling (r17, guide §5 / VERDICT r16 #3):
     * the trainer's per-round work is TWO scans of the (word, cnt,
@@ -187,7 +187,7 @@ object Bpe {
     // `driverMax` rides in the key so the dispatch-equality spec can
     // force the distributed branch without poisoning the default
     // entry.
-    modelCache.getOrElseUpdate(spark, (dir, numMerges, driverMax)) {
+    modelCache.getOrElseUpdate(spark, dir, (numMerges, driverMax)) {
       // localCheckpoint (not bare persist) each round: the fold
       // expression is large, and 24 rounds of accreted lineage make
       // re-planning and plan stringification quadratic — checkpointing

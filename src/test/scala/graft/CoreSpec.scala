@@ -1906,7 +1906,7 @@ class HierarchySpec extends AnyFunSuite {
     // independent model of the derived tree: walk every role up to the
     // root; (a, r) is in the closure iff a is on r's ancestor chain
     val n = Rbac.NumRoles
-    val closure = Hierarchy.roleClosure(spark).collect()
+    val closure = Hierarchy.roleClosure(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = (for {
       r <- 0L until n.toLong
@@ -1945,10 +1945,10 @@ class HierarchySpec extends AnyFunSuite {
       acc
     }
     val brute = (for { r <- 0L until n.toLong; a <- ancestors(r) } yield (a, r)).toSet
-    val dag = Hierarchy.dagClosure(spark).collect()
+    val dag = Hierarchy.dagClosure(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dag == brute, s"dag closure mismatch: ${dag.diff(brute)} / ${brute.diff(dag)}")
-    val tree = Hierarchy.roleClosure(spark).collect()
+    val tree = Hierarchy.roleClosure(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(tree.subsetOf(dag) && dag.size > tree.size,
       "shared subtrees must add reachability beyond the tree")

@@ -529,7 +529,7 @@ class GraphSearchSpec extends AnyFunSuite {
     val n1 = sp.sparkContext.getPersistentRDDs.size
     val (iters, ef, r) = GraphSearch.nndServePolicy(sp, sf, target = 0.0)
     assert((iters, ef) == (2, GraphSearch.Ef) && r >= 0.0 && r <= 1.0)
-    assert(GraphSearch.nndProbedPoints(sf).contains((iters, ef, r)))
+    assert(GraphSearch.nndProbedPoints(sp, sf).contains((iters, ef, r)))
     assert(sp.sparkContext.getPersistentRDDs.size == n1,
       "NN-Descent probe walks must not accumulate persisted walk states")
   }

@@ -351,28 +351,46 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(gone.isEmpty, s"deleted per-caller frames or grant rules are back: $gone")
   }
 
-  test("one build-once rule: application scoping and locks live in SessionFrameCache") {
+  test("one build-once rule: version keying, application scoping and locks live in BuildOnce.scala") {
     val sources = ConsumerScan.sources("src/main/scala")
     def filesWith(re: scala.util.matching.Regex): Seq[String] =
       sources.collect { case (f, src) if re.findFirstIn(src).isDefined => f }
+    val store = "graft/BuildOnce.scala"
     // SessionCache scopes context-bound values by application; a store
     // reading applicationId itself re-implements that eviction
-    assert(filesWith("""applicationId""".r) == Seq("graft/SessionFrameCache.scala"))
+    assert(filesWith("""applicationId""".r) == Seq(store))
     // BuildOnce takes a per-key lock; every other store, the on-disk
     // layouts included, builds through it
     val locks = filesWith("""\.synchronized\b""".r)
-    assert(locks == Seq("graft/SessionFrameCache.scala"),
-      s"hand-rolled locks outside BuildOnce: $locks")
+    assert(locks == Seq(store), s"hand-rolled locks outside BuildOnce: $locks")
     // a bare TrieMap memo runs its build in every racing caller; the
     // only others are Ann's descent recorders, which record counts a
     // build observed and build nothing
     val recorders = """val (descentCandStats|descentInitStats) =\s*scala\.collection\.concurrent\.TrieMap""".r
-    val trieMaps = sources.filter(_._1 != "graft/SessionFrameCache.scala")
+    val trieMaps = sources.filter(_._1 != store)
       .filter { case (_, src) => "TrieMap".r.findAllMatchIn(src).size >
         recorders.findAllMatchIn(src).size }
       .map(_._1)
     assert(trieMaps.isEmpty, s"TrieMap stores outside BuildOnce / SessionCache: $trieMaps")
     assert(sources.map { case (_, src) => recorders.findAllMatchIn(src).size }.sum == 2)
+    // every store access names the dataset dir, which the store keys by
+    // its data version: the signature leaves no way to key by a bare path
+    val storeSrc = sources.find(_._1 == store).get._2
+    val publicDefs = """(?m)^  def (\w+)\(([^)]*)\)""".r.findAllMatchIn(storeSrc)
+      .map(m => m.group(1) -> m.group(2)).toSeq
+    assert(publicDefs.map(_._1).sorted == Seq("entries", "getOrElseUpdate", "put"), publicDefs)
+    assert(publicDefs.forall(_._2.startsWith("spark: SparkSession, dir: String")), publicDefs)
+    // ...and no caller repeats the dir inside the rest of the key, or
+    // computes a version itself
+    val dirInKey = """(getOrElseUpdate|put)\(\s*\w+,\s*(\w+),\s*\(\2\b""".r
+    assert(filesWith(dirInKey).isEmpty, s"a store key holding the dataset path: ${filesWith(dirInKey)}")
+    assert(filesWith("""Tables\.version\(""".r) == Seq(store, "graft/sources/Layouts.scala"))
+    val gone = Seq("SessionFrameCache", "sourceStamp", "Tables.stamp(", "retainKeys")
+      .filter(n => sources.exists(_._2.contains(n)))
+    assert(gone.isEmpty, s"deleted stamp rules or store classes are back: $gone")
+    // one modification-time read: a file's (size, mtime) is Tables'
+    val mtimes = filesWith("""getLastModifiedTime|getModificationTime|\.lastModified\b""".r)
+    assert(mtimes == Seq("graft/Tables.scala"), s"modification-time reads outside Tables: $mtimes")
   }
 
   test("one derivation per layout: role rows, comb routing, user combs, layout cache, degree cap") {

@@ -41,13 +41,13 @@ class Round15Spec extends AnyFunSuite {
     assert(sharing.nonEmpty,
       "no two sample users share a routed partition set at the oracle SF — " +
         "the sharing contract has nothing to bind to")
-    val before = GraphSearch.partitionProbeCount(sf)
+    val before = GraphSearch.partitionProbeCount(spark, sf)
     for (us <- sharing; a = us.head; b <- us.tail) {
       val pa = GraphSearch.partitionServePolicy(spark, sf, a)
       val pb = GraphSearch.partitionServePolicy(spark, sf, b)
       assert(pa == pb, s"users $a/$b share partition set but got different policies")
     }
-    assert(GraphSearch.partitionProbeCount(sf) == before,
+    assert(GraphSearch.partitionProbeCount(spark, sf) == before,
       "serving sharing users added probe walks at the oracle SF (pin violated)")
   }
 

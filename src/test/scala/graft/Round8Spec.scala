@@ -24,7 +24,7 @@ class SessionCacheSpec extends AnyFunSuite {
       pool.submit(new Callable[Int] {
         def call(): Int = {
           latch.await()
-          c.getOrElseUpdate(s, "k") { builds.incrementAndGet(); Thread.sleep(50); 42 }
+          c.getOrElseUpdate(s, sf, "k") { builds.incrementAndGet(); Thread.sleep(50); 42 }
         }
       })
     }

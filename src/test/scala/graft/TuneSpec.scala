@@ -6,7 +6,8 @@ import graft.ann.GraphSearch
 
 /** The one tuning loop (`GraphSearch.tune`) and efFor's grid pick
   * (`GraphSearch.pickEf`), driven by a fake (iters, ef) → recall probe
-  * table — no Spark. Every case pins the exact probe sequence and the
+  * table — no Spark job (the point memo only resolves the data version
+  * of a dataset dir that does not exist). Every case pins the exact probe sequence and the
   * pick; the oracle SFs never reach escalation or saturation (their
   * policies pin iters = 2), so this is where those branches are held.
   */
@@ -22,7 +23,7 @@ class TuneSpec extends AnyFunSuite {
     }
     /** The same probe behind the engine's point memo, under `graph`. */
     def memoized(graph: String)(iters: Int, ef: Int): Double =
-      GraphSearch.measure("tune-spec", graph, iters, ef)(probe(iters, ef))
+      GraphSearch.measure(SparkTest.spark, "tune-spec", graph, iters, ef)(probe(iters, ef))
   }
 
   test("ef doubles from Ef until a beam meets the target") {

@@ -19,8 +19,13 @@ in whatever order concurrent walks finish), and RDD ids
 (`MapPartitionsRDD[484]`, `VertexRDDImpl[8470]`, a counter every
 earlier job advances),
 whole-stage codegen ids and query-stage ids (both numbered in the order
-stages happen to run). sbt's own tagged log lines (`[info] ...`) are
-dropped.
+stages happen to run), the data-version suffix of a materialized layout
+dir (`graft_layouts_<user>/role_sf0.01_f03e707_<version>`, named from the
+dataset files' sizes and mtimes, so a copy or a touch of the same data
+renames it), and the suffix of a generated lambda variable
+(`lambda x_38#N`, from a JVM-wide counter), renumbered within each plan
+in order of first appearance so distinct lambdas stay distinct. sbt's
+own tagged log lines (`[info] ...`) are dropped.
 
 A cached relation's adaptive plan prints as its final plan once an
 earlier action has materialized the cache, and as its initial plan
@@ -51,6 +56,8 @@ NODE_ID = re.compile(r"\((\d+)\)")
 DETAIL_HEAD = re.compile(r"^\((\d+)\) (.*)$")
 OPERATOR_REF = re.compile(r"(operator id(?: =|:) )(\d+)")
 STAGE_ID = re.compile(r"^Arguments: \d+$")
+LAYOUT_VERSION = re.compile(r"(graft_layouts_[^/]+/[^/\s\]]+?_[0-9a-f]{1,8})(?:_[0-9a-f]+)+(?=/)")
+LAMBDA_VAR = re.compile(r"(lambda [A-Za-z]\w*?_)(\d+)\b")
 
 
 def normalize(line):
@@ -61,6 +68,7 @@ def normalize(line):
     line = RDD_ID.sub(r"\1[N]", line)
     line = CODEGEN_ID.sub("[codegen id : N]", line)
     line = FINAL_FLAG.sub("isFinalPlan=_", line)
+    line = LAYOUT_VERSION.sub(r"\1_V", line)
     return TMP_SUFFIX.sub(lambda m: m.group(1) + "N" + ("/rN" if m.group(2) else ""), line)
 
 
@@ -139,6 +147,15 @@ def initial_form(lines):
     return out
 
 
+def renumber_lambdas(lines):
+    """`lines` with each generated lambda variable numbered by first appearance."""
+    ids = {}
+
+    def sub(m):
+        return m.group(1) + str(ids.setdefault(m.group(0), len(ids) + 1))
+    return [LAMBDA_VAR.sub(sub, line) for line in lines]
+
+
 def split_plans(text):
     """Map each key to its normalized plan lines (blank edges trimmed)."""
     plans, key = {}, None
@@ -154,7 +171,7 @@ def split_plans(text):
             lines.pop()
         while lines and not lines[0]:
             lines.pop(0)
-        plans[key] = initial_form(lines)
+        plans[key] = renumber_lambdas(initial_form(lines))
     return plans
 
 

@@ -180,6 +180,29 @@ class PlanDiffTest(unittest.TestCase):
                                 "obj#12: graft.M$Row"),
             "Arguments: graft.M$$$Lambda@H, obj#N: graft.M$Row")
 
+    def test_a_layout_dir_version_suffix_is_normalized(self):
+        for stamp in ["193638_1792363512043_65049_1792363512034", "4e3146c7a65b5066"]:
+            self.assertEqual(
+                plan_diff.normalize("Location: InMemoryFileIndex [file:/tmp/graft_layouts_root/"
+                                    f"role_sf0.01_f03e707_{stamp}/blocks_by_role]"),
+                "Location: InMemoryFileIndex [file:/tmp/graft_layouts_root/"
+                "role_sf0.01_f03e707_V/blocks_by_role]")
+
+    def test_generated_lambda_variables_are_renumbered_per_plan(self):
+        # dedup_substring dumped in two JVMs: the same lambda as x_38 and x_33
+        plan = ("========== dedup_substring ==========\n"
+                "Arguments: posexplode(transform(sequence(0, (size(ws#59497, false) - 6), "
+                "None, Some(UTC)), lambdafunction(concat_ws( , slice(ws#59497, "
+                "(lambda x_38#59499 + 1), 6)), lambda x_38#59499, false)))\n")
+        other = plan.replace("x_38#59499", "x_33#412")
+        self.assertEqual(plan_diff.diff_plans(plan_diff.split_plans(plan),
+                                              plan_diff.split_plans(other)), ([], []))
+        self.assertIn("(lambda x_1#N + 1)", plan_diff.split_plans(plan)["dedup_substring"][0])
+        # two distinct lambdas never fold into one
+        two = plan.replace("lambda x_38#59499, false", "lambda x_39#59500, false")
+        diff, _ = plan_diff.diff_plans(plan_diff.split_plans(plan), plan_diff.split_plans(two))
+        self.assertEqual([k for k, _ in diff], ["dedup_substring"])
+
     def test_renumbered_plans_are_identical(self):
         changed, one_side = plan_diff.diff_plans(
             plan_diff.split_plans(BEFORE), plan_diff.split_plans(AFTER_SAME))
