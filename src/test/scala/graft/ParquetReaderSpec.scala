@@ -351,7 +351,7 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(gone.isEmpty, s"deleted per-caller frames or grant rules are back: $gone")
   }
 
-  test("one build-once rule: version keying, application scoping and locks live in BuildOnce.scala") {
+  test("one build-once rule: version keys, scoping and locks live in BuildOnce.scala") {
     val sources = ConsumerScan.sources("src/main/scala")
     def filesWith(re: scala.util.matching.Regex): Seq[String] =
       sources.collect { case (f, src) if re.findFirstIn(src).isDefined => f }
