@@ -590,8 +590,8 @@ object Bench {
       build("role_layout")(graft.sources.Layouts.prefilterPruned(spark, sfDir, 1, 1).count())
       // cost-model layout (A7's routed-scan substrate, round 6): the
       // materialized layout, which an earlier JVM may have left on
-      // disk, and the in-memory layout plus the grant index's route
-      // map, which no earlier JVM can leave
+      // disk, and the in-memory layout plus its route map, which no
+      // earlier JVM can leave
       build("costmodel_layout") {
         graft.sources.Layouts.costModelLayoutPath(spark, sfDir)
         graft.rbac.Partitioned.routedPartitionIds(spark, sfDir, 0L)

@@ -450,39 +450,26 @@ object GraphSearch {
     * partitions share one member set, serving graph, walk and measured
     * (iters, ef) policy row. Rendered by `routedPartitionKey`.
     */
-  private val routedCache = new graft.SessionCache[(Long, Double), Seq[Int]]
   private def routedPartitions(spark: SparkSession, dir: String, userId: Long,
                                alpha: Double): Seq[Int] =
-    routedCache.getOrElseUpdate(spark, dir, (userId, alpha))(
-      graft.rbac.Partitioned.routedPartitionIds(spark, dir, userId, alpha)
-        .map(_.intValue).sorted)
+    graft.rbac.Partitioned.routedPartitionIds(spark, dir, userId, alpha).map(_.intValue).sorted
 
   private[graft] def routedPartitionKey(spark: SparkSession, dir: String,
                                         userId: Long, alpha: Double = 2.0): String =
     routedPartitions(spark, dir, userId, alpha).mkString(",")
 
   /** Deterministic probe representative per routed partition set: the
-    * SMALLEST user id in A15's workload sample (user_id ≤ 20, the
+    * SMALLEST user id in A15's workload sample (users 0–20, the
     * workloadGen population) routing to each partition set — so the
     * measured policy row does not depend on WHICH sharing user asked
     * first (call-order-dependent picks would make the pick itself
-    * nondeterministic across Verify/Bench orderings). One bounded
-    * driver query (≤ sample-size rows), session-cached.
+    * nondeterministic across Verify/Bench orderings). Read from the
+    * routes, like every routing lookup.
     */
-  private val probeUserCache = new graft.SessionCache[Double, Map[String, Long]]
   private def policyProbeUsers(spark: SparkSession, dir: String,
                                alpha: Double): Map[String, Long] =
-    probeUserCache.getOrElseUpdate(spark, dir, alpha) {
-      import graft.rbac.Partitioned
-      Partitioned.costModelLayout(spark, dir, alpha)
-        .join(graft.rbac.Rbac.userCombsFrom(graft.rbac.Rbac.userRoles(spark, dir))
-          .filter(col("user_id") <= 20), "comb_key")
-        .groupBy("user_id")
-        .agg(sort_array(collect_set(col("partition_id"))).as("pids"))
-        .collect()
-        .map(r => (r.getSeq[Int](1).mkString(","), r.getLong(0)))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-    }
+    (0L to 20L).groupBy(u => routedPartitionKey(spark, dir, u, alpha))
+      .map { case (k, us) => k -> us.min }
 
   /** The point-memo identity of a routed partition set's graph. */
   private def partitionGraphKey(pkey: String, alpha: Double): String =

@@ -235,13 +235,11 @@ object QdTree {
     val tree = getOrBuild(spark, dir)
     // per-leaf role index ∩ user roles → relevant leaves → the
     // (comb, cell) partitions to scan (index metadata, broadcast); the
-    // user's roles come from the grant index, else a broadcast join
-    val leafRoles = tree.assign
+    // user's role ids bind as a literal
+    val relevantLeaves = tree.assign
       .select(col("leaf_id"), explode(col("roles")).as("role_id")).distinct()
-    val relevantLeaves = (Rbac.grantIndex(spark, dir) match {
-      case Some(ix) => leafRoles.filter(col("role_id").isin(ix.rolesOf(userId): _*))
-      case None => leafRoles.join(broadcast(Rbac.rolesOf(spark, dir, userId)), "role_id")
-    }).select("leaf_id").distinct()
+      .filter(col("role_id").isin(Rbac.heldRoleIds(spark, dir, userId): _*))
+      .select("leaf_id").distinct()
     val routedParts = tree.assign
       .join(broadcast(relevantLeaves), Seq("leaf_id"), "left_semi")
       .select("comb_key", "cell")

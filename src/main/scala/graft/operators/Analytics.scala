@@ -336,6 +336,9 @@ object Analytics {
   /** (event_type, value, rn): the exact 1-based rank of each non-null
     * value within its type — the single-task window below
     * `distRankMinRows` total rows, the range-partitioned form above.
+    * The range form's offsets hold only while both reads of the local
+    * ranks resolve to one reused range exchange: over a persisted input
+    * each read samples its own range bounds, and ranks come out wrong.
     */
   private[graft] def typeRanks(spark: SparkSession, nonNull: DataFrame, totalRows: Long,
                                distRankMinRows: Long): DataFrame =

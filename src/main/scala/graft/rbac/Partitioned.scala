@@ -41,15 +41,9 @@ object Partitioned {
     * through the partitioned plan.
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val layout = roleLayout(spark, dir)
-    // partition prune: the user's role ids from the grant index, else a
-    // broadcast semi-join against the role rows
-    val pruned = Rbac.grantIndex(spark, dir) match {
-      case Some(ix) => layout.filter(col("partition_role").isin(ix.rolesOf(userId): _*))
-      case None =>
-        val ur = Rbac.rolesOf(spark, dir, userId).select(col("role_id").as("partition_role"))
-        layout.join(broadcast(ur), Seq("partition_role"), "left_semi")
-    }
+    // partition prune: the user's role ids as a literal
+    val pruned = roleLayout(spark, dir)
+      .filter(col("partition_role").isin(Rbac.heldRoleIds(spark, dir, userId): _*))
     roleMergeTopK(spark, dir, pruned, k)
   }
 
@@ -182,8 +176,7 @@ object Partitioned {
     */
   private[graft] def buildCostModelLayoutFrom(spark: SparkSession, dir: String,
                                              ur: DataFrame, alpha: Double,
-                                             nQueries: Int,
-                                             rankSinglePartMax: Long = RankSinglePartMax): DataFrame = {
+                                             nQueries: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val blocks = Rbac.blocks(spark, dir).select("document_id")
     val total = blocks.agg(count(lit(1)).as("n0"))
@@ -206,52 +199,17 @@ object Partitioned {
       .withColumn("benefit",
         round(col("weight") * (log(col("n0")) - log(col("n_docs"))) / col("n_docs"), 6))
       .persist()
-    // size-guarded global rank (r17, VERDICT r16 #3-residual): the
-    // greedy order and its running doc sum are prefix computations
-    // over the benefit-sorted comb table. Below the guard they stay
-    // ONE unpartitioned window pass (the comb table is index metadata
-    // — a few rows at the oracle SFs, and a 1-task sort is the
-    // measured-faster plan for small frames, see the E8 rank
-    // dispatch); above it the rank/prefix-sum pair is computed
-    // range-partitioned (local ranks + per-slice offsets), so no
-    // single task ever sorts an unbounded comb population. Both
-    // branches are exact over the same total order (benefit desc,
-    // comb_key) — Round17Spec pins them row-identical.
-    val nCombs = scored.count()
-    requireIntRank(nCombs)
-    val ranked =
-      if (nCombs <= rankSinglePartMax) {
-        val byBenefit = Window.orderBy(col("benefit").desc, col("comb_key"))
-        scored
-          .withColumn("rnk", row_number().over(byBenefit))
-          .withColumn("cum", sum(col("n_docs")).over(
-            byBenefit.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      } else {
-        val parts = math.max(spark.sparkContext.defaultParallelism,
-          (nCombs / 1048576L).toInt)
-        val sliced = scored
-          .repartitionByRange(parts, col("benefit").desc, col("comb_key"))
-          .withColumn("__pid", spark_partition_id())
-        val byLocal = Window.partitionBy("__pid")
-          .orderBy(col("benefit").desc, col("comb_key"))
-        val local = sliced
-          .withColumn("lrn", row_number().over(byLocal))
-          .withColumn("lcum", sum(col("n_docs")).over(
-            byLocal.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        val offsets = local.groupBy("__pid")
-          .agg(count(lit(1)).as("cnt"), sum("n_docs").as("docsum"))
-          .withColumn("rnk_off", coalesce(sum("cnt").over(
-            Window.orderBy("__pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .withColumn("cum_off", coalesce(sum("docsum").over(
-            Window.orderBy("__pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("__pid").as("__opid"), col("rnk_off"), col("cum_off"))
-        local.join(broadcast(offsets), col("__pid") === col("__opid"))
-          .withColumn("rnk", (col("rnk_off") + col("lrn")).cast("int"))
-          .withColumn("cum", col("cum_off") + col("lcum"))
-      }
-    val out = ranked
+    // the greedy order and its running doc sum: ONE unpartitioned
+    // window pass over the benefit-sorted comb table. The table is index
+    // metadata — at most 9 rows at every scale, since a user's held set
+    // is a function of its key mod 10 and the tree/DAG sets are
+    // functions of the held set — so a 1-task sort is the whole cost.
+    requireIntRank(scored.count())
+    val byBenefit = Window.orderBy(col("benefit").desc, col("comb_key"))
+    val out = scored
+      .withColumn("rnk", row_number().over(byBenefit))
+      .withColumn("cum", sum(col("n_docs")).over(
+        byBenefit.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("partition_id",
         when(col("benefit") > 0 && col("cum") <= (lit(alpha) - 1) * col("n0"),
           col("rnk")).otherwise(lit(0)))
@@ -269,12 +227,6 @@ object Partitioned {
   private[graft] def requireIntRank(nCombs: Long): Unit =
     require(nCombs <= Int.MaxValue, s"$nCombs combs overflow the int partition_id schema")
 
-  /** Single-partition ceiling for the benefit rank — a ~1M-row 1-task
-    * sort is sub-second; past it the range-partitioned prefix form
-    * takes over. Overridable only by the dispatch-equality spec.
-    */
-  private[graft] val RankSinglePartMax: Long = 1048576L
-
   /** (partition_id, document_id) doc sets of the cost-model layout —
     * docs duplicated across partitions: the storage the α budget pays
     * for. Shared by the routed search and the space report.
@@ -289,34 +241,27 @@ object Partitioned {
   /** The user's routed partition ids — bounded driver metadata (the
     * comb maps to one partition; like prunedRoleSearch's role ids).
     * ONE definition shared by A7's routed scan, A21's per-partition
-    * graph serving, and their specs. Below the grant index bound, the
-    * user's comb routed through `costModelRoutes` with no job; above
-    * it, one join of the layout with the user's comb, collected.
+    * graph serving, and their specs: the user's held role ids
+    * (`Rbac.heldRoleIds`) looked up in `costModelRoutes`.
     */
   def routedPartitionIds(spark: SparkSession, dir: String, userId: Long,
                          alpha: Double = 2.0): Seq[Integer] =
-    Rbac.grantIndex(spark, dir) match {
-      case Some(ix) =>
-        ix.combOf(userId).flatMap(costModelRoutes(spark, dir, alpha).get)
-          .map(Int.box).toSeq
-      case None =>
-        costModelLayout(spark, dir, alpha)
-          .join(Rbac.rolesOf(spark, dir, userId).agg(Rbac.combKey(Rbac.roleSet).as("comb_key")),
-            "comb_key")
-          .select("partition_id").distinct()
-          .collect().map(r => Int.box(r.getInt(0))).toSeq
-    }
+    costModelRoutes(spark, dir, alpha).get(Rbac.heldRoleIds(spark, dir, userId))
+      .map(Int.box).toSeq
 
-  private val routeCache = new graft.SessionCache[Double, Map[String, Int]]
+  private val routeCache = new graft.SessionCache[Double, Map[Seq[Long], Int]]
 
-  /** The flat cost-model layout's comb key → partition id map at α,
-    * collected once, next to the grant index.
+  /** The flat cost-model layout's routes at α: each comb's sorted role
+    * ids → its partition id, collected once from the layout joined to
+    * the user combs' (comb_key, role_id) pairs (at most 9 combs).
     */
   private def costModelRoutes(spark: SparkSession, dir: String,
-                              alpha: Double): Map[String, Int] =
+                              alpha: Double): Map[Seq[Long], Int] =
     routeCache.getOrElseUpdate(spark, dir, alpha)(costModelLayout(spark, dir, alpha)
       .select("comb_key", "partition_id")
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap)
+      .join(Rbac.combRolesFrom(Rbac.userRoles(spark, dir)), "comb_key")
+      .collect().groupBy(_.getString(0)).values
+      .map(rs => rs.map(_.getLong(2)).sorted.toSeq -> rs.head.getInt(1)).toMap)
 
   /** A7: dynamic-partition search over the COST-MODEL layout
     * (search.py:31): the user's role combination routes to its

@@ -28,10 +28,13 @@ import graft.ann.Ann
   * the rows whose document the user may read, an EXISTS over
   * UserRoles ⋈ PermissionAssignment — and differs only in physical
   * layout. That question is answered here and nowhere else:
-  *   - `rolesOf`: the user's role rows under a permission model (flat
-  *     `userRoles`, or the tree/DAG effective roles of `Hierarchy`);
+  *   - `heldRoleIds`: the user's distinct role ids, ascending, under a
+  *     permission model (flat `userRoles`, or the tree/DAG effective
+  *     roles of `Hierarchy`) — the one way engine code learns a user's
+  *     roles, and the routing key of every role- and comb-keyed layout;
   *   - `grantIndex`: the same grants as driver-side maps (user → roles,
-  *     role → docs, user → comb key), below `DriverGrantRowsMax`;
+  *     role → docs), below `DriverGrantRowsMax`, read only by
+  *     `heldRoleIds` and `restrict`;
   *   - `restrict`: the one permission filter — the user's doc ids as an
   *     `InSet` filter, or above the index bound a left-semi join of a
   *     frame's doc key against the user's grant rows;
@@ -52,7 +55,9 @@ import graft.ann.Ann
   * grant rows into the (100 TB) block scan — no data movement on the
   * big side. Either way the top-k is a TakeOrderedAndProject
   * (per-partition bounded heap, k rows shipped per partition), not a
-  * global sort.
+  * global sort. Routing (user roles → role or comb partitions,
+  * search.py:31) never joins the user's role rows: on both sides of the
+  * bound the routed layouts bind `heldRoleIds` as a literal.
   */
 object Rbac {
   val NumRoles = 10
@@ -128,34 +133,29 @@ object Rbac {
                         ur: RoleModel): DataFrame =
     ur.frame(spark, dir).filter(col("user_id").isin(users: _*))
 
-  /** The user's `role_id` rows under the permission model `ur`. */
-  def rolesOf(spark: SparkSession, dir: String, userId: Long,
-              ur: RoleModel = Flat): DataFrame =
-    heldRoles(spark, dir, Seq(userId), ur).select("role_id")
-
   /** Driver-side grant index of one permission model: user → held role
-    * ids, role → granted doc ids, user → comb key (`userCombsFrom`). It
-    * holds grant and routing metadata only, never answers.
+    * ids, role → granted doc ids, each distinct and ascending. It holds
+    * grant metadata only, never answers.
     */
   private[graft] final class GrantIndex(roles: Map[Long, Array[Long]],
-                                        docs: Map[Long, Array[Long]],
-                                        combs: Map[Long, String]) {
-    def rolesOf(userId: Long): Seq[Long] = roles.getOrElse(userId, Array.emptyLongArray).toSeq
+                                        docs: Map[Long, Array[Long]]) {
+    def heldBy(userId: Long): Seq[Long] = roles.getOrElse(userId, Array.emptyLongArray).toSeq
 
     /** The user's distinct granted doc ids, ascending. */
     def docsOf(userId: Long): Seq[Long] =
-      rolesOf(userId).flatMap(r => docs.getOrElse(r, Array.emptyLongArray)).distinct.sorted
-
-    def combOf(userId: Long): Option[String] = combs.get(userId)
+      heldBy(userId).flatMap(r => docs.getOrElse(r, Array.emptyLongArray)).distinct.sorted
   }
 
   /** Size ceiling of the driver grant path: the model's user-role rows
-    * plus its permission rows. Below it the grants are collected once
-    * into a `GrantIndex` and each call binds the user's doc ids as an
-    * `InSet` — no grant job per call, where the broadcast semi-join runs
-    * two (its build-side collect and the broadcast). Above it — the
-    * org-sized grant tables of a large deployment — every strategy keeps
-    * the broadcast semi-join, the only path that runs at any size.
+    * plus its permission rows. It decides two things only: `restrict`'s
+    * form and whether `heldRoleIds` collects. Below it the grants are
+    * collected once into a `GrantIndex`: each call binds the user's doc
+    * ids as an `InSet` and reads its role ids from the index — no grant
+    * or routing job per call, where the broadcast semi-join runs two
+    * (its build-side collect and the broadcast). Above it — the
+    * org-sized grant tables of a large deployment — `restrict` keeps the
+    * broadcast semi-join, the only path that runs at any size, and
+    * `heldRoleIds` runs one collect of the user's role rows.
     *
     * The bound also caps one user's `InSet` (at most the model's
     * permission rows), whose ids ride in the plan of every call.
@@ -194,16 +194,14 @@ object Rbac {
     if (broadcastGrants.value) None
     else indexCache.getOrElseUpdate(spark, dir, ur) {
       val max = DriverGrantRowsMax.toInt
-      val held = ur.frame(spark, dir)
-      val urRows = held.select("user_id", "role_id").limit(max + 1).collect()
+      val urRows = ur.frame(spark, dir).select("user_id", "role_id").limit(max + 1).collect()
       val permRows = if (urRows.length > max) Array.empty[Row]
         else permissions(spark, dir).limit(max + 1 - urRows.length).collect()
       if (urRows.length + permRows.length > max) None
       else {
         def grouped(rows: Array[Row]): Map[Long, Array[Long]] =
-          rows.groupMap(_.getLong(0))(_.getLong(1)).map { case (k, v) => k -> v.sorted }
-        val combs = userCombsFrom(held).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-        Some(new GrantIndex(grouped(urRows), grouped(permRows), combs))
+          rows.groupMap(_.getLong(0))(_.getLong(1)).map { case (k, v) => k -> v.distinct.sorted }
+        Some(new GrantIndex(grouped(urRows), grouped(permRows)))
       }
     }
 
@@ -215,13 +213,21 @@ object Rbac {
   private def inSet(c: Column, ids: Seq[Long]): Column =
     GraftInternal.column(InSet(GraftInternal.expression(c.cast("long")), ids.toSet[Any]))
 
-  /** The user's held role ids under `ur` — the routing key of the
-    * role-keyed layouts: the index's, else one collect of `rolesOf`.
+  /** The user's distinct held role ids under `ur`, ascending — the one
+    * way engine code learns a user's roles, and the routing key of every
+    * role- and comb-keyed layout (`rolePartitionTopK`,
+    * `prunedRoleSearch`, `QdTree.routedTopK`, `routedPartitionIds`).
+    * Below `DriverGrantRowsMax` the grant index answers with no job;
+    * above it, one collect of the user's role rows.
     */
   private[graft] def heldRoleIds(spark: SparkSession, dir: String, userId: Long,
                                  ur: RoleModel = Flat): Seq[Long] =
-    grantIndex(spark, dir, ur).map(_.rolesOf(userId))
-      .getOrElse(rolesOf(spark, dir, userId, ur).collect().map(_.getLong(0)).toSeq)
+    grantIndex(spark, dir, ur) match {
+      case Some(ix) => ix.heldBy(userId)
+      case None =>
+        heldRoles(spark, dir, Seq(userId), ur).select("role_id")
+          .collect().map(_.getLong(0)).distinct.sorted.toSeq
+    }
 
   /** The one grant-rows body, (user_id, document_id): one row per (user,
     * held role, granted doc), so a doc granted by two of a user's roles

@@ -8,8 +8,8 @@ import graft.rbac.{Hierarchy, Partitioned, Rbac}
 /** The driver-side grant index (`Rbac.grantIndex`) against the
   * broadcast grant path it stands in for below `DriverGrantRowsMax`
   * (`Rbac.withBroadcastGrants` forces the latter): the same rows from
-  * every serving strategy, and one job per call where the grant lookups
-  * and the query row were the rest.
+  * every serving strategy, the same routing, and one job per call where
+  * the grant lookups and the query row were the rest.
   */
 class GrantIndexSpec extends AnyFunSuite {
   import SparkTest._
@@ -30,7 +30,8 @@ class GrantIndexSpec extends AnyFunSuite {
       "prefilterPruned" -> (u => sources.Layouts.prefilterPruned(sp, sf, u, K)),
       "predicateAwareSearch" -> (u => ann.IvfIndex.predicateAwareSearch(sp, sf, u, topk = K)),
       "hierarchyTopK" -> (u => Hierarchy.hierarchyTopK(sp, sf, u, K)),
-      "dagTopK" -> (u => Hierarchy.dagTopK(sp, sf, u, K)))
+      "dagTopK" -> (u => Hierarchy.dagTopK(sp, sf, u, K)),
+      "qdTreeRoutedTopK" -> (u => ann.QdTree.routedTopK(sp, sf, u, K)))
   }
 
   private val models = Seq[Rbac.RoleModel](Rbac.Flat, Rbac.Tree, Rbac.Dag)
@@ -62,6 +63,17 @@ class GrantIndexSpec extends AnyFunSuite {
         s"$m user $u: broadcast restrict != accessibleDocs")
       assert(Rbac.grantIndex(sp, sf, m).get.docsOf(u) == acc, s"$m user $u: index docs")
     }
+  }
+
+  test("routed partition ids and keys are equal on both grant paths") {
+    val sp = spark
+    val users = (0L to 20L) :+ 4321L // the last holds no role
+    def routes(): Seq[(Seq[Integer], String)] = users.map(u =>
+      (Partitioned.routedPartitionIds(sp, sf, u), ann.GraphSearch.routedPartitionKey(sp, sf, u)))
+    val indexed = routes()
+    assert(indexed == Rbac.withBroadcastGrants(routes()), "routing differs between grant paths")
+    assert(indexed.init.forall(_._1.size == 1), s"a user with roles routes to one partition: $indexed")
+    assert(indexed.last == ((Nil, "")), s"the role-less user routes nowhere: ${indexed.last}")
   }
 
   test("after a first touch, a serving call runs only its search jobs") {

@@ -243,8 +243,24 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(filesWith("""inSet\(col\(key\), ix\.docsOf\(""".r) == Seq("graft/rbac/Rbac.scala"))
     assert(count("""inSet\(col\(key\), ix\.docsOf\(""".r) == 1)
     assert(filesWith("""new GrantIndex\(""".r) == Seq("graft/rbac/Rbac.scala"))
-    // a user's roles come from Rbac.heldRoles (through rolesOf for one
-    // user) — the one user-role filter, for one user or a small set
+    // one routing read: the grant index is read by restrict and
+    // heldRoleIds (and built by Bench's grant_index warm step); every
+    // role- and comb-keyed layout routes through heldRoleIds
+    val code = ConsumerScan.sources("src/main/scala")
+    def codeCount(re: scala.util.matching.Regex, f: String): Int =
+      code.find(_._1 == f).map(c => re.findAllMatchIn(c._2).size).getOrElse(0)
+    val indexReaders = code.collect { case (f, src) if src.contains("grantIndex(") => f }
+    assert(indexReaders == Seq("graft/Bench.scala", "graft/rbac/Rbac.scala"),
+      s"grant index readers: $indexReaders")
+    assert(codeCount("""build\("grant_index"\)[^\n]*\n[^\n]*grantIndex\(""".r,
+      "graft/Bench.scala") == 1, "Bench reads the grant index outside its warm step")
+    // its definition, restrict and heldRoleIds
+    assert(codeCount("""grantIndex\(""".r, "graft/rbac/Rbac.scala") == 3)
+    val routingGone = Seq("rolesOf(", "combOf(", "routedCache", "probeUserCache")
+      .filter(n => code.exists(_._2.contains(n)))
+    assert(routingGone.isEmpty, s"deleted routing reads or per-user route stores are back: $routingGone")
+    // a user's roles come from Rbac.heldRoles (through heldRoleIds for
+    // one user) — the one user-role filter, for one user or a small set
     assert(filesWith("""(?s)userRoles\([^()]*\)\s*\.filter\(col\("user_id"\)""".r).isEmpty)
     assert(filesWith("""filter\(col\("user_id"\) ===""".r).isEmpty)
     assert(filesWith("""filter\(col\("user_id"\)\.isin\(""".r) == Seq("graft/rbac/Rbac.scala"))

@@ -31,14 +31,21 @@ class Round17Spec extends AnyFunSuite {
 
   test("distributed exact rank on a small frame equals the single-task rank, as a long") {
     // a frame built to stress the distributed branch: ties that straddle
-    // range boundaries, one type far larger than the others, a null type
+    // range boundaries, one type far larger than the others, a null type.
+    // 20k rows in 4 parquet files, so each read partition holds more
+    // rows than the range partitioner samples from it (300 at 4 output
+    // partitions) and the bounds come from a sample, not every row
     val sp = spark
-    val f = sp.range(600)
+    val path = java.nio.file.Files.createTempDirectory("typeranks").resolve("f").toString
+    sp.range(20000)
       .select(
         when(col("id") % 10 === 9, lit(null).cast("string"))
           .when(col("id") % 10 < 6, lit("big"))
           .otherwise(concat(lit("t"), (col("id") % 3).cast("string"))).as("event_type"),
         (col("id") % 13).cast("double").as("value"))
+      .repartition(4).write.parquet(path)
+    val f = Tables.parquet(sp, path)
+    assert(f.inputFiles.length >= 4, s"${f.inputFiles.length} parquet files")
     val n = f.count()
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("event_type", "value", "rn").collect()
@@ -50,17 +57,6 @@ class Round17Spec extends AnyFunSuite {
     val (s, d) = (rows(single), rows(dist))
     assert(d.length == n, s"offset join changed the row count: ${d.length} of $n")
     assert(s == d, "distributed rank diverges from the single-task rank")
-  }
-
-  test("cost-model layout distributed benefit rank equals the single-window form (A17)") {
-    import graft.rbac.{Partitioned, Rbac}
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getInt(3))).toSet
-    val single = rows(Partitioned.buildCostModelLayoutFrom(
-      spark, sf, Rbac.userRoles(spark, sf), 2.0, 20))
-    val dist = rows(Partitioned.buildCostModelLayoutFrom(
-      spark, sf, Rbac.userRoles(spark, sf), 2.0, 20, rankSinglePartMax = 0L))
-    assert(single == dist, "benefit-rank dispatch diverges")
   }
 
   test("cost-model layout fails before ranking past Int.MaxValue combs (int partition_id)") {
