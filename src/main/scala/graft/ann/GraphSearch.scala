@@ -434,10 +434,14 @@ object GraphSearch {
     */
   def partitionGraphIndex(spark: SparkSession, dir: String, userId: Long = 1,
                           gk: Int = GraphK, cells: Int = Cells,
-                          alpha: Double = 2.0, iters: Int = 2): (DataFrame, DataFrame) = {
+                          alpha: Double = 2.0, iters: Int = 2): (DataFrame, DataFrame) =
+    graphIndexOf(spark, dir, routedPartitions(spark, dir, userId, alpha), gk, cells, alpha, iters)
+
+  /** `partitionGraphIndex` of a resolved routed partition set. */
+  private def graphIndexOf(spark: SparkSession, dir: String, pids: Seq[Int], gk: Int,
+                           cells: Int, alpha: Double, iters: Int): (DataFrame, DataFrame) = {
     // iters (the descent build-quality knob) only exists above the
     // exact ceiling; the medoid seeds don't depend on it
-    val pids = routedPartitions(spark, dir, userId, alpha)
     val tag = s"dynpart[${pids.mkString(",")}]_a$alpha"
     val gtag = if (iters == 2) tag else s"${tag}_i$iters"
     val members = partitionMembers(spark, dir, pids, alpha)
@@ -496,8 +500,14 @@ object GraphSearch {
     */
   def partitionServePolicy(spark: SparkSession, dir: String, userId: Long,
                            alpha: Double = 2.0,
-                           target: Double = RecallTarget): (Int, Int, Double) = {
-    val pkey = routedPartitionKey(spark, dir, userId, alpha)
+                           target: Double = RecallTarget): (Int, Int, Double) =
+    policyOf(spark, dir, routedPartitions(spark, dir, userId, alpha), userId, alpha, target)
+
+  /** `partitionServePolicy` of a resolved routed partition set, which
+    * `userId` routes to. */
+  private def policyOf(spark: SparkSession, dir: String, pids: Seq[Int], userId: Long,
+                       alpha: Double, target: Double): (Int, Int, Double) = {
+    val pkey = pids.mkString(",")
     partPolicyCache.getOrElseUpdate(spark, dir, (pkey, alpha, target)) {
       val m = partitionMemberCount(spark, dir, userId, alpha)
       if (m <= Ann.KnnExactMaxN) (2, Ef, -1.0)
@@ -511,7 +521,7 @@ object GraphSearch {
         tune(math.min(1024L, m).toInt, target, (iters, ef) =>
           measure(spark, dir, partitionGraphKey(pkey, alpha), iters, ef) {
             val (edges, medoids) =
-              partitionGraphIndex(spark, dir, pu, GraphK, Cells, alpha, iters)
+              graphIndexOf(spark, dir, pids, GraphK, Cells, alpha, iters)
             probe(spark, dir, Nq, 10, ef, Rounds, edges, medoids, gt, Some(pu))
           })
       }
@@ -568,13 +578,15 @@ object GraphSearch {
   private def partitionWalk(spark: SparkSession, dir: String, userId: Long, nq: Int,
                             ef: Int, rounds: Int, gk: Int, cells: Int,
                             alpha: Double): DataFrame = {
+    // the user's routing, resolved once: the policy, the walk tag and
+    // the graph all key on it
+    val pids = routedPartitions(spark, dir, userId, alpha)
     val (iters, efR) =
       if (ef > 0) (2, ef)
-      else { val (i, e, _) = partitionServePolicy(spark, dir, userId, alpha); (i, e) }
-    val tag = s"dynpart[${routedPartitionKey(spark, dir, userId, alpha)}]_q${nq}_a${alpha}_i$iters"
+      else { val (i, e, _) = policyOf(spark, dir, pids, userId, alpha, RecallTarget); (i, e) }
+    val tag = s"dynpart[${pids.mkString(",")}]_q${nq}_a${alpha}_i$iters"
     val vis = visitedCache.getOrElseUpdate(spark, dir, (tag, efR, rounds, gk, cells)) {
-      val (edges, medoids) =
-        partitionGraphIndex(spark, dir, userId, gk, cells, alpha, iters)
+      val (edges, medoids) = graphIndexOf(spark, dir, pids, gk, cells, alpha, iters)
       buildVisited(spark, dir, Ann.queryBatch(spark, dir, nq), efR, rounds, edges, medoids)
     }
     mergeFilter(vis, spark, dir, userId)

@@ -176,31 +176,33 @@ object GroupedKMeans {
     val q = Ann.queryArray(spark, dir, 0)
     def d2(a: Array[Float]): Double = {
       // Double subtraction — a Float-precision difference can flip
-      // near-tied cell orderings against the Double l2_dist the
-      // assignment uses (same rule as IvfIndex.probeLists)
+      // near-tied cell orderings against the Double nearest_centroid
+      // the cell pruning uses (same rule as IvfIndex.probeLists)
       var s = 0.0; var i = 0
       while (i < a.length) { val x = a(i).toDouble - q(i).toDouble; s += x * x; i += 1 }
       s
     }
-    val roles = Rbac.heldRoleIds(spark, dir, userId).toSet // tiny: the user's 1-2 roles
-    // probe pick per role over the tiny collected centroid set
-    val probed = cents.filter(c => roles.contains(c._1))
-      .groupBy(_._1).iterator.flatMap { case (_, cs) =>
-        cs.sortBy(c => (d2(c._3), c._2)).take(nprobe).iterator
-      }.map(c => (c._1, c._2)).toSet
-    import spark.implicits._
-    val centDf = centroidFrame(spark, dir, k, iters)
-      .filter(col("group").isin(roles.toSeq.map(Long.box): _*))
-    val probedDf = probed.toSeq.toDF("group", "cid")
-    val probedRows = assign(
-      rolePoints(spark, dir).filter(col("group").isin(roles.toSeq.map(Long.box): _*)), centDf)
-      .join(broadcast(probedDf), Seq("group", "cid"), "left_semi") // cell pruning
+    val roles = Rbac.heldRoleIds(spark, dir, userId) // tiny: the user's 1-2 roles
+    // each held role's centroids in cid order, and the probe pick over
+    // them (the nprobe cells nearest the query)
+    val byRole = cents.filter(c => roles.contains(c._1)).groupBy(_._1).toSeq
+      .map { case (r, cs) => r -> cs.sortBy(_._2) }
+    // cell pruning inside the scan: a row's cell is the nearest of its
+    // role's centroids (`nearest_centroid`, ties to the smaller cid)
+    // and it is kept when that cell is one of the role's probed cells
+    val probed = byRole.map { case (r, cs) =>
+      val picked = cs.indices.sortBy(i => (d2(cs(i)._3), cs(i)._2)).take(nprobe)
+      col("group") === r &&
+        nearest_centroid(col("vec"), cs.map(_._3)).isin(picked.sorted: _*)
+    }.foldLeft(lit(false))(_ || _)
+    val probedRows = rolePoints(spark, dir)
+      .filter(col("group").isin(roles.map(Long.box): _*)).filter(probed)
     // merge across role partitions with block dedup: the role-partition
     // merge tail (a block is its own document, Rbac.blocks)
     Partitioned.roleMergeTopK(spark, dir,
       probedRows.select(col("id").as("block_id"), col("id").as("document_id"),
         col("vec").as("embedding")),
-      topk)
+      topk, roles.size)
       .select("block_id")
   }
 

@@ -124,18 +124,22 @@ object IvfIndex {
 
   private val assignCache = new graft.SessionCache[Int, DataFrame]
 
-  /** (vec_id, list_id): nearest-centroid assignment, computed entirely
-    * inside the scan stage (no join, no aggregation, no shuffle).
+  /** (vec_id, list_id): nearest-centroid assignment, computed inside
+    * the scan stage (no join, no per-vector aggregation), persisted
+    * hash-partitioned by `list_id` — the in-memory stand-in for a
+    * list-partitioned layout, so a per-list aggregate over it (the
+    * predicate-aware counter, the build report) runs in its scan stage
+    * with no Exchange.
     */
   def assignments(spark: SparkSession, dir: String, k: Int): DataFrame =
     assignCache.getOrElseUpdate(spark, dir, k) {
       val idx = getOrBuild(spark, dir, k)
       // nearest_centroid bakes the (tiny) centroid matrix into the
-      // expression: one argmin pass inside the scan stage — no join, no
-      // per-vector aggregation, no shuffle at all.
+      // expression: one argmin pass inside the scan stage
       Tables.embeddings(spark, dir)
         .select(col("vec_id"),
           nearest_centroid(col("embedding"), idx.centroids).as("list_id"))
+        .repartition(spark.sparkContext.defaultParallelism, col("list_id"))
         .persist() // the assignment IS the index; reused across searches
     }
 
@@ -272,11 +276,13 @@ object IvfIndex {
     * candidates, so widen the probe set until the filtered candidate
     * pool can satisfy k.
     *
-    * One-pass escalation: a SINGLE aggregation job computes the
-    * accessible-candidate count per list (k tiny rows to the driver);
-    * the probe prefix is then chosen from those counters — no re-scan
-    * loop. At 100 TB the per-list counters live next to the index
-    * metadata and this stays one cheap job + one search job.
+    * One-pass escalation: a SINGLE single-stage aggregation job
+    * computes the accessible-candidate count per list (k tiny rows to
+    * the driver) — the assignment is persisted partitioned by
+    * `list_id`, so the count needs no Exchange; the probe prefix is
+    * then chosen from those counters — no re-scan loop. At 100 TB the
+    * per-list counters live next to the index metadata and this stays
+    * one cheap job + one search job.
     */
   def predicateAwareSearch(spark: SparkSession, dir: String, userId: Long,
                            k: Int = 16, nprobe: Int = 2, topk: Int = 10): DataFrame = {
@@ -285,7 +291,8 @@ object IvfIndex {
     def accessible(df: DataFrame): DataFrame =
       Rbac.restrict(df, spark, dir, userId, key = "vec_id")
 
-    // one aggregation: accessible candidates per list (≤ k rows)
+    // one aggregation: accessible candidates per list (≤ k rows), in
+    // the scan stage of the list-partitioned assignment
     val accPerList = accessible(assignments(spark, dir, k))
       .groupBy("list_id").agg(count(lit(1)).as("n_acc"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -42,27 +42,33 @@ object Partitioned {
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     // partition prune: the user's role ids as a literal
-    val pruned = roleLayout(spark, dir)
-      .filter(col("partition_role").isin(Rbac.heldRoleIds(spark, dir, userId): _*))
-    roleMergeTopK(spark, dir, pruned, k)
+    val roleIds = Rbac.heldRoleIds(spark, dir, userId)
+    roleMergeTopK(spark, dir,
+      roleLayout(spark, dir).filter(col("partition_role").isin(roleIds: _*)), k, roleIds.size)
   }
 
-  /** The role-partition merge, shared by A5 and its materialized form
-    * (`Layouts.prunedRoleSearch`): score the user's role-partition
-    * rows, dedup, top-k.
+  /** The role-partition merge, shared by A5, its materialized form
+    * (`Layouts.prunedRoleSearch`) and B21's per-role IVF cells: score
+    * the rows of the user's role partitions, dedup, top-k
+    * (merge_results_with_filter, search.py:31).
+    *
+    * `copies` bounds the rows one block has among `rows` — the held
+    * role count, as a block sits at most once in each role partition.
+    * A block's copies share its distance, so they are adjacent in the
+    * (dist, block_id) order and the first k·copies rows hold the first
+    * k distinct blocks. The merge over-fetches those rows (a
+    * TakeOrderedAndProject: k·copies rows per partition, then one
+    * single-partition top-k), drops the copies with a DISTINCT over
+    * that single partition and takes k, so the plan has no Exchange.
     */
   private[graft] def roleMergeTopK(spark: SparkSession, dir: String, rows: DataFrame,
-                                   k: Int): DataFrame =
-    Ann.firstK(
-      Ann.scored(rows, Ann.queryArray(spark, dir, 0))
-        // merge-dedup: a block granted via 2 user roles sits in 2 role
-        // partitions with IDENTICAL distance — dedup the slim
-        // (block_id, document_id, dist) rows (map-side combined), never
-        // keying an Exchange on the 64-float embedding array
-        .groupBy("block_id", "document_id")
-        .agg(min("dist").as("dist")),
+                                   k: Int, copies: Int): DataFrame = {
+    val scored = Ann.scored(rows, Ann.queryArray(spark, dir, 0))
+      .select("block_id", "document_id", "dist")
+    Ann.firstK(Ann.firstK(scored, k * copies, "block_id").distinct(),
       k, "block_id")
       .select("block_id", "document_id")
+  }
 
   /** DOC-side granting-role sets, array + key forms (`Rbac.combKey`)
     * — the array feeds predicate evaluation in the qd-tree build, the
@@ -74,12 +80,17 @@ object Partitioned {
       .agg(Rbac.roleSet.as("roles"))
       .withColumn("comb_key", Rbac.combKey(col("roles")))
 
+  private val combKeyCache = new graft.SessionCache[Unit, DataFrame]
+
   /** Combination key of a document: its full sorted granting-role set
     * (initialize_combination_role_partition_tables.py) — each doc lives
-    * in exactly ONE combination partition (no duplication).
+    * in exactly ONE combination partition (no duplication). A
+    * docs-sized dimension, persisted once per data version like
+    * `Rbac.permissions`.
     */
   def combKeys(spark: SparkSession, dir: String): DataFrame =
-    combRoleSets(spark, dir).select("document_id", "comb_key")
+    combKeyCache.getOrElseUpdate(spark, dir, ())(
+      combRoleSets(spark, dir).select("document_id", "comb_key").persist())
 
   /** A6: combination-partition search: route to the partitions whose
     * role-set intersects the user's roles, scan only those, top-k.
@@ -87,23 +98,19 @@ object Partitioned {
     * A partition's comb_key IS its docs' granting role set, so "comb
     * intersects the user's roles" ⟺ "the doc is granted by ≥1 user
     * role": the routing is the one permission filter (`Rbac.restrict`).
-    * comb_key is attached AFTER the top-k, from the permission rows of
-    * the k result docs only. Plan (`graft.Explain` at sf0.1, dumps
-    * under plans/): 2 shuffle Exchanges outside the cached role tables
-    * (4 counting the 2 inside them), the k-row comb aggregate and the
-    * final sort; the previous plan had 4 (6), two of them the
-    * routed-doc DISTINCT. No Exchange carries an embedding array.
+    * comb_key is attached AFTER the top-k: the k result rows are
+    * broadcast into the persisted `combKeys` dimension and the joined
+    * rows re-ranked by `Ann.firstK`. Plan (`graft.Explain`, dumps under
+    * plans/): no shuffle Exchange outside the cached tables; the
+    * broadcast of the k rows is the only exchange and carries no
+    * embedding array.
     */
   def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     val top = Ann.firstK(Ann.scored(
       Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId), Ann.queryArray(spark, dir, 0)),
       k, "block_id")
       .select("block_id", "document_id", "dist")
-    Rbac.permissions(spark, dir)
-      .join(broadcast(top), "document_id")
-      .groupBy("block_id", "document_id", "dist")
-      .agg(Rbac.combKey(Rbac.roleSet).as("comb_key"))
-      .orderBy(col("dist"), col("block_id"))
+    Ann.firstK(combKeys(spark, dir).join(broadcast(top), "document_id"), k, "block_id")
       .select("block_id", "document_id", "comb_key")
   }
 

@@ -36,8 +36,9 @@ import graft.ann.Ann
   *     role → docs), below `DriverGrantRowsMax`, read only by
   *     `heldRoleIds` and `restrict`;
   *   - `restrict`: the one permission filter — the user's doc ids as an
-  *     `InSet` filter, or above the index bound a left-semi join of a
-  *     frame's doc key against the user's grant rows;
+  *     `InSet` filter, or above the index bound (or past `InSetIdsMax`
+  *     docs) a left-semi join of a frame's doc key against the user's
+  *     grant rows;
   *   - `accessibleDocs`: the same grant rows as a DISTINCT doc set, for
   *     callers that want the set itself;
   *   - `accessiblePairs`: a small user set's (user_id, document_id) set;
@@ -144,36 +145,45 @@ object Rbac {
     /** The user's distinct granted doc ids, ascending. */
     def docsOf(userId: Long): Seq[Long] =
       heldBy(userId).flatMap(r => docs.getOrElse(r, Array.emptyLongArray)).distinct.sorted
+
+    /** `restrict`'s `InSet` ids: the user's doc ids while there are at
+      * most `InSetIdsMax` of them; None past it, where the broadcast
+      * semi-join is the faster plan.
+      */
+    def inSetOf(userId: Long): Option[Seq[Long]] =
+      Some(docsOf(userId)).filter(_.size <= InSetIdsMax)
   }
 
   /** Size ceiling of the driver grant path: the model's user-role rows
-    * plus its permission rows. It decides two things only: `restrict`'s
-    * form and whether `heldRoleIds` collects. Below it the grants are
-    * collected once into a `GrantIndex`: each call binds the user's doc
-    * ids as an `InSet` and reads its role ids from the index — no grant
-    * or routing job per call, where the broadcast semi-join runs two
-    * (its build-side collect and the broadcast). Above it — the
-    * org-sized grant tables of a large deployment — `restrict` keeps the
-    * broadcast semi-join, the only path that runs at any size, and
-    * `heldRoleIds` runs one collect of the user's role rows.
-    *
-    * The bound also caps one user's `InSet` (at most the model's
-    * permission rows), whose ids ride in the plan of every call.
-    * Measured (4 vCPUs, local[4], the sf0.1 corpus of 2k blocks, median
-    * per call): a top-k behind an `InSet` of n ids against the same
-    * top-k behind a broadcast semi-join of n cached rows —
+    * plus its permission rows. It decides whether the grants are
+    * collected once into a `GrantIndex`. Below it `heldRoleIds` reads a
+    * user's role ids from the index and `restrict` binds the user's doc
+    * ids as an `InSet` (up to `InSetIdsMax` of them) — no grant or
+    * routing job per call, where the broadcast semi-join runs two (its
+    * build-side collect and the broadcast). Above it — the org-sized
+    * grant tables of a large deployment — `restrict` keeps the broadcast
+    * semi-join, the only path that runs at any size, and `heldRoleIds`
+    * runs one collect of the user's role rows. The one-time collect of
+    * 2^19 rows took 172 ms. At 2^16 rows the perfbench/sf0.1 flat model
+    * (15k users, 5k docs: 39.5k rows, at most 1.8k docs per user) takes
+    * the index, while its tree and DAG models (~92k rows, up to every
+    * doc per user) keep the broadcast path.
+    */
+  private[graft] val DriverGrantRowsMax: Long = 65536L
+
+  /** The most doc ids one `restrict` binds as an `InSet`: the `InSet`
+    * cost grows with ONE user's doc count, the model's row count does
+    * not bound it per call, so a user past this takes the broadcast
+    * semi-join even below `DriverGrantRowsMax`. Measured (4 vCPUs,
+    * local[4], the sf0.1 corpus of 2k blocks, median per call): a top-k
+    * behind an `InSet` of n ids against the same top-k behind a
+    * broadcast semi-join of n cached rows —
     *   n = 2^10: 131 vs 171 ms; 2^12: 125 vs 162; 2^14: 181 vs 125;
     *   2^16: 557 vs 137; 2^17: 1105 vs 149; 2^18: 2679 vs 178 ms —
     * so the list wins up to ~2^13 ids and costs ~8 µs per id past it
-    * (parquet pushdown of the list, planning, task serialization). The
-    * one-time collect of 2^19 rows took 172 ms. At 2^16 rows the
-    * perfbench/sf0.1 flat model (15k users, 5k docs: 39.5k rows, at most
-    * 1.8k docs per user) takes the index, while its tree and DAG models
-    * (~92k rows, up to every doc per user) keep the broadcast path; a
-    * model under the bound whose users each hold more than ~2^14 docs
-    * would pay up to ~4× per call on the index path.
+    * (parquet pushdown of the list, planning, task serialization).
     */
-  private[graft] val DriverGrantRowsMax: Long = 65536L
+  private[graft] val InSetIdsMax: Int = 8192
 
   private val indexCache = new SessionCache[RoleModel, Option[GrantIndex]]
   private val broadcastGrants = new DynamicVariable(false)
@@ -240,11 +250,12 @@ object Rbac {
       .select("user_id", "document_id")
 
   /** The one permission filter: `df`'s rows whose `key` column names a
-    * document the user may read. Below `DriverGrantRowsMax` it is one
-    * `InSet` of the grant index's doc ids, evaluated inside the scan
-    * stage. Above it, a left-semi join (EXISTS) against the user's
-    * grant rows. A semi-join needs no DISTINCT on its build side, so the
-    * grant rows join as they are. The two join policies:
+    * document the user may read. Below `DriverGrantRowsMax`, for a user
+    * of at most `InSetIdsMax` docs, it is one `InSet` of the grant
+    * index's doc ids, evaluated inside the scan stage. Otherwise, a
+    * left-semi join (EXISTS) against the user's grant rows. A semi-join
+    * needs no DISTINCT on its build side, so the grant rows join as
+    * they are. The two join policies:
     *   - default: the probe side is the corpus (the prefilter family) —
     *     the grant rows are BROADCAST and the corpus side never moves;
     *   - `walkBounded`: the probe side is bounded by a graph walk
@@ -256,8 +267,8 @@ object Rbac {
   def restrict(df: DataFrame, spark: SparkSession, dir: String, userId: Long,
                key: String = "document_id", ur: RoleModel = Flat,
                walkBounded: Boolean = false): DataFrame =
-    grantIndex(spark, dir, ur) match {
-      case Some(ix) => df.filter(inSet(col(key), ix.docsOf(userId)))
+    grantIndex(spark, dir, ur).flatMap(_.inSetOf(userId)) match {
+      case Some(ids) => df.filter(inSet(col(key), ids))
       case None =>
         val g = grants(spark, dir, Seq(userId), ur).select(col("document_id").as(key))
         df.join(if (walkBounded) g else broadcast(g), Seq(key), "left_semi")

@@ -260,20 +260,16 @@ object Layouts {
     *
     * Swap order: staged files move IN under fresh names first, old
     * files are deleted after — a crash mid-swap leaves a partition with
-    * duplicate rows (which `prunedRoleSearch`'s per-block dedup and the
-    * idempotent re-run both tolerate), never an empty one.
+    * duplicate rows (which `prunedRoleSearch`'s per-block dedup, bounded
+    * by the partition's file count, and the idempotent re-run both
+    * tolerate), never an empty one.
     */
   private def swapPartition(spark: SparkSession, layoutPath: String, role: Long,
                             data: DataFrame,
                             targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val partDir = new Path(layoutPath, s"partition_role=$role")
     val fs: FileSystem = partDir.getFileSystem(spark.sessionState.newHadoopConf())
-    def parquetFiles: Array[Path] =
-      if (!fs.exists(partDir)) Array.empty
-      else fs.listStatus(partDir)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath)
-    val olds = parquetFiles
+    val olds = dataFiles(fs, partDir)
     if (olds.isEmpty) return (0, 0)
     val partBytes = fs.listStatus(partDir).filter(_.isFile).map(_.getLen).sum
     val nFiles = math.max(1L, (partBytes + targetBytes - 1) / targetBytes).toInt
@@ -305,7 +301,7 @@ object Layouts {
         s"swapPartition: delete failed: $p")
     }
     fs.delete(staging, true)
-    (olds.length, parquetFiles.length)
+    (olds.length, dataFiles(fs, partDir).length)
   }
 
   /** Layout prefix → its layout path, once the directory exists, per
@@ -387,9 +383,22 @@ object Layouts {
   def prunedRoleSearch(spark: SparkSession, dir: String, layoutPath: String,
                        userId: Long, k: Int): DataFrame = {
     val roleIds = Rbac.heldRoleIds(spark, dir, userId) // tiny: the user's 1-2 roles
+    // a block sits at most once in each data file of a role partition
+    // (one file per role at the build, one per appended insert batch),
+    // but a mid-swap crash leaves a partition's old and new files side
+    // by side: the files under the user's partitions bound its copies
+    val fs = new Path(layoutPath).getFileSystem(spark.sessionState.newHadoopConf())
+    val copies = roleIds.map(r => dataFiles(fs, new Path(layoutPath, s"partition_role=$r")).length).sum
     Partitioned.roleMergeTopK(spark, dir,
       graft.Tables.parquet(spark, layoutPath)
         .filter(col("partition_role").isin(roleIds: _*)), // partition pruning
-      k)
+      k, copies)
   }
+
+  /** The parquet data files of one partition directory (none if it is absent). */
+  private def dataFiles(fs: FileSystem, partDir: Path): Array[Path] =
+    if (!fs.exists(partDir)) Array.empty
+    else fs.listStatus(partDir)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,8 +82,8 @@ class GrantIndexSpec extends AnyFunSuite {
     // partition routing and the query row run none
     val bounds = Map(
       "prefilterTopK" -> 1, "postfilterTopK" -> 1, "rlsTopK" -> 1,
-      "dynamicPartitionTopK" -> 1, "rolePartitionTopK" -> 3,
-      "combPartitionTopK" -> 5, "prefilterPruned" -> 2, "predicateAwareSearch" -> 3)
+      "dynamicPartitionTopK" -> 1, "rolePartitionTopK" -> 2,
+      "combPartitionTopK" -> 2, "prefilterPruned" -> 1, "predicateAwareSearch" -> 2)
     val sp = spark
     for ((name, f) <- strategies if bounds.contains(name)) {
       f(3L).collect() // first touch: layouts, indexes, the grant index
@@ -90,6 +91,55 @@ class GrantIndexSpec extends AnyFunSuite {
       assert(jobs.nonEmpty && jobs.size <= bounds(name),
         s"$name: ${jobs.size} jobs (at most ${bounds(name)}): $jobs")
       if (bounds(name) == 1) assert(jobs.size == 1, s"$name: $jobs")
+    }
+  }
+
+  test("with AQE off, the partitioned merges and the comb lookup plan no shuffle Exchange") {
+    val sp = spark
+    val plans: Seq[(String, () => DataFrame)] = Seq(
+      "rolePartitionTopK" -> (() => Partitioned.rolePartitionTopK(sp, sf, 5L, K)),
+      "prefilterPruned" -> (() => sources.Layouts.prefilterPruned(sp, sf, 5L, K)),
+      "partitionIvfTopK" -> (() => ann.GroupedKMeans.partitionIvfTopK(sp, sf, 5L, K)),
+      "combPartitionTopK" -> (() => Partitioned.combPartitionTopK(sp, sf, 5L, K)))
+    val prev = sp.conf.get("spark.sql.adaptive.enabled")
+    sp.conf.set("spark.sql.adaptive.enabled", "false")
+    try for ((name, f) <- plans) {
+      val plan = f().queryExecution.executedPlan
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.isEmpty, s"$name: ${shuffles.size} shuffle Exchanges in\n$plan")
+    } finally sp.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("restrict binds a user's docs as an InSet only up to InSetIdsMax ids") {
+    val max = Rbac.InSetIdsMax
+    // role 0 grants max docs, role 1 one doc more than that; user 1
+    // holds role 0, user 2 role 1, user 3 both (max + 1 distinct docs)
+    val ix = new Rbac.GrantIndex(
+      Map(1L -> Array(0L), 2L -> Array(1L), 3L -> Array(0L, 1L)),
+      Map(0L -> (0L until max.toLong).toArray, 1L -> (1L to max.toLong).toArray))
+    assert(ix.inSetOf(1L).map(_.size).contains(max), "a user of InSetIdsMax docs takes the InSet")
+    assert(ix.inSetOf(2L).map(_.size).contains(max))
+    assert(ix.inSetOf(3L).isEmpty, "a user past InSetIdsMax docs takes the broadcast semi-join")
+    assert(ix.inSetOf(4L).contains(Nil), "a role-less user binds an empty InSet")
+    // at the test scale every user takes the InSet branch: an InSet
+    // filter and no grant semi-join
+    val sp = spark
+    val plan = Rbac.restrict(Rbac.blocks(sp, sf), sp, sf, 7L)
+      .queryExecution.optimizedPlan.toString
+    assert(plan.contains("INSET") && !plan.contains("LeftSemi"), plan)
+  }
+
+  test("a partition-graph call resolves its routed partition set once") {
+    // on the broadcast path every routing read is a role collect, so
+    // the walk's reads show as jobs: one routing collect, the grant
+    // side of the merge filter, and the walk's cached top-k
+    val sp = spark
+    Rbac.withBroadcastGrants {
+      ann.GraphSearch.partitionGraphTopK(sp, sf, 1L).collect() // builds graph and walk
+      val jobs = jobsOf(sp)(ann.GraphSearch.partitionGraphTopK(sp, sf, 1L).collect())
+      val routing = jobsOf(sp)(Rbac.heldRoleIds(sp, sf, 1L))
+      assert(routing.size == 1, s"a routing read on the broadcast path: $routing")
+      assert(jobs.size <= 6, s"${jobs.size} jobs: $jobs")
     }
   }
 }

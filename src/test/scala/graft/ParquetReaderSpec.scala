@@ -240,8 +240,10 @@ class SourcePolicySpec extends AnyFunSuite {
     // one grant join, and one grant-index filter in its place below
     // the index bound
     assert(count("""\.join\(broadcast\(heldRoles\(""".r) == 1)
-    assert(filesWith("""inSet\(col\(key\), ix\.docsOf\(""".r) == Seq("graft/rbac/Rbac.scala"))
-    assert(count("""inSet\(col\(key\), ix\.docsOf\(""".r) == 1)
+    assert(filesWith("""inSet\(col\(key\),""".r) == Seq("graft/rbac/Rbac.scala"))
+    assert(count("""inSet\(col\(key\),""".r) == 1)
+    // ...bound per user: the InSet's ids are the index's `inSetOf`
+    assert(count("""grantIndex\(spark, dir, ur\)\.flatMap\(_\.inSetOf\(userId\)\)""".r) == 1)
     assert(filesWith("""new GrantIndex\(""".r) == Seq("graft/rbac/Rbac.scala"))
     // one routing read: the grant index is read by restrict and
     // heldRoleIds (and built by Bench's grant_index warm step); every
@@ -265,10 +267,29 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(filesWith("""filter\(col\("user_id"\) ===""".r).isEmpty)
     assert(filesWith("""filter\(col\("user_id"\)\.isin\(""".r) == Seq("graft/rbac/Rbac.scala"))
     assert(count("""filter\(col\("user_id"\)\.isin\(""".r) == 1)
-    // one comb_key definition
+    // one comb_key definition, applied twice: to a doc's granting set
+    // (Partitioned.combRoleSets, persisted as combKeys) and to a
+    // user's held set (Rbac.userCombsFrom) — a serving call reads the
+    // persisted doc keys and derives none
     val rbacFiles = sources.filter(s => !outsideRbac(s._1))
     assert(count("""sort_array\(collect_set\(""".r, rbacFiles) == 1)
     assert(count("""concat_ws\(",""".r) == 1)
+    val combKeyCalls = code.flatMap { case (f, src) =>
+      """(?<!def )\bcombKey\(""".r.findAllMatchIn(src).map(_ => f) }
+    assert(combKeyCalls == Seq("graft/rbac/Partitioned.scala", "graft/rbac/Rbac.scala"),
+      s"comb_key call sites: $combKeyCalls")
+    def defBody(f: String, name: String): String = {
+      val src = code.find(_._1 == f).get._2
+      val at = src.indexOf(s"def $name(")
+      assert(at >= 0, s"$f: no def $name")
+      val rest = src.substring(at + 4)
+      rest.take("""\n  (def|private|val|/\*\*|\})""".r.findFirstMatchIn(rest).fold(rest.length)(_.start))
+    }
+    assert(defBody("graft/rbac/Partitioned.scala", "combRoleSets").contains("combKey("))
+    // the role-partition merge dedups the over-fetched top rows, never
+    // by an aggregate over the scored rows
+    assert(!defBody("graft/rbac/Partitioned.scala", "roleMergeTopK").contains("groupBy"),
+      "roleMergeTopK dedups through a groupBy")
     // one session bootstrap
     assert(filesWith("""\.getOrCreate\(\)""".r) == Seq("graft/Session.scala"))
     assert(count("""sortBased\.fallbackThreshold""".r) == 1)
