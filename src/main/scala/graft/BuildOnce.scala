@@ -8,10 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory `dir` AT ITS DATA VERSION (`Tables.version`) plus the rest
   * of its key. Every access resolves the version, so after an in-place
   * rewrite of any of the dataset's tables the next access misses and
-  * rebuilds from the new files. That first miss drops the dir's
-  * superseded entries and their locks, and unpersists a superseded
-  * persisted frame — before the rebuild, whose `persist` would
-  * otherwise find the old frame's cache under the same plan.
+  * rebuilds from the new files. That first miss, in any store, drops
+  * the dir's superseded entries and their locks in EVERY store, and
+  * unpersists a superseded persisted frame — before the rebuild, whose
+  * plan would otherwise find the old frame's cache under the same plan
+  * (a role layout persisted by one store is a subplan of the layout
+  * another store materializes).
   *
   * Builds run under a PER-KEY lock: racing first-touch callers of the
   * same key share one (multi-job) build, while different keys —
@@ -24,6 +26,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one direction only, so no cycle exists.
   */
 sealed abstract class Store[K, V] {
+  Store.register(this)
+
   /** The scope an entry lives in ("" for JVM-wide entries). */
   protected def scope(spark: SparkSession): String
 
@@ -39,7 +43,7 @@ sealed abstract class Store[K, V] {
     m.get(e) match {
       case Some(v) => v
       case None =>
-        supersede(e)
+        Store.supersede(spark, e._2, e._3)
         // the lock map keeps ONE object per key however many racers
         // create one, so the winner builds and the rest block then read
         locks.getOrElseUpdate(e, new Object).synchronized(m.getOrElseUpdate(e, build))
@@ -49,7 +53,7 @@ sealed abstract class Store[K, V] {
   /** Replace the entry unconditionally, releasing the value it replaces. */
   def put(spark: SparkSession, dir: String, key: K, value: V): Unit = {
     val e = keyOf(spark, dir, key)
-    supersede(e)
+    Store.supersede(spark, e._2, e._3)
     m.put(e, value).foreach(release)
   }
 
@@ -60,12 +64,13 @@ sealed abstract class Store[K, V] {
   }
 
   /** Drop the entries (and locks) of other scopes — a dead application's
-    * frames died with its context — and `dir`'s entries of other
-    * versions, whose frames are unpersisted.
+    * frames died with its context — and `dir`'s entries of versions
+    * other than `version`, whose frames are unpersisted.
     */
-  private def supersede(e: Entry): Unit = {
-    def stale(o: Entry): Boolean = o._1 != e._1 || (o._2 == e._2 && o._3 != e._3)
-    m.keys.filter(stale).foreach(o => m.remove(o).filter(_ => o._1 == e._1).foreach(release))
+  private def supersede(spark: SparkSession, dir: String, version: Seq[Long]): Unit = {
+    val s = scope(spark)
+    def stale(o: Entry): Boolean = o._1 != s || (o._2 == dir && o._3 != version)
+    m.keys.filter(stale).foreach(o => m.remove(o).filter(_ => o._1 == s).foreach(release))
     locks.keys.filter(stale).foreach(locks.remove)
   }
 
@@ -75,6 +80,18 @@ sealed abstract class Store[K, V] {
     case p: Product => p.productIterator.foreach { case df: DataFrame => df.unpersist(); case _ => }
     case _ =>
   }
+}
+
+object Store {
+  private val stores = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[Store[_, _], java.lang.Boolean])
+
+  private def register(s: Store[_, _]): Unit = stores.synchronized(stores.add(s))
+
+  /** Every store drops `dir`'s entries of other versions (and its
+    * entries of other scopes). */
+  private def supersede(spark: SparkSession, dir: String, version: Seq[Long]): Unit =
+    stores.synchronized(stores.toArray(Array.empty[Store[_, _]])).foreach(_.supersede(spark, dir, version))
 }
 
 /** JVM-wide store for driver-side values (centroid arrays, grids,

@@ -117,10 +117,9 @@ object GroupedKMeans {
     */
   def partitionIndexBuild(spark: SparkSession, dir: String,
                           k: Int = 4, iters: Int = 5): DataFrame = {
-    // the fit runs EAGERLY over a build-scoped cache and its (tiny)
-    // centroid frame is collected (and cached per dir): the returned
-    // report plan then scans the corpus exactly once, and nothing
-    // stays pinned in the session
+    // the fit runs EAGERLY over the persisted role layout and its
+    // (tiny) centroid frame is collected (and cached per dir): the
+    // returned report plan then scans the layout exactly once
     assign(rolePoints(spark, dir), centroidFrame(spark, dir, k, iters))
       .groupBy(col("group").as("partition_role"), col("cid").as("cell"))
       .agg(count(lit(1)).as("n_vectors"))
@@ -150,13 +149,9 @@ object GroupedKMeans {
     */
   private[graft] def roleCentroids(spark: SparkSession, dir: String,
                                    k: Int, iters: Int): Array[(Long, Int, Array[Float])] =
-    centCache.getOrElseUpdate(spark, dir, (k, iters)) {
-      val points = rolePoints(spark, dir)
-      points.persist()
-      try fit(points, k, iters).collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      finally points.unpersist()
-    }
+    centCache.getOrElseUpdate(spark, dir, (k, iters))(
+      fit(rolePoints(spark, dir), k, iters).collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toArray)))
 
   /** B21 serving half: permission-aware top-k THROUGH the per-role
     * mini-indexes (the reference's search.py path — per-partition index
@@ -206,7 +201,8 @@ object GroupedKMeans {
       .select("block_id")
   }
 
-  /** (group=role, id=block, vec) — the role layout's rows, renamed. */
+  /** (group=role, id=block, vec) — the persisted role layout's rows,
+    * renamed. */
   private[graft] def rolePoints(spark: SparkSession, dir: String): DataFrame =
     Partitioned.roleLayout(spark, dir)
       .select(col("partition_role").as("group"), col("block_id").as("id"),

@@ -128,8 +128,7 @@ object IvfIndex {
     * the scan stage (no join, no per-vector aggregation), persisted
     * hash-partitioned by `list_id` — the in-memory stand-in for a
     * list-partitioned layout, so a per-list aggregate over it (the
-    * predicate-aware counter, the build report) runs in its scan stage
-    * with no Exchange.
+    * build report) runs in its scan stage with no Exchange.
     */
   def assignments(spark: SparkSession, dir: String, k: Int): DataFrame =
     assignCache.getOrElseUpdate(spark, dir, k) {
@@ -276,26 +275,16 @@ object IvfIndex {
     * candidates, so widen the probe set until the filtered candidate
     * pool can satisfy k.
     *
-    * One-pass escalation: a SINGLE single-stage aggregation job
-    * computes the accessible-candidate count per list (k tiny rows to
-    * the driver) — the assignment is persisted partitioned by
-    * `list_id`, so the count needs no Exchange; the probe prefix is
-    * then chosen from those counters — no re-scan loop. At 100 TB the
-    * per-list counters live next to the index metadata and this stays
-    * one cheap job + one search job.
+    * One-pass escalation from index metadata: the user's accessible
+    * candidates per list are a lookup of their held role ids in
+    * `combListCounts`, and the probe prefix is chosen from those
+    * counters, with no re-scan loop. The call runs one job, the search.
     */
   def predicateAwareSearch(spark: SparkSession, dir: String, userId: Long,
                            k: Int = 16, nprobe: Int = 2, topk: Int = 10): DataFrame = {
     val idx = getOrBuild(spark, dir, k)
     val q = Ann.queryArray(spark, dir, 0)
-    def accessible(df: DataFrame): DataFrame =
-      Rbac.restrict(df, spark, dir, userId, key = "vec_id")
-
-    // one aggregation: accessible candidates per list (≤ k rows), in
-    // the scan stage of the list-partitioned assignment
-    val accPerList = accessible(assignments(spark, dir, k))
-      .groupBy("list_id").agg(count(lit(1)).as("n_acc"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val accPerList = accessibleListCounts(spark, dir, userId, k)
 
     // widen in centroid-distance order until the accessible pool can
     // fill top-k (driver-side arithmetic over k counters)
@@ -309,10 +298,43 @@ object IvfIndex {
     // (partition pruning at scale), permission = `Rbac.restrict` (the
     // grant index's InSet, or above its bound the broadcast grant
     // semi-join) — the corpus side has no Exchange (ProbePlanSpec)
-    val probed = accessible(withCells(spark, dir, k).filter(col("cell").isin(lists: _*)))
+    val probed = Rbac.restrict(withCells(spark, dir, k).filter(col("cell").isin(lists: _*)),
+      spark, dir, userId, key = "vec_id")
     Ann.firstK(Ann.scored(probed, q), topk, "vec_id")
       .select(col("vec_id"), col("cell").as("list_id"))
   }
+
+  /** The user's accessible candidates per list (list_id → count, lists
+    * with none absent): their held role ids looked up in
+    * `combListCounts`. Exact for the flat model, whose users' grants
+    * depend only on the set of roles they hold.
+    */
+  private[graft] def accessibleListCounts(spark: SparkSession, dir: String, userId: Long,
+                                          k: Int): Map[Int, Long] =
+    combListCounts(spark, dir, k).getOrElse(Rbac.heldRoleIds(spark, dir, userId), Map.empty)
+
+  private val listCountCache = new graft.BuildOnce[Int, Map[Seq[Long], Map[Int, Long]]]
+
+  /** Each user comb's sorted role ids → its accessible candidates per
+    * list of the k-list index, collected once per (data version, k)
+    * from the combs' accessible docs (`Partitioned.combAccessibleDocs`)
+    * joined to the assignment: at most combs × k counters, the bound of
+    * `Partitioned.costModelRoutes`. At 100 TB they live next to the
+    * index metadata.
+    */
+  private def combListCounts(spark: SparkSession, dir: String,
+                             k: Int): Map[Seq[Long], Map[Int, Long]] =
+    listCountCache.getOrElseUpdate(spark, dir, k) {
+      val assigned = assignments(spark, dir, k)
+      graft.rbac.Partitioned.combAccessibleDocs(spark, dir)
+        .join(assigned, col("document_id") === assigned("vec_id"))
+        .groupBy("comb_key", "list_id").agg(count(lit(1)).as("n_acc"))
+        .join(Rbac.combRolesFrom(Rbac.userRoles(spark, dir)), "comb_key")
+        .select("comb_key", "list_id", "n_acc", "role_id")
+        .collect().groupBy(_.getString(0)).values
+        .map(rs => rs.map(_.getLong(3)).distinct.sorted.toSeq ->
+          rs.map(r => r.getInt(1) -> r.getLong(2)).toMap).toMap
+    }
 
   /** B14: triangle-inequality-pruned EXACT range search. With per-vector
     * centroid distances precomputed in the index (d(v,c)) and the

@@ -244,8 +244,7 @@ object QdTree {
       .join(broadcast(relevantLeaves), Seq("leaf_id"), "left_semi")
       .select("comb_key", "cell")
     val idx = IvfIndex.getOrBuild(spark, dir, 8)
-    val routed = Rbac.blocks(spark, dir)
-      .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
+    val routed = graft.rbac.Partitioned.combLayout(spark, dir)
       .withColumn("cell", graft.functions.vector.nearest_centroid(col("embedding"), idx.centroids))
       .join(broadcast(routedParts), Seq("comb_key", "cell"), "left_semi") // leaf routing
     Ann.firstK(Ann.scored(Rbac.restrict(routed, spark, dir, userId), // permission filter

@@ -18,12 +18,20 @@ import graft.ann.Ann
   */
 object Partitioned {
 
+  private val persisted = new graft.SessionCache[String, DataFrame]
+
   /** Role layout: a block lives in the partition of EVERY role granting
     * its document (duplication factor = grants per doc), mirroring
     * `documentblocks_role_%` tables (initialize_partitions.py:350).
+    * Persisted once per data version: the in-memory stand-in for the
+    * role-partitioned layout, as `IvfIndex.withCells` is for the cell
+    * layout, so a routed call filters cached rows and joins no grant
+    * rows. At 100 TB the materialized layout (`Layouts.prefilterPruned`)
+    * is the scan path.
     */
   def roleLayout(spark: SparkSession, dir: String): DataFrame =
-    roleLayoutOf(spark, dir, Rbac.blocks(spark, dir))
+    persisted.getOrElseUpdate(spark, dir, "role")(
+      roleLayoutOf(spark, dir, Rbac.blocks(spark, dir)).persist())
 
   /** THE role-layout rows of a block frame (block_id, document_id,
     * embedding), one per granting role — also the materialized layout,
@@ -38,7 +46,8 @@ object Partitioned {
 
   /** A5: search the user's role partitions, merge, dedup by block,
     * re-rank, top-k (prefilter_role.py). Same answer as prefilter —
-    * through the partitioned plan.
+    * through the partitioned plan: one job per call, a filter of the
+    * persisted `roleLayout` by the user's role ids.
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
     // partition prune: the user's role ids as a literal
@@ -80,39 +89,39 @@ object Partitioned {
       .agg(Rbac.roleSet.as("roles"))
       .withColumn("comb_key", Rbac.combKey(col("roles")))
 
-  private val combKeyCache = new graft.SessionCache[Unit, DataFrame]
-
   /** Combination key of a document: its full sorted granting-role set
-    * (initialize_combination_role_partition_tables.py) — each doc lives
-    * in exactly ONE combination partition (no duplication). A
-    * docs-sized dimension, persisted once per data version like
+    * (initialize_combination_role_partition_tables.py). A docs-sized
+    * dimension, persisted once per data version like
     * `Rbac.permissions`.
     */
   def combKeys(spark: SparkSession, dir: String): DataFrame =
-    combKeyCache.getOrElseUpdate(spark, dir, ())(
+    persisted.getOrElseUpdate(spark, dir, "combKeys")(
       combRoleSets(spark, dir).select("document_id", "comb_key").persist())
+
+  /** Comb layout (block_id, document_id, embedding, comb_key): each
+    * block in its doc's ONE combination partition — no duplication.
+    * Persisted once per data version, the in-memory stand-in for the
+    * comb-partitioned layout; A6 and the greedy qd-tree's routed scan
+    * (`QdTree.routedTopK`) read it.
+    */
+  private[graft] def combLayout(spark: SparkSession, dir: String): DataFrame =
+    persisted.getOrElseUpdate(spark, dir, "comb")(
+      Rbac.blocks(spark, dir).join(combKeys(spark, dir), "document_id")
+        .select("block_id", "document_id", "embedding", "comb_key").persist())
 
   /** A6: combination-partition search: route to the partitions whose
     * role-set intersects the user's roles, scan only those, top-k.
     *
     * A partition's comb_key IS its docs' granting role set, so "comb
     * intersects the user's roles" ⟺ "the doc is granted by ≥1 user
-    * role": the routing is the one permission filter (`Rbac.restrict`).
-    * comb_key is attached AFTER the top-k: the k result rows are
-    * broadcast into the persisted `combKeys` dimension and the joined
-    * rows re-ranked by `Ann.firstK`. Plan (`graft.Explain`, dumps under
-    * plans/): no shuffle Exchange outside the cached tables; the
-    * broadcast of the k rows is the only exchange and carries no
-    * embedding array.
+    * role": the routing is the one permission filter (`Rbac.restrict`)
+    * over the persisted `combLayout`, which carries each block's
+    * comb_key, so the call is one job.
     */
-  def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val top = Ann.firstK(Ann.scored(
-      Rbac.restrict(Rbac.blocks(spark, dir), spark, dir, userId), Ann.queryArray(spark, dir, 0)),
-      k, "block_id")
-      .select("block_id", "document_id", "dist")
-    Ann.firstK(combKeys(spark, dir).join(broadcast(top), "document_id"), k, "block_id")
+  def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
+    Ann.firstK(Ann.scored(Rbac.restrict(combLayout(spark, dir), spark, dir, userId),
+      Ann.queryArray(spark, dir, 0)), k, "block_id")
       .select("block_id", "document_id", "comb_key")
-  }
 
   /** Hash layout: comb-key-hashed partition id, engine-portable (ascii
     * of first md5 hex char, mod nParts). Kept as the load-refinement

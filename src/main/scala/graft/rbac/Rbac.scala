@@ -88,7 +88,12 @@ object Rbac {
   // consumed by nearly every RBAC query — persist once per dataset, the
   // way a warehouse pins its dimensions. The block table is NOT cached:
   // at 100 TB the fact side is always a fresh parquet scan and the
-  // local plans should keep that shape.
+  // local plans should keep that shape. Two in-memory layouts over it
+  // are persisted per data version as stand-ins of the partitioned
+  // layouts: `Partitioned.roleLayout` (a block per granting role) and
+  // `Partitioned.combLayout` (a block with its comb key) — 1.06 MB and
+  // 0.56 MB at sf0.1 (3.8k and 2k rows). At 100 TB the materialized
+  // role and cost-model layouts (`Layouts`) remain the scan path.
   private val dimCache = new SessionCache[String, DataFrame]
 
   /** UserRoles(user_id, role_id) — every user holds exactly 1-2 roles. */

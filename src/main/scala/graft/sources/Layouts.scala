@@ -316,7 +316,9 @@ object Layouts {
     * checkouts with the same directory basename cannot collide), and
     * named by a digest of the dataset's data version (`Tables.version`)
     * — rewriting any of its tables re-materializes the layout instead
-    * of serving a stale one.
+    * of serving a stale one. Called on a `built` miss, it deletes the
+    * dataset's roots of `prefix` under a superseded digest, so a
+    * rewritten dataset keeps one layout directory per prefix.
     */
   private def layoutRoot(spark: SparkSession, dir: String, prefix: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
@@ -325,8 +327,16 @@ object Layouts {
     val dirId = java.lang.Integer.toHexString(
       Paths.get(dir).toAbsolutePath.normalize.toString.hashCode)
     val user = System.getProperty("user.name", "nouser")
-    s"${System.getProperty("java.io.tmpdir")}/graft_layouts_$user/" +
-      s"${prefix}_${new java.io.File(dir).getName}_${dirId}_$digest"
+    val parent = new Path(s"${System.getProperty("java.io.tmpdir")}/graft_layouts_$user")
+    val stem = s"${prefix}_${new java.io.File(dir).getName}_${dirId}_"
+    val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(parent))
+      fs.listStatus(parent).map(_.getPath).filter { p =>
+        val n = p.getName
+        n.startsWith(stem) && n.length == stem.length + digest.length && n != stem + digest
+      }.foreach(p => require(fs.delete(p, true) || !fs.exists(p),
+        s"superseded layout removal failed: $p"))
+    s"$parent/$stem$digest"
   }
 
   /** Materialized COST-MODEL layout (A7's at-scale substrate): the

@@ -76,7 +76,10 @@ class DataVersionSpec extends AnyFunSuite {
         s"prefilterTopK($u) broadcast" ->
           Rbac.withBroadcastGrants(rows(Rbac.prefilterTopK(sp, dir, u, 10))),
         s"dynamicPartitionTopK($u)" -> rows(Partitioned.dynamicPartitionTopK(sp, dir, u, 10)),
-        s"prefilterPruned($u)" -> rows(Layouts.prefilterPruned(sp, dir, u, 10)))
+        s"prefilterPruned($u)" -> rows(Layouts.prefilterPruned(sp, dir, u, 10)),
+        s"rolePartitionTopK($u)" -> rows(Partitioned.rolePartitionTopK(sp, dir, u, 10)),
+        s"combPartitionTopK($u)" -> rows(Partitioned.combPartitionTopK(sp, dir, u, 10)),
+        s"predicateAwareSearch($u)" -> rows(IvfIndex.predicateAwareSearch(sp, dir, u)))
     }
     (perUser ++ Seq(
       "IvfIndex.search" -> rows(IvfIndex.search(sp, dir)),
@@ -111,5 +114,15 @@ class DataVersionSpec extends AnyFunSuite {
     val first = bumped(1)
     val later = (2 to 3).map(bumped)
     assert(later.forall(_ <= first), s"persisted RDDs after each bump: ${first +: later}")
+    // the materialized layouts: one directory per layout prefix, the
+    // current version's, under the dataset's tmp root
+    val root = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_layouts_${System.getProperty("user.name", "nouser")}")
+    val dirId = Integer.toHexString(Paths.get(dir).toAbsolutePath.normalize.toString.hashCode)
+    val ours = Files.list(root).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.contains(s"_${Paths.get(dir).getFileName}_${dirId}_")).toSeq
+    val perPrefix = ours.groupBy(n => n.substring(0, n.lastIndexOf('_')))
+    assert(perPrefix.keySet.size == 2, s"layout directories of the dataset: $ours")
+    assert(perPrefix.values.forall(_.size == 1), s"superseded layout directories remain: $ours")
   }
 }

@@ -18,7 +18,8 @@ class GrantIndexSpec extends AnyFunSuite {
 
   private val K = 10
 
-  /** The serve_2k strategies, then the two hierarchy top-ks. */
+  /** The serve_2k strategies, B21's per-role IVF top-k, the two
+    * hierarchy top-ks and the greedy qd-tree's routed top-k. */
   private def strategies: Seq[(String, Long => DataFrame)] = {
     val sp = spark
     Seq(
@@ -30,6 +31,7 @@ class GrantIndexSpec extends AnyFunSuite {
       "dynamicPartitionTopK" -> (u => Partitioned.dynamicPartitionTopK(sp, sf, u, K)),
       "prefilterPruned" -> (u => sources.Layouts.prefilterPruned(sp, sf, u, K)),
       "predicateAwareSearch" -> (u => ann.IvfIndex.predicateAwareSearch(sp, sf, u, topk = K)),
+      "partitionIvfTopK" -> (u => ann.GroupedKMeans.partitionIvfTopK(sp, sf, u, K)),
       "hierarchyTopK" -> (u => Hierarchy.hierarchyTopK(sp, sf, u, K)),
       "dagTopK" -> (u => Hierarchy.dagTopK(sp, sf, u, K)),
       "qdTreeRoutedTopK" -> (u => ann.QdTree.routedTopK(sp, sf, u, K)))
@@ -79,11 +81,14 @@ class GrantIndexSpec extends AnyFunSuite {
 
   test("after a first touch, a serving call runs only its search jobs") {
     // (strategy, most jobs per call): the grant lookups, the role and
-    // partition routing and the query row run none
+    // partition routing, the query row, the role and comb layouts and
+    // the IVF list counts run none, so every serve_2k strategy runs
+    // exactly its search job; the qd-tree's leaf routing adds three
     val bounds = Map(
       "prefilterTopK" -> 1, "postfilterTopK" -> 1, "rlsTopK" -> 1,
-      "dynamicPartitionTopK" -> 1, "rolePartitionTopK" -> 2,
-      "combPartitionTopK" -> 2, "prefilterPruned" -> 1, "predicateAwareSearch" -> 2)
+      "dynamicPartitionTopK" -> 1, "rolePartitionTopK" -> 1,
+      "combPartitionTopK" -> 1, "prefilterPruned" -> 1, "predicateAwareSearch" -> 1,
+      "partitionIvfTopK" -> 1, "qdTreeRoutedTopK" -> 4)
     val sp = spark
     for ((name, f) <- strategies if bounds.contains(name)) {
       f(3L).collect() // first touch: layouts, indexes, the grant index

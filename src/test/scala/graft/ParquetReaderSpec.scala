@@ -84,8 +84,9 @@ class ParquetReaderSpec extends AnyFunSuite {
       ("prefilterTopK", u => Rbac.prefilterTopK(sp, sf, u, k), 1),
       ("postfilterTopK", u => Rbac.postfilterTopK(sp, sf, u, k), 1),
       ("rlsTopK", u => Rbac.rlsTopK(sp, sf, u, k), 1),
-      ("rolePartitionTopK", u => Partitioned.rolePartitionTopK(sp, sf, u, k), 1),
-      ("combPartitionTopK", u => Partitioned.combPartitionTopK(sp, sf, u, k), 1),
+      // they scan the persisted role and comb layouts, no parquet file
+      ("rolePartitionTopK", u => Partitioned.rolePartitionTopK(sp, sf, u, k), 0),
+      ("combPartitionTopK", u => Partitioned.combPartitionTopK(sp, sf, u, k), 0),
       ("dynamicPartitionTopK", u => Partitioned.dynamicPartitionTopK(sp, sf, u, k), 1),
       // after the first call the role layout is a BuildOnce hit, so no
       // call builds (and reads the corpus for) the layout's block frame
