@@ -305,35 +305,32 @@ object IvfIndex {
   }
 
   /** The user's accessible candidates per list (list_id → count, lists
-    * with none absent): their held role ids looked up in
-    * `combListCounts`. Exact for the flat model, whose users' grants
+    * with none absent): their comb key (`Rbac.heldCombKey`) looked up
+    * in `combListCounts`. Exact for the flat model, whose users' grants
     * depend only on the set of roles they hold.
     */
   private[graft] def accessibleListCounts(spark: SparkSession, dir: String, userId: Long,
                                           k: Int): Map[Int, Long] =
-    combListCounts(spark, dir, k).getOrElse(Rbac.heldRoleIds(spark, dir, userId), Map.empty)
+    combListCounts(spark, dir, k).getOrElse(Rbac.heldCombKey(spark, dir, userId), Map.empty)
 
-  private val listCountCache = new graft.BuildOnce[Int, Map[Seq[Long], Map[Int, Long]]]
+  private val listCountCache = new graft.BuildOnce[Int, Map[String, Map[Int, Long]]]
 
-  /** Each user comb's sorted role ids → its accessible candidates per
-    * list of the k-list index, collected once per (data version, k)
-    * from the combs' accessible docs (`Partitioned.combAccessibleDocs`)
-    * joined to the assignment: at most combs × k counters, the bound of
+  /** Each user comb's comb_key → its accessible candidates per list of
+    * the k-list index, collected once per (data version, k) from the
+    * combs' accessible docs (`Partitioned.combAccessibleDocs`) joined to
+    * the assignment: at most combs × k counters, keyed like
     * `Partitioned.costModelRoutes`. At 100 TB they live next to the
     * index metadata.
     */
   private def combListCounts(spark: SparkSession, dir: String,
-                             k: Int): Map[Seq[Long], Map[Int, Long]] =
+                             k: Int): Map[String, Map[Int, Long]] =
     listCountCache.getOrElseUpdate(spark, dir, k) {
       val assigned = assignments(spark, dir, k)
       graft.rbac.Partitioned.combAccessibleDocs(spark, dir)
         .join(assigned, col("document_id") === assigned("vec_id"))
         .groupBy("comb_key", "list_id").agg(count(lit(1)).as("n_acc"))
-        .join(Rbac.combRolesFrom(Rbac.userRoles(spark, dir)), "comb_key")
-        .select("comb_key", "list_id", "n_acc", "role_id")
-        .collect().groupBy(_.getString(0)).values
-        .map(rs => rs.map(_.getLong(3)).distinct.sorted.toSeq ->
-          rs.map(r => r.getInt(1) -> r.getLong(2)).toMap).toMap
+        .collect().groupMap(_.getString(0))(r => r.getInt(1) -> r.getLong(2))
+        .map { case (c, n) => c -> n.toMap }
     }
 
   /** B14: triangle-inequality-pruned EXACT range search. With per-vector

@@ -2,7 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.rbac.{Maintenance, Rbac}
 
@@ -22,11 +22,11 @@ import graft.rbac.{Maintenance, Rbac}
   * rows, weighted by group block counts — the same collapse that makes
   * A17 a closed-form job. Each level is one DataFrame pass: candidate
   * (node × predicate) split scores and workload overlap costs are
-  * aggregates over the groups frame; only the chosen splits (≤ #nodes
-  * rows of index metadata, like the IVF centroid set) ever reach the
-  * driver. At 100 TB the groups frame is the (comb × cell) statistics
-  * sidecar of the partitioned layout; blocks are touched exactly once,
-  * at final leaf assignment.
+  * aggregates over the groups frame; only index metadata reaches the
+  * driver, like the IVF centroid set: the chosen splits and the leaf
+  * groups (≤ |combs|·|cells| rows: 305 at sf0.001, 433 at sf0.1). At
+  * 100 TB the groups frame is the (comb × cell) statistics sidecar of
+  * the partitioned layout; blocks are touched once, at leaf assignment.
   *
   * Routing stays LOSSLESS via the per-leaf role index (the reference
   * builds the same index: qd_tree.py `gather_role_accessible_partitions`
@@ -41,14 +41,13 @@ object QdTree {
   /** One chosen split: ptype 0 = role membership, 1 = centroid. */
   final case class Split(node: Long, ptype: Int, pval: Long)
 
-  final case class Tree(
-      assign: DataFrame, // (comb_key, roles, cell, leaf_id, n_blocks)
-      splits: Seq[Split],
-      nLeaves: Int)
+  /** One leaf group: the blocks of one (granting-role set, cell) pair. */
+  final case class Group(leafId: Long, roles: Seq[Long], combKey: String, cell: Int,
+                         nBlocks: Long)
 
-  // session-scoped: Tree.assign is a persisted frame bound to one
-  // SparkContext (SessionCache evicts entries of dead applications)
-  private val cache = new graft.SessionCache[(Int, Long, Int, Int), Tree]
+  final case class Tree(groups: Seq[Group], splits: Seq[Split], nLeaves: Int)
+
+  private val cache = new graft.BuildOnce[(Int, Long, Int, Int), Tree]
 
   /** Doc groups that move together under every predicate:
     * (comb_key, roles, cell, n_blocks), cell from the same IVF index
@@ -201,7 +200,10 @@ object QdTree {
         }
       }
     }
-    Tree(groups.withColumnRenamed("node", "leaf_id"), chosen.toSeq, nLeaves)
+    val leafGroups = groups.select("node", "roles", "comb_key", "cell", "n_blocks").collect()
+      .map(r => Group(r.getLong(0), r.getSeq[Long](1), r.getString(2), r.getInt(3), r.getLong(4)))
+    groups.unpersist()
+    Tree(leafGroups.toSeq, chosen.toSeq, nLeaves)
   }
 
   /** Oracle sidecar frame: the chosen splits (node, ptype, pval) —
@@ -219,34 +221,27 @@ object QdTree {
 
   /** Leaf report — the build observable (leaf sizes). */
   def leafReport(spark: SparkSession, dir: String): DataFrame =
-    getOrBuild(spark, dir).assign
-      .groupBy("leaf_id")
-      .agg(count(lit(1)).as("n_groups"), sum("n_blocks").as("n_blocks"))
-      .orderBy("leaf_id")
+    spark.createDataFrame(getOrBuild(spark, dir).groups.groupBy(_.leafId).toSeq.sortBy(_._1)
+      .map { case (leaf, gs) => (leaf, gs.size.toLong, gs.map(_.nBlocks).sum) })
+      .toDF("leaf_id", "n_groups", "n_blocks")
 
   /** Routed top-k over the greedy tree: scan only leaves whose role
-    * index intersects the user's roles (partition pruning at scale),
+    * index intersects the user's roles (find_relevant_partitions, on
+    * the driver: their (comb, cell) keys bind as one `InSet`),
     * permission-filter inside the scan, exact top-k — equals the
     * prefilter answer (shared oracle), like B10 but over the greedy
     * leaves instead of the fully-split flat form.
     */
   def routedTopK(spark: SparkSession, dir: String, userId: Long,
                  topk: Int = 10): DataFrame = {
-    val tree = getOrBuild(spark, dir)
-    // per-leaf role index ∩ user roles → relevant leaves → the
-    // (comb, cell) partitions to scan (index metadata, broadcast); the
-    // user's role ids bind as a literal
-    val relevantLeaves = tree.assign
-      .select(col("leaf_id"), explode(col("roles")).as("role_id")).distinct()
-      .filter(col("role_id").isin(Rbac.heldRoleIds(spark, dir, userId): _*))
-      .select("leaf_id").distinct()
-    val routedParts = tree.assign
-      .join(broadcast(relevantLeaves), Seq("leaf_id"), "left_semi")
-      .select("comb_key", "cell")
+    val groups = getOrBuild(spark, dir).groups
+    val held = Rbac.heldRoleIds(spark, dir, userId).toSet
+    val leaves = groups.filter(_.roles.exists(held)).map(_.leafId).toSet
+    val routedParts = groups.filter(g => leaves(g.leafId)).map(g => s"${g.combKey}/${g.cell}")
     val idx = IvfIndex.getOrBuild(spark, dir, 8)
     val routed = graft.rbac.Partitioned.combLayout(spark, dir)
       .withColumn("cell", graft.functions.vector.nearest_centroid(col("embedding"), idx.centroids))
-      .join(broadcast(routedParts), Seq("comb_key", "cell"), "left_semi") // leaf routing
+      .filter(Rbac.inSet(concat_ws("/", col("comb_key"), col("cell")), routedParts)) // leaf routing
     Ann.firstK(Ann.scored(Rbac.restrict(routed, spark, dir, userId), // permission filter
       Ann.queryArray(spark, dir, 0)), topk, "block_id")
       .select("block_id", "document_id")

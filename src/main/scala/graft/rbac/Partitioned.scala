@@ -50,10 +50,10 @@ object Partitioned {
     * persisted `roleLayout` by the user's role ids.
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    // partition prune: the user's role ids as a literal
+    // partition prune: the user's role ids as one InSet literal
     val roleIds = Rbac.heldRoleIds(spark, dir, userId)
     roleMergeTopK(spark, dir,
-      roleLayout(spark, dir).filter(col("partition_role").isin(roleIds: _*)), k, roleIds.size)
+      roleLayout(spark, dir).filter(Rbac.inSet(col("partition_role"), roleIds)), k, roleIds.size)
   }
 
   /** The role-partition merge, shared by A5, its materialized form
@@ -257,27 +257,25 @@ object Partitioned {
   /** The user's routed partition ids — bounded driver metadata (the
     * comb maps to one partition; like prunedRoleSearch's role ids).
     * ONE definition shared by A7's routed scan, A21's per-partition
-    * graph serving, and their specs: the user's held role ids
-    * (`Rbac.heldRoleIds`) looked up in `costModelRoutes`.
+    * graph serving, and their specs: the user's comb key
+    * (`Rbac.heldCombKey`) looked up in `costModelRoutes`.
     */
   def routedPartitionIds(spark: SparkSession, dir: String, userId: Long,
                          alpha: Double = 2.0): Seq[Integer] =
-    costModelRoutes(spark, dir, alpha).get(Rbac.heldRoleIds(spark, dir, userId))
+    costModelRoutes(spark, dir, alpha).get(Rbac.heldCombKey(spark, dir, userId))
       .map(Int.box).toSeq
 
-  private val routeCache = new graft.SessionCache[Double, Map[Seq[Long], Int]]
+  private val routeCache = new graft.BuildOnce[Double, Map[String, Int]]
 
-  /** The flat cost-model layout's routes at α: each comb's sorted role
-    * ids → its partition id, collected once from the layout joined to
-    * the user combs' (comb_key, role_id) pairs (at most 9 combs).
+  /** The flat cost-model layout's routes at α: comb_key → partition id,
+    * collected once per (data version, α) from the persisted layout's
+    * (comb_key, partition_id) rows (at most 9 combs).
     */
   private def costModelRoutes(spark: SparkSession, dir: String,
-                              alpha: Double): Map[Seq[Long], Int] =
+                              alpha: Double): Map[String, Int] =
     routeCache.getOrElseUpdate(spark, dir, alpha)(costModelLayout(spark, dir, alpha)
-      .select("comb_key", "partition_id")
-      .join(Rbac.combRolesFrom(Rbac.userRoles(spark, dir)), "comb_key")
-      .collect().groupBy(_.getString(0)).values
-      .map(rs => rs.map(_.getLong(2)).sorted.toSeq -> rs.head.getInt(1)).toMap)
+      .select("comb_key", "partition_id").collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap)
 
   /** A7: dynamic-partition search over the COST-MODEL layout
     * (search.py:31): the user's role combination routes to its

@@ -2,7 +2,7 @@ package graft.rbac
 
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftInternal
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -42,7 +42,7 @@ import graft.ann.Ann
   *   - `accessibleDocs`: the same grant rows as a DISTINCT doc set, for
   *     callers that want the set itself;
   *   - `accessiblePairs`: a small user set's (user_id, document_id) set;
-  *   - `roleSet` / `combKey`: the one role-combination key.
+  *   - `roleSet` / `combKey` / `heldCombKey`: the one comb key.
   *
   * Architecture note (Spark-first, not a port): the reference prunes the
   * ANN scan with per-role PARTITION TABLES + per-table indexes
@@ -220,18 +220,21 @@ object Rbac {
       }
     }
 
-  /** `c IN ids` as one `InSet` node over a bigint — `isin` builds one
-    * literal per id, which every analyzer rule walks before OptimizeIn
-    * folds them into the same set: ~40 µs per id per call (4k ids:
-    * 257 ms against 125 ms for the node, see `DriverGrantRowsMax`).
+  /** `c IN values` as one `InSet` node (bigint ids or string keys) —
+    * `isin` builds one literal per value, which every analyzer rule
+    * walks (~40 µs per id per call: 4k ids 257 ms against 125 ms for
+    * the node) and generated code inlines, one compile per new set.
     */
-  private def inSet(c: Column, ids: Seq[Long]): Column =
-    GraftInternal.column(InSet(GraftInternal.expression(c.cast("long")), ids.toSet[Any]))
+  private[graft] def inSet(c: Column, values: Seq[Any]): Column = {
+    val lits = values.map(Literal(_))
+    GraftInternal.column(InSet(GraftInternal.expression(
+      c.cast(lits.headOption.fold("long")(_.dataType.typeName))), lits.map(_.value).toSet))
+  }
 
   /** The user's distinct held role ids under `ur`, ascending — the one
     * way engine code learns a user's roles, and the routing key of every
     * role- and comb-keyed layout (`rolePartitionTopK`,
-    * `prunedRoleSearch`, `QdTree.routedTopK`, `routedPartitionIds`).
+    * `prunedRoleSearch`, `QdTree.routedTopK`, and `heldCombKey`).
     * Below `DriverGrantRowsMax` the grant index answers with no job;
     * above it, one collect of the user's role rows.
     */
@@ -301,6 +304,11 @@ object Rbac {
     * (`userCombsFrom`) alike.
     */
   def combKey(roles: Column): Column = concat_ws(",", roles)
+
+  /** `combKey`'s driver form, the key of every comb-keyed driver map:
+    * the user's `userCombsFrom` key as `heldRoleIds` reads it ("" if none). */
+  private[graft] def heldCombKey(spark: SparkSession, dir: String, userId: Long): String =
+    heldRoleIds(spark, dir, userId).mkString(",")
 
   /** (user_id, comb_key): each user's held role set in `ur` — the unit
     * the cost model assigns to partitions (AnonySys_dynamic_partition

@@ -803,11 +803,13 @@ class QdTreeGreedySpec extends AnyFunSuite {
   }
 
   test("greedy-tree routed search equals prefilter for several users") {
-    for (u <- Seq(1L, 2L, 7L)) {
+    def check(path: String): Unit = for (u <- (0L to 40L) :+ 4321L) { // 4321 holds no role
       val expect = Rbac.prefilterTopK(spark, sf, u, 10).collect().map(_.getLong(0)).toSeq
       val got = QdTree.routedTopK(spark, sf, u).collect().map(_.getLong(0)).toSeq
-      assert(got == expect, s"user $u: greedy-routed diverged from prefilter")
+      assert(got == expect, s"$path user $u: greedy-routed diverged from prefilter")
     }
+    check("index")
+    Rbac.withBroadcastGrants(check("broadcast"))
   }
 }
 

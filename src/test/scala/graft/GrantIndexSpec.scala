@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -80,23 +82,54 @@ class GrantIndexSpec extends AnyFunSuite {
   }
 
   test("after a first touch, a serving call runs only its search jobs") {
-    // (strategy, most jobs per call): the grant lookups, the role and
-    // partition routing, the query row, the role and comb layouts and
-    // the IVF list counts run none, so every serve_2k strategy runs
-    // exactly its search job; the qd-tree's leaf routing adds three
-    val bounds = Map(
-      "prefilterTopK" -> 1, "postfilterTopK" -> 1, "rlsTopK" -> 1,
-      "dynamicPartitionTopK" -> 1, "rolePartitionTopK" -> 1,
-      "combPartitionTopK" -> 1, "prefilterPruned" -> 1, "predicateAwareSearch" -> 1,
-      "partitionIvfTopK" -> 1, "qdTreeRoutedTopK" -> 4)
+    // the grant lookups, the role, partition and qd-tree leaf routing,
+    // the query row, the role and comb layouts and the IVF list counts
+    // run none, so every serve_2k strategy, B21's per-role IVF top-k
+    // and the greedy qd-tree run exactly their search job
+    val routed = Set("prefilterTopK", "postfilterTopK", "rlsTopK", "dynamicPartitionTopK",
+      "rolePartitionTopK", "combPartitionTopK", "prefilterPruned", "predicateAwareSearch",
+      "partitionIvfTopK", "qdTreeRoutedTopK")
     val sp = spark
-    for ((name, f) <- strategies if bounds.contains(name)) {
+    for ((name, f) <- strategies if routed(name)) {
       f(3L).collect() // first touch: layouts, indexes, the grant index
       val jobs = jobsOf(sp)(f(5L).collect())
-      assert(jobs.nonEmpty && jobs.size <= bounds(name),
-        s"$name: ${jobs.size} jobs (at most ${bounds(name)}): $jobs")
-      if (bounds(name) == 1) assert(jobs.size == 1, s"$name: $jobs")
+      assert(jobs.size == 1, s"$name: ${jobs.size} jobs: $jobs")
     }
+  }
+
+  test("a user's comb key and routed partition equal their frame-side derivations") {
+    val sp = spark
+    val users = (0L to 40L) :+ 4321L // the last holds no role
+    val combOf = Rbac.userCombsFrom(Rbac.userRoles(sp, sf))
+      .filter(col("user_id") <= 40L)
+    val keys = combOf.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val parts = combOf.join(Partitioned.costModelLayout(sp, sf), "comb_key")
+      .select("user_id", "partition_id").collect()
+      .map(r => r.getLong(0) -> Seq[Integer](r.getInt(1))).toMap
+    assert(keys.size == 41 && parts.size == 41, s"frame-side combs: $keys $parts")
+    def check(path: String): Unit = for (u <- users) {
+      assert(Rbac.heldCombKey(sp, sf, u) == keys.getOrElse(u, ""), s"$path user $u: comb key")
+      assert(Partitioned.routedPartitionIds(sp, sf, u) == parts.getOrElse(u, Nil),
+        s"$path user $u: routed partition")
+    }
+    check("index")
+    Rbac.withBroadcastGrants(check("broadcast"))
+  }
+
+  test("held roles and routed keys bind as one InSet: a new comb compiles no code") {
+    // user u holds roles u % 10 and (3u + 1) % 10: users 0-9 but 7
+    // (which shares user 2's {2,7}) hold the 9 combs, user 11 one of them
+    val sp = spark
+    val binders: Seq[Long => DataFrame] = Seq(
+      u => Partitioned.rolePartitionTopK(sp, sf, u, K),
+      u => ann.QdTree.routedTopK(sp, sf, u, K),
+      u => Partitioned.combPartitionTopK(sp, sf, u, K),
+      u => Rbac.prefilterTopK(sp, sf, u, K))
+    binders.foreach(f => f(11L).collect()) // warm: layouts, indexes, generated code
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    for (f <- binders; u <- Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 8L, 9L)) f(u).collect()
+    assert(compiles.getCount == before, s"${compiles.getCount - before} compiles over 9 combs")
   }
 
   test("with AQE off, the partitioned merges and the comb lookup plan no shuffle Exchange") {

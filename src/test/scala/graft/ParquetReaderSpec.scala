@@ -445,10 +445,14 @@ class SourcePolicySpec extends AnyFunSuite {
     // comb and qd-tree leaf routing IS the permission filter
     assert(!source("graft/ann/IvfIndex.scala").contains("Rbac.permissions"),
       "qd-tree routing re-derives the grant rows")
-    // the user-comb frames live in Rbac
-    for (d <- Seq("userCombsFrom", "combRolesFrom"))
+    // the user-comb frames live in Rbac, and so does a user's comb key
+    // on the driver: every comb-keyed driver map is keyed by comb_key
+    // (heldCombKey), none by role ids regrouped from combRolesFrom
+    for (d <- Seq("userCombsFrom", "combRolesFrom", "heldCombKey"))
       assert(sources.collect { case (f, src) if src.contains(s"def $d") => f } ==
         Seq("graft/rbac/Rbac.scala"), s"$d defined outside Rbac")
+    assert(count("""Map\[Seq\[Long\]""".r) == 0, "a driver map keyed by role ids")
+    assert(count("""(?<!def )\bcombRolesFrom\(""".r) <= 2, "a comb map regroups combRolesFrom")
     // one cost-model layout cache, keyed by permission model
     assert(!source("graft/rbac/Hierarchy.scala").contains("layoutCache"))
     assert(count("\"#dag\"".r) == 0, "a dataset-dir suffix keying a layout cache")
