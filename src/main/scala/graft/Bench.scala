@@ -559,11 +559,11 @@ object Bench {
     val err = try {
       build("session")(SparkEntry.queries("q1_pricing_summary")(spark, sfDir).count())
       build("ivf16") {
-        graft.ann.IvfIndex.assignments(spark, sfDir, 16).count()
-        graft.ann.IvfIndex.cellRadii(spark, sfDir, 16)       // knn-graph pruning bound
         graft.ann.IvfIndex.withCells(spark, sfDir, 16).count()
+        graft.ann.IvfIndex.cellRadii(spark, sfDir, 16)       // knn-graph pruning bound
       }
-      build("ivf8")(graft.ann.IvfIndex.assignments(spark, sfDir, 8).count())
+      // the 8-list cell layout: B9 and the greedy qd-tree share it
+      build("ivf8")(graft.ann.IvfIndex.withCells(spark, sfDir, 8).count())
       // cosine-blocking index — C5/C10 derive cells ∝ corpus (=8 at
       // the oracle SFs, wider at the ScaleGen dirs), so warm THAT one
       if (warms("dedup_embedding", "dedup_semantic")) build("ivf_unit") {

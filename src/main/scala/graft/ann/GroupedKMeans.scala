@@ -169,24 +169,17 @@ object GroupedKMeans {
                        nprobe: Int = 2): DataFrame = {
     val cents = roleCentroids(spark, dir, k, iters)
     val q = Ann.queryArray(spark, dir, 0)
-    def d2(a: Array[Float]): Double = {
-      // Double subtraction — a Float-precision difference can flip
-      // near-tied cell orderings against the Double nearest_centroid
-      // the cell pruning uses (same rule as IvfIndex.probeLists)
-      var s = 0.0; var i = 0
-      while (i < a.length) { val x = a(i).toDouble - q(i).toDouble; s += x * x; i += 1 }
-      s
-    }
     val roles = Rbac.heldRoleIds(spark, dir, userId) // tiny: the user's 1-2 roles
     // each held role's centroids in cid order, and the probe pick over
-    // them (the nprobe cells nearest the query)
+    // them (`IvfIndex.probeLists`: the nprobe cells nearest the query,
+    // ties to the smaller index — cid order)
     val byRole = cents.filter(c => roles.contains(c._1)).groupBy(_._1).toSeq
       .map { case (r, cs) => r -> cs.sortBy(_._2) }
     // cell pruning inside the scan: a row's cell is the nearest of its
     // role's centroids (`nearest_centroid`, ties to the smaller cid)
     // and it is kept when that cell is one of the role's probed cells
     val probed = byRole.map { case (r, cs) =>
-      val picked = cs.indices.sortBy(i => (d2(cs(i)._3), cs(i)._2)).take(nprobe)
+      val picked = IvfIndex.probeLists(IvfIndex.Index(cs.size, cs.map(_._3).toArray), q, nprobe)
       col("group") === r &&
         nearest_centroid(col("vec"), cs.map(_._3)).isin(picked.sorted: _*)
     }.foldLeft(lit(false))(_ || _)

@@ -16,10 +16,11 @@ import graft.rbac.Rbac
   *
   * Spark-first re-expression: the index IS a partitioning.
   *   - build: deterministic k-means (`fitCentroids`) → tiny centroid
-  *     matrix (k × dim floats, kilobytes); every vector gets a `list_id`
-  *     from the `nearest_centroid` expression inside its scan stage. At
-  *     100 TB the assignment is written once as list_id-partitioned
-  *     parquet, so a probe scan is partition pruning, not a filter.
+  *     matrix (k × dim floats, kilobytes); every vector gets its cell
+  *     from the `nearest_centroid` expression once, in `withCells` — the
+  *     index's one corpus-side cell layout, which every reader of a
+  *     vector's cell projects. At 100 TB that layout is written once as
+  *     cell-partitioned parquet, so a probe scan is partition pruning.
   *   - search: nprobe nearest centroids picked driver-side (centroid set
   *     is tiny), then ONLY those lists are scanned — the scan cost drops
   *     by ~nprobe/k, which is the entire point of IVF.
@@ -122,32 +123,17 @@ object IvfIndex {
       Index(k, fitCentroids(emb, k))
     }
 
-  private val assignCache = new graft.SessionCache[Int, DataFrame]
-
-  /** (vec_id, list_id): nearest-centroid assignment, computed inside
-    * the scan stage (no join, no per-vector aggregation), persisted
-    * hash-partitioned by `list_id` — the in-memory stand-in for a
-    * list-partitioned layout, so a per-list aggregate over it (the
-    * build report) runs in its scan stage with no Exchange.
-    */
-  def assignments(spark: SparkSession, dir: String, k: Int): DataFrame =
-    assignCache.getOrElseUpdate(spark, dir, k) {
-      val idx = getOrBuild(spark, dir, k)
-      // nearest_centroid bakes the (tiny) centroid matrix into the
-      // expression: one argmin pass inside the scan stage
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"),
-          nearest_centroid(col("embedding"), idx.centroids).as("list_id"))
-        .repartition(spark.sparkContext.defaultParallelism, col("list_id"))
-        .persist() // the assignment IS the index; reused across searches
-    }
-
   private val withCellsCache = new graft.SessionCache[Int, DataFrame]
 
-  /** Corpus with its cell id attached, persisted — the in-memory
-    * stand-in for a cell-partitioned parquet layout at scale.
-    * The bucketed self-joins (kNN graph) read it on both sides instead
-    * of re-scanning + re-assigning per branch.
+  /** (vec_id, embedding, cell): the corpus with its cell attached,
+    * persisted — the k-list index's ONE corpus-side cell layout, the
+    * in-memory stand-in for a cell-partitioned parquet layout at scale.
+    * Every reader of a corpus vector's cell projects it: the probe
+    * searches (B4, B12), the build report (B3), the per-comb list
+    * counts (B12), the range prune (B14), the IVFADC code table (B18),
+    * the qd-tree group stats (B9, B19), the recall model (B22), the
+    * bucketed kNN self-joins (both sides) and the graph builds and
+    * cell medoids (`Ann`, `GraphSearch`).
     */
   def withCells(spark: SparkSession, dir: String, k: Int): DataFrame =
     withCellsCache.getOrElseUpdate(spark, dir, k) {
@@ -196,11 +182,12 @@ object IvfIndex {
     }
 
   /** B3: index-build report — list sizes (the reference's `CREATE INDEX`
-    * observable). Rows-only: k-means is engine-specific.
+    * observable), counted over the cell layout (`withCells`).
+    * Rows-only: k-means is engine-specific.
     */
   def buildReport(spark: SparkSession, dir: String, k: Int = 16): DataFrame =
-    assignments(spark, dir, k)
-      .groupBy("list_id")
+    withCells(spark, dir, k)
+      .groupBy(col("cell").as("list_id"))
       .agg(count(lit(1)).as("n_vectors"))
       .orderBy("list_id")
 
@@ -318,14 +305,14 @@ object IvfIndex {
   /** Each user comb's comb_key → its accessible candidates per list of
     * the k-list index, collected once per (data version, k) from the
     * combs' accessible docs (`Partitioned.combAccessibleDocs`) joined to
-    * the assignment: at most combs × k counters, keyed like
-    * `Partitioned.costModelRoutes`. At 100 TB they live next to the
+    * the cell layout's (vec_id, cell): at most combs × k counters, keyed
+    * like `Partitioned.costModelRoutes`. At 100 TB they live next to the
     * index metadata.
     */
   private def combListCounts(spark: SparkSession, dir: String,
                              k: Int): Map[String, Map[Int, Long]] =
     listCountCache.getOrElseUpdate(spark, dir, k) {
-      val assigned = assignments(spark, dir, k)
+      val assigned = withCells(spark, dir, k).select(col("vec_id"), col("cell").as("list_id"))
       graft.rbac.Partitioned.combAccessibleDocs(spark, dir)
         .join(assigned, col("document_id") === assigned("vec_id"))
         .groupBy("comb_key", "list_id").agg(count(lit(1)).as("n_acc"))
@@ -333,9 +320,10 @@ object IvfIndex {
         .map { case (c, n) => c -> n.toMap }
     }
 
-  /** B14: triangle-inequality-pruned EXACT range search. With per-vector
-    * centroid distances precomputed in the index (d(v,c)) and the
-    * query-to-centroid distances known (d(q,c), tiny), the reverse
+  /** B14: triangle-inequality-pruned EXACT range search. With each
+    * vector's cell read from the cell layout (`withCells`), its
+    * centroid distance d(v,c) and the query-to-centroid distances
+    * (d(q,c), tiny) known, the reverse
     * triangle inequality d(q,v) ≥ |d(q,c) − d(v,c)| rejects most rows
     * with ONE scalar comparison before any 64-dim distance math — a
     * lossless filter, so the result (and the oracle) is identical to
@@ -357,9 +345,9 @@ object IvfIndex {
     val cents = spark.createDataFrame(
       idx.centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c) })
       .toDF("list_id", "centroid")
-    val pruned = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    val pruned = withCells(spark, dir, k)
+      .select(col("vec_id"), col("embedding"), col("cell").as("list_id"))
       .filter(col("vec_id") =!= qid)
-      .withColumn("list_id", nearest_centroid(col("embedding"), idx.centroids))
       .join(broadcast(cents), "list_id")
       .join(broadcast(dqc), "list_id")
       .withColumn("dvc", l2_dist(col("embedding"), col("centroid")))
@@ -373,21 +361,17 @@ object IvfIndex {
   /** B9: qd-tree layout (HQI baseline, qd_tree.py:508): leaf =
     * (k-means cell × granting-role-set signature) — vector locality AND
     * permission locality in one partitioning key. The signature is the
-    * doc's FULL granting role set (`combKeys`), i.e. the fully-split
+    * doc's FULL granting role set (comb_key), i.e. the fully-split
     * flat form of the role-predicate splits `find_best_split`
     * (qd_tree.py:420) applies recursively — which is what makes routing
     * over these leaves lossless (see qdTreeSearch). Output: per-leaf
-    * block counts.
+    * block counts — a projection of the greedy tree's (comb_key, cell)
+    * group table (`QdTree.groupStats`), the one such table.
     */
-  def qdTreeAssign(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val assigned = assignments(spark, dir, k)
-    val sigs = graft.rbac.Partitioned.combKeys(spark, dir)
-    assigned
-      .join(sigs, assigned("vec_id") === sigs("document_id"))
-      .groupBy("list_id", "comb_key")
-      .agg(count(lit(1)).as("n_blocks"))
+  def qdTreeAssign(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
+    QdTree.groupStats(spark, dir, k)
+      .select(col("cell").as("list_id"), col("comb_key"), col("n_blocks"))
       .orderBy("list_id", "comb_key")
-  }
 
   /** B10: qd-tree routed search (qd_tree.py:644
     * find_relevant_partitions): route to exactly the leaves whose

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.Tables
-import graft.functions.vector._
 import graft.functions.{PqAdcDistance, PqEncode}
 import org.apache.spark.sql.graft.{GraftInternal => ExpressionUtils}
 
@@ -81,15 +80,15 @@ object PqIndex {
     * persisted: the in-memory mirror of the cell-partitioned compressed
     * index IVFADC stores at scale (codes written under `list_id=`
     * directories). Probing is then a filter (→ partition pruning), never
-    * a join against the corpus — encode and assign happen in ONE scan.
+    * a join against the corpus. The codes are encoded over the IVF
+    * index's cell layout (`IvfIndex.withCells`), so the cell is
+    * projected, not assigned again.
     */
   def codesWithCells(spark: SparkSession, dir: String, cells: Int): DataFrame =
     codesCellCache.getOrElseUpdate(spark, dir, cells) {
       val cb = getOrBuild(spark, dir)
-      val ivf = IvfIndex.getOrBuild(spark, dir, cells)
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"),
-          nearest_centroid(col("embedding"), ivf.centroids).as("list_id"),
+      IvfIndex.withCells(spark, dir, cells)
+        .select(col("vec_id"), col("cell").as("list_id"),
           encodeCol(col("embedding"), cb).as("code"))
         .persist()
     }

@@ -50,10 +50,12 @@ object QdTree {
   private val cache = new graft.BuildOnce[(Int, Long, Int, Int), Tree]
 
   /** Doc groups that move together under every predicate:
-    * (comb_key, roles, cell, n_blocks), cell from the same IVF index
-    * the flat layout uses.
+    * (comb_key, cell, roles, n_blocks), cell projected from the IVF
+    * index's cell layout (`IvfIndex.withCells`) — the one (comb_key,
+    * cell) group table: the flat layout (B9 `IvfIndex.qdTreeAssign`)
+    * is a projection of it.
     */
-  private def groupStats(spark: SparkSession, dir: String, cells: Int): DataFrame = {
+  private[ann] def groupStats(spark: SparkSession, dir: String, cells: Int): DataFrame = {
     val combs = graft.rbac.Partitioned.combRoleSets(spark, dir)
     IvfIndex.withCells(spark, dir, cells)
       .select(col("vec_id").as("document_id"), col("cell"))

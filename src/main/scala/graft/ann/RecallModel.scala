@@ -114,8 +114,8 @@ object RecallModel {
       // the histogram is ≤ cells rows
       val cellRankHist = exact(spark, dir, k)
         .select(col("query_id"), explode(col("ids")).as("nbr"))
-        .join(IvfIndex.assignments(spark, dir, cells)
-          .withColumnRenamed("list_id", "nbr_cell"), col("nbr") === col("vec_id"))
+        .join(IvfIndex.withCells(spark, dir, cells)
+          .select(col("vec_id"), col("cell").as("nbr_cell")), col("nbr") === col("vec_id"))
         .join(broadcast(qcells),
           col("query_id") === col("q2") && col("nbr_cell") === col("list_id"))
         .groupBy("cell_rank").agg(count(lit(1)).as("n"))

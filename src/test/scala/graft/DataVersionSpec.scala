@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ann.{GraphSearch, IvfIndex, QdTree}
+import graft.ann.{GraphSearch, IvfIndex, PqIndex, QdTree}
 import graft.rbac.{Partitioned, Rbac}
 import graft.sources.Layouts
 
@@ -83,6 +83,10 @@ class DataVersionSpec extends AnyFunSuite {
     }
     (perUser ++ Seq(
       "IvfIndex.search" -> rows(IvfIndex.search(sp, dir)),
+      // the cell layout (withCells) and what is projected from it
+      "IvfIndex.buildReport" -> rows(IvfIndex.buildReport(sp, dir)),
+      "IvfIndex.qdTreeAssign" -> rows(IvfIndex.qdTreeAssign(sp, dir)),
+      "PqIndex.ivfAdcSearch(1)" -> rows(PqIndex.ivfAdcSearch(sp, dir, userId = Some(1L))),
       "QdTree.leafReport" -> rows(QdTree.leafReport(sp, dir)),
       "GraphSearch.graphTopK" -> rows(GraphSearch.graphTopK(sp, dir)))).toMap
   }

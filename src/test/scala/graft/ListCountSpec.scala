@@ -9,7 +9,7 @@ import graft.rbac.Rbac
 
 /** B12's per-comb list counts (`IvfIndex.accessibleListCounts`, a
   * lookup of the user's held role ids) against the per-call counter
-  * they replace: the user's accessible assignment rows per list. Both
+  * they replace: the user's accessible cell-layout rows per list. Both
   * the counts and the search answers must agree for every user, on
   * both grant paths.
   */
@@ -19,10 +19,11 @@ class ListCountSpec extends AnyFunSuite {
   private val K = 16 // predicateAwareSearch's default list count
   private val users = (0L to 40L) :+ 4321L // the last holds no role
 
-  /** The per-call counter: the user's accessible rows of the assignment, per list. */
+  /** The per-call counter: the user's accessible rows of the cell layout, per list. */
   private def counted(u: Long): Map[Int, Long] = {
     val sp = spark
-    Rbac.restrict(IvfIndex.assignments(sp, sf, K), sp, sf, u, key = "vec_id")
+    Rbac.restrict(IvfIndex.withCells(sp, sf, K).select(col("vec_id"), col("cell").as("list_id")),
+      sp, sf, u, key = "vec_id")
       .groupBy("list_id").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
   }

@@ -458,6 +458,22 @@ class SourcePolicySpec extends AnyFunSuite {
     assert(count("\"#dag\"".r) == 0, "a dataset-dir suffix keying a layout cache")
     // A21's graph indexes and walks belong to the routed partition set
     assert(count("""dynpart\$\{?userId""".r) == 0, "a user-keyed partition graph tag")
+    // a k-list index has one corpus-side cell layout, IvfIndex.withCells:
+    // no second persisted assignment, no re-assignment of the corpus in
+    // the code table or the range prune, and B9 projects the qd-tree's
+    // (comb_key, cell) group table instead of building its own
+    val withSpecs = sources ++ ConsumerScan.sources("src/test/scala")
+    val assignSites = withSpecs.collect {
+      case (f, src) if """def\s+assignments\b|IvfIndex\.assignments\(""".r.findFirstIn(src).isDefined => f
+    }
+    assert(assignSites.isEmpty, s"a second persisted cell assignment: $assignSites")
+    def calls(f: String, re: String): Int = re.r.findAllMatchIn(source(f)).size
+    assert(calls("graft/ann/PqIndex.scala", """nearest_centroid\(""") == 0,
+      "the IVFADC code table re-assigns cells")
+    assert(calls("graft/ann/IvfIndex.scala", """nearest_centroid\(""") <= 4,
+      "IvfIndex re-assigns cells outside the fit, withCells, cellRadii and qdTreeSearch")
+    assert(calls("graft/ann/IvfIndex.scala", """\bcombKeys\(""") == 0,
+      "B9 builds its own (comb_key, cell) groups")
   }
 
   test("one sidecar writer: only Verify writes, through Sidecars.write") {
